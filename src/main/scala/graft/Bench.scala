@@ -633,10 +633,13 @@ object Bench {
       (metricLine + "\n").getBytes("UTF-8"))
     catch { case e: Throwable =>
       System.err.println(s"[bench] cannot write target/bench_metric.json: $e") }
-    spark.stop()
-    // after spark.stop() so no late WARN line can land between the
-    // metric and EOF; flush explicitly — the JVM is about to exit
-    System.out.println(metricLine)
-    System.out.flush()
+    // printed after spark.stop() so no late WARN line can land between
+    // the metric and EOF, and in a finally so a throwing stop() cannot
+    // drop it; flush explicitly — the JVM is about to exit
+    try spark.stop()
+    finally {
+      System.out.println(metricLine)
+      System.out.flush()
+    }
   }
 }

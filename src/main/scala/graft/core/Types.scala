@@ -51,6 +51,16 @@ final case class QueryEntry(uri: String, route: Route, meta: Map[String, String]
   override def toString: String = uri
 }
 
+object QueryEntry {
+  /** The catalog entry of the asset keyed by `keys` on `route`: keys
+    * named in the route's template fill the URI path, the others go to
+    * its query string, and `keys` is the entry's meta. */
+  def of(route: Route, keys: Map[String, String]): QueryEntry = {
+    val (args, kwargs) = keys.partition { case (k, _) => route.argNames.contains(k) }
+    QueryEntry(graft.codec.UriCodec.build(route, args, kwargs), route, keys)
+  }
+}
+
 /** Raised when args/kwargs remain after matching (reference
   * `exceptions.py`). */
 final class UnusedArguments(msg: String) extends IllegalArgumentException(msg)

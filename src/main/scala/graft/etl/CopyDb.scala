@@ -45,25 +45,16 @@ object CopyDb {
     val routeCounts = catalog.groupBy(col("route")).count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     // each table is an independent destination path, so the per-table
-    // import jobs run concurrently — overlapping the writes instead of
-    // paying the scheduler round trip |tables| times (same reasoning as
-    // TableStore.flushAll)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val work = TableStore.tables.toSeq.flatMap { case (table, route) =>
-      routeCounts.get(route.name).filter(_ > 0).map(n => (table, route, n))
-    }
-    Await.result(Future.sequence(work.map { case (table, route, _) => Future {
-      val part = catalog.filter(col("route") === route.name)
-      val keys = TableStore.tableKeys(table)
-      val isBlob = Route.blobRoutes.contains(route)
-      val rows = part.select((keys.map(col) ++ Seq(
+    // import jobs run concurrently
+    val work = TableStore.tables.filter(t => routeCounts.get(t.route.name).exists(_ > 0))
+    TableStore.eachTable(work) { t =>
+      val isBlob = Route.blobRoutes.contains(t.route)
+      val rows = catalog.filter(col("route") === t.route.name).select((t.keys.map(col) ++ Seq(
         (if (isBlob) lit(null).cast("string") else readText(col("src_path"))).as("json"),
         (if (isBlob) readBytes(col("src_path")) else lit(null).cast("binary")).as("blob"))): _*)
-      dest.bulkAppend(table, rows)
-    }}), Duration.Inf)
-    val imported = work.map(_._3).sum
+      dest.bulkAppend(t.name, rows)
+    }
+    val imported = work.map(t => routeCounts(t.route.name)).sum
     dest.flushAll()
     val dstN = dest.listAll().size
     if (imported != dstN)

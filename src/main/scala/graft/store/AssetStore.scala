@@ -41,8 +41,7 @@ trait AssetStore extends AutoCloseable {
   protected def _put(json: String, route: Route, routeArgs: Map[String, String],
                      kwargs: Map[String, String]): Unit
 
-  /** Blob read/write for REPORT_IMAGE / MAP_OVERLAY. */
-  protected def _getBlob(route: Route, routeArgs: Map[String, String]): Array[Byte]
+  /** Blob write for REPORT_IMAGE / MAP_OVERLAY. */
   protected def _putBlob(obj: Array[Byte], route: Route, routeArgs: Map[String, String]): Unit
 
   /** Catalog query: route-set membership + exact-equality meta match
@@ -70,7 +69,7 @@ trait AssetStore extends AutoCloseable {
     val (route, args, kw) = UriCodec.parse(uri)
     if (Route.blobRoutes.contains(route) &&
         (accessType == AccessType.Blob || accessType == AccessType.JsonStr))
-      AssetValue.Blob(_getBlob(route, args))
+      AssetValue.Blob(getBlob(route, args))
     else if (route == Route.Contour && kw.contains("timestep"))
       // contour URIs carrying a timestep go through the two-layout
       // fallback + timestep selection, like the typed getter
@@ -402,14 +401,14 @@ trait AssetStore extends AutoCloseable {
     _put(obj, Route.Report, pe(project, experiment) + ("title" -> title), Map.empty)
 
   def getReportImage(project: String, experiment: String, path: String): Array[Byte] =
-    _getBlob(Route.ReportImage, pe(project, experiment) + ("path" -> path))
+    getBlob(Route.ReportImage, pe(project, experiment) + ("path" -> path))
 
   def putReportImage(obj: Array[Byte], project: String, experiment: String, path: String): Unit =
     _putBlob(obj, Route.ReportImage, pe(project, experiment) + ("path" -> path))
 
   def getMapOverlay(project: String, experiment: String, source: String,
                     variable: String, date: String): Array[Byte] =
-    _getBlob(Route.MapOverlay, pe(project, experiment) ++ Map(
+    getBlob(Route.MapOverlay, pe(project, experiment) ++ Map(
       "source" -> source, "variable" -> variable, "date" -> date))
 
   def putMapOverlay(obj: Array[Byte], project: String, experiment: String, source: String,
@@ -429,6 +428,13 @@ trait AssetStore extends AutoCloseable {
   /** Hook: lookup of a previously-primed per-timestep contour entry. */
   protected def contourCacheGet(routeArgs: Map[String, String],
                                 timestep: String): Option[String] = None
+
+  /** Blob read for REPORT_IMAGE / MAP_OVERLAY: `_get` with BLOB access. */
+  private def getBlob(route: Route, routeArgs: Map[String, String]): Array[Byte] =
+    _get(route, routeArgs, Map.empty, AccessType.Blob, None, cache = false) match {
+      case AssetValue.Blob(b) => b
+      case other => throw new IllegalStateException(s"Unexpected $other")
+    }
 
   private def pe(project: String, experiment: String): Map[String, String] =
     Map("project" -> project, "experiment" -> experiment)

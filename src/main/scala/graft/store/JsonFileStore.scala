@@ -124,9 +124,9 @@ final class JsonFileStore(basedirRaw: String) extends AssetStore {
   val cacheMisses = new java.util.concurrent.atomic.AtomicLong(0)
 
   private def readThroughCache(path: Path, useCache: Boolean): String = {
+    if (!useCache) return Files.readString(path)
     val key = path.toRealPath().toString
     val mtime = Files.getLastModifiedTime(path).toMillis
-    if (!useCache) return Files.readString(path)
     val hit = Option(fileCache.get(key)).filter(_.mtimeMs == mtime)
     hit match {
       case Some(e) =>
@@ -150,14 +150,23 @@ final class JsonFileStore(basedirRaw: String) extends AssetStore {
       else k -> ArgCodec.encodeFname(v)
     }
 
-  private[store] def resolvePath(route: Route, subs: Map[String, String]): Path = {
+  /** The asset's file and whether it exists: the filename-encoded
+    * path, else the legacy unencoded one (`jsonfiledb.py:319-322`);
+    * the encoded path when neither exists. Overlay paths are
+    * extension-less stems, so overlays probe the known image
+    * extensions first (`jsonfiledb.py:855-876`). */
+  private def resolvePath(route: Route, subs: Map[String, String]): (Path, Boolean) = {
     val template = mapper.lookup(route, subs)
     val encoded = basedir.resolve(TemplateCodec.format(template, encodeSubs(route, subs)).stripPrefix("./"))
-    if (Files.exists(encoded)) encoded
-    else {
-      // legacy fallback: retry with unencoded args (`jsonfiledb.py:319-322`)
-      val unencoded = basedir.resolve(TemplateCodec.format(template, subs).stripPrefix("./"))
-      if (Files.exists(unencoded)) unencoded else encoded
+    lazy val unencoded = basedir.resolve(TemplateCodec.format(template, subs).stripPrefix("./"))
+    val overlay =
+      if (route != Route.MapOverlay) None
+      else JsonFileStore.ImgExts.iterator
+        .map(e => encoded.resolveSibling(encoded.getFileName.toString + e)).find(Files.exists(_))
+    overlay.map(_ -> true).getOrElse {
+      if (Files.exists(encoded)) (encoded, true)
+      else if (Files.exists(unencoded)) (unencoded, true)
+      else (encoded, false)
     }
   }
 
@@ -168,17 +177,8 @@ final class JsonFileStore(basedirRaw: String) extends AssetStore {
                      cache: Boolean): AssetValue = {
     val filterArgs = kwargs.filter { case (k, _) =>
       AssetStore.filterParams.getOrElse(route, Set.empty).contains(k) }
-    val subs = routeArgs ++ kwargs
-    val path0 = resolvePath(route, subs)
-    // overlay paths are extension-less stems; probe the known image
-    // extensions (`jsonfiledb.py:855-876`)
-    val path =
-      if (route == Route.MapOverlay)
-        JsonFileStore.ImgExts.map(e => path0.resolveSibling(path0.getFileName.toString + e))
-          .find(Files.exists(_)).getOrElse(path0)
-      else path0
-
-    if (!Files.exists(path)) {
+    val (path, found) = resolvePath(route, routeArgs ++ kwargs)
+    if (!found) {
       if (accessType == AccessType.FilePath)
         throw new FileNotFoundException(s"File $path does not exist.")
       return default.getOrElse(throw new FileNotFoundException(s"File $path does not exist."))
@@ -187,9 +187,7 @@ final class JsonFileStore(basedirRaw: String) extends AssetStore {
     accessType match {
       case AccessType.FilePath => AssetValue.Path(path.toString)
       case AccessType.Uri =>
-        AssetValue.Uri(UriCodec.build(route,
-          routeArgs.view.filterKeys(route.argNames.contains).toMap,
-          kwargs -- filterArgs.keys))
+        AssetValue.Uri(QueryEntry.of(route, routeArgs ++ (kwargs -- filterArgs.keys)).uri)
       case AccessType.Mtime =>
         AssetValue.Time(Files.getLastModifiedTime(path).toInstant)
       case AccessType.Ctime =>
@@ -236,25 +234,6 @@ final class JsonFileStore(basedirRaw: String) extends AssetStore {
     Files.move(tmp, path, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
   }
 
-  protected def _getBlob(route: Route, routeArgs: Map[String, String]): Array[Byte] =
-    route match {
-      case Route.ReportImage =>
-        val path = resolvePath(route, routeArgs)
-        if (!Files.exists(path)) throw new FileNotFoundException(s"File $path does not exist.")
-        Files.readAllBytes(path)
-      case Route.MapOverlay =>
-        // probe each known image extension (`jsonfiledb.py:855-876`)
-        val template = mapper.lookup(route, routeArgs)
-        val stem = basedir.resolve(TemplateCodec.format(template, encodeSubs(route, routeArgs)).stripPrefix("./"))
-        JsonFileStore.ImgExts.map(e => stem.resolveSibling(stem.getFileName.toString + e))
-          .find(Files.exists(_)) match {
-          case Some(p) => Files.readAllBytes(p)
-          case None => throw new FileNotFoundException(
-            s"Overlay for ${routeArgs.mkString(",")} does not exist.")
-        }
-      case other => throw new UnsupportedOperation(s"Blob get on route $other")
-    }
-
   protected def _putBlob(obj: Array[Byte], route: Route, routeArgs: Map[String, String]): Unit = {
     val template = mapper.lookup(route, routeArgs)
     val rel = TemplateCodec.format(template, encodeSubs(route, routeArgs)).stripPrefix("./")
@@ -284,8 +263,8 @@ final class JsonFileStore(basedirRaw: String) extends AssetStore {
 
   override protected def primeContourCache(routeArgs: Map[String, String],
                                            node: com.fasterxml.jackson.databind.JsonNode): Unit = {
-    val path = resolvePath(Route.Contour, routeArgs)
-    if (Files.exists(path)) {
+    val (path, found) = resolvePath(Route.Contour, routeArgs)
+    if (found) {
       val mtime = Files.getLastModifiedTime(path).toMillis
       node.properties().forEach { e =>
         subKeyCache.put(s"$path::${e.getKey}",
@@ -296,8 +275,8 @@ final class JsonFileStore(basedirRaw: String) extends AssetStore {
 
   override protected def contourCacheGet(routeArgs: Map[String, String],
                                          timestep: String): Option[String] = {
-    val path = resolvePath(Route.Contour, routeArgs)
-    if (!Files.exists(path)) None
+    val (path, found) = resolvePath(Route.Contour, routeArgs)
+    if (!found) None
     else {
       val mtime = Files.getLastModifiedTime(path).toMillis
       val hit = Option(subKeyCache.get(s"$path::$timestep")).filter(_.mtimeMs == mtime)
@@ -325,13 +304,10 @@ final class JsonFileStore(basedirRaw: String) extends AssetStore {
 
       if (rel.startsWith("reports/") && JsonFileStore.ImgExts.contains(ext.toLowerCase)) {
         val split = rel.split("/")
-        val (project, experiment) = (split(1), split(2))
-        val p = split.drop(3).mkString("/")
-        val uri = UriCodec.build(Route.ReportImage, Map(
-          "project" -> ArgCodec.decodeFname(project),
-          "experiment" -> ArgCodec.decodeFname(experiment), "path" -> p))
-        Some(QueryEntry(uri, Route.ReportImage,
-          Map("project" -> project, "experiment" -> experiment, "path" -> p)))
+        Some(QueryEntry.of(Route.ReportImage, Map(
+          "project" -> ArgCodec.decodeFname(split(1)),
+          "experiment" -> ArgCodec.decodeFname(split(2)),
+          "path" -> split.drop(3).mkString("/"))))
       } else {
         pathLookup.view.flatMap { case (route, _) =>
           val subsOpt =
@@ -400,10 +376,18 @@ final class JsonFileStore(basedirRaw: String) extends AssetStore {
     }
   }
 
+  /** Deletes the experiment's directory: the filename-encoded one
+    * `_put` writes, and the raw-named one where a legacy tree has it
+    * (the forms `getVersion` probes). A raw name that is not one
+    * directory level (`a/b`, `..`) is never deleted. `reports/`
+    * survives (`jsonfiledb.py:415-428`). */
   def rmExperimentData(project: String, experiment: String): Unit = {
-    val expDir = basedir.resolve(project).resolve(experiment)
-    if (Files.exists(expDir)) {
-      Files.walk(expDir).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+    val dirs = Seq(
+      basedir.resolve(ArgCodec.encodeFname(project)).resolve(ArgCodec.encodeFname(experiment)),
+      basedir.resolve(project).resolve(experiment))
+      .distinct.filter(d => d.getParent.getParent == basedir && Files.exists(d))
+    dirs.foreach(d => Files.walk(d).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_)))
+    if (dirs.nonEmpty) {
       entryCache.clear()
       versionCache.remove((project, experiment))
     }

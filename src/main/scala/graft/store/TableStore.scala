@@ -4,7 +4,7 @@ import java.io.FileNotFoundException
 import java.nio.file.{Files, Paths}
 import java.time.Instant
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -56,52 +56,45 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
   // in-memory append buffers, flushed per table on read/close
   private val pending = scala.collection.mutable.Map.empty[String, scala.collection.mutable.ArrayBuffer[Row]]
 
-  private def schemaFor(table: String): StructType = {
-    val keys = tableKeys(table)
-    StructType(
-      keys.map(k => StructField(k, StringType, nullable = true)) ++ Seq(
-        StructField("json", StringType, nullable = true),
-        StructField("blob", BinaryType, nullable = true),
-        StructField("put_time", LongType, nullable = false),
-        StructField("seq", LongType, nullable = false),
-        StructField("op", StringType, nullable = false)))
+  private def tablePath(t: Table) = s"$basedir/${t.name}"
+
+  // per-table write monitors: two appends to the SAME table must not
+  // write into one directory concurrently (shared _temporary dir), but
+  // different tables are independent paths and may write in parallel
+  private val writeLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
+  private def writeLock(t: Table): Object = writeLocks.computeIfAbsent(t.name, _ => new Object)
+
+  /** The one physical write of table rows, partitioned on the table's
+    * leading key columns: point gets and rmExperimentData prune to one
+    * directory subtree at scale (`NULL` keys land in the default
+    * partition and read back as NULL). */
+  private def write(t: Table, rows: DataFrame, mode: SaveMode, path: String): Unit = {
+    val w = rows.write.mode(mode)
+    (if (t.partitionCols.nonEmpty) w.partitionBy(t.partitionCols: _*) else w).parquet(path)
   }
 
-  private def tablePath(table: String) = s"$basedir/$table"
+  private def append(t: Table, rows: DataFrame): Unit =
+    writeLock(t).synchronized(write(t, rows, SaveMode.Append, tablePath(t)))
 
-  // per-table write monitors: two flushes of the SAME table must not
-  // append to one directory concurrently (shared _temporary dir), but
-  // different tables are independent paths and may write in parallel
-  private val flushLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  private def flush(table: String): Unit =
-    flushLocks.computeIfAbsent(table, _ => new Object).synchronized {
+  private def flush(t: Table): Unit =
+    writeLock(t).synchronized {
       // snapshot-and-clear under the store lock; the Spark write runs
       // outside it so concurrent flushes of other tables proceed
       val snapshot = synchronized {
-        pending.get(table).filter(_.nonEmpty).map { rows =>
+        pending.get(t.name).filter(_.nonEmpty).map { rows =>
           val r = rows.toSeq; rows.clear(); r
         }
       }
       snapshot.foreach { rows =>
-        try {
-          val df = spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, 1), schemaFor(table))
-          // physical layout partitioned on the leading key columns: point
-          // gets and rmExperimentData prune to one directory subtree at
-          // scale (`NULL` keys land in the default partition and read back
-          // as NULL)
-          val parts = partitionCols(table)
-          val w = df.write.mode(SaveMode.Append)
-          (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(tablePath(table))
-        } catch {
+        try append(t, spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), t.schema))
+        catch {
           case e: Throwable =>
             // failed write must not lose the buffered rows: put the
             // snapshot back at the FRONT (it predates anything appended
             // meanwhile) so the next flush retries it
             synchronized {
               pending.getOrElseUpdate(
-                table, scala.collection.mutable.ArrayBuffer.empty)
+                t.name, scala.collection.mutable.ArrayBuffer.empty)
                 .prependAll(rows)
             }
             throw e
@@ -109,16 +102,11 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
       }
     }
 
-  /** Partition columns per table: (project, experiment) where both
-    * exist, (project) otherwise. */
-  private def partitionCols(table: String): Seq[String] =
-    tableKeys(table).filter(k => k == "project" || k == "experiment")
-
-  private[store] def readTable(table: String): Option[DataFrame] = {
-    flush(table)
-    val p = tablePath(table)
+  private[store] def readTable(t: Table): Option[DataFrame] = {
+    flush(t)
+    val p = tablePath(t)
     if (!Files.exists(Paths.get(p))) None
-    else Some(spark.read.schema(schemaFor(table)).parquet(p))
+    else Some(spark.read.schema(t.schema).parquet(p))
   }
 
   /** Newest row per key, honoring rm tombstones. With `asOf` set,
@@ -127,17 +115,21 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
     * snapshot still reads back at it. The append log makes this free:
     * nothing is ever rewritten, so history survives until a
     * `compact()` collapses it. */
-  private def liveRows(table: String, asOf: Option[Long] = None): Option[DataFrame] =
-    readTable(table).map { df0 =>
-      val df = asOf.fold(df0)(s => df0.filter(col("seq") < s))
-      val keys = tableKeys(table).map(col)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(keys: _*).orderBy(col("put_time").desc, col("seq").desc)
-      df.withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") === 1 && col("op") === "put")
-        .drop("_rn")
+  private def liveRows(t: Table, asOf: Option[Long] = None): Option[DataFrame] =
+    readTable(t).map { df =>
+      newest(t, asOf.fold(df)(s => df.filter(col("seq") < s)))
         .withColumn("mtime", col("put_time"))
     }
+
+  /** The one newest-per-key resolve: each key's row with the greatest
+    * `(put_time, seq)`, dropped when that row is an rm tombstone. */
+  private def newest(t: Table, rows: DataFrame): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(t.keys.map(col): _*).orderBy(col("put_time").desc, col("seq").desc)
+    rows.withColumn("_rn", row_number().over(w))
+      .filter(col("_rn") === 1 && col("op") === "put")
+      .drop("_rn")
+  }
 
   /** Snapshot marker for time-travel reads: every row written so far
     * carries seq < the returned value, so
@@ -161,23 +153,21 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
     * not exist yet or was already deleted. */
   def getByUriAsOf(uri: String, asOf: Long): Option[AssetValue] = {
     val (route, args, kw) = UriCodec.parse(uri)
-    flush(tableFor(route))
-    lookupRow(tableFor(route), args ++ (kw - "version"), Some(asOf)).flatMap { r =>
+    lookupRow(byRoute(route), args ++ (kw - "version"), Some(asOf)).flatMap { r =>
       if (Route.blobRoutes.contains(route))
         Option(r.getAs[Array[Byte]]("blob")).map(AssetValue.Blob.apply)
       else Option(r.getAs[String]("json")).map(AssetValue.Json.apply)
     }
   }
 
-  private def appendRow(table: String, keyVals: Map[String, String],
+  private def appendRow(t: Table, keyVals: Map[String, String],
                         json: Option[String], blob: Option[Array[Byte]],
                         op: String): Unit = synchronized {
-    val keys = tableKeys(table)
     val row = Row.fromSeq(
-      keys.map(k => keyVals.get(k).orNull) ++
+      t.keys.map(k => keyVals.get(k).orNull) ++
         Seq(json.orNull, blob.orNull, System.currentTimeMillis(),
           TableStore.seqCounter.getAndIncrement(), op))
-    pending.getOrElseUpdate(table, scala.collection.mutable.ArrayBuffer.empty) += row
+    pending.getOrElseUpdate(t.name, scala.collection.mutable.ArrayBuffer.empty) += row
   }
 
   /** Key-equality lookup with generation-aware NULL handling: a NULL
@@ -186,11 +176,11 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
     * sqlite's per-generation tables, `sqlitedb.py:184-249`), and among
     * matches the row with the most exactly-matching keys and the
     * fewest non-null surplus keys wins (`sqlitedb.py:441-449`). */
-  private def lookupRow(table: String, keyVals: Map[String, String],
+  private def lookupRow(t: Table, keyVals: Map[String, String],
                         asOf: Option[Long] = None): Option[Row] =
-    liveRows(table, asOf).flatMap { df =>
-      val keys = tableKeys(table)
-      val wc = generationKeys(table)
+    liveRows(t, asOf).flatMap { df =>
+      val keys = t.keys
+      val wc = t.generationKeys
       val provided = keyVals.view.filterKeys(keys.contains).toMap
       val surplus = keys.filterNot(provided.contains)
       val pred = provided.map { case (k, v) =>
@@ -220,19 +210,13 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
     val filterArgs = kwargs.filter { case (k, _) =>
       AssetStore.filterParams.getOrElse(route, Set.empty).contains(k) }
     val keyVals = routeArgs ++ (kwargs -- filterArgs.keys)
-    val table = tableFor(route)
-
-    val row = lookupRow(table, keyVals)
-    row match {
+    lookupRow(byRoute(route), keyVals) match {
       case None =>
         default.getOrElse(throw new FileNotFoundException(
           s"No asset for $route with key $keyVals"))
       case Some(r) =>
         accessType match {
-          case AccessType.Uri =>
-            AssetValue.Uri(UriCodec.build(route,
-              routeArgs.view.filterKeys(route.argNames.contains).toMap,
-              kwargs -- filterArgs.keys))
+          case AccessType.Uri => AssetValue.Uri(QueryEntry.of(route, keyVals).uri)
           case AccessType.Mtime => AssetValue.Time(Instant.ofEpochMilli(r.getAs[Long]("put_time")))
           case AccessType.Ctime =>
             // creation time = oldest put for the key; approximated by
@@ -256,15 +240,10 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
 
   protected def _put(json: String, route: Route, routeArgs: Map[String, String],
                      kwargs: Map[String, String]): Unit =
-    appendRow(tableFor(route), routeArgs ++ kwargs, Some(json), None, "put")
-
-  protected def _getBlob(route: Route, routeArgs: Map[String, String]): Array[Byte] =
-    lookupRow(tableFor(route), routeArgs)
-      .map(_.getAs[Array[Byte]]("blob"))
-      .getOrElse(throw new FileNotFoundException(s"No blob for $route $routeArgs"))
+    appendRow(byRoute(route), routeArgs ++ kwargs, Some(json), None, "put")
 
   protected def _putBlob(obj: Array[Byte], route: Route, routeArgs: Map[String, String]): Unit =
-    appendRow(tableFor(route), routeArgs, None, Some(obj), "put")
+    appendRow(byRoute(route), routeArgs, None, Some(obj), "put")
 
   def query(assetTypes: Seq[Route] = Route.all,
             kwargs: Map[String, String] = Map.empty): Seq[QueryEntry] =
@@ -272,48 +251,28 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
 
   private def queryImpl(assetTypes: Seq[Route], kwargs: Map[String, String],
                         asOf: Option[Long]): Seq[QueryEntry] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     val routeSet = assetTypes.toSet
     flushAll()
-    // per-table scans are independent Spark jobs — run them
-    // concurrently (Spark's scheduler interleaves them)
-    val futures = tables.toSeq.map { case (table, route) => Future {
-      queryTable(table, route, routeSet, kwargs, asOf)
-    }}
-    futures.flatMap(Await.result(_, Duration.Inf))
+    eachTable(tables.filter(t => routeSet.contains(t.route)))(queryTable(_, kwargs, asOf)).flatten
   }
 
-  private def queryTable(table: String, route: Route, routeSet: Set[Route],
-                         kwargs: Map[String, String],
-                         asOf: Option[Long] = None): Seq[QueryEntry] = {
-    Seq((table, route)).flatMap { case (table, route) =>
-      if (!routeSet.contains(route)) Seq.empty
-      else liveRows(table, asOf) match {
-        case None => Seq.empty
-        case Some(df) =>
-          val keys = tableKeys(table)
-          // non-key kwargs can never match a table without the column
-          if (kwargs.keys.exists(k => !keys.contains(k))) Seq.empty
-          else {
-            val pred = kwargs.map { case (k, v) => col(k) === v }
-              .reduceOption(_ && _).getOrElse(lit(true))
-            df.filter(pred).collect().toSeq.map { r =>
-              val meta = keys.flatMap(k => Option(r.getAs[String](k)).map(k -> _)).toMap
-              val routeArgNames = route.argNames.toSet
-              val args = meta.view.filterKeys(routeArgNames.contains).toMap
-              val kw = meta.view.filterKeys(!routeArgNames.contains(_)).toMap
-              QueryEntry(UriCodec.build(route, args, kw), route, meta)
-            }
-          }
+  private def queryTable(t: Table, kwargs: Map[String, String],
+                         asOf: Option[Long]): Seq[QueryEntry] =
+    liveRows(t, asOf).toSeq.flatMap { df =>
+      // non-key kwargs can never match a table without the column
+      if (kwargs.keys.exists(k => !t.keys.contains(k))) Seq.empty
+      else {
+        val pred = kwargs.map { case (k, v) => col(k) === v }
+          .reduceOption(_ && _).getOrElse(lit(true))
+        df.filter(pred).collect().toSeq.map { r =>
+          QueryEntry.of(t.route, t.keys.flatMap(k => Option(r.getAs[String](k)).map(k -> _)).toMap)
+        }
       }
-    }.toSeq
-  }
+    }
 
   def rmByUri(uri: String): Unit = {
     val (route, args, kw) = UriCodec.parse(uri)
-    appendRow(tableFor(route), args ++ (kw - "version"), None, None, "rm")
+    appendRow(byRoute(route), args ++ (kw - "version"), None, None, "rm")
   }
 
   /** Experiment-wide delete as ONE distributed tombstone write per
@@ -322,54 +281,38 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
     * `rm` rows. No `collect()`: at millions of assets per experiment
     * nothing funnels through the driver. */
   def rmExperimentData(project: String, experiment: String): Unit =
-    tables.keys.foreach { table =>
-      val keys = tableKeys(table)
-      if (keys.contains("experiment"))
-        liveRows(table).foreach { df =>
-          // one batch seq for the whole tombstone set — keys are unique
-          // within it, and a later same-millisecond put (higher seq)
-          // still wins the newest-row resolution
-          val batchSeq = TableStore.seqCounter.getAndIncrement()
-          val tombstones = df
-            .filter(col("project") === project && col("experiment") === experiment)
-            .select(keys.map(k => col(k).cast("string").as(k)): _*)
-            .withColumn("json", lit(null).cast("string"))
-            .withColumn("blob", lit(null).cast("binary"))
-            .withColumn("put_time", lit(System.currentTimeMillis()))
-            .withColumn("seq", lit(batchSeq))
-            .withColumn("op", lit("rm"))
-          val parts = partitionCols(table)
-          val w = tombstones.write.mode(SaveMode.Append)
-          (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(tablePath(table))
-        }
+    tables.filter(_.keys.contains("experiment")).foreach { t =>
+      liveRows(t).foreach { df =>
+        append(t, logBatch(t,
+          df.filter(col("project") === project && col("experiment") === experiment),
+          lit(null), lit(null), "rm"))
+      }
     }
 
   /** Bulk append pre-built rows (distributed ETL path): `rows` must
     * carry this table's key columns plus `json`/`blob`; bookkeeping
     * columns are added here. One partitioned write, no driver loop. */
   def bulkAppend(table: String, rows: DataFrame): Unit = {
-    val keys = tableKeys(table)
-    // one counter-issued seq per bulk batch (the rmExperimentData
-    // pattern): successive batches in the same millisecond still
-    // resolve newest-wins in APPEND ORDER — a per-row
-    // monotonically_increasing_id would overlap across batches and
-    // leave the winner partition-layout-dependent. Duplicate keys
-    // WITHIN one batch have no defined "newest" (append semantics).
+    val t = TableStore.table(table)
+    append(t, logBatch(t, rows, col("json"), col("blob"), "put"))
+  }
+
+  /** `rows`' key columns plus the `json`/`blob` payload as one log
+    * batch under ONE counter-issued seq: successive batches in the same
+    * millisecond still resolve newest-wins in APPEND ORDER (a per-row
+    * monotonically_increasing_id would overlap across batches and leave
+    * the winner partition-layout-dependent), and a later
+    * same-millisecond put (higher seq) still wins over the batch.
+    * Duplicate keys WITHIN one batch have no defined "newest" (append
+    * semantics). */
+  private def logBatch(t: Table, rows: DataFrame, json: Column, blob: Column,
+                       op: String): DataFrame = {
     val batchSeq = TableStore.seqCounter.getAndIncrement()
-    val withMeta = rows
-      .select((keys.map(k => col(k).cast("string").as(k)) ++ Seq(
-        col("json").cast("string").as("json"),
-        col("blob").cast("binary").as("blob"))): _*)
+    rows.select((t.keys.map(k => col(k).cast("string").as(k)) ++ Seq(
+        json.cast("string").as("json"), blob.cast("binary").as("blob"))): _*)
       .withColumn("put_time", lit(System.currentTimeMillis()))
       .withColumn("seq", lit(batchSeq))
-      .withColumn("op", lit("put"))
-    val parts = partitionCols(table)
-    // same per-table monitor as flush(): two writers into one table
-    // directory would collide in the shared _temporary dir
-    flushLocks.computeIfAbsent(table, _ => new Object).synchronized {
-      val w = withMeta.write.mode(SaveMode.Append)
-      (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(tablePath(table))
-    }
+      .withColumn("op", lit(op))
   }
 
   /** Rewrite a table directory from `rows`, preserving the partition
@@ -387,13 +330,10 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
     * not resolve makes rewrites a SINGLE-MAINTAINER step — the owner
     * runs compact/compactRetain between its own reads, never
     * concurrently with them. */
-  private def rewriteTable(table: String, rows: DataFrame): Unit = {
-    val dst = tablePath(table)
+  private def rewriteTable(t: Table, rows: DataFrame): Unit = {
+    val dst = tablePath(t)
     DirSwap.recover(dst)
-    val parts = partitionCols(table)
-    val w = rows.write.mode(SaveMode.Overwrite)
-    (if (parts.nonEmpty) w.partitionBy(parts: _*) else w)
-      .parquet(DirSwap.compactingPath(dst).toString)
+    write(t, rows, SaveMode.Overwrite, DirSwap.compactingPath(dst).toString)
     DirSwap.swapInto(dst)
   }
 
@@ -420,8 +360,10 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
     * it here would silently turn every post-compact point read from a
     * one-partition scan into a full-table scan (TablePruningSpec pins
     * pruning after compaction). */
-  def compact(table: String): Unit =
-    liveRows(table).foreach(df => rewriteTable(table, df.drop("mtime")))
+  def compact(table: String): Unit = {
+    val t = TableStore.table(table)
+    readTable(t).foreach(df => rewriteTable(t, newest(t, df)))
+  }
 
   /** Retention-aware compaction — the VACUUM RETAIN between
     * [[compact]] (drop ALL history) and doing nothing (keep it all):
@@ -436,17 +378,13 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
     * VACUUM gives its time travel; markers older than `retainSeq` are
     * explicitly forfeited. Bounded like compact: one partitioned
     * rewrite, newest-per-key via the same window as the readers. */
-  def compactRetain(table: String, retainSeq: Long): Unit =
-    readTable(table).foreach { df =>
-      val keys = tableKeys(table).map(col)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(keys: _*).orderBy(col("put_time").desc, col("seq").desc)
-      val collapsed = df.filter(col("seq") < retainSeq)
-        .withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") === 1 && col("op") === "put")
-        .drop("_rn")
-      rewriteTable(table, collapsed.unionByName(df.filter(col("seq") >= retainSeq)))
+  def compactRetain(table: String, retainSeq: Long): Unit = {
+    val t = TableStore.table(table)
+    readTable(t).foreach { df =>
+      rewriteTable(t, newest(t, df.filter(col("seq") < retainSeq))
+        .unionByName(df.filter(col("seq") >= retainSeq)))
     }
+  }
 
   /** The store→analytics bridge: one table's LIVE rows (newest per
     * key, rm tombstones honored) as a DataFrame — key columns +
@@ -456,7 +394,7 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
     * same partition-pruned parquet scan the point API resolves
     * against, so a downstream groupBy/join composes with it like any
     * other source (av08 proves the composition end to end). */
-  def liveFrame(table: String): Option[DataFrame] = liveRows(table)
+  def liveFrame(table: String): Option[DataFrame] = liveRows(TableStore.table(table))
 
   /** [[liveFrame]] as of a snapshot marker — the time-travel side of
     * the analytics bridge: rows written at or after the marker are
@@ -465,7 +403,7 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
     * st22 uses it to digest a pinned view across streaming vacuums
     * without per-URI point reads. */
   def liveFrameAsOf(table: String, asOf: Long): Option[DataFrame] =
-    liveRows(table, Some(asOf))
+    liveRows(TableStore.table(table), Some(asOf))
 
   /** Distributed (uri, content md5) scan over every table's live rows:
     * URIs are rebuilt row-side from the key columns (the same rule as
@@ -477,19 +415,16 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
   def contentHashFrame(): DataFrame = {
     import spark.implicits._
     flushAll()
-    val frames = TableStore.tables.toSeq.sortBy(_._1).flatMap { case (table, route) =>
-      liveRows(table).map { df =>
-        val keys = tableKeys(table)
+    val frames = tables.sortBy(_.name).flatMap { t =>
+      liveRows(t).map { df =>
+        val (keys, route) = (t.keys, t.route)
         val isBlob = Route.blobRoutes.contains(route)
-        val routeArgNames = route.argNames.toSet
         df.select((keys.map(c => col(c).cast("string").as(c)) :+
             col("json") :+ col("blob")): _*)
           .map { r =>
             val meta = keys.zipWithIndex
               .flatMap { case (k, i) => Option(r.getString(i)).map(k -> _) }.toMap
-            val args = meta.view.filterKeys(routeArgNames.contains).toMap
-            val kw = meta.view.filterKeys(!routeArgNames.contains(_)).toMap
-            val uri = UriCodec.build(route, args, kw)
+            val uri = QueryEntry.of(route, meta).uri
             val digest =
               if (isBlob) JsonUtil.md5hex(r.getAs[Array[Byte]](keys.length + 1))
               else JsonUtil.canonicalMd5(r.getString(keys.length))
@@ -508,17 +443,9 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
   def lock(): AdvisoryLock = Locking.forBasedir(basedir)
 
   /** Flush pending appends (call before handing the dir to another
-    * reader). Tables flush CONCURRENTLY — each write is an independent
-    * Spark job on its own directory, so serializing them would leave
-    * the cluster idle per tiny batch (same reasoning as the concurrent
-    * per-table catalog scans in [[query]]). */
-  def flushAll(): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val tables = synchronized(pending.filter(_._2.nonEmpty).keys.toSeq)
-    Await.result(Future.sequence(tables.map(t => Future(flush(t)))), Duration.Inf)
-  }
+    * reader). Tables flush concurrently, see [[TableStore.eachTable]]. */
+  def flushAll(): Unit =
+    eachTable(synchronized(pending.filter(_._2.nonEmpty).keys.toSeq).map(TableStore.table))(flush)
 
   override def close(): Unit = {
     flushAll()
@@ -532,73 +459,84 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
 }
 
 object TableStore {
-  /** Key columns that older layout generations leave NULL — a NULL in
-    * these columns matches any requested value (the analogue of
+  /** One asset table: its name, the route its catalog URIs carry, its
+    * superset key columns over all layout generations, and its
+    * generation keys — key columns that older layout generations leave
+    * NULL, where a NULL matches any requested value (the analogue of
     * sqlite's narrower per-generation tables). */
-  def generationKeys(table: String): Set[String] = table match {
-    case "map" | "scatter" => Set("time")
-    case "heatmap_ts"      => Set("region", "network", "obsvar", "layer")
-    case _                 => Set.empty
+  final case class Table(name: String, route: Route, keys: Seq[String],
+                         generationKeys: Set[String] = Set.empty) {
+    /** Physical partitioning: (project, experiment) where both exist,
+      * (project) otherwise. */
+    val partitionCols: Seq[String] = keys.filter(k => k == "project" || k == "experiment")
+
+    val schema: StructType = StructType(
+      keys.map(k => StructField(k, StringType, nullable = true)) ++ Seq(
+        StructField("json", StringType, nullable = true),
+        StructField("blob", BinaryType, nullable = true),
+        StructField("put_time", LongType, nullable = false),
+        StructField("seq", LongType, nullable = false),
+        StructField("op", StringType, nullable = false)))
   }
 
   /** Monotonic tie-break for same-millisecond appends. */
   private[store] val seqCounter = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** table → representative route for catalog URIs. glob_stats maps to
-    * HEATMAP, preserving the jsondb quirk that reverse-parsed
-    * glob_stats files surface as HEATMAP entries. */
-  val tables: Map[String, Route] = Map(
-    "glob_stats"        -> Route.Heatmap,
-    "contour"           -> Route.Contour,
-    "contour_timesplit" -> Route.ContourTimesplit,
-    "timeseries"        -> Route.Timeseries,
-    "timeseries_weekly" -> Route.TimeseriesWeekly,
-    "experiments"       -> Route.Experiments,
-    "config"            -> Route.Config,
-    "menu"              -> Route.Menu,
-    "statistics"        -> Route.Statistics,
-    "ranges"            -> Route.Ranges,
-    "regions"           -> Route.Regions,
-    "models_style"      -> Route.ModelsStyle,
-    "map"               -> Route.MapRoute,
-    "scatter"           -> Route.Scatter,
-    "profiles"          -> Route.Profiles,
-    "heatmap_ts"        -> Route.HeatmapTimeseries,
-    "forecast"          -> Route.Forecast,
-    "fairmode"          -> Route.Fairmode,
-    "gridded_map"       -> Route.GriddedMap,
-    "report"            -> Route.Report,
-    "report_image"      -> Route.ReportImage,
-    "map_overlay"       -> Route.MapOverlay,
+  private val PE = Seq("project", "experiment")
+
+  /** Every table. glob_stats lists as HEATMAP, preserving the jsondb
+    * quirk that reverse-parsed glob_stats files surface as HEATMAP
+    * entries. */
+  val tables: Seq[Table] = Seq(
+    Table("glob_stats", Route.Heatmap, PE :+ "frequency"),
+    Table("contour", Route.Contour, PE ++ Seq("obsvar", "model")),
+    Table("contour_timesplit", Route.ContourTimesplit, PE ++ Seq("obsvar", "model", "timestep")),
+    Table("timeseries", Route.Timeseries, PE ++ Seq("location", "network", "obsvar", "layer")),
+    Table("timeseries_weekly", Route.TimeseriesWeekly, PE ++ Seq("location", "network", "obsvar", "layer")),
+    Table("experiments", Route.Experiments, Seq("project")),
+    Table("config", Route.Config, PE),
+    Table("menu", Route.Menu, PE),
+    Table("statistics", Route.Statistics, PE),
+    Table("ranges", Route.Ranges, PE),
+    Table("regions", Route.Regions, PE),
+    Table("models_style", Route.ModelsStyle, PE),
+    Table("map", Route.MapRoute,
+      PE ++ Seq("network", "obsvar", "layer", "model", "modvar", "time"), Set("time")),
+    Table("scatter", Route.Scatter,
+      PE ++ Seq("network", "obsvar", "layer", "model", "modvar", "time"), Set("time")),
+    Table("profiles", Route.Profiles, PE ++ Seq("location", "network", "obsvar")),
+    Table("heatmap_ts", Route.HeatmapTimeseries, PE ++ Seq("region", "network", "obsvar", "layer"),
+      Set("region", "network", "obsvar", "layer")),
+    Table("forecast", Route.Forecast, PE ++ Seq("region", "network", "obsvar", "layer")),
+    Table("fairmode", Route.Fairmode, PE ++ Seq("region", "network", "obsvar", "layer", "model", "time")),
+    Table("gridded_map", Route.GriddedMap, PE ++ Seq("obsvar", "model")),
+    Table("report", Route.Report, PE :+ "title"),
+    Table("report_image", Route.ReportImage, PE :+ "path"),
+    Table("map_overlay", Route.MapOverlay, PE ++ Seq("source", "variable", "date")),
   )
 
-  def tableFor(route: Route): String = route match {
-    case Route.GlobStats | Route.Heatmap | Route.RegionalStats => "glob_stats"
-    case r => tables.collectFirst { case (t, rr) if rr == r => t }.get
-  }
+  private val byName: Map[String, Table] = tables.map(t => t.name -> t).toMap
 
-  /** Superset key columns per table (all layout generations). */
-  def tableKeys(table: String): Seq[String] = table match {
-    case "glob_stats"        => Seq("project", "experiment", "frequency")
-    case "contour"           => Seq("project", "experiment", "obsvar", "model")
-    case "contour_timesplit" => Seq("project", "experiment", "obsvar", "model", "timestep")
-    case "timeseries" | "timeseries_weekly" =>
-      Seq("project", "experiment", "location", "network", "obsvar", "layer")
-    case "experiments"       => Seq("project")
-    case "config" | "menu" | "statistics" | "ranges" | "regions" =>
-      Seq("project", "experiment")
-    case "models_style"      => Seq("project", "experiment")
-    case "map" | "scatter"   =>
-      Seq("project", "experiment", "network", "obsvar", "layer", "model", "modvar", "time")
-    case "profiles"          => Seq("project", "experiment", "location", "network", "obsvar")
-    case "heatmap_ts" | "forecast" =>
-      Seq("project", "experiment", "region", "network", "obsvar", "layer")
-    case "fairmode"          =>
-      Seq("project", "experiment", "region", "network", "obsvar", "layer", "model", "time")
-    case "gridded_map"       => Seq("project", "experiment", "obsvar", "model")
-    case "report"            => Seq("project", "experiment", "title")
-    case "report_image"      => Seq("project", "experiment", "path")
-    case "map_overlay"       => Seq("project", "experiment", "source", "variable", "date")
-    case other => throw new IllegalArgumentException(s"Unknown table '$other'")
+  /** Route → table. GLOB_STATS / HEATMAP / REGIONAL_STATS share one
+    * `glob_stats` table, as they share storage in the reference
+    * (`sqlitedb.py:184-249`). */
+  private[store] val byRoute: Map[Route, Table] =
+    tables.map(t => t.route -> t).toMap ++
+      Seq(Route.GlobStats, Route.RegionalStats).map(_ -> byName("glob_stats"))
+
+  def table(name: String): Table =
+    byName.getOrElse(name, throw new IllegalArgumentException(s"Unknown table '$name'"))
+
+  def tableFor(route: Route): String = byRoute(route).name
+
+  /** Runs `f` on each table concurrently and waits for all of them:
+    * per-table scans and writes are independent Spark jobs on their own
+    * directories, which Spark's scheduler interleaves, so running them
+    * one after another would leave the cluster idle per small job. */
+  private[graft] def eachTable[B](ts: Seq[Table])(f: Table => B): Seq[B] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    Await.result(Future.sequence(ts.map(t => Future(f(t)))), Duration.Inf)
   }
 }

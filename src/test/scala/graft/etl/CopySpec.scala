@@ -49,6 +49,22 @@ class CopySpec extends AnyFunSuite {
     src.close(); viaPoints.close(); viaBulk.close()
   }
 
+  test("bulk import keys report figures of filename-encoded experiments by decoded names") {
+    val dir = graft.core.TempDirs.create("graft-copy-encoded")
+    val img = dir.resolve("reports/pro%2ject/my%2exp/img/x.png")
+    Files.createDirectories(img.getParent)
+    Files.write(img, Fixture.PixelPng)
+    val catalog = graft.catalog.Catalog.ingest(SparkTestSession.spark, dir.toString)
+    assert(catalog.select("project", "experiment", "path").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq ==
+      Seq(("pro_ject", "my_exp", "img/x.png")))
+    val src = new JsonFileStore(dir.toString)
+    val dst = freshTable().asInstanceOf[TableStore]
+    assert(CopyDb.bulkImport(SparkTestSession.spark, src, dst) == 1)
+    assert(dst.getReportImage("pro_ject", "my_exp", "img/x.png").sameElements(Fixture.PixelPng))
+    src.close(); dst.close()
+  }
+
   test("open(\":memory:\") round-trips like the reference's sqlite special case") {
     import graft.store.StoreRegistry
     val src = jsonFixture()

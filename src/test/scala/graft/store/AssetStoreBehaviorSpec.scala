@@ -221,6 +221,51 @@ trait AssetStoreBehavior { this: AnyFunSuite =>
     db.close()
   }
 
+  test(s"$backendName: rm experiment data retires experiments with filename-encoded names") {
+    val db = makeStore()
+    db.putConfig("""{"c": 1}""", "pro_ject", "my_exp")
+    db.putMenu("""{"m": 1}""", "pro_ject", "my_exp")
+    db.putMenu("""{"m": 2}""", "pro_ject", "other")
+    assert(db.listExperiments("pro_ject") == Seq("my_exp", "other"))
+    db.rmExperimentData("pro_ject", "my_exp")
+    assert(db.listExperiments("pro_ject") == Seq("other"))
+    assert(db.query(kwargs = Map("project" -> "pro_ject", "experiment" -> "my_exp")).isEmpty)
+    db.close()
+  }
+
+  test(s"$backendName: concurrent calls return what sequential calls return") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val db = makeStore()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try {
+      val reads: Seq[() => Any] = Seq(
+        () => db.getMenu("project", "experiment"),
+        () => db.getConfig("project", "experiment"),
+        () => db.getGlobStats("project", "experiment", "frequency"),
+        () => db.getHeatmap("project", "experiment", "frequency", "region", "time"),
+        () => db.getContour("project", "experiment", "obsvar", "model", "timestep"),
+        () => db.getMap("project", "experiment", "network", "obsvar", "layer", "model", "modvar", "time"),
+        () => db.getReportImage("project", "experiment", "img/pixel.png").toSeq,
+        () => db.getByUri("/v0/menu/project/experiment"),
+        () => db.getByUri("/v0/contour/project/experiment/obsvar/model?timestep=timestep2"),
+        () => db.query(kwargs = Map("project" -> "project", "experiment" -> "experiment")).map(_.uri).sorted,
+        () => db.listTimeseries("project", "experiment"))
+      val sequential = reads.map(_())
+      val putThenGet = Future {
+        db.putMenu("""{"written": "concurrently"}""", "project", "exp-concurrent")
+        db.getMenu("project", "exp-concurrent")
+      }
+      val concurrent = Await.result(Future.sequence(reads.map(r => Future(r()))), 5.minutes)
+      assert(concurrent == sequential)
+      assert(Await.result(putThenGet, 5.minutes) == AssetValue.Json("""{"written": "concurrently"}"""))
+    } finally {
+      pool.shutdown()
+      db.close()
+    }
+  }
+
   test(s"$backendName: rm by uri") {
     val db = makeStore()
     val uri = db.query(Seq(Route.Menu),
@@ -296,64 +341,6 @@ class JsonFileStoreSpec extends AnyFunSuite with AssetStoreBehavior {
     assert(db.listExperiments("project").contains("experiment"))
     assert(db.listExperiments("project").contains("experiment-old"))
     assert(db.listExperiments("project", hasResults = true).contains("experiment"))
-    db.close()
-  }
-
-  test("json_files: async facade mirrors the sync API across every route family") {
-    import scala.concurrent.Await
-    import scala.concurrent.duration._
-    import scala.concurrent.{Future => SFuture}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import AsyncStore.Ops
-    val db = makeStore()
-    val a = db.async
-    def eq[T](fut: SFuture[T], sync: => T): Unit = assert(Await.result(fut, 30.seconds) == sync)
-
-    // generic URI + listings + catalog
-    eq(a.getByUri("/v0/menu/project/experiment"), db.getByUri("/v0/menu/project/experiment"))
-    eq(a.listAll(), db.listAll())
-    eq(a.listTimeseries("project", "experiment"), db.listTimeseries("project", "experiment"))
-    eq(a.listMap("project", "experiment"), db.listMap("project", "experiment"))
-    eq(a.listGlobStats("project", "experiment"), db.listGlobStats("project", "experiment"))
-    eq(a.listExperiments("project"), db.listExperiments("project"))
-    eq(a.query(Seq(graft.core.Route.Menu)), db.query(Seq(graft.core.Route.Menu)))
-    // one getter per typed route family
-    eq(a.getGlobStats("project", "experiment", "frequency"),
-       db.getGlobStats("project", "experiment", "frequency"))
-    eq(a.getHeatmap("project", "experiment", "frequency", "region", "time"),
-       db.getHeatmap("project", "experiment", "frequency", "region", "time"))
-    eq(a.getContour("project", "experiment", "obsvar", "model", "timestep"),
-       db.getContour("project", "experiment", "obsvar", "model", "timestep"))
-    eq(a.getTimeseries("project", "experiment", "location", "network", "obsvar", "layer"),
-       db.getTimeseries("project", "experiment", "location", "network", "obsvar", "layer"))
-    eq(a.getExperiments("project"), db.getExperiments("project"))
-    eq(a.getConfig("project", "experiment"), db.getConfig("project", "experiment"))
-    eq(a.getMenu("project", "experiment"), db.getMenu("project", "experiment"))
-    eq(a.getStatistics("project", "experiment"), db.getStatistics("project", "experiment"))
-    eq(a.getRanges("project", "experiment"), db.getRanges("project", "experiment"))
-    eq(a.getRegions("project", "experiment"), db.getRegions("project", "experiment"))
-    eq(a.getModelsStyle("project"), db.getModelsStyle("project"))
-    eq(a.getMap("project", "experiment", "network", "obsvar", "layer", "model", "modvar", "time"),
-       db.getMap("project", "experiment", "network", "obsvar", "layer", "model", "modvar", "time"))
-    eq(a.getScatter("project", "experiment", "network", "obsvar", "layer", "model", "modvar", "time"),
-       db.getScatter("project", "experiment", "network", "obsvar", "layer", "model", "modvar", "time"))
-    eq(a.getProfiles("project", "experiment", "location", "network", "obsvar"),
-       db.getProfiles("project", "experiment", "location", "network", "obsvar"))
-    eq(a.getForecast("project", "experiment", "region", "network", "obsvar", "layer"),
-       db.getForecast("project", "experiment", "region", "network", "obsvar", "layer"))
-    eq(a.getFairmode("project", "experiment", "region", "network", "obsvar", "layer", "model", "time"),
-       db.getFairmode("project", "experiment", "region", "network", "obsvar", "layer", "model", "time"))
-    eq(a.getReport("project", "experiment", "title"), db.getReport("project", "experiment", "title"))
-    // blob routes
-    assert(Await.result(a.getReportImage("project", "experiment", "img/pixel.png"), 30.seconds)
-      .sameElements(db.getReportImage("project", "experiment", "img/pixel.png")))
-    assert(Await.result(a.getMapOverlay("project", "experiment", "source", "variable", "date"), 30.seconds)
-      .sameElements(db.getMapOverlay("project", "experiment", "source", "variable", "date")))
-    // async put + rm round-trip
-    Await.result(a.putMenu("""{"written": "async"}""", "project", "exp-async"), 30.seconds)
-    eq(a.getMenu("project", "exp-async"), db.getMenu("project", "exp-async"))
-    Await.result(a.rmByUri("/v0/menu/project/exp-async"), 30.seconds)
-    assert(db.query(Seq(graft.core.Route.Menu)).forall(_.meta.get("experiment") != Some("exp-async")))
     db.close()
   }
 

@@ -21,7 +21,7 @@ class TablePruningSpec extends AnyFunSuite {
         db.putMenu(s"""{"p": "$p", "e": "$e"}""", p, e)
       db.flushAll()
 
-      val df = db.readTable("menu").get
+      val df = db.readTable(TableStore.table("menu")).get
         .filter(col("project") === "p2" && col("experiment") === "e1")
       val plan = df.queryExecution.executedPlan.toString
 
@@ -57,7 +57,7 @@ class TablePruningSpec extends AnyFunSuite {
 
       // layout: the compacted rewrite is still directory-partitioned,
       // so the point read scans 1 of 6 partitions
-      val df = db.readTable("menu").get
+      val df = db.readTable(TableStore.table("menu")).get
         .filter(col("project") === "p2" && col("experiment") === "e1")
       val files = df.queryExecution.executedPlan.collectLeaves().collect {
         case s: org.apache.spark.sql.execution.FileSourceScanExec =>
