@@ -98,6 +98,20 @@ object Verify {
         a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
     def eqDumps(aName: String, b: => org.apache.spark.sql.DataFrame): Boolean =
       eqDumps0(read(aName), b)
+    // a multi-epoch chain gate (g08/p14/p15/m13): every epoch must
+    // equal its from-scratch rebuild (the eq_rebuild column IS the
+    // per-epoch pin, computed inside the gate against the live store),
+    // and the policy compaction must have FIRED mid-chain (the diffs
+    // are sized to cross the covered-fraction threshold)
+    def chainInvariants(p: String, gate: String): Seq[(String, String)] = Seq(
+      inv(s"${p}_eq_every_epoch") {
+        val rs = read(gate).collect()
+        rs.length == graft.analytics.Pipeline.ChainEpochs &&
+          rs.forall(_.getAs[Boolean]("eq_rebuild"))
+      },
+      inv(s"${p}_compaction_fired") {
+        read(gate).collect().exists(_.getAs[Boolean]("compacted"))
+      })
     import org.apache.spark.sql.functions.{count, explode, lit, lower, split, trim}
     // shared single-node fixtures (lazy: computed once on first use;
     // a failure surfaces in each dependent invariant, not globally)
@@ -312,55 +326,9 @@ object Verify {
           eqDumps0(graft.analytics.Graph.g07StoredEdges(spark, sfDir),
             graft.analytics.Graph.g07FullRebuildProbe(spark, sfDir))
         },
-        // g08: every epoch of the multi-epoch chain must equal its
-        // from-scratch rebuild (the eq_rebuild column IS the per-epoch
-        // pin, computed inside the gate against the live store)
-        inv("g08_eq_every_epoch") {
-          val rs = read("g08_multi_epoch_knn").collect()
-          rs.length == graft.analytics.Graph.G08Epochs &&
-            rs.forall(_.getAs[Boolean]("eq_rebuild"))
-        },
-        // g08: the policy compaction must have FIRED mid-chain (the
-        // diffs are sized to cross the covered-fraction threshold)
-        inv("g08_compaction_fired") {
-          read("g08_multi_epoch_knn").collect()
-            .exists(_.getAs[Boolean]("compacted"))
-        },
-        // p14: the PQ family's multi-epoch chain, same convention —
-        // every epoch's probe equals the from-scratch re-encode of
-        // that epoch's snapshot, and the policy compaction fired
-        inv("p14_eq_every_epoch") {
-          val rs = read("p14_multi_epoch_pq").collect()
-          rs.length == graft.analytics.Pipeline.P13Epochs &&
-            rs.forall(_.getAs[Boolean]("eq_rebuild"))
-        },
-        inv("p14_compaction_fired") {
-          read("p14_multi_epoch_pq").collect()
-            .exists(_.getAs[Boolean]("compacted"))
-        },
-        // p15: the plain-IVF family's multi-epoch chain (file-name
-        // generations + gen-scoped tombstones), same convention
-        inv("p15_eq_every_epoch") {
-          val rs = read("p15_multi_epoch_ivf").collect()
-          rs.length == graft.analytics.Pipeline.P13Epochs &&
-            rs.forall(_.getAs[Boolean]("eq_rebuild"))
-        },
-        inv("p15_compaction_fired") {
-          read("p15_multi_epoch_ivf").collect()
-            .exists(_.getAs[Boolean]("compacted"))
-        },
-        // m13: the image append-log family's multi-epoch chain, same
-        // convention (newest-per-key resolution, policy compaction
-        // from maintainer arithmetic)
-        inv("m13_eq_every_epoch") {
-          val rs = read("m13_multi_epoch_images").collect()
-          rs.length == graft.analytics.Pipeline.P13Epochs &&
-            rs.forall(_.getAs[Boolean]("eq_rebuild"))
-        },
-        inv("m13_compaction_fired") {
-          read("m13_multi_epoch_images").collect()
-            .exists(_.getAs[Boolean]("compacted"))
-        },
+      ) ++ Seq("g08" -> "g08_multi_epoch_knn", "p14" -> "p14_multi_epoch_pq",
+          "p15" -> "p15_multi_epoch_ivf", "m13" -> "m13_multi_epoch_images")
+        .flatMap { case (p, gate) => chainInvariants(p, gate) } ++ Seq(
         inv("g05_parity_singlenode") {
           val lpaEdges = read("s05_knn_graph")
             .filter(col("cos_sim") >= graft.analytics.Graph.LpaCosMin)

@@ -577,7 +577,7 @@ object Graph {
     // tombstone/append/compact sequence and the gate's own read-back
     // serialize per store; the read-back materializes eagerly (5N
     // rows) so no lazy scan can straddle a later application
-    g07StoreDirs.synchronized {
+    g07Lock.synchronized {
       // RESET to the snapshot-A seed first: the gate models ONE
       // nightly application (yesterday's artifact + tonight's diff),
       // and the fixture diff is the same every invocation — letting
@@ -641,24 +641,22 @@ object Graph {
       Dedup.normalizedVectors(spark, dir).count()
     })
 
-  private val g07StoreDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** g07's single-maintainer monitor: the reset/apply/compact
+    * sequence and the read-back serialize on it within the JVM. */
+  private val g07Lock = new Object
 
   /** The stored location of the maintained kNN artifact — one
     * segmented layout per (JVM, dataset), seeded with snapshot A's
     * edges at generation 0 (the build is the one corpus-proportional
     * write; every application after it is diff-proportional). */
   private def g07StoreDir(spark: SparkSession, dir: String): String =
-    graft.core.FixtureClock.memo(g07StoreDirs, dir)({ _ =>
-      val store = graft.core.TempDirs.create("graft-g07-store")
-        .resolve("edges").toString
+    graft.core.FixtureClock.staged("g07-store", dir) { store =>
       graft.core.DirSwap.copyTree(
         java.nio.file.Paths.get(Similarity.knnEdgesPath(spark, dir)),
         java.nio.file.Paths.get(store, "gen=0"))
       // no _rowcount here: the gate's per-invocation reset wipes and
       // re-seeds the store, writing the sidecar there (memoized count)
-      store
-    })
+    }
 
   /** Footer row count of the memoized snapshot-A edge seed, counted
     * once per (JVM, dataset) — g07's per-invocation reset re-writes
@@ -1009,15 +1007,7 @@ object Graph {
         vectorSnapshotB(Dedup.normalizedVectors(spark, dir)), k = 5)
       .orderBy("vec_id", "rnk")
 
-  /** How many successive CDC epochs [[g08MultiEpochKnn]] chains. */
-  private[graft] val G08Epochs = 3
-
-  /** Memoized digests of g08's per-epoch rebuild twins (pure fixture
-    * functions — see the computeIfAbsent site). */
-  private val g08RebuildDigests =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), (Long, Long)]()
-
-  /** The corpus after `e` of [[G08Epochs]] successive, DISJOINT CDC
+  /** The corpus after `e` of [[Pipeline.ChainEpochs]] successive, DISJOINT CDC
     * epochs, as a pure function of snapshot A — epoch j deletes id
     * class `3j−2` (mod 13), re-embeds class `3j−1` (rotation by j),
     * and adds one new vector `-(id+1)` (rotation by j+1) per class
@@ -1046,10 +1036,10 @@ object Graph {
 
   /** g08 gate: MULTI-EPOCH maintenance of the segmented kNN-edge
     * store — the accumulation path g07's single-application gate
-    * never exercises deterministically. [[G08Epochs]] successive,
-    * disjoint CDC diffs chain through ONE store; each epoch runs the
-    * same tombstone/append/policy-compact loop as g07, and the gate's
-    * output pins, PER EPOCH:
+    * never exercises deterministically. [[Pipeline.ChainEpochs]]
+    * successive, disjoint CDC diffs chain through ONE store; each
+    * epoch runs the same tombstone/append/policy-compact loop as g07,
+    * and the gate's output pins, PER EPOCH:
     *
     *  - `eq_rebuild`: the live view equals a from-scratch exact
     *    rebuild of that epoch's snapshot (so correctness holds at
@@ -1057,25 +1047,18 @@ object Graph {
     *    compaction — not just at the end);
     *  - `covered_before` / `compacted`: the tombstone-covered
     *    fraction at the policy decision and whether compaction ran —
-    *    the diffs are sized so [[graft.core.SegmentedIndex
-    *    .maybeCompact]] provably fires mid-chain (MultiEpochSpec
-    *    asserts the threshold crossing), instead of compaction only
-    *    ever firing incidentally across bench passes.
+    *    the diffs are sized so the policy provably fires mid-chain
+    *    (MultiEpochSpec asserts the threshold crossing), instead of
+    *    compaction only ever firing incidentally across bench passes.
     *
-    * Rows-only gate (the per-epoch equality columns ARE the check;
-    * Verify pins them as `g08_eq_every_epoch` / `g08_compaction_fired`). */
-  def g08MultiEpochKnn(spark: SparkSession, dir: String): DataFrame =
-    g08MultiEpochKnn(spark, dir, rebuildCheck = true)
-
-  /** [[g08MultiEpochKnn]] with the per-epoch rebuild twin optional:
-    * `rebuildCheck = false` is the dev-probe mode (ChainProbe's 10×
-    * replication sweep), where the O(N²) exact-rebuild CHECK would
-    * dwarf the maintenance work being priced — `eq_rebuild` reads
-    * null there, never a fabricated verdict. Gates always check. */
-  private[graft] def g08MultiEpochKnn(spark: SparkSession, dir: String,
-                                      rebuildCheck: Boolean): DataFrame =
+    * `rebuildCheck = false` is [[Pipeline.epochChain]]'s probe mode
+    * (ChainProbe's 10× replication sweep, where the O(N²) exact
+    * rebuild would dwarf the maintenance work being priced). Rows-only
+    * gate (the per-epoch equality columns ARE the check; Verify pins
+    * them as `g08_eq_every_epoch` / `g08_compaction_fired`). */
+  def g08MultiEpochKnn(spark: SparkSession, dir: String,
+                       rebuildCheck: Boolean = true): DataFrame =
     graft.core.TempDirs.scoped("graft-g08") { tmp =>
-      import spark.implicits._
       val store = tmp.resolve("edges").toString
       val a = Dedup.normalizedVectors(spark, dir)
       graft.core.DirSwap.copyTree(
@@ -1097,63 +1080,51 @@ object Graph {
       // pass instead of 6 — union-of-rotations compute plus a
       // checkpoint job each)
       var carried: DataFrame = null
-      val rows = (1 to G08Epochs).map { e =>
-        // materialize both snapshots once per epoch: the apply's
-        // admission scan, the |touched|·N recompute, and the rebuild
-        // twin each consume them several times, and re-deriving the
-        // union-of-rotations plan per consumer triples the corpus work
-        val aCur = if (carried != null) carried
-                   else g08Snapshot(a, e - 1).localCheckpoint(true)
-        val bCur = g08Snapshot(a, e).localCheckpoint(true)
-        val dirtyOld = a.filter(cls === 3 * e - 2 || cls === 3 * e - 1)
-          .select("vec_id")
-        val newIds = a.filter(cls === 3 * e - 1).select("vec_id")
-          .unionByName(a.filter(cls === 3 * e)
-            .select((col("vec_id") * -1 - 1).as("vec_id")))
-        val nRec = applyKnnDiffToStore(aCur, liveEdges.drop("gen"), bCur,
-          dirtyOld, newIds, store, gen = e.toLong, cents = cents,
-          pureNewIds = Some(a.filter(cls === 3 * e)
-            .select((col("vec_id") * -1 - 1).as("vec_id"))),
-          survivorsBound = Some(2 * corpusCount(spark, dir)))
-        // one covered measurement drives BOTH the recorded column and
-        // the compaction decision (maybeCompact would re-measure; the
-        // policy — strictly above the threshold — is replicated
-        // verbatim). The measurement is the metadata-cheap instance
-        // estimate (k rows per tombstoned (node, generation) — exact
-        // for this store; MaintainedStoreEstimateSpec pins it against
-        // the full anti-join)
-        val covered = graft.core.SegmentedIndex.coveredFractionEstimate(
+      val rows = Pipeline.epochChain("g08", dir, rebuildCheck)(new Pipeline.ChainSteps {
+        private var aCur: DataFrame = _
+        private var bCur: DataFrame = _
+        def applyDiff(e: Int): Long = {
+          // materialize both snapshots once per epoch: the apply's
+          // admission scan, the |touched|·N recompute, and the rebuild
+          // twin each consume them several times, and re-deriving the
+          // union-of-rotations plan per consumer triples the corpus work
+          aCur = if (carried != null) carried
+                 else g08Snapshot(a, e - 1).localCheckpoint(true)
+          bCur = g08Snapshot(a, e).localCheckpoint(true)
+          val dirtyOld = a.filter(cls === 3 * e - 2 || cls === 3 * e - 1)
+            .select("vec_id")
+          val newIds = a.filter(cls === 3 * e - 1).select("vec_id")
+            .unionByName(a.filter(cls === 3 * e)
+              .select((col("vec_id") * -1 - 1).as("vec_id")))
+          applyKnnDiffToStore(aCur, liveEdges.drop("gen"), bCur,
+            dirtyOld, newIds, store, gen = e.toLong, cents = cents,
+            pureNewIds = Some(a.filter(cls === 3 * e)
+              .select((col("vec_id") * -1 - 1).as("vec_id"))),
+            survivorsBound = Some(2 * corpusCount(spark, dir)))
+        }
+        // the metadata-cheap instance estimate (k rows per tombstoned
+        // (node, generation) — exact for this store;
+        // MaintainedStoreEstimateSpec pins it against the full
+        // anti-join)
+        def covered(): Double = graft.core.SegmentedIndex.coveredFractionEstimate(
           spark.read.parquet(store), store,
           genScoped = true, rowsPerInstance = Similarity.KnnEdgeK.toDouble,
           requireTracked = true)
-        val compacted = covered > graft.core.SegmentedIndex.CompactThreshold
-        if (compacted) graft.core.SegmentedIndex.compactWith(store) { stage =>
+        def compact(e: Int): Unit = graft.core.SegmentedIndex.compactWith(store) { stage =>
           liveEdges.drop("gen").write.parquet(s"$stage/gen=$e")
         }
-        val live = liveEdges.select("vec_id", "rnk", "neighbor_id", "cos_sim")
-        // the rebuild twin is the gate's CHECK — a pure function of
-        // the fixture (snapshot e's exact kNN graph), not part of the
-        // maintenance work the gate measures — so its digest is
-        // memoized per (dataset, epoch) like the seeded baselines:
-        // the first invocation per JVM pays the three exact rebuilds,
-        // warm passes re-digest only the maintained live view
-        val (nLive, liveCrc) = Pipeline.familyDigest(live)
-        val eq: Option[Boolean] = if (!rebuildCheck) None else {
-          val rebuiltDigest = graft.core.FixtureClock.memo(g08RebuildDigests, (dir, e))({ _ =>
-            Pipeline.familyDigest(Similarity.knnGraphExact(bCur, k = 5)
-              .select("vec_id", "rnk", "neighbor_id", "cos_sim"))
-          })
-          Some((nLive, liveCrc) == rebuiltDigest)
+        override def live(e: Int): Option[DataFrame] =
+          Some(liveEdges.select("vec_id", "rnk", "neighbor_id", "cos_sim"))
+        override def rebuild(e: Int, scratch: java.nio.file.Path): DataFrame =
+          Similarity.knnGraphExact(bCur, k = 5)
+            .select("vec_id", "rnk", "neighbor_id", "cos_sim")
+        override def release(e: Int): Unit = {
+          aCur.unpersist()
+          carried = bCur // next epoch's pre-image; released there or below
         }
-        aCur.unpersist()
-        carried = bCur // next epoch's pre-image; released there or below
-        (e, nRec, nLive, math.floor(covered * 1000 + 0.5) / 1000,
-          compacted, eq)
-      }
+      })
       if (carried != null) carried.unpersist()
-      rows.toDF("epoch", "n_recomputed", "n_live", "covered_before",
-          "compacted", "eq_rebuild")
-        .orderBy("epoch").localCheckpoint(true)
+      Pipeline.receiptFrame(spark, rows, "n_recomputed", "n_live")
     }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -455,25 +455,6 @@ object Multimodal {
     * exactly like a from-scratch rebuild of the new corpus
     * (`m12_eq_fullrebuild` in Verify; MultimodalSpec pins the planted
     * group moves). Rows-only (PNG round trip). */
-  private val m12BaseDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Yesterday's fingerprint index: a stored per-(JVM, dir) artifact
-    * (the knnEdges/postings pattern) — the full-corpus decode+hash
-    * pass runs once, every later invocation (m12, st24) reads the
-    * parquet back. */
-  private def m12BaseDir(spark: SparkSession, dir: String): String =
-    graft.core.FixtureClock.memo(m12BaseDirs, dir)({ _ =>
-      import spark.implicits._
-      val p = graft.core.TempDirs.create("graft-m12")
-        .resolve("ahash").toString
-      imageHashes(syntheticImagesKeyed(
-          Tables.documents(spark, dir).select(col("doc_id")).as[Long]
-            .map(d => (d, d % 10))))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-
   def m12ImageIndexMaintenance(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val ids = Tables.documents(spark, dir).select(col("doc_id")).as[Long]
@@ -488,6 +469,19 @@ object Multimodal {
       .unionByName(recomputed)
     hashGroups(maintained)
   }
+
+  /** Yesterday's fingerprint index: a stored per-(JVM, dir) artifact
+    * (the knnEdges/postings pattern) — the full-corpus decode+hash
+    * pass runs once, every later invocation (m12, st24) reads the
+    * parquet back. */
+  private def m12BaseDir(spark: SparkSession, dir: String): String =
+    graft.core.FixtureClock.staged("m12-base", dir) { p =>
+      import spark.implicits._
+      imageHashes(syntheticImagesKeyed(
+          Tables.documents(spark, dir).select(col("doc_id")).as[Long]
+            .map(d => (d, d % 10))))
+        .write.mode("overwrite").parquet(p)
+    }
 
   /** The rebuild twin: hash the whole mutated corpus from scratch.
     * Called by Verify for `m12_eq_fullrebuild`. */
@@ -515,7 +509,7 @@ object Multimodal {
     import ids.sparkSession.implicits._
     val gone = (1 to e).flatMap(Pipeline.p13DeleteClasses).toSet
     val changed = (1 to e).map(j => Pipeline.p13ChangeClass(j) -> m13Key(j)).toMap
-    val addEpoch = e >= Pipeline.P13Epochs
+    val addEpoch = e >= Pipeline.ChainEpochs
     ids.flatMap { d =>
       val cls = (d % 16).toInt
       val kept =
@@ -524,29 +518,6 @@ object Multimodal {
       val added = if (addEpoch && cls == 0) Seq((-(d + 1), M13AddKey)) else Nil
       kept ++ added
     }
-  }
-
-  /** Memoized digests of m13's per-epoch rebuild twins (pure fixture
-    * functions — the g08/p14/p15 discipline). */
-  private val m13RebuildDigests =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), (Long, Long)]()
-
-  /** Compact the append-log index: keep each doc's newest `put` row
-    * (gens retained — later epochs must still order above them), drop
-    * rm rows and superseded puts, publish with the crash-safe
-    * two-rename. The append log's epoch boundary — the analogue of
-    * the tombstone families' sidecar-clearing rewrite. */
-  private def m13CompactLog(spark: SparkSession, index: String): Unit = {
-    graft.core.DirSwap.recover(index)
-    val tmp = graft.core.DirSwap.compactingPath(index)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy(col("gen").desc)
-    spark.read.parquet(index)
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1 && col("op") === "put")
-      .drop("_rn")
-      .write.parquet(tmp.toString)
-    graft.core.DirSwap.swapInto(index)
   }
 
   /** m13 gate: MULTI-EPOCH maintenance of the image-fingerprint
@@ -564,16 +535,11 @@ object Multimodal {
     * log row count; MaintainedStoreEstimateSpec pins it against the
     * resolve-and-count exact fraction. Per-epoch `eq_rebuild`: the
     * resolved groups equal a from-scratch decode+hash of that epoch's
-    * corpus (memoized twin). Rows-only (PNG round trip); Verify pins
-    * `m13_eq_every_epoch` / `m13_compaction_fired`. */
-  def m13MultiEpochImages(spark: SparkSession, dir: String): DataFrame =
-    m13MultiEpochImages(spark, dir, rebuildCheck = true)
-
-  /** [[m13MultiEpochImages]] with the rebuild twin optional — the g08
-    * probe-mode convention (ChainProbe): `rebuildCheck = false` skips
-    * the full-corpus decode+hash check and `eq_rebuild` reads null. */
-  private[graft] def m13MultiEpochImages(spark: SparkSession, dir: String,
-                                         rebuildCheck: Boolean): DataFrame =
+    * corpus (memoized twin). `rebuildCheck = false` is
+    * [[Pipeline.epochChain]]'s probe mode. Rows-only (PNG round
+    * trip); Verify pins `m13_eq_every_epoch` / `m13_compaction_fired`. */
+  def m13MultiEpochImages(spark: SparkSession, dir: String,
+                          rebuildCheck: Boolean = true): DataFrame =
     graft.core.TempDirs.scoped("graft-m13") { tmp =>
       import spark.implicits._
       val ids = Tables.documents(spark, dir).select(col("doc_id")).as[Long]
@@ -581,76 +547,78 @@ object Multimodal {
       spark.read.parquet(m12BaseDir(spark, dir))
         .withColumn("gen", lit(0L)).withColumn("op", lit("put"))
         .write.mode("overwrite").parquet(index)
-      var deadSinceCompact = 0L
-      // the policy DENOMINATOR is maintainer arithmetic too: seeded
-      // from the just-written log's footers (driver-side, bounded),
-      // advanced by the known per-epoch append sizes, re-based from
-      // the rewrite after a compaction — the epoch loop never runs a
-      // count job or a log-wide listing just to decide whether to
-      // compact (the same discipline as the tombstone families'
-      // _rowcount sidecar; this log's maintainer is in-process so a
-      // local var is its sidecar)
-      var totalRows = graft.core.SegmentedIndex.footerRowCountOf(
-        java.nio.file.Paths.get(index))
-      val rows = (1 to Pipeline.P13Epochs).map { e =>
-        val cls = col("doc_id") % 16
-        val delClasses = Pipeline.p13DeleteClasses(e).map(Int.box)
-        val rmIds = ids.toDF("doc_id").filter(cls.isin(delClasses: _*))
-        // decode + hash ONLY the diff: this epoch's re-crawled class
-        // (fresh pattern) and, final epoch, the added images
-        val diffKeys = m13KeysAt(ids, e)
-          .filter(kv => kv._2 == m13Key(e) || (e >= Pipeline.P13Epochs && kv._2 == M13AddKey))
-        val puts = imageHashes(syntheticImagesKeyed(diffKeys))
-          .withColumn("gen", lit(e.toLong)).withColumn("op", lit("put"))
-        val rms = rmIds
-          .select(col("doc_id"), lit(0L).as("ahash"),
-            lit(e.toLong).as("gen"), lit("rm").as("op"))
-        puts.unionByName(rms).write.mode("append").parquet(index)
-        val nRm = rmIds.count()
-        // counted off the key pairs, not `puts` — re-counting puts
-        // would re-run the diff's decode+hash job. One pass yields
-        // both the re-put count and the epoch's full put-row count
-        // (re-puts + final-epoch adds, the negative ids)
-        val (nPutRows, nReput) = {
-          val r = diffKeys.toDF("doc_id", "key")
-            .agg(count(lit(1)), count(when(col("doc_id") >= 0, lit(1)))).head()
-          (r.getLong(0), r.getLong(1))
+      val rows = Pipeline.epochChain("m13", dir, rebuildCheck)(new Pipeline.ChainSteps {
+        private var deadSinceCompact = 0L
+        // the policy DENOMINATOR is maintainer arithmetic too: seeded
+        // from the just-written log's footers (driver-side, bounded),
+        // advanced by the known per-epoch append sizes, re-based from
+        // the rewrite after a compaction — the epoch loop never runs a
+        // count job or a log-wide listing just to decide whether to
+        // compact (the same discipline as the tombstone families'
+        // _rowcount sidecar; this log's maintainer is in-process so a
+        // field is its sidecar)
+        private var totalRows = graft.core.SegmentedIndex.footerRowCountOf(
+          java.nio.file.Paths.get(index))
+        def applyDiff(e: Int): Long = {
+          val cls = col("doc_id") % 16
+          val delClasses = Pipeline.p13DeleteClasses(e).map(Int.box)
+          val rmIds = ids.toDF("doc_id").filter(cls.isin(delClasses: _*))
+          // decode + hash ONLY the diff: this epoch's re-crawled class
+          // (fresh pattern) and, final epoch, the added images
+          val diffKeys = m13KeysAt(ids, e).filter(kv =>
+            kv._2 == m13Key(e) || (e >= Pipeline.ChainEpochs && kv._2 == M13AddKey))
+          val puts = imageHashes(syntheticImagesKeyed(diffKeys))
+            .withColumn("gen", lit(e.toLong)).withColumn("op", lit("put"))
+          val rms = rmIds
+            .select(col("doc_id"), lit(0L).as("ahash"),
+              lit(e.toLong).as("gen"), lit("rm").as("op"))
+          puts.unionByName(rms).write.mode("append").parquet(index)
+          val nRm = rmIds.count()
+          // counted off the key pairs, not `puts` — re-counting puts
+          // would re-run the diff's decode+hash job. One pass yields
+          // both the re-put count and the epoch's full put-row count
+          // (re-puts + final-epoch adds, the negative ids)
+          val (nPutRows, nReput) = {
+            val r = diffKeys.toDF("doc_id", "key")
+              .agg(count(lit(1)), count(when(col("doc_id") >= 0, lit(1)))).head()
+            (r.getLong(0), r.getLong(1))
+          }
+          // rm rows are dead twice over (themselves + their target),
+          // re-crawls supersede exactly one, adds none; the denominator
+          // advances by exactly what this epoch appended
+          deadSinceCompact += 2 * nRm + nReput
+          totalRows += nPutRows + nRm
+          nRm + nReput
         }
-        // maintainer-arithmetic covered fraction: rm rows are dead
-        // twice over (themselves + their target), re-crawls supersede
-        // exactly one, adds none; the denominator advances by exactly
-        // what this epoch appended (put rows + rm rows)
-        deadSinceCompact += 2 * nRm + nReput
-        totalRows += nPutRows + nRm
-        val covered =
+        def covered(): Double =
           if (totalRows == 0L) 0.0 else deadSinceCompact.toDouble / totalRows
-        val compacted = covered > graft.core.SegmentedIndex.CompactThreshold
-        if (compacted) {
-          m13CompactLog(spark, index)
+        // the append log's epoch boundary: keep each doc's newest `put`
+        // row (gens retained — later epochs must still order above
+        // them), drop rm rows and superseded puts
+        def compact(e: Int): Unit = {
+          graft.core.SegmentedIndex.compactWith(index) { stage =>
+            val w = org.apache.spark.sql.expressions.Window
+              .partitionBy("doc_id").orderBy(col("gen").desc)
+            spark.read.parquet(index)
+              .withColumn("_rn", row_number().over(w))
+              .filter(col("_rn") === 1 && col("op") === "put")
+              .drop("_rn")
+              .write.parquet(stage)
+          }
           deadSinceCompact = 0L
-          // re-base from the rewrite the compaction just published —
-          // a driver-side footer walk of exactly what was written
+          // re-base from the rewrite the compaction just published — a
+          // driver-side footer walk of exactly what was written
           totalRows = graft.core.SegmentedIndex.footerRowCountOf(
             java.nio.file.Paths.get(index))
         }
-        val live = graft.core.SegmentedIndex.resolveNewest(
-            spark.read.parquet(index), keyCol = "doc_id", genCol = "gen",
-            opCol = "op")
-          .select("doc_id", "ahash")
-        val got = Pipeline.familyDigest(hashGroups(live))
-        val eq: Option[Boolean] = if (!rebuildCheck) None else {
-          val rebuiltDigest = graft.core.FixtureClock.memo(m13RebuildDigests, (dir, e))({ _ =>
-            Pipeline.familyDigest(hashGroups(imageHashes(
-              syntheticImagesKeyed(m13KeysAt(ids, e)))))
-          })
-          Some(got == rebuiltDigest)
-        }
-        (e, nRm + nReput, got._1,
-          math.floor(covered * 1000 + 0.5) / 1000, compacted, eq)
-      }
-      rows.toDF("epoch", "n_dirty", "n_groups", "covered_before",
-          "compacted", "eq_rebuild")
-        .orderBy("epoch").localCheckpoint(true)
+        override def live(e: Int): Option[DataFrame] = Some(hashGroups(
+          graft.core.SegmentedIndex.resolveNewest(spark.read.parquet(index),
+              keyCol = "doc_id", genCol = "gen", opCol = "op")
+            .select("doc_id", "ahash")))
+        override def rebuild(e: Int, scratch: java.nio.file.Path): DataFrame =
+          hashGroups(imageHashes(syntheticImagesKeyed(m13KeysAt(ids, e))))
+      })
+      Pipeline.receiptFrame(spark, rows, "n_dirty", "n_groups")
     }
 
   /** st24 gate: STREAMED image-fingerprint index maintenance — m12's
@@ -686,36 +654,30 @@ object Multimodal {
       .withColumn("payload", lit(null).cast("binary"))
       .withColumn("change_type", lit("deleted"))
     changed.unionByName(deleted).repartition(3).write.parquet(feedDir)
-    val s = graft.streaming.EventStream.boundedDriveSession(spark)
     val feedSchema = new org.apache.spark.sql.types.StructType()
       .add("doc_id", org.apache.spark.sql.types.LongType)
       .add("payload", org.apache.spark.sql.types.BinaryType)
       .add("change_type", org.apache.spark.sql.types.StringType)
-    val q = s.readStream.schema(feedSchema)
-      .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val bs = batch.sparkSession
-        import bs.implicits._
-        // replay-stable generation; a re-delivered batch re-appends
-        // IDENTICAL (doc_id, ahash, gen, op) rows, which resolveNewest's
-        // newest-per-key pick collapses — the append log is the one
-        // maintained layout that is replay-safe without segment dirs
-        val g = batchId + 1
-        // decode + hash ONLY this batch's new content
-        val puts = imageHashes(
-            batch.filter(col("change_type").isin("changed", "added"))
-              .select(col("doc_id"), col("payload"))
-              .as[(Long, Array[Byte])])
-          .withColumn("gen", lit(g)).withColumn("op", lit("put"))
-        val rms = batch.filter(col("change_type") === "deleted")
-          .select(col("doc_id"), lit(0L).as("ahash"),
-            lit(g).as("gen"), lit("rm").as("op"))
-        puts.unionByName(rms).write.mode("append").parquet(index)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    graft.streaming.EventStream.driveBatches(spark, graft.streaming.EventStream
+        .readStagedFeed(_, feedSchema, feedDir)) { (batch, batchId) =>
+      val bs = batch.sparkSession
+      import bs.implicits._
+      // replay-stable generation; a re-delivered batch re-appends
+      // IDENTICAL (doc_id, ahash, gen, op) rows, which resolveNewest's
+      // newest-per-key pick collapses — the append log is the one
+      // maintained layout that is replay-safe without segment dirs
+      val g = batchId + 1
+      // decode + hash ONLY this batch's new content
+      val puts = imageHashes(
+          batch.filter(col("change_type").isin("changed", "added"))
+            .select(col("doc_id"), col("payload"))
+            .as[(Long, Array[Byte])])
+        .withColumn("gen", lit(g)).withColumn("op", lit("put"))
+      val rms = batch.filter(col("change_type") === "deleted")
+        .select(col("doc_id"), lit(0L).as("ahash"),
+          lit(g).as("gen"), lit("rm").as("op"))
+      puts.unionByName(rms).write.mode("append").parquet(index)
+    }
     // newest generation per doc wins; rm rows delete (the shared
     // append-log resolution) — then group
     val live = graft.core.SegmentedIndex.resolveNewest(

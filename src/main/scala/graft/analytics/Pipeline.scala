@@ -352,21 +352,15 @@ object Pipeline {
       .orderBy("cell", "sel_rank")
   }
 
-  private val qualityScoreDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** "Yesterday's output": per-doc quality flags for snapshot A,
     * stored once per (JVM, sf dir) — the cached artifact an
     * incremental pipeline holds between runs. */
   private def ensureQualityScoresA(spark: SparkSession, dir: String): String =
-    graft.core.FixtureClock.memo(qualityScoreDirs, dir)({ _ =>
-      val out = graft.core.TempDirs
-        .create("graft-quality-scores").toString + "/scores"
+    graft.core.FixtureClock.staged("quality-scores", dir) { out =>
       Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), TextOps.qualityPass.as("pass"))
         .write.mode("overwrite").parquet(out)
-      out
-    })
+    }
 
   /** p07 gate: INCREMENTAL quality re-scoring — the derived-artifact
     * half of the CDC loop (q36 folds state, s11 appends the index,
@@ -453,33 +447,21 @@ object Pipeline {
     * [[copyBaseline]] it into their scoped dirs — file I/O instead of
     * a corpus re-encode — and mutate the COPY; the baseline itself is
     * immutable, like [[p11Codebooks]] and the m12 base artifact. */
-  private val p11BaseDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[analytics] def p11BaselineLayout(spark: SparkSession, dir: String): String =
-    graft.core.FixtureClock.memo(p11BaseDirs, dir)({ _ =>
-      val p = graft.core.TempDirs.create("graft-p11-base")
-        .resolve("index").toString
+    graft.core.FixtureClock.staged("p11-base", dir) { p =>
       val (cents, books) = p11Codebooks(spark, dir)
       Similarity.writeIvfPqLayoutWith(cents, books,
         p11Normalized(Tables.documents(spark, dir)), p)
-      p
-    })
+    }
 
   /** The snapshot-A plain-IVF baseline layout, same discipline (p08's
     * in-gate step 1). The memoized artifact also carries the codebook
     * sidecar, so consumers re-read `cents` from the copy. */
-  private val p08BaseDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[analytics] def p08BaselineLayout(spark: SparkSession, dir: String): String =
-    graft.core.FixtureClock.memo(p08BaseDirs, dir)({ _ =>
-      val p = graft.core.TempDirs.create("graft-p08-base")
-        .resolve("index").toString
+    graft.core.FixtureClock.staged("p08-base", dir) { p =>
       Similarity.writeIvfLayout(p08Normalized(Tables.documents(spark, dir)), p,
         k = P08Cells, iters = 10)
-      p
-    })
+    }
 
   /** Copy a memoized baseline layout into a gate's scoped dir — file
     * I/O instead of the corpus re-encode; the gate mutates the copy. */
@@ -491,16 +473,10 @@ object Pipeline {
   /** The snapshot-A postings baseline (p10/st23/p12's in-gate step 1
     * — a full-corpus tokenize + layout write per invocation until
     * r13), memoized like the vector baselines. */
-  private val p10BaseDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[analytics] def p10BaselineLayout(spark: SparkSession, dir: String): String =
-    graft.core.FixtureClock.memo(p10BaseDirs, dir)({ _ =>
-      val p = graft.core.TempDirs.create("graft-p10-base")
-        .resolve("postings").toString
+    graft.core.FixtureClock.staged("p10-base", dir) { p =>
       TextOps.writePostingsLayout(spark, Tables.documents(spark, dir), p)
-      p
-    })
+    }
 
   private[analytics] def p11QuerySet(docs: DataFrame): DataFrame =
     p11Normalized(docs.filter(col("doc_id") % 100 === 0))
@@ -735,8 +711,83 @@ object Pipeline {
     out
   }
 
-  /** How many successive CDC epochs [[p13MultiEpochPostings]] chains. */
-  private[graft] val P13Epochs = 3
+  // ---- the multi-epoch chain runner (p13/p14/p15, m13, g08) ----
+
+  /** How many successive CDC epochs every multi-epoch chain applies. */
+  private[graft] val ChainEpochs = 3
+
+  /** One chain's family-specific steps, which [[epochChain]] runs once
+    * per epoch in this order: `applyDiff` applies the epoch's diff to
+    * the stored layout and returns the receipt's count column;
+    * `covered` measures the tombstone-covered fraction; `compact`
+    * rewrites the layout when [[graft.core.SegmentedIndex.compactDue]];
+    * `live` is the maintained result to digest (None: the chain's gate
+    * reports elsewhere and records no per-epoch digest) and `rebuild`
+    * its from-scratch twin for the epoch, written under `scratch`;
+    * `release` frees the epoch's state after both digests. */
+  private[graft] abstract class ChainSteps {
+    def applyDiff(e: Int): Long
+    def covered(): Double
+    def compact(e: Int): Unit
+    def live(e: Int): Option[DataFrame] = None
+    def rebuild(e: Int, scratch: java.nio.file.Path): DataFrame =
+      throw new UnsupportedOperationException("this chain has no rebuild twin")
+    def release(e: Int): Unit = ()
+  }
+
+  /** One epoch of a chain: the family's count, the live digest's row
+    * count, the covered fraction the policy read (rounded to 3 places),
+    * whether it compacted, and the rebuild verdict — None in probe mode
+    * or without a live step, never a fabricated one. */
+  private[graft] final case class EpochReceipt(epoch: Int, n: Long,
+      nLive: Option[Long], covered: Double, compacted: Boolean,
+      eqRebuild: Option[Boolean])
+
+  /** Digests of the chains' per-epoch rebuild twins, keyed by (gate,
+    * dataset, epoch): a twin is the gate's CHECK — a pure function of
+    * the fixture, not the maintenance work the gate measures — so the
+    * first invocation per JVM pays it and warm passes re-digest only
+    * the maintained result. The gate name keeps two chains over the
+    * same dataset from comparing against each other's twin. */
+  private val chainRebuildDigests =
+    new java.util.concurrent.ConcurrentHashMap[(String, String, Int), (Long, Long)]()
+
+  /** Run a multi-epoch maintenance chain: for each of [[ChainEpochs]]
+    * epochs apply the diff, take ONE covered measurement that drives
+    * both the receipt and the compaction decision, digest the live
+    * result and compare it with the memoized rebuild digest.
+    * `rebuildCheck = false` is probe mode (ChainProbe's replication
+    * sweep, where an O(N²) twin would dwarf the maintenance priced):
+    * the twin is never built and `eqRebuild` is None. */
+  private[graft] def epochChain(gate: String, dir: String, rebuildCheck: Boolean)
+                               (steps: ChainSteps): Seq[EpochReceipt] =
+    (1 to ChainEpochs).map { e =>
+      val n = steps.applyDiff(e)
+      val covered = steps.covered()
+      val compacted = graft.core.SegmentedIndex.compactDue(covered)
+      if (compacted) steps.compact(e)
+      val got = steps.live(e).map(familyDigest)
+      val eq = got.filter(_ => rebuildCheck).map { d =>
+        d == graft.core.FixtureClock.memo(chainRebuildDigests, (gate, dir, e)) { _ =>
+          graft.core.TempDirs.scoped(s"graft-$gate-rebuild")(r =>
+            familyDigest(steps.rebuild(e, r)))
+        }
+      }
+      steps.release(e)
+      EpochReceipt(e, n, got.map(_._1), math.floor(covered * 1000 + 0.5) / 1000,
+        compacted, eq)
+    }
+
+  /** A chain gate's output: one row per epoch, the family's count and
+    * live-count columns named `nCol`/`liveCol`, materialized eagerly
+    * (the gate's scoped layout is deleted when it returns). */
+  private[graft] def receiptFrame(spark: SparkSession, receipts: Seq[EpochReceipt],
+                                  nCol: String, liveCol: String): DataFrame = {
+    import spark.implicits._
+    receipts.map(r => (r.epoch, r.n, r.nLive, r.covered, r.compacted, r.eqRebuild))
+      .toDF("epoch", nCol, liveCol, "covered_before", "compacted", "eq_rebuild")
+      .orderBy("epoch").localCheckpoint(true)
+  }
 
   /** p13's per-epoch mutation classes (mod 16) — DISJOINT across
     * epochs, so every intermediate snapshot is a direct function of
@@ -761,7 +812,7 @@ object Pipeline {
     case _ => 14
   }
 
-  /** The documents table after `e` of [[P13Epochs]] successive CDC
+  /** The documents table after `e` of [[ChainEpochs]] successive CDC
     * epochs — epoch j deletes [[p13DeleteClasses]](j), appends
     * `" [e<j>]"` to class [[p13ChangeClass]](j)'s text, and (final
     * epoch only) adds a copy of each class-0 doc under id
@@ -778,7 +829,7 @@ object Pipeline {
     val revised = (1 to e).foldLeft(kept)((d, j) =>
       d.withColumn("text", when(cls === p13ChangeClass(j),
         concat(col("text"), lit(s" [e$j]"))).otherwise(col("text"))))
-    if (e >= P13Epochs)
+    if (e >= ChainEpochs)
       revised.unionByName(docs.filter(cls === 0)
         .select((-(col("doc_id") + 1L)).as("doc_id"), col("text")))
     else revised
@@ -810,7 +861,7 @@ object Pipeline {
     val cls = col("doc_id") % 16
     val changed = docs.filter(cls === p13ChangeClass(e))
       .select(col("doc_id"), concat(col("text"), lit(s" [e$e]")).as("text"))
-    if (e == P13Epochs)
+    if (e == ChainEpochs)
       changed.unionByName(docs.filter(cls === 0)
         .select((-(col("doc_id") + 1L)).as("doc_id"), col("text")))
     else changed
@@ -825,68 +876,57 @@ object Pipeline {
     * once per chain per epoch (r14 verdict item 5). Parquet, not a
     * cached RDD: Bench sweeps persistent RDDs between queries, and a
     * path survives that where a localCheckpoint would not. */
-  private val p13SnapshotDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), String]()
-
   private[analytics] def p13SnapshotAt(spark: SparkSession, dir: String,
                                        e: Int): DataFrame =
-    spark.read.parquet(graft.core.FixtureClock.memo(p13SnapshotDirs, (dir, e))({ _ =>
-      val p = graft.core.TempDirs.create(s"graft-p13-snap$e").toString + "/snap"
+    spark.read.parquet(graft.core.FixtureClock.staged("p13-snap", (dir, e)) { p =>
       p13SnapshotText(Tables.documents(spark, dir), e)
         .write.mode("overwrite").parquet(p)
-      p
-    }))
+    })
 
-  /** The p13 chain: [[P13Epochs]] successive diff applications
+  /** The p13 chain: [[ChainEpochs]] successive diff applications
     * against ONE postings layout at `out` (seeded from the memoized
-    * snapshot-A baseline), compacting ONLY when the tombstone-covered
-    * fraction crosses the policy threshold — never per epoch, unlike
-    * p10's single application. Per epoch: gen-scoped tombstone for
-    * the dirty ids (`upto_gen = e−1`, so the re-appends at gen `e`
-    * are live immediately with no compaction between), diff-sized
-    * re-tokenize + append, |vocab|-bounded df-sidecar fold. Returns
-    * (epoch, n_dirty, covered_before, compacted) receipts;
-    * `onEpoch` fires after each epoch so MultiEpochPostingsSpec can
-    * pin live-state equality to a from-scratch rebuild of
+    * snapshot-A baseline), compacting ONLY on the covered-fraction
+    * policy — never per epoch, unlike p10's single application. Per
+    * epoch: gen-scoped tombstone for the dirty ids (`upto_gen = e−1`,
+    * so the re-appends at gen `e` are live immediately with no
+    * compaction between), diff-sized re-tokenize + append,
+    * |vocab|-bounded df-sidecar fold. The gate reports the final
+    * postings, so the chain records no per-epoch digest; `onEpoch`
+    * fires after each epoch so MultiEpochPostingsSpec can pin
+    * live-state equality to a from-scratch rebuild of
     * [[p13SnapshotText]] at EVERY epoch — before and after the
     * mid-chain compaction. */
   private[graft] def p13ChainAt(spark: SparkSession, dir: String, out: String,
-                                onEpoch: Int => Unit = _ => ())
-      : Seq[(Int, Long, Double, Boolean)] = {
+                                onEpoch: Int => Unit = _ => ()): Seq[EpochReceipt] = {
     val docs = Tables.documents(spark, dir)
     copyBaseline(p10BaselineLayout(spark, dir), java.nio.file.Paths.get(out))
-    (1 to P13Epochs).map { e =>
-      // the dirty id set is diff-bounded: ONE collect job takes it
-      // driver-local, so the tombstone write needs no dedupe exchange
-      // and the before-image semi-join's broadcast builds joblessly
-      val dirtyL = graft.core.Bounded.localize(p13DirtyIds(docs, e))
-      val dirty = dirtyL.df
-      TextOps.deleteFromPostings(spark, out, dirty, uptoGen = e - 1L)
-      // ONE side-tagged tokenize pass per epoch (the st23 move): the
-      // append segment and both df-sidecar deltas fold out of one
-      // localized aggregation instead of three tokenize plans. The
-      // dirty docs' BEFORE-image text is the base table's (classes are
-      // disjoint across epochs), so the removed side never reads the
-      // stored index.
-      TextOps.maintainPostingsBatch(spark, out,
-        addDocs = Some(p13ReAddText(docs, e)),
-        rmDocs = Some(docs.join(broadcast(dirty), Seq("doc_id"), "left_semi")
-          .select(col("doc_id"), col("text"))),
-        gen = e.toLong)
-      // one measurement drives both the receipt and the compaction
-      // decision (the g08 convention: the policy — strictly above the
-      // threshold — is replicated verbatim so the receipt can't drift
-      // from what maybeCompact would have done)
-      val covered = TextOps.postingsCoveredFraction(spark, out)
-      val compacted = covered > graft.core.SegmentedIndex.CompactThreshold
-      if (compacted) TextOps.compactPostings(spark, out)
-      onEpoch(e)
-      dirtyL.release()
-      // |dirty| is free off the localized id set — the r17 shape ran a
-      // per-gate class-count aggregation job just for this receipt
-      // column (the r17 verdict's item 8)
-      (e, dirtyL.count, math.floor(covered * 1000 + 0.5) / 1000, compacted)
-    }
+    epochChain("p13", dir, rebuildCheck = false)(new ChainSteps {
+      private var dirtyL: graft.core.Bounded.Localized = _
+      def applyDiff(e: Int): Long = {
+        // the dirty id set is diff-bounded: ONE collect job takes it
+        // driver-local, so the tombstone write needs no dedupe exchange
+        // and the before-image semi-join's broadcast builds joblessly;
+        // |dirty| comes free with it
+        dirtyL = graft.core.Bounded.localize(p13DirtyIds(docs, e))
+        val dirty = dirtyL.df
+        TextOps.deleteFromPostings(spark, out, dirty, uptoGen = e - 1L)
+        // ONE side-tagged tokenize pass per epoch (the st23 move): the
+        // append segment and both df-sidecar deltas fold out of one
+        // localized aggregation instead of three tokenize plans. The
+        // dirty docs' BEFORE-image text is the base table's (classes are
+        // disjoint across epochs), so the removed side never reads the
+        // stored index.
+        TextOps.maintainPostingsBatch(spark, out,
+          addDocs = Some(p13ReAddText(docs, e)),
+          rmDocs = Some(docs.join(broadcast(dirty), Seq("doc_id"), "left_semi")
+            .select(col("doc_id"), col("text"))),
+          gen = e.toLong)
+        dirtyL.count
+      }
+      def covered(): Double = TextOps.postingsCoveredFraction(spark, out)
+      def compact(e: Int): Unit = TextOps.compactPostings(spark, out)
+      override def release(e: Int): Unit = { onEpoch(e); dirtyL.release() }
+    })
   }
 
   /** p13 gate: MULTI-EPOCH maintenance of the inverted postings index
@@ -908,15 +948,6 @@ object Pipeline {
       TextOps.postingsReport(spark, out).localCheckpoint(true)
     }
 
-  /** Memoized digests of p14's per-epoch rebuild twins — the twin is
-    * the gate's CHECK (snapshot e re-encoded from scratch under the
-    * train-once codebooks, a pure function of the fixture), not part
-    * of the maintenance work the gate measures, so the first
-    * invocation per JVM pays the three re-encodes and warm passes
-    * re-digest only the maintained probe (the g08 discipline). */
-  private val p14RebuildDigests =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), (Long, Long)]()
-
   /** p14 gate: MULTI-EPOCH maintenance of the IVF-PQ index — the p13
     * epoch rules ([[p13DeleteClasses]]/[[p13ChangeClass]]/final-epoch
     * adds, one definition shared by the lexical and vector families)
@@ -933,17 +964,11 @@ object Pipeline {
     * (probe top-k over the maintained store) ≡ (snapshot e rebuilt
     * from scratch under the same quantizers) — Verify pins
     * `p14_eq_every_epoch` and `p14_compaction_fired` from the
-    * columns, the g08 convention. Rows-only (k-means + PQ). */
-  def p14MultiEpochPq(spark: SparkSession, dir: String): DataFrame =
-    p14MultiEpochPq(spark, dir, rebuildCheck = true)
-
-  /** [[p14MultiEpochPq]] with the rebuild twin optional — the g08
-    * probe-mode convention (ChainProbe): `rebuildCheck = false` skips
-    * the from-scratch re-encode check and `eq_rebuild` reads null. */
-  private[graft] def p14MultiEpochPq(spark: SparkSession, dir: String,
-                                     rebuildCheck: Boolean): DataFrame =
+    * columns. `rebuildCheck = false` is [[epochChain]]'s probe mode.
+    * Rows-only (k-means + PQ). */
+  def p14MultiEpochPq(spark: SparkSession, dir: String,
+                      rebuildCheck: Boolean = true): DataFrame =
     graft.core.TempDirs.scoped("graft-p14") { root =>
-      import spark.implicits._
       val docs = Tables.documents(spark, dir)
       val out = copyBaseline(p11BaselineLayout(spark, dir), root.resolve("index"))
       val cents = Similarity.readIvfCodebook(spark, out)
@@ -953,61 +978,41 @@ object Pipeline {
       // each probe's broadcast of it builds with zero jobs
       val queriesL = graft.core.Bounded.localize(p11QuerySet(docs))
       val queries = queriesL.df
-      val rows = (1 to P13Epochs).map { e =>
-        // localized once: the delete's internal tombstone localize is
-        // then jobless, and |dirty| is free for the receipt column —
-        // the r17 shape ran a per-gate class-count aggregation for it
-        val dirtyL = graft.core.Bounded.localize(
-          p13DirtyIds(docs, e).select(col("doc_id").as("vec_id")))
-        Similarity.deleteFromIvfPqCorpus(spark, out, dirtyL.df, uptoGen = e - 1L)
-        // re-embed DIRECTLY off the shared re-add construction —
-        // equal to snapshot-e ⋉ re-add ids (disjoint classes) without
-        // the per-epoch full-corpus snapshot derivation the r14
-        // verdict priced (item 5)
-        val reEmbed = p11Vectors(p13ReAddText(docs, e))
-        Similarity.appendIvfPqCorpusWith(cents, books, out, reEmbed, gen = e.toLong)
-        // one measurement drives both the receipt and the decision
-        // (policy replicated verbatim — the g08/p13 convention); the
-        // measurement is the metadata-cheap instance estimate — one
-        // code row per (vec, generation), exact for this layout
-        val covered = graft.core.SegmentedIndex.coveredFractionEstimate(
-          spark.read.parquet(out), out, genScoped = true,
-          requireTracked = true)
-        val compacted = covered > graft.core.SegmentedIndex.CompactThreshold
-        if (compacted) Similarity.compactIvfPqCorpus(spark, out)
-        // familyDigest is order-independent (sum of per-row crc32), so
-        // the probe feeds it UNSORTED — the per-epoch sort bought
-        // nothing (r14 item 5's probe fold)
-        val got = familyDigest(
-          Similarity.ivfPqStoredTopKWith(cents, books, spark, out, queries, k = 10))
-        val eq: Option[Boolean] = if (!rebuildCheck) None else {
-          val rebuiltDigest = graft.core.FixtureClock.memo(p14RebuildDigests, (dir, e))({ _ =>
-            graft.core.TempDirs.scoped("graft-p14-rebuild") { r2 =>
-              val ro = r2.resolve("index").toString
-              Similarity.writeIvfPqLayoutWith(cents, books,
-                p11Normalized(p13SnapshotAt(spark, dir, e)), ro)
-              familyDigest(Similarity.ivfPqStoredTopKWith(cents, books,
-                spark, ro, queries, k = 10))
-            }
-          })
-          Some(got == rebuiltDigest)
+      val rows = epochChain("p14", dir, rebuildCheck)(new ChainSteps {
+        private var dirtyL: graft.core.Bounded.Localized = _
+        def applyDiff(e: Int): Long = {
+          // localized once: the delete's internal tombstone localize is
+          // then jobless, and |dirty| is free for the receipt column
+          dirtyL = graft.core.Bounded.localize(
+            p13DirtyIds(docs, e).select(col("doc_id").as("vec_id")))
+          Similarity.deleteFromIvfPqCorpus(spark, out, dirtyL.df, uptoGen = e - 1L)
+          // re-embed DIRECTLY off the shared re-add construction —
+          // equal to snapshot-e ⋉ re-add ids (disjoint classes) without
+          // a per-epoch full-corpus snapshot derivation
+          Similarity.appendIvfPqCorpusWith(cents, books, out,
+            p11Vectors(p13ReAddText(docs, e)), gen = e.toLong)
+          dirtyL.count
         }
-        dirtyL.release()
-        (e, dirtyL.count, got._1,
-          math.floor(covered * 1000 + 0.5) / 1000, compacted, eq)
-      }
+        // the metadata-cheap instance estimate — one code row per
+        // (vec, generation), exact for this layout
+        def covered(): Double = graft.core.SegmentedIndex.coveredFractionEstimate(
+          spark.read.parquet(out), out, genScoped = true, requireTracked = true)
+        def compact(e: Int): Unit = Similarity.compactIvfPqCorpus(spark, out)
+        // familyDigest is order-independent (sum of per-row crc32), so
+        // the probe feeds it UNSORTED
+        override def live(e: Int): Option[DataFrame] = Some(
+          Similarity.ivfPqStoredTopKWith(cents, books, spark, out, queries, k = 10))
+        override def rebuild(e: Int, scratch: java.nio.file.Path): DataFrame = {
+          val ro = scratch.resolve("index").toString
+          Similarity.writeIvfPqLayoutWith(cents, books,
+            p11Normalized(p13SnapshotAt(spark, dir, e)), ro)
+          Similarity.ivfPqStoredTopKWith(cents, books, spark, ro, queries, k = 10)
+        }
+        override def release(e: Int): Unit = dirtyL.release()
+      })
       queriesL.release()
-      rows.toDF("epoch", "n_dirty", "n_topk", "covered_before",
-          "compacted", "eq_rebuild")
-        .orderBy("epoch").localCheckpoint(true)
+      receiptFrame(spark, rows, "n_dirty", "n_topk")
     }
-
-  /** Memoized digests of p15's per-epoch rebuild twins (pure fixture
-    * functions — the g08/p14 discipline: the first invocation per JVM
-    * pays the three from-scratch re-encodes, warm passes re-digest
-    * only the maintained probe). */
-  private val p15RebuildDigests =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), (Long, Long)]()
 
   /** p15 gate: MULTI-EPOCH maintenance of the PLAIN IVF corpus — the
     * shared p13 epoch rules ([[p13DeleteClasses]]/[[p13ChangeClass]]/
@@ -1026,18 +1031,11 @@ object Pipeline {
     * exact for this layout. Per-epoch `eq_rebuild` = (gen-scoped
     * probe over the maintained store) ≡ (snapshot e written from
     * scratch under the same stored codebook); Verify pins
-    * `p15_eq_every_epoch` / `p15_compaction_fired`. Rows-only
-    * (k-means). */
-  def p15MultiEpochIvf(spark: SparkSession, dir: String): DataFrame =
-    p15MultiEpochIvf(spark, dir, rebuildCheck = true)
-
-  /** [[p15MultiEpochIvf]] with the rebuild twin optional — the g08
-    * probe-mode convention (ChainProbe): `rebuildCheck = false` skips
-    * the from-scratch re-encode check and `eq_rebuild` reads null. */
-  private[graft] def p15MultiEpochIvf(spark: SparkSession, dir: String,
-                                      rebuildCheck: Boolean): DataFrame =
+    * `p15_eq_every_epoch` / `p15_compaction_fired`. `rebuildCheck =
+    * false` is [[epochChain]]'s probe mode. Rows-only (k-means). */
+  def p15MultiEpochIvf(spark: SparkSession, dir: String,
+                       rebuildCheck: Boolean = true): DataFrame =
     graft.core.TempDirs.scoped("graft-p15") { root =>
-      import spark.implicits._
       val docs = Tables.documents(spark, dir)
       val out = copyBaseline(p08BaselineLayout(spark, dir), root.resolve("index"))
       val cents = Similarity.readIvfCodebook(spark, out)
@@ -1048,44 +1046,32 @@ object Pipeline {
       // builds with zero jobs
       val queriesL = graft.core.Bounded.localize(p08QuerySet(docs))
       val queries = queriesL.df
-      val rows = (1 to P13Epochs).map { e =>
-        // localized once — jobless tombstone localize + free |dirty|
-        // (the p14 convention; r17 verdict item 8)
-        val dirtyL = graft.core.Bounded.localize(
-          p13DirtyIds(docs, e).select(col("doc_id").as("vec_id")))
-        Similarity.deleteFromIvfCorpusGenScoped(spark, out, dirtyL.df, uptoGen = e - 1L)
-        val reEmbed = p08Vectors(p13ReAddText(docs, e))
-        Similarity.appendIvfCorpusWith(cents, out, reEmbed, storedCols,
-          gen = e.toLong)
-        // one measurement drives both the receipt and the decision
-        // (the g08/p13/p14 convention, policy replicated verbatim)
-        val covered = graft.core.SegmentedIndex.coveredFractionEstimate(
-          spark.read.parquet(out), out, genScoped = true,
-          requireTracked = true)
-        val compacted = covered > graft.core.SegmentedIndex.CompactThreshold
-        if (compacted) Similarity.compactIvfCorpusGenScoped(spark, out)
-        val got = familyDigest(Similarity.ivfStoredTopKWith(cents, spark, out,
-          queries, k = 10, genScoped = true))
-        val eq: Option[Boolean] = if (!rebuildCheck) None else {
-          val rebuiltDigest = graft.core.FixtureClock.memo(p15RebuildDigests, (dir, e))({ _ =>
-            graft.core.TempDirs.scoped("graft-p15-rebuild") { r2 =>
-              val ro = r2.resolve("index").toString
-              Similarity.writeIvfLayoutWith(cents,
-                p08Normalized(p13SnapshotAt(spark, dir, e)), ro)
-              familyDigest(Similarity.ivfStoredTopKWith(cents, spark, ro,
-                queries, k = 10))
-            }
-          })
-          Some(got == rebuiltDigest)
+      val rows = epochChain("p15", dir, rebuildCheck)(new ChainSteps {
+        private var dirtyL: graft.core.Bounded.Localized = _
+        def applyDiff(e: Int): Long = {
+          // localized once — jobless tombstone localize + free |dirty|
+          dirtyL = graft.core.Bounded.localize(
+            p13DirtyIds(docs, e).select(col("doc_id").as("vec_id")))
+          Similarity.deleteFromIvfCorpusGenScoped(spark, out, dirtyL.df, uptoGen = e - 1L)
+          Similarity.appendIvfCorpusWith(cents, out, p08Vectors(p13ReAddText(docs, e)),
+            storedCols, gen = e.toLong)
+          dirtyL.count
         }
-        dirtyL.release()
-        (e, dirtyL.count, got._1,
-          math.floor(covered * 1000 + 0.5) / 1000, compacted, eq)
-      }
+        def covered(): Double = graft.core.SegmentedIndex.coveredFractionEstimate(
+          spark.read.parquet(out), out, genScoped = true, requireTracked = true)
+        def compact(e: Int): Unit = Similarity.compactIvfCorpusGenScoped(spark, out)
+        override def live(e: Int): Option[DataFrame] = Some(
+          Similarity.ivfStoredTopKWith(cents, spark, out, queries, k = 10, genScoped = true))
+        override def rebuild(e: Int, scratch: java.nio.file.Path): DataFrame = {
+          val ro = scratch.resolve("index").toString
+          Similarity.writeIvfLayoutWith(cents,
+            p08Normalized(p13SnapshotAt(spark, dir, e)), ro)
+          Similarity.ivfStoredTopKWith(cents, spark, ro, queries, k = 10)
+        }
+        override def release(e: Int): Unit = dirtyL.release()
+      })
       queriesL.release()
-      rows.toDF("epoch", "n_dirty", "n_topk", "covered_before",
-          "compacted", "eq_rebuild")
-        .orderBy("epoch").localCheckpoint(true)
+      receiptFrame(spark, rows, "n_dirty", "n_topk")
     }
 
   /** Order-independent digest of a result frame — (row count, sum of

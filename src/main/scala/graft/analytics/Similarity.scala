@@ -549,9 +549,6 @@ object Similarity {
   def s05KnnGraph(spark: SparkSession, dir: String): DataFrame =
     knnEdges(spark, dir).orderBy("vec_id", "rnk")
 
-  private val knnEdgeDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The exact kNN similarity graph as a per-(JVM, sf dir) parquet
     * ARTIFACT (Layout's `ensure*` pattern): built once by the first
     * caller, then read by every consumer — s05 itself, the whole
@@ -582,12 +579,9 @@ object Similarity {
     // g07's clocked store builder reaches this first (nested sections
     // count once), but a consumer that skips g07 — g08 standalone,
     // ChainProbe's 10× sweep — must not book the seed as engine time
-    graft.core.FixtureClock.memo(knnEdgeDirs, dir) { _ =>
-      val out = graft.core.TempDirs
-        .create("graft-knn-edges").toString + "/edges"
+    graft.core.FixtureClock.staged("knn-edges", dir) { out =>
       knnGraphExact(Dedup.normalizedVectors(spark, dir), k = KnnEdgeK)
         .write.mode("overwrite").parquet(out)
-      out
     }
 
   private[analytics] def knnGraphExact(e: DataFrame, k: Int): DataFrame = {

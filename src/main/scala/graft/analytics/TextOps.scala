@@ -395,7 +395,9 @@ object TextOps {
     * epoch boundary: deltas, like tombstones, accumulate only between
     * compactions). The swap is the shared crash-safe two-rename
     * ([[graft.core.DirSwap]]) — the TableStore/IVF discipline;
-    * single-maintainer, like both. */
+    * single-maintainer, like both. A layout under the driver-local cap
+    * is rewritten as ONE file (no `term` fan-out): the live rows are
+    * the contract, the file count is not. */
   private[analytics] def compactPostings(spark: SparkSession, out: String): Unit =
     graft.core.SegmentedIndex.compactWith(out,
         skipSidecars = Set("_df", "_df_deltas")) { tmp =>

@@ -39,6 +39,28 @@ object FixtureClock {
                 (builder: K => V): V =
     m.computeIfAbsent(k, key => timed(builder(key)))
 
+  /** One staged artifact: built by the first caller that asks for its
+    * path, under the holder's own lock — never inside the map's
+    * `computeIfAbsent`, so a builder may stage another artifact (g07's
+    * store copies the kNN edge artifact) without re-entering the map. */
+  private final class Staged(build: => String) { lazy val path: String = build }
+
+  private val stagedPaths =
+    new java.util.concurrent.ConcurrentHashMap[(String, Any), Staged]()
+
+  /** The once-per-JVM STAGED artifact `name` for `key` (a dataset dir,
+    * or a (dir, epoch) pair): on the first call a fresh directory under
+    * the process temp root is created, `write` fills the path handed to
+    * it, and the build's wall time counts as fixture construction; every
+    * later call returns the same path. The artifact lives until JVM
+    * exit ([[TempDirs.create]]) and is read-only to its consumers. */
+  def staged(name: String, key: Any)(write: String => Unit): String =
+    stagedPaths.computeIfAbsent((name, key), _ => new Staged(timed {
+      val p = TempDirs.create(s"graft-$name").resolve(name).toString
+      write(p)
+      p
+    })).path
+
   /** Run `body`, attributing its wall time to fixture construction
     * (outermost-per-thread only). */
   def timed[T](body: => T): T = {

@@ -600,17 +600,24 @@ object SegmentedIndex {
         "write the _rowcount sidecar at build (SegmentedIndex.writeRowCount) " +
         "so the compaction policy never falls back to a per-epoch layout listing")
 
-  /** Default [[maybeCompact]] trigger: compact once tombstones cover
+  /** The compaction trigger: compact once tombstones cover MORE than
     * this fraction of stored rows, bounding steady-state read-amp of
     * the live anti-join at 1/(1−threshold) ≈ 2× between compactions. */
   val CompactThreshold = 0.5
+
+  /** The compaction policy, the one place it is decided: whether a
+    * layout whose tombstones cover `covered` of its stored rows is due
+    * a rewrite — strictly above [[CompactThreshold]]. [[maybeCompact]]
+    * and the multi-epoch chains ([[graft.analytics.Pipeline.epochChain]])
+    * both ask here. */
+  def compactDue(covered: Double): Boolean = covered > CompactThreshold
 
   /** Policy-driven compaction — the when-to-compact decision the
     * owners previously made by convention (every epoch, or at end of
     * stream): measure the tombstone-covered fraction with the
     * METADATA-CHEAP [[coveredFractionEstimate]] (the exact anti-join
     * stays a spec-side check) and run `writeRewrite` through
-    * [[compactWith]] only past `threshold`. Returns whether a
+    * [[compactWith]] only when [[compactDue]]. Returns whether a
     * compaction ran, so callers can assert the policy in specs. Same
     * single-maintainer contract as the pieces. REQUIRES a tracked
     * layout ([[assertTracked]]): the policy check runs zero Spark
@@ -619,14 +626,13 @@ object SegmentedIndex {
     * a per-epoch metadata walk. */
   def maybeCompact(raw: => DataFrame, out: String,
                    keyCol: String, genCol: Option[String],
-                   threshold: Double = CompactThreshold,
                    skipSidecars: Set[String] = Set.empty,
                    rowsPerInstance: Double = 1.0)
                   (writeRewrite: String => Unit): Boolean = {
     val frac = coveredFractionEstimate(raw, out,
       genScoped = genCol.isDefined, rowsPerInstance = rowsPerInstance,
       requireTracked = true)
-    val due = frac > threshold
+    val due = compactDue(frac)
     if (due) compactWith(out, skipSidecars)(writeRewrite)
     due
   }

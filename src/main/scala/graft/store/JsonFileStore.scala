@@ -291,7 +291,7 @@ final class JsonFileStore(basedirRaw: String) extends AssetStore {
 
   /** Reverse-parse one file into a QueryEntry
     * (`jsonfiledb.py:492-597`), memoized. */
-  private val entryCache = new java.util.concurrent.ConcurrentHashMap[String, Option[QueryEntry]]()
+  private[store] val entryCache = new java.util.concurrent.ConcurrentHashMap[String, Option[QueryEntry]]()
   def queryEntryForFile(file: Path): Option[QueryEntry] =
     entryCache.computeIfAbsent(file.toString, { _ =>
       val relRaw = basedir.relativize(file.toAbsolutePath).toString.replace('\\', '/')
@@ -386,11 +386,13 @@ final class JsonFileStore(basedirRaw: String) extends AssetStore {
       basedir.resolve(ArgCodec.encodeFname(project)).resolve(ArgCodec.encodeFname(experiment)),
       basedir.resolve(project).resolve(experiment))
       .distinct.filter(d => d.getParent.getParent == basedir && Files.exists(d))
-    dirs.foreach(d => Files.walk(d).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_)))
-    if (dirs.nonEmpty) {
-      entryCache.clear()
-      versionCache.remove((project, experiment))
-    }
+    // evict only the deleted files' reverse parses: every other
+    // experiment's memo entries stay valid
+    dirs.foreach(d => Files.walk(d).iterator().asScala.toSeq.reverse.foreach { p =>
+      Files.deleteIfExists(p)
+      entryCache.remove(p.toString)
+    })
+    if (dirs.nonEmpty) versionCache.remove((project, experiment))
   }
 
   def lock(): AdvisoryLock = Locking.forBasedir(basedir.toString)

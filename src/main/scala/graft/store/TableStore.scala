@@ -258,15 +258,14 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
 
   private def queryTable(t: Table, kwargs: Map[String, String],
                          asOf: Option[Long]): Seq[QueryEntry] =
-    liveRows(t, asOf).toSeq.flatMap { df =>
-      // non-key kwargs can never match a table without the column
-      if (kwargs.keys.exists(k => !t.keys.contains(k))) Seq.empty
-      else {
-        val pred = kwargs.map { case (k, v) => col(k) === v }
-          .reduceOption(_ && _).getOrElse(lit(true))
-        df.filter(pred).collect().toSeq.map { r =>
-          QueryEntry.of(t.route, t.keys.flatMap(k => Option(r.getAs[String](k)).map(k -> _)).toMap)
-        }
+    // non-key kwargs can never match a table without the column:
+    // decided before the table is listed or planned at all
+    if (kwargs.keys.exists(k => !t.keys.contains(k))) Seq.empty
+    else liveRows(t, asOf).toSeq.flatMap { df =>
+      val pred = kwargs.map { case (k, v) => col(k) === v }
+        .reduceOption(_ && _).getOrElse(lit(true))
+      df.filter(pred).collect().toSeq.map { r =>
+        QueryEntry.of(t.route, t.keys.flatMap(k => Option(r.getAs[String](k)).map(k -> _)).toMap)
       }
     }
 

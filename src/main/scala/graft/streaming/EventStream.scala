@@ -313,30 +313,23 @@ object EventStream {
                                db: graft.store.TableStore,
                                maxFilesPerTrigger: Option[Int])
                               (perBatch: Long => Unit): Unit = {
-    val s = boundedDriveSession(spark)
     val nBatches = new java.util.concurrent.atomic.AtomicLong(0L)
-    val q = readEvents(s, dir, maxFilesPerTrigger)
-      .groupBy(col("user_id"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-           sum(col("value").cast("decimal(18,6)")).as("total"))
-      .writeStream
-      .outputMode(OutputMode.Update)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val rows = batch.select(
-          lit("events").as("project"),
-          col("event_type").cast("string").as("experiment"),
-          col("user_id").cast("string").as("location"),
-          lit("stream").as("network"),
-          lit("value").as("obsvar"),
-          lit("surface").as("layer"),
-          to_json(struct(col("n"), col("total"))).as("json"),
-          lit(null).cast("binary").as("blob"))
-        db.bulkAppend("timeseries", rows)
-        perBatch(nBatches.incrementAndGet())
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    driveBatches(spark, readEvents(_, dir, maxFilesPerTrigger)
+        .groupBy(col("user_id"), col("event_type"))
+        .agg(count(lit(1)).as("n"),
+             sum(col("value").cast("decimal(18,6)")).as("total"))) { (batch, _) =>
+      val rows = batch.select(
+        lit("events").as("project"),
+        col("event_type").cast("string").as("experiment"),
+        col("user_id").cast("string").as("location"),
+        lit("stream").as("network"),
+        lit("value").as("obsvar"),
+        lit("surface").as("layer"),
+        to_json(struct(col("n"), col("total"))).as("json"),
+        lit(null).cast("binary").as("blob"))
+      db.bulkAppend("timeseries", rows)
+      perBatch(nBatches.incrementAndGet())
+    }
     db.flushAll()
   }
 
@@ -479,6 +472,27 @@ object EventStream {
     q.stop()
     detachSinkTable(s, queryName)
   }
+
+  /** Drive a bounded stream to completion through `body` — the
+    * foreachBatch shell every streamed maintainer and store ingest
+    * runs. `source` receives the isolated drive session the stream must
+    * be built on; each microbatch reaches `body` with its replay-stable
+    * batch id (at-least-once: a redelivered batch carries the same id),
+    * and this returns once the source is drained. Update mode: a
+    * streaming aggregation hands `body` the keys it changed, and a
+    * source without aggregation behaves exactly as in append mode. */
+  def driveBatches(spark: SparkSession, source: SparkSession => DataFrame)
+                  (body: (DataFrame, Long) => Unit): Unit = {
+    val q = source(boundedDriveSession(spark)).writeStream
+      .outputMode(OutputMode.Update).foreachBatch(body).start()
+    q.processAllAvailable()
+    q.stop()
+  }
+
+  /** A staged change-feed directory read back as a stream, one file
+    * per microbatch — the feed side of [[driveBatches]]. */
+  def readStagedFeed(s: SparkSession, schema: StructType, feedDir: String): DataFrame =
+    s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(feedDir)
 
   final case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
                          event_type: String, value: Double)

@@ -41,9 +41,10 @@ object ReplicaCorpus {
   *     REP×: per-epoch engine time (wall minus FixtureClock'd
   *     baseline/seed construction), the covered-fraction trajectory,
   *     and whether the policy compaction still fires mid-chain at
-  *     REP× — run through the REAL gate code in probe mode
-  *     (`rebuildCheck = false`: the from-scratch rebuild TWINS are
-  *     checks, not maintenance work, and g08's is O(N²) by design);
+  *     REP× — run through the REAL gate code in the chain runner's
+  *     probe mode (`rebuildCheck = false`: the from-scratch rebuild
+  *     TWINS are checks, not maintenance work, and g08's is O(N²) by
+  *     design);
   *  2. policy-ESTIMATE vs exact anti-join covered fraction at REP×
   *     scale on both sidecar shapes (gen-partition segments and
   *     gen-named published files);
@@ -79,25 +80,21 @@ object ChainProbe {
     // ---- 1. the five chains at 1x vs REPx ----
     if (enabled("chains")) {
       val chains: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+        // p13's gate reports the final postings and records no
+        // per-epoch digest, so its receipts come from the chain itself
         "p13_multi_epoch_postings" -> ((s: SparkSession, d: String) =>
           graft.core.TempDirs.scoped("graft-probe-p13") { root =>
-            import s.implicits._
             val out = root.resolve("postings").toString
             val rows = Pipeline.p13ChainAt(s, d, out)
             // materialize the |vocab|-bounded report like the gate does
             TextOps.postingsReport(s, out).count()
-            rows.map { case (e, _, cov, comp) => (e, cov, comp) }
-              .toDF("epoch", "covered_before", "compacted")
-              .localCheckpoint(true)
+            Pipeline.receiptFrame(s, rows, "n_dirty", "n_live")
           }),
-        "p14_multi_epoch_pq" ->
-          ((s: SparkSession, d: String) => Pipeline.p14MultiEpochPq(s, d, rebuildCheck = false)),
-        "p15_multi_epoch_ivf" ->
-          ((s: SparkSession, d: String) => Pipeline.p15MultiEpochIvf(s, d, rebuildCheck = false)),
+        "p14_multi_epoch_pq" -> (Pipeline.p14MultiEpochPq(_, _, rebuildCheck = false)),
+        "p15_multi_epoch_ivf" -> (Pipeline.p15MultiEpochIvf(_, _, rebuildCheck = false)),
         "m13_multi_epoch_images" ->
-          ((s: SparkSession, d: String) => Multimodal.m13MultiEpochImages(s, d, rebuildCheck = false)),
-        "g08_multi_epoch_knn" ->
-          ((s: SparkSession, d: String) => Graph.g08MultiEpochKnn(s, d, rebuildCheck = false)))
+          (Multimodal.m13MultiEpochImages(_, _, rebuildCheck = false)),
+        "g08_multi_epoch_knn" -> (Graph.g08MultiEpochKnn(_, _, rebuildCheck = false)))
 
       // job counts ride along (graft.core.CostAccounting): a chain is a
       // fixed number of epochs, each a fixed set of diff/append/policy

@@ -103,14 +103,11 @@ class MaintainedStoreEstimateSpec extends AnyFunSuite {
     val (e, g) = exactOf(out, 2)
     assert(math.abs(e - g) < Tol, s"tracked estimate $g != exact $e")
     // compaction re-bases the count from the fresh rewrite
-    val compacted = SegmentedIndex.maybeCompact(
-      spark.read.parquet(out), out, keyCol = "id", genCol = Some("gen"),
-      threshold = 0.0, rowsPerInstance = 2.0) { tmp =>
+    SegmentedIndex.compactWith(out) { tmp =>
       SegmentedIndex.live(spark, spark.read.parquet(out), out,
           keyCol = "id", genCol = Some("gen")).drop("gen")
         .write.parquet(s"$tmp/gen=0")
     }
-    assert(compacted, "the 0-threshold policy must fire")
     assert(sidecar == footer, s"compaction drifted: $sidecar != $footer")
   }
 

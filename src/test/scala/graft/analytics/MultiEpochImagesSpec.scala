@@ -26,7 +26,7 @@ class MultiEpochImagesSpec extends AnyFunSuite {
         r.getAs[Long]("n_groups"), r.getAs[Double]("covered_before"),
         r.getAs[Boolean]("compacted"), r.getAs[Boolean]("eq_rebuild")))
       .sortBy(_._1)
-    assert(rows.map(_._1).toSeq == (1 to Pipeline.P13Epochs))
+    assert(rows.map(_._1).toSeq == (1 to Pipeline.ChainEpochs))
     rows.foreach { case (e, nDirty, nGroups, _, _, eq) =>
       assert(eq, s"epoch $e resolved groups drifted from the from-scratch rebuild")
       assert(nDirty > 0 && nGroups > 0, s"epoch $e is vacuous")
@@ -36,10 +36,10 @@ class MultiEpochImagesSpec extends AnyFunSuite {
     // re-puts; compaction keeps only the live rows and resets
     var dead = 0.0
     var total = n
-    val expected = (1 to Pipeline.P13Epochs).map { e =>
+    val expected = (1 to Pipeline.ChainEpochs).map { e =>
       val nRm = clsCount(Pipeline.p13DeleteClasses(e))
       val nReput = clsCount(Seq(Pipeline.p13ChangeClass(e)))
-      val nAdd = if (e == Pipeline.P13Epochs) clsCount(Seq(0)) else 0.0
+      val nAdd = if (e == Pipeline.ChainEpochs) clsCount(Seq(0)) else 0.0
       total += nRm + nReput + nAdd
       dead += 2 * nRm + nReput
       val covered = dead / total

@@ -26,7 +26,7 @@ class MultiEpochIvfSpec extends AnyFunSuite {
         r.getAs[Long]("n_topk"), r.getAs[Double]("covered_before"),
         r.getAs[Boolean]("compacted"), r.getAs[Boolean]("eq_rebuild")))
       .sortBy(_._1)
-    assert(rows.map(_._1).toSeq == (1 to Pipeline.P13Epochs))
+    assert(rows.map(_._1).toSeq == (1 to Pipeline.ChainEpochs))
     rows.foreach { case (e, nDirty, nTopk, _, _, eq) =>
       assert(eq, s"epoch $e maintained probe drifted from the from-scratch re-encode")
       assert(nDirty > 0 && nTopk > 0, s"epoch $e is vacuous")
@@ -37,10 +37,10 @@ class MultiEpochIvfSpec extends AnyFunSuite {
     // covered rows and clears the instances
     var instances = 0.0
     var total = n
-    val expected = (1 to Pipeline.P13Epochs).map { e =>
+    val expected = (1 to Pipeline.ChainEpochs).map { e =>
       val dirty = clsCount(Pipeline.p13DeleteClasses(e) :+ Pipeline.p13ChangeClass(e))
       val reAdd = clsCount(Seq(Pipeline.p13ChangeClass(e))) +
-        (if (e == Pipeline.P13Epochs) clsCount(Seq(0)) else 0.0)
+        (if (e == Pipeline.ChainEpochs) clsCount(Seq(0)) else 0.0)
       instances += dirty
       total += reAdd
       val covered = instances / total

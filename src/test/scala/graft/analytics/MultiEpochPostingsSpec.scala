@@ -40,9 +40,9 @@ class MultiEpochPostingsSpec extends AnyFunSuite {
     // policy compaction: covered fraction crosses the threshold at
     // epoch 2 only (the churn is sized for ~11% margin; epochs 1 and
     // 3 stay under) — so epoch 3 applies ON the compacted store
-    assert(receipts.map(_._4) === Seq(false, true, false),
+    assert(receipts.map(_.compacted) === Seq(false, true, false),
       s"compaction trajectory off: $receipts")
-    val covered = receipts.map(_._3)
+    val covered = receipts.map(_.covered)
     assert(covered(1) > graft.core.SegmentedIndex.CompactThreshold,
       s"epoch 2 never crossed the threshold: $covered")
     assert(covered(0) < graft.core.SegmentedIndex.CompactThreshold &&
@@ -50,6 +50,6 @@ class MultiEpochPostingsSpec extends AnyFunSuite {
       s"epochs 1/3 unexpectedly crossed the threshold: $covered")
     // every epoch touched something, and the dirty counts shrink with
     // the per-epoch class counts (4+1, 4+1, 3+1 of 16)
-    assert(receipts.forall(_._2 > 0))
+    assert(receipts.forall(_.n > 0))
   }
 }

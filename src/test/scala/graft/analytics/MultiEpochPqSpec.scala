@@ -17,7 +17,7 @@ class MultiEpochPqSpec extends AnyFunSuite {
   test("every epoch's probe equals the rebuild; compaction fires once, mid-chain, on policy") {
     val rs = Pipeline.p14MultiEpochPq(spark, dir)
       .collect().sortBy(_.getAs[Int]("epoch"))
-    assert(rs.length == Pipeline.P13Epochs)
+    assert(rs.length == Pipeline.ChainEpochs)
     assert(rs.forall(_.getAs[Boolean]("eq_rebuild")),
       s"an epoch diverged from its rebuild: ${rs.mkString(", ")}")
     val fired = rs.map(_.getAs[Boolean]("compacted")).toSeq

@@ -21,7 +21,7 @@ class MultiEpochSpec extends AnyFunSuite {
         r.getAs[Long]("n_live"), r.getAs[Double]("covered_before"),
         r.getAs[Boolean]("compacted"), r.getAs[Boolean]("eq_rebuild")))
       .sortBy(_._1)
-    assert(rows.map(_._1).toSeq == (1 to Graph.G08Epochs),
+    assert(rows.map(_._1).toSeq == (1 to Pipeline.ChainEpochs),
       "one output row per epoch")
     rows.foreach { case (e, nRec, nLive, _, _, eq) =>
       assert(eq, s"epoch $e live view drifted from the from-scratch rebuild")
@@ -34,7 +34,7 @@ class MultiEpochSpec extends AnyFunSuite {
       assert(cov > graft.core.SegmentedIndex.CompactThreshold,
         s"epoch $e compacted below the policy threshold (covered=$cov)")
     }
-    assert(fired.exists(_._1 < Graph.G08Epochs),
+    assert(fired.exists(_._1 < Pipeline.ChainEpochs),
       "compaction only fired at the last epoch — no later epoch pins " +
         "post-compaction equality")
     // epochs that did NOT compact must have measured at or below the

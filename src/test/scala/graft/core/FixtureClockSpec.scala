@@ -58,6 +58,23 @@ class FixtureClockSpec extends AnyFunSuite {
     }
   }
 
+  test("staged builds each (name, key) once, and a builder may stage another artifact") {
+    val key = java.util.UUID.randomUUID().toString
+    var builds = 0
+    def inner(): String = FixtureClock.staged("spec-inner", key) { p =>
+      builds += 1
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
+    }
+    val outer = FixtureClock.staged("spec-outer", key) { p =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(p, "from"), inner())
+    }
+    assert(FixtureClock.staged("spec-outer", key)(_ => fail("rebuilt a staged artifact")) == outer)
+    assert(builds == 1 && java.nio.file.Files.isDirectory(java.nio.file.Paths.get(inner())))
+    assert(java.nio.file.Files.readString(java.nio.file.Paths.get(outer, "from")) == inner())
+    assert(outer != inner(), "distinct names share a path")
+  }
+
   test("concurrent outermost sections on distinct threads both count") {
     // real clock: a LOWER bound only (two overlapping 30ms spans must
     // accumulate ~60ms — oversleep makes this more true, never less)

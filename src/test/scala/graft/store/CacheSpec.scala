@@ -66,6 +66,27 @@ class CacheSpec extends AnyFunSuite {
     db.close()
   }
 
+  test("retiring one experiment keeps every other experiment's reverse-parse memo") {
+    import scala.jdk.CollectionConverters._
+    val db = new JsonFileStore(graft.core.TempDirs.create("graft-rm-memo").toString)
+    db.putMenu(Fixture.doc("keep/menu"), "proj", "keep")
+    db.putConfig(Fixture.doc("keep/config"), "proj", "keep")
+    db.putMenu(Fixture.doc("gone/menu"), "proj", "gone")
+    def q(e: String) = db.query(kwargs = Map("project" -> "proj", "experiment" -> e))
+    val kept = q("keep")
+    assert(kept.size == 2 && q("gone").size == 1)
+    def memoized(e: String): Set[String] =
+      db.entryCache.keySet.asScala.filter(_.contains(s"/proj/$e/")).toSet
+    val keptMemo = memoized("keep")
+    assert(keptMemo.size == 2)
+    db.rmExperimentData("proj", "gone")
+    assert(memoized("keep") == keptMemo,
+      "retiring `gone` dropped `keep`'s memoized reverse parses")
+    assert(memoized("gone").isEmpty, "the retired experiment's entries outlived its files")
+    assert(q("keep") == kept && q("gone").isEmpty)
+    db.close()
+  }
+
   test("filtered reads go through the sub-key cache (forced cache=true)") {
     val db = store()
     // regional stats forces cache=true; same underlying file read once
