@@ -106,8 +106,9 @@ object Bench {
         .count()
     } catch { case _: Throwable => () }
     // store machinery: one TableStore put/flush/get/list round trip in
-    // a temp dir (parquet append write, newest-row window read) — the
-    // classes and codegen the av* store gates hit first otherwise
+    // a temp dir (parquet append write, driver-side parquet point read,
+    // newest-row window listing) — the classes and codegen the av*
+    // store gates hit first otherwise
     try {
       val dir = graft.core.TempDirs.create("graft-bench-warm")
       val db = new graft.store.TableStore(spark, dir.toString)
@@ -339,28 +340,29 @@ object Bench {
     // regression repeats by name — ANY flag, either shape, whose gate
     // was also flagged within the LOOKBACK set is promoted to
     // aging_violations and named in `promoted_repeats`. The lookback
-    // is the union of the last 3 recorded runs at the same sf (the
-    // r16 widening: r15's p12 flapped in runs 1 and 3, and a
-    // previous-run-only rule never saw the repeat). Parsing is real
+    // is the union of the last 3 recorded runs at the same sf over the
+    // same gate set (the r16 widening: r15's p12 flapped in runs 1 and
+    // 3, and a previous-run-only rule never saw the repeat; a
+    // SPARK_GRAFT_EXCLUDE subset run records its `excluded` gates and
+    // only joins lookbacks of runs excluding the same). Parsing is real
     // JSON (Jackson, per-line, loud on failure) against a repo-root-
     // resolved path — a malformed line or a foreign CWD used to
     // silently disable promotion.
     val repoRoot = sys.env.getOrElse("SPARK_GRAFT_REPO", System.getProperty("user.dir"))
     val histPath = java.nio.file.Paths.get(repoRoot, "bench_history.jsonl")
     val HistLookback = 3
-    // per same-sf history line: ORGANIC flags (aging ∪ weather minus
-    // that run's promoted repeats — BenchFlags.organicFlags: feeding a
+    // per history line: ORGANIC flags (aging ∪ weather minus that
+    // run's promoted repeats — BenchFlags.organicFlags: feeding a
     // promotion record back into later lookbacks made promotion
     // self-perpetuating, the r16 advice) plus the run's recorded
-    // steadiness (grown pools + ok) for the steadiness repeat rule.
-    final case class HistRun(flags: Set[String], steadyGrown: Set[String],
-                             steadyMiss: Boolean)
-    val histRuns: Seq[HistRun] =
+    // steadiness (grown pools + ok) for the steadiness repeat rule;
+    // BenchFlags.lookback keeps the runs at this sf over this gate set
+    val histRuns: Seq[BenchFlags.HistRun] =
       if (!java.nio.file.Files.exists(histPath)) Nil
       else try {
         val om = new com.fasterxml.jackson.databind.ObjectMapper()
         import scala.jdk.CollectionConverters._
-        def runOf(line: String): Option[(String, HistRun)] =
+        def runOf(line: String): Option[BenchFlags.HistRun] =
           try {
             val n = om.readTree(line)
             def set(node: com.fasterxml.jackson.databind.JsonNode) =
@@ -369,20 +371,17 @@ object Bench {
               set(n.path("aging_violations")), set(n.path("weather_flags")),
               set(n.path("promoted_repeats")))
             val st = n.path("steady")
-            Some((n.path("sf").asText(), HistRun(flags,
+            Some(BenchFlags.HistRun(n.path("sf").asText(), set(n.path("excluded")), flags,
               set(st.path("grown")),
-              steadyMiss = st.has("ok") && !st.path("ok").asBoolean(true))))
+              steadyMiss = st.has("ok") && !st.path("ok").asBoolean(true)))
           } catch {
             case e: Throwable =>
               System.err.println("[bench] unparseable bench_history.jsonl line " +
                 s"(${e.getMessage}); skipping it for the repeat lookback")
               None
           }
-        java.nio.file.Files.readAllLines(histPath).asScala
-          .filter(_.trim.nonEmpty)
-          .reverseIterator.flatMap(runOf)
-          .filter { case (sf, _) => sf == sfDir }
-          .take(HistLookback).map(_._2).toSeq
+        BenchFlags.lookback(java.nio.file.Files.readAllLines(histPath).asScala
+          .filter(_.trim.nonEmpty).flatMap(runOf).toSeq, sfDir, exclude, HistLookback)
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] cannot read $histPath (${e.getMessage}); " +
@@ -601,7 +600,9 @@ object Bench {
       // parses ("ok"/"grown" — the steadiness repeat-by-name rule)
       val histSteady = s"""{"ok":$steadyOk,"verdict":${jsonStr(steadyRes.verdict)},""" +
         s""""grown":$grownJson,"w1p90":$w1p90,"w2p90":$w2p90}"""
+      val excludedJson = exclude.toSeq.sorted.map(jsonStr).mkString("[", ",", "]")
       val hist = s"""{"t":${System.currentTimeMillis / 1000},"sf":"$sfDir","n":${results.size},""" +
+        s""""excluded":$excludedJson,""" +
         s""""value":${sc3(total)},"total_warm":${sc3(totalWarm)},""" +
         s""""cold_engine":${sc3(coldEngine)},"cold_fixtures":${sc3(coldFixtures)},""" +
         s""""queries":${fmt(results, 3)},"queries_warm1":${fmt(warm1, 3)},""" +

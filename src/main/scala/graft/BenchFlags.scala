@@ -24,6 +24,23 @@ object BenchFlags {
                    promoted: Set[String]): Set[String] =
     (aging ++ weather) -- promoted
 
+  /** One `bench_history.jsonl` line as the repeat lookback reads it:
+    * the run's sf, the gates it left out (`SPARK_GRAFT_EXCLUDE`; empty
+    * for a full run and for lines written before the field existed),
+    * its ORGANIC flags and its recorded steadiness (grown pools + ok). */
+  final case class HistRun(sf: String, excluded: Set[String], flags: Set[String],
+                           steadyGrown: Set[String], steadyMiss: Boolean)
+
+  /** The K-run repeat lookback: the newest `k` history runs (`runs` in
+    * file order, oldest first; result newest first) made at `sf` over
+    * the same gate set as the current run. A subset run's flags are
+    * not comparable with a full run's: its gates ran in a different
+    * order and company, and it says nothing about the gates it left
+    * out, so letting it fill a lookback slot would push a full run's
+    * observations out of the window. */
+  def lookback(runs: Seq[HistRun], sf: String, excluded: Set[String], k: Int): Seq[HistRun] =
+    runs.reverseIterator.filter(r => r.sf == sf && r.excluded == excluded).take(k).toSeq
+
   /** A gate's deterministic cost signature for one warm pass: Spark
     * job count + stage count. Jobs catch an extra action (the
     * count()-per-append class); stages catch a lost exchange reuse or

@@ -349,7 +349,7 @@ object TextOps {
   private def dfSidecarLiveRows(out: String): Long = {
     var total = 0L
     def fold(dirName: String, field: String): Unit =
-      graft.core.SegmentedIndex.foreachSidecarRow(
+      graft.core.ParquetRows.foreach(
           java.nio.file.Paths.get(out, dirName)) { g =>
         if (g.getFieldRepetitionCount(field) > 0)
           total += g.getLong(field, 0)

@@ -111,22 +111,7 @@ object SegmentedIndex {
     * layout's maintained count from a bounded tree: a fresh segment,
     * a just-compacted rewrite, a copied seed. */
   def footerRowCountOf(root: java.nio.file.Path): Long =
-    if (!Files.isDirectory(root)) 0L
-    else {
-      val dataFiles = Seq.newBuilder[java.nio.file.Path]
-      def walk(dir: java.nio.file.Path): Unit =
-        Using.resource(Files.list(dir)) { s =>
-          s.iterator().asScala.toList.foreach { p =>
-            val n = p.getFileName.toString
-            if (!n.startsWith("_") && !n.startsWith(".")) {
-              if (Files.isDirectory(p)) walk(p)
-              else if (n.endsWith(".parquet")) dataFiles += p
-            }
-          }
-        }
-      walk(root)
-      footerRows(dataFiles.result())
-    }
+    footerRows(ParquetRows.dataFiles(root))
 
   /** Tombstone `keys` under `keyCol` (explicit — [[live]] later joins
     * on the same name, and a positional guess would silently tombstone
@@ -179,7 +164,7 @@ object SegmentedIndex {
     * maintenance loops paid that per store per microbatch/epoch. The
     * sidecar is diff-bounded by the same contract that lets the live
     * view broadcast it at all, so the fold is a microsecond driver
-    * read ([[foreachSidecarRow]] — the policy path's reader), and a
+    * read ([[ParquetRows.foreach]] — the policy path's reader), and a
     * broadcast over the resulting LocalRelation builds with ZERO jobs.
     * `asOfGen` applies [[liveAsOf]]'s `upto_gen < asOfGen` filter
     * before the max-fold (the replay-stability rule). */
@@ -217,7 +202,7 @@ object SegmentedIndex {
           case _ => g.getBoolean(0, 0)
         }
       }
-      foreachSidecarRow(dir) { g =>
+      ParquetRows.foreach(dir) { g =>
         val k = keyOf(g)
         if (genScoped) {
           val i = g.getType.getFieldIndex("upto_gen")
@@ -465,45 +450,6 @@ object SegmentedIndex {
       else 1.0 - live(spark, raw, out, keyCol, genCol).count().toDouble / total
     }
 
-  /** DRIVER-SIDE record iteration over a bounded sidecar parquet dir
-    * (non-underscore files only) — the policy-path reader for sidecars
-    * that are diff- or vocab-bounded by contract: a Spark job just to
-    * distinct-count a few thousand tombstone rows pays scheduler +
-    * listing overhead per POLICY CHECK, where reading the same rows in
-    * the driver is microseconds (the same reasoning as [[footerRows]];
-    * the r16 verdict asked for the numerator to stop running Spark
-    * jobs like the denominator already had). Single-maintainer
-    * layouts only — no writer races the scan. */
-  private[graft] def foreachSidecarRow(dir: java.nio.file.Path)
-      (f: org.apache.parquet.example.data.Group => Unit): Unit =
-    if (Files.isDirectory(dir)) {
-      val conf = new org.apache.hadoop.conf.Configuration()
-      // recurse like footerRowCountOf: a sidecar may itself be a
-      // segmented mini-layout (the postings `_df_deltas` appends one
-      // gen=<g> partition dir per epoch); partition-dir VALUES are not
-      // row fields, which none of the driver-side folds need
-      def walk(d: java.nio.file.Path): Unit =
-        Using.resource(Files.list(d)) { s =>
-          s.iterator().asScala.toList.foreach { p =>
-            val n = p.getFileName.toString
-            if (!n.startsWith("_") && !n.startsWith(".")) {
-              if (Files.isDirectory(p)) walk(p)
-              else if (n.endsWith(".parquet")) {
-                val r = org.apache.parquet.hadoop.ParquetReader
-                  .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-                    new org.apache.hadoop.fs.Path(p.toUri))
-                  .withConf(conf).build()
-                try {
-                  var g = r.read()
-                  while (g != null) { f(g); g = r.read() }
-                } finally r.close()
-              }
-            }
-          }
-        }
-      walk(dir)
-    }
-
   /** Distinct tombstone INSTANCES in the sidecar: gen-scoped layouts
     * count distinct (key, upto_gen) pairs — a key re-deleted at a
     * later generation is a new instance, a REPLAYED at-least-once
@@ -515,7 +461,7 @@ object SegmentedIndex {
     * 0 when the sidecar does not exist. */
   def tombstoneInstances(out: String, genScoped: Boolean): Long = {
     val seen = new java.util.HashSet[String]()
-    foreachSidecarRow(Paths.get(out, "_tombstones")) { g =>
+    ParquetRows.foreach(Paths.get(out, "_tombstones")) { g =>
       // field 0 is the key column ([[tombstone]] writes it first);
       // value-to-string is injective per column type, which is all a
       // distinct count needs (a null key renders as its own token)

@@ -1,8 +1,16 @@
 package graft.store
 
 import java.io.FileNotFoundException
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import java.time.Instant
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.FilterApi
+import org.apache.parquet.io.api.Binary
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -25,8 +33,10 @@ import graft.lock.{AdvisoryLock, Locking}
   *    `sqlitedb.py:341-369,500-531`). Point puts buffer in memory and
   *    flush as batch appends — one parquet file per flushed batch, not
   *    per asset, so a bulk copy produces a handful of files per table.
-  *  - Key-equality gets push every predicate into the parquet scan
-  *    (column pruning + row-group min/max skipping are free).
+  *  - Point gets run in the driver with no Spark job: they read the
+  *    one `(project, experiment)` partition directory with parquet-mr,
+  *    key equalities pushed down (column pruning + row-group and page
+  *    min/max skipping), and resolve the newest row in process.
   *  - Tables sharing storage in the reference share here too:
   *    GLOB_STATS / HEATMAP / REGIONAL_STATS → one `glob_stats` table
   *    (`sqlitedb.py:184-249`).
@@ -49,7 +59,10 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
     if (ephemeral) graft.core.TempDirs.create("graft-memdb").toAbsolutePath.toString
     else Paths.get(basedirRaw).toAbsolutePath.toString
   Files.createDirectories(Paths.get(basedir))
+  /** The one Hadoop configuration of the store's driver-side reads. */
+  private val hadoopConf = spark.sparkContext.hadoopConfiguration
   recoverInterruptedRewrites()
+  seedSeq()
 
   def name: String = "table_store"
 
@@ -153,11 +166,12 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
     * not exist yet or was already deleted. */
   def getByUriAsOf(uri: String, asOf: Long): Option[AssetValue] = {
     val (route, args, kw) = UriCodec.parse(uri)
-    lookupRow(byRoute(route), args ++ (kw - "version"), Some(asOf)).flatMap { r =>
-      if (Route.blobRoutes.contains(route))
-        Option(r.getAs[Array[Byte]]("blob")).map(AssetValue.Blob.apply)
-      else Option(r.getAs[String]("json")).map(AssetValue.Json.apply)
-    }
+    val blob = Route.blobRoutes.contains(route)
+    lookupRow(byRoute(route), args ++ (kw - "version"), Some(if (blob) "blob" else "json"), Some(asOf))
+      .flatMap { r =>
+        if (blob) Option(r.blob).map(AssetValue.Blob.apply)
+        else Option(r.json).map(AssetValue.Json.apply)
+      }
   }
 
   private def appendRow(t: Table, keyVals: Map[String, String],
@@ -175,29 +189,86 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
     * layout generation lack the newer key components — the analogue of
     * sqlite's per-generation tables, `sqlitedb.py:184-249`), and among
     * matches the row with the most exactly-matching keys and the
-    * fewest non-null surplus keys wins (`sqlitedb.py:441-449`). */
-  private def lookupRow(t: Table, keyVals: Map[String, String],
-                        asOf: Option[Long] = None): Option[Row] =
-    liveRows(t, asOf).flatMap { df =>
-      val keys = t.keys
-      val wc = t.generationKeys
-      val provided = keyVals.view.filterKeys(keys.contains).toMap
-      val surplus = keys.filterNot(provided.contains)
-      val pred = provided.map { case (k, v) =>
-        if (wc.contains(k)) col(k) === v || col(k).isNull else col(k) === v
-      }.reduceOption(_ && _).getOrElse(lit(true))
-      // constant literals in orderBy would be read as column ordinals —
-      // only add the disambiguation keys when they reference columns
-      val orderCols = Seq.newBuilder[org.apache.spark.sql.Column]
-      val providedWc = provided.keys.filter(wc.contains).toSeq.sorted
-      if (providedWc.nonEmpty)
-        orderCols += providedWc.map(k => when(col(k).isNull, 1).otherwise(0)).reduce(_ + _).asc
-      if (surplus.nonEmpty)
-        orderCols += surplus.map(k => when(col(k).isNull, 0).otherwise(1)).reduce(_ + _).asc
-      orderCols += col("put_time").desc
-      orderCols += col("seq").desc
-      df.filter(pred).orderBy(orderCols.result(): _*).limit(1).collect().headOption
+    * fewest non-null surplus keys wins (`sqlitedb.py:441-449`).
+    *
+    * Served in the driver, with no Spark job: the provided partition
+    * values name the directories to read ([[partitionDirs]]), parquet-mr
+    * streams their rows with the key equalities (and `seq < asOf`)
+    * pushed down, and only the newest `(put_time, seq)` row per
+    * matching full key is held — memory is bounded by the keys that
+    * match, not by the partition. Rows at or after `asOf` are dropped
+    * first, then a key whose newest row is an `rm` tombstone drops out,
+    * exactly as [[liveRows]] resolves. `payload` names the one payload
+    * column to read (`json` or `blob`); the other comes back null. */
+  private def lookupRow(t: Table, keyVals: Map[String, String], payload: Option[String],
+                        asOf: Option[Long] = None): Option[Hit] = {
+    flush(t)
+    val keys = t.keys
+    val wc = t.generationKeys
+    val provided = keyVals.view.filterKeys(keys.contains).toMap
+    val dataKeys = keys.filterNot(t.partitionCols.contains)
+    val pushed = (provided.filter { case (k, _) => dataKeys.contains(k) }.toSeq.map { case (k, v) =>
+      val c = FilterApi.binaryColumn(k)
+      val eq = FilterApi.eq(c, Binary.fromString(v))
+      if (wc.contains(k)) FilterApi.or(eq, FilterApi.eq(c, null: Binary)) else eq
+    } ++ asOf.map(s => FilterApi.lt(FilterApi.longColumn("seq"), java.lang.Long.valueOf(s))))
+      .reduceOption(FilterApi.and(_, _)).fold(FilterCompat.NOOP)(FilterCompat.get)
+    val columns = Some(dataKeys.toSet ++ Set("put_time", "seq", "op") ++ payload)
+    // rows are checked here too: the pushed filter is an optimization,
+    // and whether parquet-mr also drops single rows with it is a
+    // setting of the shared configuration, not of this reader.
+    // (key index, requested value, whether a NULL matches it too)
+    val wanted = keys.indices.flatMap(i => provided.get(keys(i)).map(v => (i, v, wc(keys(i)))))
+    val newestPerKey = scala.collection.mutable.HashMap.empty[Seq[String], Hit]
+    for ((dir, partVals) <- partitionDirs(t, provided))
+      graft.core.ParquetRows.foreach(dir, hadoopConf, columns, pushed) { g =>
+        val seq = g.getLong("seq", 0)
+        if (asOf.forall(seq < _)) {
+          val kv = keys.map(k => partVals.getOrElse(k, string(g, k)))
+          if (wanted.forall { case (i, v, orNull) => v == kv(i) || (orNull && kv(i) == null) }) {
+            val hit = Hit(kv, g.getLong("put_time", 0), seq, g)
+            if (newestPerKey.get(kv).forall(h => hit.putTime > h.putTime ||
+                (hit.putTime == h.putTime && seq > h.seq)))
+              newestPerKey(kv) = hit
+          }
+        }
+      }
+    val providedWc = keys.indices.filter(i => provided.contains(keys(i)) && wc.contains(keys(i)))
+    val surplus = keys.indices.filterNot(i => provided.contains(keys(i)))
+    newestPerKey.values.filter(h => string(h.row, "op") == "put").minByOption { h =>
+      (providedWc.count(h.keys(_) == null), surplus.count(h.keys(_) != null), -h.putTime, -h.seq)
     }
+  }
+
+  /** The partition directories a get for `provided` can match, each
+    * with the partition values its rows carry. A provided value selects
+    * its one directory by Spark's own path escaping; no such directory
+    * is a miss, and a value Spark stores as NULL (the empty string, or
+    * the default-partition name itself) matches nothing. An unprovided
+    * partition column (a project-level models_style get leaves
+    * `experiment` open) takes every directory at its level, the
+    * default partition reading as NULL. */
+  private def partitionDirs(t: Table, provided: Map[String, String]): Seq[(Path, Map[String, String])] = {
+    val default = ExternalCatalogUtils.DEFAULT_PARTITION_NAME
+    t.partitionCols.foldLeft(Seq(Paths.get(tablePath(t)) -> Map.empty[String, String])) {
+      case (dirs, c) => dirs.flatMap { case (dir, vals) =>
+        provided.get(c) match {
+          case Some(v) =>
+            if (v.isEmpty || v == default) Nil
+            else Seq(dir.resolve(ExternalCatalogUtils.getPartitionPathString(c, v)))
+              .filter(Files.isDirectory(_)).map(_ -> (vals + (c -> v)))
+          case None if Files.isDirectory(dir) =>
+            val prefix = ExternalCatalogUtils.escapePathName(c) + "="
+            scala.util.Using.resource(Files.list(dir))(_.iterator().asScala.toList).collect {
+              case d if Files.isDirectory(d) && d.getFileName.toString.startsWith(prefix) =>
+                val raw = d.getFileName.toString.drop(prefix.length)
+                d -> (vals + (c -> (if (raw == default) null else ExternalCatalogUtils.unescapePathName(raw))))
+            }
+          case None => Nil
+        }
+      }
+    }
+  }
 
   protected def _get(route: Route, routeArgs: Map[String, String],
                      kwargs: Map[String, String],
@@ -210,21 +281,26 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
     val filterArgs = kwargs.filter { case (k, _) =>
       AssetStore.filterParams.getOrElse(route, Set.empty).contains(k) }
     val keyVals = routeArgs ++ (kwargs -- filterArgs.keys)
-    lookupRow(byRoute(route), keyVals) match {
+    val payload = accessType match {
+      case AccessType.Blob => Some("blob")
+      case AccessType.JsonStr | AccessType.Obj => Some("json")
+      case _ => None
+    }
+    lookupRow(byRoute(route), keyVals, payload) match {
       case None =>
         default.getOrElse(throw new FileNotFoundException(
           s"No asset for $route with key $keyVals"))
       case Some(r) =>
         accessType match {
           case AccessType.Uri => AssetValue.Uri(QueryEntry.of(route, keyVals).uri)
-          case AccessType.Mtime => AssetValue.Time(Instant.ofEpochMilli(r.getAs[Long]("put_time")))
+          case AccessType.Mtime => AssetValue.Time(Instant.ofEpochMilli(r.putTime))
           case AccessType.Ctime =>
             // creation time = oldest put for the key; approximated by
             // the surviving row's time unless history is retained
-            AssetValue.Time(Instant.ofEpochMilli(r.getAs[Long]("put_time")))
-          case AccessType.Blob => AssetValue.Blob(r.getAs[Array[Byte]]("blob"))
+            AssetValue.Time(Instant.ofEpochMilli(r.putTime))
+          case AccessType.Blob => AssetValue.Blob(r.blob)
           case AccessType.JsonStr | AccessType.Obj =>
-            val json = r.getAs[String]("json")
+            val json = r.json
             if (json == null) throw new FileNotFoundException(s"No JSON payload for $keyVals")
             if (filterArgs.isEmpty) {
               if (accessType == AccessType.JsonStr) AssetValue.Json(json)
@@ -353,12 +429,22 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
       .distinct.foreach(t => DirSwap.recover(s"$basedir/$t"))
   }
 
+  /** Continue the write sequence above every `seq` already in the
+    * log, read from parquet footer statistics (no Spark job): the
+    * counter is per JVM, so without this a marker pinned before a
+    * restart would see the writes made after it. Raise-only — a second
+    * store open in the same JVM never moves the sequence back. */
+  private def seedSeq(): Unit =
+    graft.core.ParquetRows.maxLong(
+        tables.flatMap(t => graft.core.ParquetRows.dataFiles(Paths.get(tablePath(t)))), "seq", hadoopConf)
+      .foreach(m => TableStore.seqCounter.accumulateAndGet(m + 1, (a: Long, b: Long) => math.max(a, b)))
+
   /** Compact a table: rewrite with only the newest row per live key.
     * Run periodically at scale to bound the append log. The rewrite
-    * keeps the (project, experiment) directory partitioning — losing
-    * it here would silently turn every post-compact point read from a
-    * one-partition scan into a full-table scan (TablePruningSpec pins
-    * pruning after compaction). */
+    * keeps the (project, experiment) directory partitioning — point
+    * gets read one partition directory, and losing the layout here
+    * would silently make them miss every compacted row
+    * (TablePruningSpec pins pruning after compaction). */
   def compact(table: String): Unit = {
     val t = TableStore.table(table)
     readTable(t).foreach(df => rewriteTable(t, newest(t, df)))
@@ -389,10 +475,10 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
     * key, rm tombstones honored) as a DataFrame — key columns +
     * `json`/`blob` payload + bookkeeping. This is how a pipeline runs
     * corpus analytics (dedup, quality, CDC) directly over assets the
-    * store serves, without exporting them first: the frame is the
-    * same partition-pruned parquet scan the point API resolves
-    * against, so a downstream groupBy/join composes with it like any
-    * other source (av08 proves the composition end to end). */
+    * store serves, without exporting them first: the frame is a
+    * partition-pruned parquet scan resolving newest-per-key as the
+    * point API does, so a downstream groupBy/join composes with it
+    * like any other source (av08 proves the composition end to end). */
   def liveFrame(table: String): Option[DataFrame] = liveRows(TableStore.table(table))
 
   /** [[liveFrame]] as of a snapshot marker — the time-travel side of
@@ -478,8 +564,25 @@ object TableStore {
         StructField("op", StringType, nullable = false)))
   }
 
-  /** Monotonic tie-break for same-millisecond appends. */
+  /** Monotonic tie-break for same-millisecond appends; each store open
+    * raises it above the seqs already on disk. */
   private[store] val seqCounter = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** A point get's winning row: its full key, `(put_time, seq)` and
+    * the parquet record, which carries the payload column the get
+    * read (the other payload reads as null). */
+  private final case class Hit(keys: Seq[String], putTime: Long, seq: Long, row: Group) {
+    def json: String = string(row, "json")
+    def blob: Array[Byte] = binary(row, "blob").map(_.getBytes).orNull
+  }
+
+  /** A binary column of a parquet record; None when the record's file
+    * lacks the column or the value is NULL. */
+  private def binary(g: Group, name: String): Option[Binary] =
+    if (!g.getType.containsField(name) || g.getFieldRepetitionCount(name) == 0) None
+    else Some(g.getBinary(name, 0))
+
+  private def string(g: Group, name: String): String = binary(g, name).map(_.toStringUsingUTF8).orNull
 
   private val PE = Seq("project", "experiment")
 

@@ -194,4 +194,38 @@ class BenchFlagsSpec extends AnyFunSuite {
     // identical runs → empty
     assert(BenchFlags.costDrift(base, base).isEmpty)
   }
+
+  test("lookback: a subset run between full runs neither fills a full run's window nor reads full runs") {
+    val sf = "sf0.1"
+    def run(name: String, excluded: Set[String] = Set.empty, at: String = sf) =
+      BenchFlags.HistRun(at, excluded, Set(name), Set.empty, steadyMiss = false)
+    val subset = Set("p12_nightly_pipeline", "s19_range_search")
+    // file order, oldest first: the subset run sits between full runs,
+    // and one full run was made at another sf
+    val history = Seq(run("full1"), run("full2"), run("sub1", subset), run("full3"),
+      run("other_sf", at = "sf0.01"), run("sub2", subset), run("full4"))
+    def names(rs: Seq[BenchFlags.HistRun]) = rs.flatMap(_.flags)
+    // a full run reads the last three FULL runs at its sf, newest first
+    assert(names(BenchFlags.lookback(history, sf, Set.empty, 3)) == Seq("full4", "full3", "full2"))
+    // a subset run reads only runs over its own gate set
+    assert(names(BenchFlags.lookback(history, sf, subset, 3)) == Seq("sub2", "sub1"))
+    // a different exclusion set is a different gate set
+    assert(BenchFlags.lookback(history, sf, Set("p12_nightly_pipeline"), 3).isEmpty)
+  }
+
+  test("lookback: committed history lines without an `excluded` field count as full runs") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val runs = java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get("bench_history.jsonl")).asScala
+      .filter(_.trim.nonEmpty).map(mapper.readTree).map { n =>
+        BenchFlags.HistRun(n.path("sf").asText(),
+          n.path("excluded").elements().asScala.map(_.asText()).toSet,
+          Set.empty, Set.empty, steadyMiss = false)
+      }.toSeq
+    assume(runs.nonEmpty, "needs the committed history")
+    val sf = runs.last.sf
+    val atSf = runs.filter(_.sf == sf)
+    assume(atSf.size >= 3, "needs three committed runs at one sf")
+    assert(BenchFlags.lookback(runs, sf, Set.empty, 3) == atSf.reverse.take(3))
+  }
 }

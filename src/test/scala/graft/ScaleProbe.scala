@@ -233,7 +233,8 @@ object ScaleProbe {
         db.putMenu(s"""{"p": "$p", "e": "$e", "v": 0}""", p, e)
       db.flushAll()
       def readLat(): Double = {
-        // median of 5 distinct point reads (each a fresh Spark job)
+        // median of 5 distinct point reads (each a driver-side read of
+        // one partition directory, no Spark job)
         val ts = (0 until 5).map { i =>
           val t0 = System.nanoTime()
           db.getMenu(s"p${i % 8}", s"e${i % 5}")
@@ -253,8 +254,8 @@ object ScaleProbe {
       val deep = readLat()
       db.compact("menu")
       val compacted = readLat()
-      println(f"[scale] store_point_read_s base=$base%.3f after_${rep}x_appends=$deep%.3f " +
-        f"after_compact=$compacted%.3f ratios=${deep / base}%.1f/${compacted / base}%.1f")
+      println(f"[scale] store_point_read_ms base=${base * 1e3}%.3f after_${rep}x_appends=${deep * 1e3}%.3f " +
+        f"after_compact=${compacted * 1e3}%.3f ratios=${deep / base}%.1f/${compacted / base}%.1f")
       db.close()
     }
     spark.stop()
