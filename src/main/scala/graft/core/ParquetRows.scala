@@ -59,8 +59,9 @@ object ParquetRows {
               filter: FilterCompat.Filter = FilterCompat.NOOP)(f: Group => Unit): Unit =
     dataFiles(root).foreach(readFile(_, conf, columns, filter)(f))
 
-  private def readFile(p: Path, conf: Configuration, columns: Option[Set[String]],
-                       filter: FilterCompat.Filter)(f: Group => Unit): Unit = {
+  /** [[foreach]] over one data file. */
+  def readFile(p: Path, conf: Configuration, columns: Option[Set[String]],
+               filter: FilterCompat.Filter)(f: Group => Unit): Unit = {
     val r = new Reader(inputFile(p, conf), new HadoopParquetConfiguration(conf), columns)
       .withFilter(filter).build()
     try {

@@ -168,20 +168,23 @@ trait AssetStore extends AutoCloseable {
                  accessType: AccessType = AccessType.JsonStr,
                  default: Option[AssetValue] = None, cache: Boolean = false): AssetValue = {
     val base = pe(project, experiment) + ("obsvar" -> obsvar) + ("model" -> model)
-    if (cache) contourCacheGet(base, timestep) match {
+    // a cached single-doc read splits the document into one sub-key
+    // entry per timestep, under the validator taken before the read,
+    // so later timestep reads skip the read and the filter
+    // (`jsonfiledb.py:988-993`)
+    val stamp = if (cache) docStamp(Route.Contour, base) else None
+    stamp.flatMap(s => subKeyCache.get(s, ContourStep + timestep)) match {
       case Some(json) =>
-        return accessType match {
-          case AccessType.JsonStr => AssetValue.Json(json)
-          case AccessType.Obj     => AssetValue.Obj(JsonUtil.parse(json))
-          case _                  => convertNode(JsonUtil.parse(json), accessType)
-        }
+        contourPrimeHits.incrementAndGet()
+        return textValue(json, accessType)
       case None => ()
     }
     try {
       val whole = _get(Route.Contour, base, Map.empty, AccessType.Obj, None, cache)
       whole match {
         case AssetValue.Obj(node) =>
-          if (cache) primeContourCache(base, node)
+          stamp.foreach(s => node.properties().forEach(e =>
+            subKeyCache.put(s, ContourStep + e.getKey, JsonUtil.serialize(e.getValue))))
           val sel = ContentFilters.filterContour(node, Some(timestep))
           convertNode(sel, accessType)
         case other => other
@@ -417,17 +420,66 @@ trait AssetStore extends AutoCloseable {
       "source" -> source, "variable" -> variable, "date" -> date))
 
   // ------------------------------------------------------------------
+  // document caches (`jsondb/cache.py:114-371`): a whole-document LRU
+  // and a filtered sub-key LRU of serialized JSON, each entry stamped
+  // with the validator its backend took before the read. Only strings
+  // are cached: an Obj get parses a fresh node on every call.
+  // ------------------------------------------------------------------
 
-  /** Hook: on a cached single-doc contour read, backends may pre-split
-    * the document into per-timestep cache entries so later timestep
-    * reads skip the re-filter (`jsonfiledb.py:988-993`). No-op by
-    * default. */
-  protected def primeContourCache(routeArgs: Map[String, String],
-                                  node: JsonNode): Unit = ()
+  /** Cache observability (hit/miss counters, exposed for tests and
+    * ops — the reference asserts on equivalent counters in
+    * `tests/jsondb/test_cache.py:35-149`): whole-document LRU lookups
+    * of cached gets; sub-key hits count in neither. */
+  val cacheHits = new java.util.concurrent.atomic.AtomicLong(0)
+  val cacheMisses = new java.util.concurrent.atomic.AtomicLong(0)
+  /** Contour timestep reads served from a primed per-timestep entry. */
+  val contourPrimeHits = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Hook: lookup of a previously-primed per-timestep contour entry. */
-  protected def contourCacheGet(routeArgs: Map[String, String],
-                                timestep: String): Option[String] = None
+  private val docCache = new DocCache(64)
+  private val subKeyCache = new DocCache(512)
+
+  /** The identity and validator of the document a get for `keyVals`
+    * on `route` reads, taken before the read: the validator changes
+    * whenever the document may have. None when there is no document. */
+  protected def docStamp(route: Route, keyVals: Map[String, String]): Option[DocStamp]
+
+  /** The JsonStr/Obj value of a stored document — the whole text, or
+    * `route`'s filter applied to it — or None when `read` finds no
+    * document. With a stamp (a cache=true get) the whole text and the
+    * filtered output go through the two LRUs. */
+  protected final def jsonValue(route: Route, filterArgs: Map[String, String],
+                                accessType: AccessType, stamp: Option[DocStamp])
+                               (read: => Option[String]): Option[AssetValue] = {
+    def filtered(text: String) =
+      JsonUtil.serialize(AssetStore.applyFilter(route, JsonUtil.parse(text), filterArgs))
+    def whole(s: DocStamp) = docCache.get(s, "") match {
+      case hit @ Some(_) => cacheHits.incrementAndGet(); hit
+      case None => cacheMisses.incrementAndGet(); read.map { t => docCache.put(s, "", t); t }
+    }
+    // sub-key: route + sorted filter args (`jsonfiledb.py:367-368`)
+    def sub = route.name + filterArgs.toSeq.sorted.mkString("::", ",", "")
+    val text = stamp match {
+      case None => if (filterArgs.isEmpty) read else read.map(filtered)
+      case Some(s) if filterArgs.isEmpty => whole(s)
+      case Some(s) =>
+        subKeyCache.get(s, sub).orElse(whole(s).map { t =>
+          val out = filtered(t); subKeyCache.put(s, sub, out); out
+        })
+    }
+    text.map(textValue(_, accessType))
+  }
+
+  /** Drops every cached entry of the documents `ids` (a backend's own
+    * writes call it; the validators catch everyone else's). */
+  protected final def evictCached(ids: Iterable[Any]): Unit =
+    if (ids.nonEmpty) Seq(docCache, subKeyCache).foreach(_.evict(ids.toSet))
+
+  private def textValue(json: String, accessType: AccessType): AssetValue =
+    accessType match {
+      case AccessType.JsonStr => AssetValue.Json(json)
+      case AccessType.Obj     => AssetValue.Obj(JsonUtil.parse(json))
+      case other => throw new UnsupportedOperation(s"Cannot convert parsed node to $other")
+    }
 
   /** Blob read for REPORT_IMAGE / MAP_OVERLAY: `_get` with BLOB access. */
   private def getBlob(route: Route, routeArgs: Map[String, String]): Array[Byte] =
@@ -439,7 +491,7 @@ trait AssetStore extends AutoCloseable {
   private def pe(project: String, experiment: String): Map[String, String] =
     Map("project" -> project, "experiment" -> experiment)
 
-  protected def convertNode(node: JsonNode, accessType: AccessType): AssetValue =
+  private def convertNode(node: JsonNode, accessType: AccessType): AssetValue =
     accessType match {
       case AccessType.Obj     => AssetValue.Obj(node)
       case AccessType.JsonStr => AssetValue.Json(JsonUtil.serialize(node))
@@ -448,6 +500,28 @@ trait AssetStore extends AutoCloseable {
 }
 
 object AssetStore {
+  /** A document's cache identity: `id` names it within one store, and
+    * `validator` is equal between two reads only if the document did
+    * not change in between. */
+  final case class DocStamp(id: Any, validator: Any)
+
+  private val ContourStep = "contour.timestep::"
+
+  /** An LRU of serialized documents keyed by (document id, sub-key),
+    * each entry valid while its document's validator is unchanged. */
+  private final class DocCache(maxSize: Int) {
+    private val entries = new java.util.LinkedHashMap[(Any, String), (Any, String)](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[(Any, String), (Any, String)]): Boolean =
+        size() > maxSize
+    }
+    def get(s: DocStamp, sub: String): Option[String] = synchronized {
+      Option(entries.get((s.id, sub))).collect { case (v, text) if v == s.validator => text }
+    }
+    def put(s: DocStamp, sub: String, text: String): Unit =
+      synchronized(entries.put((s.id, sub), (s.validator, text)))
+    def evict(ids: Set[Any]): Unit = synchronized(entries.keySet.removeIf(k => ids(k._1)))
+  }
+
   /** Per-route content filters (reference FILTERS registration,
     * `jsonfiledb.py:193-197`): the kwargs consumed by each filter. */
   val filterParams: Map[Route, Set[String]] = Map(

@@ -2,7 +2,7 @@ package graft.store
 
 import java.io.FileNotFoundException
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.time.Instant
+import java.nio.file.attribute.BasicFileAttributes
 
 import scala.jdk.CollectionConverters._
 
@@ -15,8 +15,9 @@ import graft.lock.{AdvisoryLock, Locking}
   * reference's jsondb (`/root/reference/src/aerovaldb/jsondb/
   * jsonfiledb.py`): per-route path templates with version-dependent
   * generations, filename-encoded key components (`/→%1, _→%2, %→%0`),
-  * unencoded-retry fallback, post-read content filters, an LRU file
-  * cache with mtime invalidation, and a reverse-parsing catalog scan.
+  * unencoded-retry fallback, post-read content filters, the shared
+  * document caches validated by file attributes, and a
+  * reverse-parsing catalog scan.
   *
   * This backend exists for layout compatibility and point access; the
   * scalable Spark-native layout is [[TableStore]] (the reference's
@@ -104,43 +105,16 @@ final class JsonFileStore(basedirRaw: String) extends AssetStore {
 
   private val mapper = new StringMapper(pathLookup.toMap, getVersion _)
 
-  // --------------------------------------------------------------
-  // LRU caches: whole-file (64) + filtered sub-key (512), mtime-
-  // invalidated (`jsondb/cache.py:114-371`).
-  // --------------------------------------------------------------
-  import JsonFileStore.CacheEntry
-  private def lruMap[K, V](maxSize: Int) =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
-        override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean = size() > maxSize
-      })
-  private val fileCache = lruMap[String, CacheEntry](64)
-  private val subKeyCache = lruMap[String, CacheEntry](512)
-
-  /** Cache observability (hit/miss counters, exposed for tests and
-    * ops — the reference asserts on equivalent counters in
-    * `tests/jsondb/test_cache.py:35-149`). */
-  val cacheHits = new java.util.concurrent.atomic.AtomicLong(0)
-  val cacheMisses = new java.util.concurrent.atomic.AtomicLong(0)
-
-  private def readThroughCache(path: Path, useCache: Boolean): String = {
-    if (!useCache) return Files.readString(path)
-    val key = path.toRealPath().toString
-    val mtime = Files.getLastModifiedTime(path).toMillis
-    val hit = Option(fileCache.get(key)).filter(_.mtimeMs == mtime)
-    hit match {
-      case Some(e) =>
-        cacheHits.incrementAndGet()
-        e.content
-      case None =>
-        cacheMisses.incrementAndGet()
-        val content = Files.readString(path)
-        fileCache.put(key, CacheEntry(content, mtime))
-        content
-    }
+  /** A file's cache validator, from one attribute read: its file key
+    * (device and inode, new for every `_put`, which renames a fresh
+    * file into place), full-precision mtime and size. */
+  private def stampOf(path: Path): AssetStore.DocStamp = {
+    val a = Files.readAttributes(path, classOf[BasicFileAttributes])
+    AssetStore.DocStamp(path.toString, (a.fileKey, a.lastModifiedTime, a.size))
   }
 
-  // --------------------------------------------------------------
+  protected def docStamp(route: Route, keyVals: Map[String, String]): Option[AssetStore.DocStamp] =
+    resolvePath(route, keyVals) match { case (path, found) => Option.when(found)(stampOf(path)) }
 
   /** Substitutions are filename-encoded except the literal-path args
     * (REPORT_IMAGE `path` — `jsonfiledb.py:51-59`). */
@@ -191,35 +165,12 @@ final class JsonFileStore(basedirRaw: String) extends AssetStore {
       case AccessType.Mtime =>
         AssetValue.Time(Files.getLastModifiedTime(path).toInstant)
       case AccessType.Ctime =>
-        val attrs = Files.readAttributes(path, classOf[java.nio.file.attribute.BasicFileAttributes])
-        AssetValue.Time(attrs.creationTime().toInstant)
+        AssetValue.Time(Files.readAttributes(path, classOf[BasicFileAttributes]).creationTime().toInstant)
       case AccessType.Blob =>
         AssetValue.Blob(Files.readAllBytes(path))
-      case _ =>
-        if (filterArgs.isEmpty) {
-          val content = readThroughCache(path, cache)
-          accessType match {
-            case AccessType.JsonStr => AssetValue.Json(content)
-            case AccessType.Obj     => AssetValue.Obj(JsonUtil.parse(content))
-            case other => throw new UnsupportedOperation(s"access type $other")
-          }
-        } else {
-          // sub-key cache: "{path}::{sorted filter values}" (`jsonfiledb.py:367-368`)
-          val subKey = path.toString + "::" + filterArgs.toSeq.sortBy(_._1).map(_._2).mkString(",")
-          val mtime = Files.getLastModifiedTime(path).toMillis
-          val cached = if (cache) Option(subKeyCache.get(subKey)).filter(_.mtimeMs == mtime) else None
-          val filteredJson = cached.map(_.content).getOrElse {
-            val node = JsonUtil.parse(readThroughCache(path, cache))
-            val out = JsonUtil.serialize(AssetStore.applyFilter(route, node, filterArgs))
-            if (cache) subKeyCache.put(subKey, CacheEntry(out, mtime))
-            out
-          }
-          accessType match {
-            case AccessType.JsonStr => AssetValue.Json(filteredJson)
-            case AccessType.Obj     => AssetValue.Obj(JsonUtil.parse(filteredJson))
-            case other => throw new UnsupportedOperation(s"access type $other")
-          }
-        }
+      case AccessType.JsonStr | AccessType.Obj =>
+        jsonValue(route, filterArgs, accessType, Option.when(cache)(stampOf(path)))(
+          Some(Files.readString(path))).get
     }
   }
 
@@ -232,6 +183,7 @@ final class JsonFileStore(basedirRaw: String) extends AssetStore {
     val tmp = Files.createTempFile(path.getParent, ".tmp", ".json")
     Files.writeString(tmp, json)
     Files.move(tmp, path, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+    evictCached(Seq(path.toString))
   }
 
   protected def _putBlob(obj: Array[Byte], route: Route, routeArgs: Map[String, String]): Unit = {
@@ -250,39 +202,6 @@ final class JsonFileStore(basedirRaw: String) extends AssetStore {
     }
     Files.createDirectories(path.getParent)
     Files.write(path, obj)
-  }
-
-  // --------------------------------------------------------------
-  // contour per-timestep cache priming (`jsonfiledb.py:988-993`):
-  // a cached single-doc read splits the document into one sub-key
-  // entry per timestep, so later timestep reads skip file + filter.
-  // --------------------------------------------------------------
-
-  /** Counter exposed for tests: primed-entry hits. */
-  val contourPrimeHits = new java.util.concurrent.atomic.AtomicLong(0)
-
-  override protected def primeContourCache(routeArgs: Map[String, String],
-                                           node: com.fasterxml.jackson.databind.JsonNode): Unit = {
-    val (path, found) = resolvePath(Route.Contour, routeArgs)
-    if (found) {
-      val mtime = Files.getLastModifiedTime(path).toMillis
-      node.properties().forEach { e =>
-        subKeyCache.put(s"$path::${e.getKey}",
-          CacheEntry(JsonUtil.serialize(e.getValue), mtime))
-      }
-    }
-  }
-
-  override protected def contourCacheGet(routeArgs: Map[String, String],
-                                         timestep: String): Option[String] = {
-    val (path, found) = resolvePath(Route.Contour, routeArgs)
-    if (!found) None
-    else {
-      val mtime = Files.getLastModifiedTime(path).toMillis
-      val hit = Option(subKeyCache.get(s"$path::$timestep")).filter(_.mtimeMs == mtime)
-      hit.foreach(_ => contourPrimeHits.incrementAndGet())
-      hit.map(_.content)
-    }
   }
 
   // --------------------------------------------------------------
@@ -372,6 +291,7 @@ final class JsonFileStore(basedirRaw: String) extends AssetStore {
       case AssetValue.Path(p) =>
         Files.deleteIfExists(Paths.get(p))
         entryCache.remove(p)
+        evictCached(Seq(p))
       case other => throw new IllegalStateException(s"Unexpected $other")
     }
   }
@@ -388,10 +308,12 @@ final class JsonFileStore(basedirRaw: String) extends AssetStore {
       .distinct.filter(d => d.getParent.getParent == basedir && Files.exists(d))
     // evict only the deleted files' reverse parses: every other
     // experiment's memo entries stay valid
-    dirs.foreach(d => Files.walk(d).iterator().asScala.toSeq.reverse.foreach { p =>
+    val deleted = dirs.flatMap(d => Files.walk(d).iterator().asScala.toSeq.reverse.map { p =>
       Files.deleteIfExists(p)
       entryCache.remove(p.toString)
+      p.toString
     })
+    evictCached(deleted)
     if (dirs.nonEmpty) versionCache.remove((project, experiment))
   }
 
@@ -399,10 +321,6 @@ final class JsonFileStore(basedirRaw: String) extends AssetStore {
 }
 
 object JsonFileStore {
-  /** LRU payload + mtime stamp (top-level so the pattern-match type
-    * test carries no outer-instance reference). */
-  private[store] final case class CacheEntry(content: String, mtimeMs: Long)
-
   /** Supported image extensions (`/root/reference/src/aerovaldb/
     * const.py:1-3`), probed in sorted order. */
   val ImgExts: Seq[String] =

@@ -167,7 +167,8 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
   def getByUriAsOf(uri: String, asOf: Long): Option[AssetValue] = {
     val (route, args, kw) = UriCodec.parse(uri)
     val blob = Route.blobRoutes.contains(route)
-    lookupRow(byRoute(route), args ++ (kw - "version"), Some(if (blob) "blob" else "json"), Some(asOf))
+    val (t, keyVals) = (byRoute(route), args ++ (kw - "version"))
+    lookupRow(t, keyVals, getFiles(t, keyVals), Some(if (blob) "blob" else "json"), Some(asOf))
       .flatMap { r =>
         if (blob) Option(r.blob).map(AssetValue.Blob.apply)
         else Option(r.json).map(AssetValue.Json.apply)
@@ -191,18 +192,17 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
     * matches the row with the most exactly-matching keys and the
     * fewest non-null surplus keys wins (`sqlitedb.py:441-449`).
     *
-    * Served in the driver, with no Spark job: the provided partition
-    * values name the directories to read ([[partitionDirs]]), parquet-mr
-    * streams their rows with the key equalities (and `seq < asOf`)
-    * pushed down, and only the newest `(put_time, seq)` row per
-    * matching full key is held — memory is bounded by the keys that
-    * match, not by the partition. Rows at or after `asOf` are dropped
-    * first, then a key whose newest row is an `rm` tombstone drops out,
-    * exactly as [[liveRows]] resolves. `payload` names the one payload
-    * column to read (`json` or `blob`); the other comes back null. */
-  private def lookupRow(t: Table, keyVals: Map[String, String], payload: Option[String],
-                        asOf: Option[Long] = None): Option[Hit] = {
-    flush(t)
+    * Served in the driver, with no Spark job: parquet-mr streams the
+    * rows of `files` ([[getFiles]]) with the key equalities (and
+    * `seq < asOf`) pushed down, and only the newest `(put_time, seq)`
+    * row per matching full key is held — memory is bounded by the keys
+    * that match, not by the partition. Rows at or after `asOf` are
+    * dropped first, then a key whose newest row is an `rm` tombstone
+    * drops out, exactly as [[liveRows]] resolves. `payload` names the
+    * one payload column to read (`json` or `blob`); the other comes
+    * back null. */
+  private def lookupRow(t: Table, keyVals: Map[String, String], files: Seq[(Path, Map[String, String])],
+                        payload: Option[String], asOf: Option[Long] = None): Option[Hit] = {
     val keys = t.keys
     val wc = t.generationKeys
     val provided = keyVals.view.filterKeys(keys.contains).toMap
@@ -220,8 +220,10 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
     // (key index, requested value, whether a NULL matches it too)
     val wanted = keys.indices.flatMap(i => provided.get(keys(i)).map(v => (i, v, wc(keys(i)))))
     val newestPerKey = scala.collection.mutable.HashMap.empty[Seq[String], Hit]
-    for ((dir, partVals) <- partitionDirs(t, provided))
-      graft.core.ParquetRows.foreach(dir, hadoopConf, columns, pushed) { g =>
+    getFilesOpened.addAndGet(files.size)
+    for ((file, partVals) <- files)
+      graft.core.ParquetRows.readFile(file, hadoopConf, columns, pushed) { g =>
+        getRowsDecoded.incrementAndGet()
         val seq = g.getLong("seq", 0)
         if (asOf.forall(seq < _)) {
           val kv = keys.map(k => partVals.getOrElse(k, string(g, k)))
@@ -240,19 +242,42 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
     }
   }
 
-  /** The partition directories a get for `provided` can match, each
-    * with the partition values its rows carry. A provided value selects
-    * its one directory by Spark's own path escaping; no such directory
-    * is a miss, and a value Spark stores as NULL (the empty string, or
-    * the default-partition name itself) matches nothing. An unprovided
+  /** A get's cache validator: the sorted listing of the data files it
+    * reads. It is exact because no write changes a file in place:
+    * flush, rmByUri, rmExperimentData and bulkAppend add new, uniquely
+    * named files, and compact/compactRetain swap in a whole new table
+    * directory. It sees the writes of other store instances on the
+    * same basedir too. */
+  private def stampOf(t: Table, keyVals: Map[String, String],
+                      files: Seq[(Path, Map[String, String])]): AssetStore.DocStamp =
+    AssetStore.DocStamp((t.name, keyVals.view.filterKeys(t.keys.contains).toMap),
+      files.map(_._1.toString).sorted)
+
+  protected def docStamp(route: Route, keyVals: Map[String, String]): Option[AssetStore.DocStamp] = {
+    val t = byRoute(route)
+    Some(stampOf(t, keyVals, getFiles(t, keyVals)))
+  }
+
+  /** What driver-side gets read: data files opened, and rows the
+    * parquet reader returned after its pushed-down filter. */
+  val getFilesOpened = new java.util.concurrent.atomic.AtomicLong(0)
+  val getRowsDecoded = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** The data files a get for `keyVals` reads, each with the partition
+    * values its rows carry, listed after the table's pending puts are
+    * flushed. A provided partition value selects its one directory by
+    * Spark's own path escaping; no such directory is a miss, and a
+    * value Spark stores as NULL (the empty string, or the
+    * default-partition name itself) matches nothing. An unprovided
     * partition column (a project-level models_style get leaves
     * `experiment` open) takes every directory at its level, the
     * default partition reading as NULL. */
-  private def partitionDirs(t: Table, provided: Map[String, String]): Seq[(Path, Map[String, String])] = {
+  private def getFiles(t: Table, keyVals: Map[String, String]): Seq[(Path, Map[String, String])] = {
+    flush(t)
     val default = ExternalCatalogUtils.DEFAULT_PARTITION_NAME
     t.partitionCols.foldLeft(Seq(Paths.get(tablePath(t)) -> Map.empty[String, String])) {
       case (dirs, c) => dirs.flatMap { case (dir, vals) =>
-        provided.get(c) match {
+        keyVals.get(c) match {
           case Some(v) =>
             if (v.isEmpty || v == default) Nil
             else Seq(dir.resolve(ExternalCatalogUtils.getPartitionPathString(c, v)))
@@ -267,7 +292,7 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
           case None => Nil
         }
       }
-    }
+    }.flatMap { case (dir, vals) => graft.core.ParquetRows.dataFiles(dir).map(_ -> vals) }
   }
 
   protected def _get(route: Route, routeArgs: Map[String, String],
@@ -275,43 +300,28 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
                      accessType: AccessType,
                      default: Option[AssetValue],
                      cache: Boolean): AssetValue = {
-    if (accessType == AccessType.FilePath)
-      throw new UnsupportedOperation(
-        "Accessing FILE_PATH is not supported by TableStore.")
     val filterArgs = kwargs.filter { case (k, _) =>
       AssetStore.filterParams.getOrElse(route, Set.empty).contains(k) }
     val keyVals = routeArgs ++ (kwargs -- filterArgs.keys)
-    val payload = accessType match {
-      case AccessType.Blob => Some("blob")
-      case AccessType.JsonStr | AccessType.Obj => Some("json")
-      case _ => None
+    val t = byRoute(route)
+    lazy val files = getFiles(t, keyVals)
+    def row(payload: Option[String]) = lookupRow(t, keyVals, files, payload)
+    val value = accessType match {
+      case AccessType.JsonStr | AccessType.Obj =>
+        jsonValue(route, filterArgs, accessType, Option.when(cache)(stampOf(t, keyVals, files)))(
+          row(Some("json")).map(r => Option(r.json).getOrElse(
+            throw new FileNotFoundException(s"No JSON payload for $keyVals"))))
+      case AccessType.Blob => row(Some("blob")).map(r => AssetValue.Blob(r.blob))
+      case AccessType.Uri => row(None).map(_ => AssetValue.Uri(QueryEntry.of(route, keyVals).uri))
+      // creation time = oldest put for the key; approximated by the
+      // surviving row's time unless history is retained
+      case AccessType.Mtime | AccessType.Ctime =>
+        row(None).map(r => AssetValue.Time(Instant.ofEpochMilli(r.putTime)))
+      case AccessType.FilePath =>
+        throw new UnsupportedOperation("Accessing FILE_PATH is not supported by TableStore.")
     }
-    lookupRow(byRoute(route), keyVals, payload) match {
-      case None =>
-        default.getOrElse(throw new FileNotFoundException(
-          s"No asset for $route with key $keyVals"))
-      case Some(r) =>
-        accessType match {
-          case AccessType.Uri => AssetValue.Uri(QueryEntry.of(route, keyVals).uri)
-          case AccessType.Mtime => AssetValue.Time(Instant.ofEpochMilli(r.putTime))
-          case AccessType.Ctime =>
-            // creation time = oldest put for the key; approximated by
-            // the surviving row's time unless history is retained
-            AssetValue.Time(Instant.ofEpochMilli(r.putTime))
-          case AccessType.Blob => AssetValue.Blob(r.blob)
-          case AccessType.JsonStr | AccessType.Obj =>
-            val json = r.json
-            if (json == null) throw new FileNotFoundException(s"No JSON payload for $keyVals")
-            if (filterArgs.isEmpty) {
-              if (accessType == AccessType.JsonStr) AssetValue.Json(json)
-              else AssetValue.Obj(JsonUtil.parse(json))
-            } else {
-              val filtered = AssetStore.applyFilter(route, JsonUtil.parse(json), filterArgs)
-              convertNode(filtered, accessType)
-            }
-          case other => throw new UnsupportedOperation(s"access type $other")
-        }
-    }
+    value.getOrElse(default.getOrElse(throw new FileNotFoundException(
+      s"No asset for $route with key $keyVals")))
   }
 
   protected def _put(json: String, route: Route, routeArgs: Map[String, String],
@@ -420,7 +430,6 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
     * `_compacting` leftover is a stale rewrite output — both deleted.
     * Runs once per open, before any read can observe the gap. */
   private def recoverInterruptedRewrites(): Unit = {
-    import scala.jdk.CollectionConverters._
     val entries = scala.util.Using.resource(Files.list(Paths.get(basedir))) {
       _.iterator().asScala.map(_.getFileName.toString).toSeq
     }
@@ -518,7 +527,6 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
       }
     }
     frames.reduceOption(_ unionByName _).getOrElse {
-      import org.apache.spark.sql.types._
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
         StructType(Seq(StructField("uri", StringType),
           StructField("content_md5", StringType))))
@@ -535,7 +543,6 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
   override def close(): Unit = {
     flushAll()
     if (ephemeral) {
-      import scala.jdk.CollectionConverters._
       val walk = Files.walk(Paths.get(basedir))
       try walk.iterator().asScala.toSeq.reverseIterator.foreach(p => Files.deleteIfExists(p))
       finally walk.close()

@@ -266,6 +266,115 @@ trait AssetStoreBehavior { this: AnyFunSuite =>
     }
   }
 
+  // ---- the document cache contract, on both backends
+  // (`tests/jsondb/test_cache.py:35-149`) ----
+
+  test(s"$backendName: cache=false never touches the cache") {
+    val db = makeStore()
+    db.getMenu("project", "experiment")
+    db.getMenu("project", "experiment")
+    assert(db.cacheHits.get() == 0 && db.cacheMisses.get() == 0)
+    db.close()
+  }
+
+  test(s"$backendName: repeat cached reads hit; first read misses") {
+    val db = makeStore()
+    db.getMenu("project", "experiment", cache = true)
+    assert(db.cacheMisses.get() == 1 && db.cacheHits.get() == 0)
+    db.getMenu("project", "experiment", cache = true)
+    db.getMenu("project", "experiment", cache = true)
+    assert(db.cacheHits.get() == 2)
+    db.close()
+  }
+
+  test(s"$backendName: contour single-doc read primes per-timestep cache entries") {
+    val db = makeStore()
+    db.getContour("project", "experiment", "obsvar", "model", "timestep", cache = true)
+    assert(db.contourPrimeHits.get() == 0)
+    // second read of the same timestep is served from the primed entry
+    db.getContour("project", "experiment", "obsvar", "model", "timestep", cache = true)
+    assert(db.contourPrimeHits.get() == 1)
+    db.close()
+  }
+
+  test(s"$backendName: filtered reads go through the sub-key cache (forced cache=true)") {
+    val db = makeStore()
+    // regional stats forces cache=true; same underlying file read once
+    db.getRegionalStats("project", "experiment", "frequency", "network", "variable", "layer")
+    db.getRegionalStats("project", "experiment", "frequency", "network", "variable", "layer")
+    assert(db.cacheMisses.get() == 1)
+    db.close()
+  }
+
+  test(s"$backendName: cache=false gets of every kind leave the counters at zero") {
+    val db = makeStore()
+    for (_ <- 1 to 2) {
+      db.getMenu("project", "experiment")
+      db.getMenu("project", "experiment", AccessType.Obj)
+      db.getMap("project", "experiment", "network", "obsvar", "layer", "model", "modvar", "time",
+        frequency = Some("frequency"), season = Some("season"))
+      db.getContour("project", "experiment", "obsvar", "model", "timestep")
+      db.getContour("project", "experiment", "obsvar", "model", "timestep2")
+      db.getByUri("/v0/contour/project/experiment/obsvar/model?timestep=timestep")
+      db.getConfig("project", "experiment", AccessType.Mtime)
+      db.getReportImage("project", "experiment", "img/pixel.png")
+    }
+    assert((db.cacheHits.get(), db.cacheMisses.get(), db.contourPrimeHits.get()) == ((0L, 0L, 0L)))
+    db.close()
+  }
+
+  test(s"$backendName: cached reads see overwrites, pending puts and deletes") {
+    val db = makeStore()
+    def menu() = json(db.getMenu("project", "experiment", cache = true))
+    def heatmap() = json(db.getHeatmap("project", "experiment", "frequency", "region", "time"))
+    def step() = json(db.getContour("project", "experiment", "obsvar", "model", "timestep", cache = true))
+    def twice[T](read: () => T): T = { val first = read(); assert(read() == first); first }
+    assert(twice(menu).contains("menu.json"))
+    assert(twice(heatmap).contains("1.0"))
+    assert(twice(step).contains("single-doc"))
+    assert(db.cacheHits.get() >= 1 && db.contourPrimeHits.get() == 1)
+    // on the table backend each put is still pending when the next
+    // cached get runs: the get must flush it before validating
+    db.putMenu("""{"v": 2}""", "project", "experiment")
+    assert(twice(menu) == """{"v": 2}""")
+    db.putGlobStats("""{"variable": {"network": {"layer": {"model": {"modvar": {"region": {"time": {"stat": 9.5}}}}}}}}""",
+      "project", "experiment", "frequency")
+    assert(twice(heatmap).contains("9.5"))
+    db.putContour("""{"timestep": {"v": 3}}""", "project", "experiment", "obsvar", "model")
+    assert(twice(step) == """{"v":3}""")
+    db.rmByUri(db.query(Seq(Route.Menu), Map("project" -> "project", "experiment" -> "experiment")).head.uri)
+    intercept[java.io.FileNotFoundException](menu())
+    db.rmExperimentData("project", "experiment")
+    intercept[java.io.FileNotFoundException](heatmap())
+    intercept[java.io.FileNotFoundException](step())
+    db.close()
+  }
+
+  test(s"$backendName: a caller mutating a cached Obj result leaves the cache intact") {
+    import com.fasterxml.jackson.databind.node.ObjectNode
+    val db = makeStore()
+    def obj(v: AssetValue): ObjectNode = v match {
+      case AssetValue.Obj(n: ObjectNode) => n
+      case other => fail(s"expected an object, got $other")
+    }
+    val reads: Seq[() => AssetValue] = Seq(
+      () => db.getMenu("project", "experiment", AccessType.Obj, cache = true),
+      () => db.getHeatmap("project", "experiment", "frequency", "region", "time", AccessType.Obj),
+      () => db.getContour("project", "experiment", "obsvar", "model", "timestep", AccessType.Obj, cache = true))
+    reads.foreach { read =>
+      val first = obj(read())
+      val pristine = first.deepCopy()
+      first.put("mutated", true)
+      for (_ <- 1 to 2) {
+        val again = obj(read())
+        assert(again == pristine && (again ne first))
+        again.removeAll()
+      }
+    }
+    assert(db.cacheHits.get() >= 2 && db.contourPrimeHits.get() == 2)
+    db.close()
+  }
+
   test(s"$backendName: rm by uri") {
     val db = makeStore()
     val uri = db.query(Seq(Route.Menu),

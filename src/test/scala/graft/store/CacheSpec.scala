@@ -4,36 +4,19 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{AccessType, AssetValue}
+import graft.core.{AccessType, AssetValue, Route}
 
-/** LRU file-cache behavior: opt-in per read, hits on repeat reads,
-  * invalidation on mtime change — the observable contract of the
-  * reference's LRUFileCache (`jsondb/cache.py:114-264`,
-  * `tests/jsondb/test_cache.py:35-149`). */
+/** JsonFileStore's side of the document cache: invalidation by file
+  * attributes and by the store's own writes (the contract both
+  * backends share runs in [[AssetStoreBehavior]]), and the catalog's
+  * reverse-parse memo. Reference: `jsondb/cache.py:114-264`,
+  * `tests/jsondb/test_cache.py:35-149`. */
 class CacheSpec extends AnyFunSuite {
 
   private def store(): JsonFileStore = {
     val dir = graft.core.TempDirs.create("graft-cache")
     Fixture.build(dir)
     new JsonFileStore(dir.toString)
-  }
-
-  test("cache=false never touches the cache") {
-    val db = store()
-    db.getMenu("project", "experiment")
-    db.getMenu("project", "experiment")
-    assert(db.cacheHits.get() == 0 && db.cacheMisses.get() == 0)
-    db.close()
-  }
-
-  test("repeat cached reads hit; first read misses") {
-    val db = store()
-    db.getMenu("project", "experiment", cache = true)
-    assert(db.cacheMisses.get() == 1 && db.cacheHits.get() == 0)
-    db.getMenu("project", "experiment", cache = true)
-    db.getMenu("project", "experiment", cache = true)
-    assert(db.cacheHits.get() == 2)
-    db.close()
   }
 
   test("mtime change invalidates the cached entry") {
@@ -56,13 +39,35 @@ class CacheSpec extends AnyFunSuite {
     db.close()
   }
 
-  test("contour single-doc read primes per-timestep cache entries") {
+  /** Puts A, reads it cached, puts B (same size, usually the same
+    * millisecond), reads it cached; counts iterations that read either
+    * document stale. */
+  private def staleOverwrites(a: String, b: String)
+                             (put: String => Unit, get: () => AssetValue, view: String => String): Int =
+    (1 to 2000).count { _ =>
+      put(a)
+      val gotA = get()
+      put(b)
+      gotA != AssetValue.Json(view(a)) || get() != AssetValue.Json(view(b))
+    }
+
+  test("an overwrite is never served stale from the whole-document cache") {
     val db = store()
-    db.getContour("project", "experiment", "obsvar", "model", "timestep", cache = true)
-    assert(db.contourPrimeHits.get() == 0)
-    // second read of the same timestep is served from the primed entry
-    db.getContour("project", "experiment", "obsvar", "model", "timestep", cache = true)
-    assert(db.contourPrimeHits.get() == 1)
+    val stale = staleOverwrites("""{"menu": "A"}""", """{"menu": "B"}""")(
+      db.putMenu(_, "project", "experiment"), () => db.getMenu("project", "experiment", cache = true), identity)
+    assert(stale == 0, s"$stale of 2000 iterations read a stale menu")
+    db.close()
+  }
+
+  test("an overwrite is never served stale from the filtered sub-key cache") {
+    val db = store()
+    def doc(stat: Int) = s"""{"variable": {"network": {"layer": {"model": {"modvar": {"region": {"time": {"stat": $stat}}}}}}}}"""
+    def view(d: String) = graft.filters.JsonUtil.serialize(AssetStore.applyFilter(Route.Heatmap,
+      graft.filters.JsonUtil.parse(d), Map("region" -> "region", "time" -> "time")))
+    val stale = staleOverwrites(doc(1), doc(2))(
+      db.putGlobStats(_, "project", "experiment", "frequency"),
+      () => db.getHeatmap("project", "experiment", "frequency", "region", "time"), view)
+    assert(stale == 0, s"$stale of 2000 iterations read a stale heatmap")
     db.close()
   }
 
@@ -84,15 +89,6 @@ class CacheSpec extends AnyFunSuite {
       "retiring `gone` dropped `keep`'s memoized reverse parses")
     assert(memoized("gone").isEmpty, "the retired experiment's entries outlived its files")
     assert(q("keep") == kept && q("gone").isEmpty)
-    db.close()
-  }
-
-  test("filtered reads go through the sub-key cache (forced cache=true)") {
-    val db = store()
-    // regional stats forces cache=true; same underlying file read once
-    db.getRegionalStats("project", "experiment", "frequency", "network", "variable", "layer")
-    db.getRegionalStats("project", "experiment", "frequency", "network", "variable", "layer")
-    assert(db.cacheMisses.get() == 1)
     db.close()
   }
 }

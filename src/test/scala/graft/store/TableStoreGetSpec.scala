@@ -61,12 +61,9 @@ class TableStoreGetSpec extends AnyFunSuite {
   }
 
   // partitions: names that Hive path escaping changes, a non-ASCII
-  // name, and an empty-string experiment (which Spark stores as NULL).
-  // A non-ASCII directory name needs a JVM that encodes file names as
-  // UTF-8 (a UTF-8 locale): under the POSIX locale Spark's own writer
-  // cannot create it, so the name joins only where it can exist.
-  private val pes = Seq("p" -> "e1", "a=b" -> "x%y", "sp ace" -> "c:d", "p" -> "") ++
-    Option.when(System.getProperty("sun.jnu.encoding", "").equalsIgnoreCase("UTF-8"))("p" -> "ünï")
+  // name (the test JVM runs under a UTF-8 locale, see build.sbt), and
+  // an empty-string experiment (which Spark stores as NULL)
+  private val pes = Seq("p" -> "e1", "a=b" -> "x%y", "sp ace" -> "c:d", "p" -> "", "p" -> "ünï")
   private val Times = Seq("t1", "t2")
   private val Regions = Seq("R1", "R2")
 
