@@ -1,6 +1,45 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
+  /** One gate run as the bench times it: its row count (or what it
+    * threw), its cost, and the seconds it spent building fixtures. */
+  final case class GateRun(rows: Either[Throwable, Long], cost: graft.core.Trace.Cost,
+                           fixtureS: Double)
+
+  /** Runs `gate`'s `count()` under [[graft.core.Trace.measure]], then
+    * the between-gate cleanup, so that gates measured one after
+    * another (the bench's passes, `graft.tools.Profile`) each start
+    * from the same steady state. */
+  def runGate(spark: SparkSession, gate: (SparkSession, String) => DataFrame,
+              sfDir: String): GateRun = {
+    // snapshot the persistent-RDD ids BEFORE the query so the sweep
+    // below releases only blocks THIS query created — an RDD-backed
+    // artifact memoized by an earlier query (none today: the
+    // cross-query artifacts are all parquet paths or driver arrays,
+    // but the sweep must not bake that in) keeps its only data copy
+    val preIds = spark.sparkContext.getPersistentRDDs.keySet
+    val fix0 = graft.core.FixtureClock.totalNanos
+    val (rows, cost) = graft.core.Trace.measure(spark) {
+      try Right(gate(spark, sfDir).count()) catch { case e: Throwable => Left(e) }
+    }
+    val fixtureS = (graft.core.FixtureClock.totalNanos - fix0) / 1e9
+    // release the per-query cache so storage memory never leaks
+    // across the run — BOTH the SQL cache and leftover
+    // localCheckpoint RDD blocks (the iterative graph gates cut
+    // lineage eagerly; their final cuts outlive the query and
+    // would otherwise accumulate across 160+ queries × 2 passes)
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs
+      .foreach { case (id, rdd) => if (!preIds.contains(id)) rdd.unpersist(false) }
+    // unload state-store providers a streaming drive left loaded:
+    // deactivated providers otherwise wait out the 60s maintenance
+    // cadence holding their in-memory state maps. Sequential
+    // queries ⇒ no active stream to disturb; reload is from the
+    // checkpoint on next use.
+    org.apache.spark.sql.graftdiag.StateShim.unloadAllProviders()
+    GateRun(rows, cost, fixtureS)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -155,15 +194,11 @@ object Bench {
         .queryName("bench_warmup_stream").start()
       q.processAllAvailable(); q.stop()
     } catch { case _: Throwable => () }
-    // deterministic per-gate cost counters (jobs/stages/tasks/shuffle
-    // bytes) — the weather-immune twin of the timing maps: a warm-pass
-    // job-count change is a plan change by construction, no weather
-    // attribution needed (the r16 count()-per-append tax was caught by
-    // a timing diff that happened to land in a calm window; this
-    // instrument catches that class structurally)
-    graft.core.CostAccounting.install(spark)
+    // deterministic per-gate cost (graft.core.Trace): the
+    // weather-immune twin of the timing maps, with each gate's wall
+    // time split into planning, jobs and driver gaps beside it
     val passCosts = scala.collection.mutable.Map.empty[
-      String, scala.collection.mutable.LinkedHashMap[String, graft.core.CostAccounting.Snapshot]]
+      String, scala.collection.mutable.LinkedHashMap[String, graft.core.Trace.Cost]]
     // per-query aging diagnostics (heap/metaspace/threads/listeners/
     // state providers/GC/JIT) — the evidence trail that the driver
     // reaches a steady state instead of degrading across passes (the
@@ -220,46 +255,15 @@ object Bench {
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filterNot { case (name, _) => exclude.contains(name) }
         .map { case (name, fn) =>
-        // snapshot the persistent-RDD ids BEFORE the query so the
-        // sweep below releases only blocks THIS query created —
-        // an RDD-backed artifact memoized by an earlier query (none
-        // today: the cross-query artifacts are all parquet paths or
-        // driver arrays, but the sweep must not bake that in) keeps
-        // its only data copy
-        val preIds = spark.sparkContext.getPersistentRDDs.keySet
-        // cost snapshots bracket ONLY the gate's own work: the pre
-        // snapshot drains whatever the previous boundary left queued
-        // (milliseconds), the post snapshot runs before the cache
-        // sweep — neither drain sits inside the timed region
-        val cost0 = graft.core.CostAccounting.snapshot(spark)
-        val fix0 = graft.core.FixtureClock.totalNanos
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
-        val dt = (System.nanoTime() - t0) / 1e9
-        val fixDt = (graft.core.FixtureClock.totalNanos - fix0) / 1e9
-        val cost = graft.core.CostAccounting.snapshot(spark).diff(cost0)
+        val GateRun(rows, cost, fixDt) = runGate(spark, fn, sfDir)
+        val (ok, dt) = (rows.isRight, cost.wallS)
         passCosts.getOrElseUpdate(tag,
-          scala.collection.mutable.LinkedHashMap
-            .empty[String, graft.core.CostAccounting.Snapshot])(name) = cost
+          scala.collection.mutable.LinkedHashMap.empty[String, graft.core.Trace.Cost])(name) = cost
         // successful queries only, like `total` below — an errored
         // gate's whole duration is excluded from the pass total, so
         // counting its fixture time would subtract it from OTHER
         // gates' engine share and break the decomposition's additivity
         if (ok) passFixtures(tag) = passFixtures.getOrElse(tag, 0.0) + fixDt
-        // release the per-query cache so storage memory never leaks
-        // across the run — BOTH the SQL cache and leftover
-        // localCheckpoint RDD blocks (the iterative graph gates cut
-        // lineage eagerly; their final cuts outlive the query and
-        // would otherwise accumulate across 160+ queries × 2 passes)
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs
-          .foreach { case (id, rdd) => if (!preIds.contains(id)) rdd.unpersist(false) }
-        // unload state-store providers a streaming drive left loaded:
-        // deactivated providers otherwise wait out the 60s maintenance
-        // cadence holding their in-memory state maps. Sequential
-        // queries ⇒ no active stream to disturb; reload is from the
-        // checkpoint on next use.
-        org.apache.spark.sql.graftdiag.StateShim.unloadAllProviders()
         val snap = graft.core.Diag.snap(spark)
         // "t" (epoch seconds) lets a consumer correlate flagged
         // queries to a shared wall-clock window: a box-weather event
@@ -495,7 +499,8 @@ object Bench {
     // and ~30 pools outgrow the consumer's ~2000-char stdout tail) go
     // to a JSON file; the metric line carries totals + verdicts only
     // deterministic cost receipt: per gate, the cold/warm1/warm2
-    // job/stage/task/byte deltas plus the intra-run stability verdict
+    // job/stage/task/byte deltas and wall-time breakdown (Trace.Cost)
+    // plus the intra-run stability verdict
     // (warm1 jobs == warm2 jobs). Written fresh each run; a round
     // commits it under receipts/bench_costs_r{N}.json, and the NEXT
     // runs diff their stable warm job counts against the latest
@@ -514,7 +519,7 @@ object Bench {
         case (Some(a), Some(b)) => a.jobs == b.jobs && a.stages == b.stages
         case _ => false
       }
-      def j(o: Option[graft.core.CostAccounting.Snapshot]) =
+      def j(o: Option[graft.core.Trace.Cost]) =
         o.map(_.json).getOrElse("null")
       s"""${jsonStr(g)}:{"cold":${j(costOf("cold", g))},"warm1":${j(w1)},""" +
         s""""warm2":${j(w2)},"stable":$stable}"""

@@ -416,14 +416,6 @@ object Multimodal {
   def m04ImageDupGroups(spark: SparkSession, dir: String): DataFrame =
     hashGroups(imageHashes(syntheticImages(spark, dir)))
 
-  /** Dev-probe entry (test-scope M04DistinctProbe — the r18 honest
-    * pricing of the decode memo): the exact m04 pipeline over an
-    * arbitrary (doc_id, pattern key) corpus, so a DISTINCT-payload
-    * run can price the per-image cost with zero memo hits. */
-  private[graft] def probeHashGroups(
-      ids: org.apache.spark.sql.Dataset[(Long, Long)]): DataFrame =
-    hashGroups(imageHashes(syntheticImagesKeyed(ids)))
-
   private def hashGroups(hashes: DataFrame): DataFrame =
     hashes.groupBy("ahash")
       .agg(min("doc_id").as("group_rep"), count(lit(1)).as("n_images"))

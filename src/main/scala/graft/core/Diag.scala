@@ -4,7 +4,7 @@ import java.lang.management.ManagementFactory
 
 import org.apache.spark.sql.SparkSession
 
-/** JVM/runtime aging metrics for the bench and [[graft.tools.AgingProbe]].
+/** JVM/runtime aging metrics for the bench and [[graft.tools.Profile]].
   *
   * A long-lived Spark driver (the 100 TB deployment profile) degrades
   * through ACCUMULATION, not through any single query's plan: loaded
@@ -45,14 +45,20 @@ object Diag {
     try org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     catch { case _: Throwable => -1L }
 
+  /** Total collection time of every garbage collector since JVM start. */
+  def gcMs: Long = {
+    var ms = 0L
+    ManagementFactory.getGarbageCollectorMXBeans.forEach(g => ms += math.max(g.getCollectionTime, 0))
+    ms
+  }
+
   def snap(spark: SparkSession): Snap = {
     val mem = ManagementFactory.getMemoryMXBean.getHeapMemoryUsage
     val meta = ManagementFactory.getMemoryPoolMXBeans.stream()
       .filter(p => p.getName == "Metaspace").findFirst()
       .map[Long](p => p.getUsage.getUsed).orElse(0L)
-    val gcs = ManagementFactory.getGarbageCollectorMXBeans
-    var gcMs = 0L; var gcN = 0L
-    gcs.forEach { g => gcMs += math.max(g.getCollectionTime, 0); gcN += math.max(g.getCollectionCount, 0) }
+    var gcN = 0L
+    ManagementFactory.getGarbageCollectorMXBeans.forEach(g => gcN += math.max(g.getCollectionCount, 0))
     val jit = ManagementFactory.getCompilationMXBean
     Snap(
       heapUsedMb = mem.getUsed >> 20,

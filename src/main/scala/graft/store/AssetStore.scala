@@ -435,8 +435,8 @@ trait AssetStore extends AutoCloseable {
   /** Contour timestep reads served from a primed per-timestep entry. */
   val contourPrimeHits = new java.util.concurrent.atomic.AtomicLong(0)
 
-  private val docCache = new DocCache(64)
-  private val subKeyCache = new DocCache(512)
+  private val docCache = new DocCache[Option[String]](64)
+  private val subKeyCache = new DocCache[String](512)
 
   /** The identity and validator of the document a get for `keyVals`
     * on `route` reads, taken before the read: the validator changes
@@ -446,15 +446,16 @@ trait AssetStore extends AutoCloseable {
   /** The JsonStr/Obj value of a stored document — the whole text, or
     * `route`'s filter applied to it — or None when `read` finds no
     * document. With a stamp (a cache=true get) the whole text and the
-    * filtered output go through the two LRUs. */
+    * filtered output go through the two LRUs, and so does a document's
+    * absence: a put to the key changes the validator. */
   protected final def jsonValue(route: Route, filterArgs: Map[String, String],
                                 accessType: AccessType, stamp: Option[DocStamp])
                                (read: => Option[String]): Option[AssetValue] = {
     def filtered(text: String) =
       JsonUtil.serialize(AssetStore.applyFilter(route, JsonUtil.parse(text), filterArgs))
     def whole(s: DocStamp) = docCache.get(s, "") match {
-      case hit @ Some(_) => cacheHits.incrementAndGet(); hit
-      case None => cacheMisses.incrementAndGet(); read.map { t => docCache.put(s, "", t); t }
+      case Some(hit) => cacheHits.incrementAndGet(); hit
+      case None => cacheMisses.incrementAndGet(); val t = read; docCache.put(s, "", t); t
     }
     // sub-key: route + sorted filter args (`jsonfiledb.py:367-368`)
     def sub = route.name + filterArgs.toSeq.sorted.mkString("::", ",", "")
@@ -507,18 +508,19 @@ object AssetStore {
 
   private val ContourStep = "contour.timestep::"
 
-  /** An LRU of serialized documents keyed by (document id, sub-key),
-    * each entry valid while its document's validator is unchanged. */
-  private final class DocCache(maxSize: Int) {
-    private val entries = new java.util.LinkedHashMap[(Any, String), (Any, String)](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[(Any, String), (Any, String)]): Boolean =
+  /** An LRU of serialized documents (or of their absence) keyed by
+    * (document id, sub-key), each entry valid while its document's
+    * validator is unchanged. */
+  private final class DocCache[V](maxSize: Int) {
+    private val entries = new java.util.LinkedHashMap[(Any, String), (Any, V)](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[(Any, String), (Any, V)]): Boolean =
         size() > maxSize
     }
-    def get(s: DocStamp, sub: String): Option[String] = synchronized {
-      Option(entries.get((s.id, sub))).collect { case (v, text) if v == s.validator => text }
+    def get(s: DocStamp, sub: String): Option[V] = synchronized {
+      Option(entries.get((s.id, sub))).collect { case (v, value) if v == s.validator => value }
     }
-    def put(s: DocStamp, sub: String, text: String): Unit =
-      synchronized(entries.put((s.id, sub), (s.validator, text)))
+    def put(s: DocStamp, sub: String, value: V): Unit =
+      synchronized(entries.put((s.id, sub), (s.validator, value)))
     def evict(ids: Set[Any]): Unit = synchronized(entries.keySet.removeIf(k => ids(k._1)))
   }
 

@@ -76,6 +76,10 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
   // different tables are independent paths and may write in parallel
   private val writeLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private def writeLock(t: Table): Object = writeLocks.computeIfAbsent(t.name, _ => new Object)
+  // per-table flush monitors: a get flushes first and must wait for
+  // another thread's in-flight flush of its table, whose rows it has
+  // to see, but not for writes that hold no pending rows
+  private val flushLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   /** The one physical write of table rows, partitioned on the table's
     * leading key columns: point gets and rmExperimentData prune to one
@@ -90,7 +94,7 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
     writeLock(t).synchronized(write(t, rows, SaveMode.Append, tablePath(t)))
 
   private def flush(t: Table): Unit =
-    writeLock(t).synchronized {
+    flushLocks.computeIfAbsent(t.name, _ => new Object).synchronized {
       // snapshot-and-clear under the store lock; the Spark write runs
       // outside it so concurrent flushes of other tables proceed
       val snapshot = synchronized {

@@ -407,7 +407,8 @@ object EventStream {
         // Spark 4's checkpoint-file checksums (on by default) spin up a
         // 32-thread ChecksumCheckpointFileManager pool PER STARTED QUERY
         // that outlives q.stop() — measured +32 threads per drive
-        // (AgingProbe: 124 → 1393 threads over 30 drives), the r11
+        // (124 → 1393 threads over 30 drives of one gate, the `threads`
+        // counter of graft.core.Diag that Profile prints), the r11
         // warm-pass "JVM aging". For bounded drives over TEMP checkpoints
         // (deleted at stop) a corruption checksum protects nothing, so
         // turn it off rather than pay an unbounded thread leak.

@@ -17,17 +17,10 @@ object BusDiag {
     sc.listenerBus.listeners.size()
 
   /** Drain the shared bus: block until every queued event has been
-    * delivered to every listener. Used by the maintenance-scratch
-    * receipt, whose block-update listener must observe a finished
-    * drive's LAST events before its byte counter is read. */
+    * delivered to every listener. [[graft.core.Trace]] drains before
+    * and after a measured block, and the maintenance-scratch receipt's
+    * block-update listener must observe a finished drive's LAST events
+    * before its byte counter is read. */
   def waitUntilEmpty(sc: SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
-
-  /** Listener class-name histogram — names WHICH listener type is
-    * accumulating when the count climbs. */
-  def listenerHistogram(sc: SparkContext): Seq[(String, Int)] = {
-    import scala.jdk.CollectionConverters._
-    sc.listenerBus.listeners.asScala.toSeq
-      .groupBy(_.getClass.getName).view.mapValues(_.size).toSeq.sortBy(-_._2)
-  }
 }

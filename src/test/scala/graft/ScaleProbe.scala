@@ -144,14 +144,13 @@ object ScaleProbe {
     // with the corpus names a driver loop whose trip count is
     // data-dependent (a fixpoint iteration, a size-adaptive stage) —
     // either by design (document it) or a scale bug (fix it)
-    graft.core.CostAccounting.install(spark)
     def time(name: String, dir: String): (Double, Long, Long) = {
-      val c0 = graft.core.CostAccounting.snapshot(spark)
-      val t0 = System.nanoTime()
-      val n = SparkEntry.queries(name)(spark, dir).count()
-      spark.catalog.clearCache()
-      val dt = (System.nanoTime() - t0) / 1e9
-      (dt, n, graft.core.CostAccounting.snapshot(spark).diff(c0).jobs)
+      val (n, cost) = graft.core.Trace.measure(spark) {
+        val n = SparkEntry.queries(name)(spark, dir).count()
+        spark.catalog.clearCache()
+        n
+      }
+      (cost.wallS, n, cost.jobs)
     }
     // untimed warmup at sf0.001: each query's one-time classload +
     // codegen + JIT cost (t07's trigram fit alone is tens of seconds

@@ -96,29 +96,25 @@ object ChainProbe {
           (Multimodal.m13MultiEpochImages(_, _, rebuildCheck = false)),
         "g08_multi_epoch_knn" -> (Graph.g08MultiEpochKnn(_, _, rebuildCheck = false)))
 
-      // job counts ride along (graft.core.CostAccounting): a chain is a
+      // job counts ride along (graft.core.Trace): a chain is a
       // fixed number of epochs, each a fixed set of diff/append/policy
       // actions, and compaction fires at the same epochs at REP× (the
       // covered signal is scale-invariant) — so the 10× chain should
       // execute the SAME number of Spark jobs, seed construction
       // included (the seed build is the same plan over more rows). A
       // growing count would name a data-dependent driver loop.
-      graft.core.CostAccounting.install(spark)
       def timeChain(fn: (SparkSession, String) => DataFrame, dir: String)
           : (Double, Double, Seq[(Int, Double, Boolean)], Long) = {
         val preIds = spark.sparkContext.getPersistentRDDs.keySet
-        val c0 = graft.core.CostAccounting.snapshot(spark)
         val fix0 = graft.core.FixtureClock.totalNanos
-        val t0 = System.nanoTime()
-        val rs = fn(spark, dir)
+        val (rs, cost) = graft.core.Trace.measure(spark)(fn(spark, dir)
           .select(col("epoch"), col("covered_before"), col("compacted"))
-          .collect().map(r => (r.getInt(0), r.getDouble(1), r.getBoolean(2))).toSeq
-        val wall = (System.nanoTime() - t0) / 1e9
+          .collect().map(r => (r.getInt(0), r.getDouble(1), r.getBoolean(2))).toSeq)
         val fix = (graft.core.FixtureClock.totalNanos - fix0) / 1e9
         spark.catalog.clearCache()
         spark.sparkContext.getPersistentRDDs
           .foreach { case (id, rdd) => if (!preIds.contains(id)) rdd.unpersist(false) }
-        (wall, fix, rs, graft.core.CostAccounting.snapshot(spark).diff(c0).jobs)
+        (cost.wallS, fix, rs, cost.jobs)
       }
       println(s"[chain] rep=$rep — engine = wall minus FixtureClock'd baseline/seed " +
         "construction; rebuild twins skipped (probe mode); compaction must still " +

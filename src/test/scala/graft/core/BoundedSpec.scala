@@ -54,17 +54,14 @@ class BoundedSpec extends AnyFunSuite {
 
   test("a caller-known over-cap bound skips the collect entirely") {
     withCap(10) {
-      CostAccounting.install(spark)
       val df = spark.range(0, 1000, 1, 1).toDF("id")
       // prime classloading paths so the measured deltas are structural
       Bounded.localize(df, bound = Some(1000L)).release()
-      val s0 = CostAccounting.snapshot(spark)
-      val l = Bounded.localize(df, bound = Some(1000L))
-      val s1 = CostAccounting.snapshot(spark)
+      val (l, cost) = Trace.measure(spark)(Bounded.localize(df, bound = Some(1000L)))
       assert(!l.local && l.count == 1000 && l.rows.isEmpty)
       // checkpoint + count only — no probing collect job ever ran
-      assert(s1.diff(s0).jobs == 2,
-        s"known-over-cap localize must run exactly 2 jobs, got ${s1.diff(s0)}")
+      assert(cost.jobs == 2,
+        s"known-over-cap localize must run exactly 2 jobs, got $cost")
       l.release()
     }
   }
@@ -77,13 +74,10 @@ class BoundedSpec extends AnyFunSuite {
 
   test("localize of an already-local slice stays jobless and re-localizes") {
     val base = Bounded.localize(spark.range(0, 20, 1, 2).toDF("id"))
-    CostAccounting.install(spark)
-    val s0 = CostAccounting.snapshot(spark)
-    val l = Bounded.localize(base.df.filter(col("id") % 2 === 0))
-    val s1 = CostAccounting.snapshot(spark)
+    val (l, cost) = Trace.measure(spark)(Bounded.localize(base.df.filter(col("id") % 2 === 0)))
     assert(l.local && l.count == 10)
-    assert(s1.diff(s0).jobs == 0,
-      s"localize of a LocalRelation slice must run zero jobs, got ${s1.diff(s0)}")
+    assert(cost.jobs == 0,
+      s"localize of a LocalRelation slice must run zero jobs, got $cost")
   }
 
   test("parallel: same rows, cluster-side plan, spread over slices") {

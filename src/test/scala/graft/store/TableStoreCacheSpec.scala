@@ -61,6 +61,25 @@ class TableStoreCacheSpec extends AnyFunSuite {
     a.close(); b.close()
   }
 
+  test("a cached contour miss is remembered until a single-document put to its key") {
+    val db = fresh()
+    // the contour partition holds another obsvar's single document;
+    // the requested contour exists only per timestep
+    db.putContour("""{"2020": {"o": 1}}""", "p", "e", "other", "m")
+    db.putContour("""{"x": 1}""", "p", "e", "v", "m", Some("2020"))
+    def contour() = db.getContour("p", "e", "v", "m", "2020", cache = true)
+    assert(contour() == AssetValue.Json("""{"x": 1}"""))
+    val (opened, misses) = (db.getFilesOpened.get(), db.cacheMisses.get())
+    assert(contour() == AssetValue.Json("""{"x": 1}"""))
+    assert(db.getFilesOpened.get() == opened, "a repeated cached miss opens no data file")
+    assert(db.cacheMisses.get() == misses, "a repeated cached miss counts no cache miss")
+    db.putContour("""{"2020": {"y": 2}}""", "p", "e", "v", "m")
+    val AssetValue.Json(text) = contour(): @unchecked
+    assert(graft.filters.JsonUtil.parse(text) == graft.filters.JsonUtil.parse("""{"y": 2}"""),
+      "the single document put after the miss is served")
+    db.close()
+  }
+
   test("a cache hit opens no data file; a miss opens every file of the partition") {
     val db = fresh()
     for (v <- 1 to 3) { db.putMenu(s"""{"v": $v}""", "p", "e"); db.flushAll() }
