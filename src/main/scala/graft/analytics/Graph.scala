@@ -603,7 +603,7 @@ object Graph {
       val gen = 1L
       val live = graft.core.SegmentedIndex.live(spark,
         spark.read.parquet(store), store,
-        keyCol = "vec_id", genCol = Some("gen")).drop("gen")
+        keyCol = "vec_id", genCol = "gen").drop("gen")
       applyKnnDiffToStore(a, live, b, g07DirtyOld(a), g07NewIds(b), store, gen,
         cents = Some(Similarity.ivfCentroids(spark, dir)),
         pureNewIds = Some(b.filter(col("vec_id") < 0).select("vec_id")),
@@ -616,10 +616,9 @@ object Graph {
       // store (see coveredFractionEstimate)
       graft.core.SegmentedIndex.maybeCompact(
         spark.read.parquet(store), store,
-        keyCol = "vec_id", genCol = Some("gen"),
         rowsPerInstance = Similarity.KnnEdgeK.toDouble) { tmp =>
         graft.core.SegmentedIndex.live(spark, spark.read.parquet(store), store,
-            keyCol = "vec_id", genCol = Some("gen")).drop("gen")
+            keyCol = "vec_id", genCol = "gen").drop("gen")
           .write.parquet(s"$tmp/gen=$gen")
       }
       g07StoredEdges(spark, dir).localCheckpoint(true)
@@ -671,7 +670,7 @@ object Graph {
   private[graft] def g07StoredEdges(spark: SparkSession, dir: String): DataFrame = {
     val store = g07StoreDir(spark, dir)
     graft.core.SegmentedIndex.live(spark, spark.read.parquet(store), store,
-        keyCol = "vec_id", genCol = Some("gen"))
+        keyCol = "vec_id", genCol = "gen")
       .select("vec_id", "rnk", "neighbor_id", "cos_sim")
       .orderBy("vec_id", "rnk")
   }
@@ -989,7 +988,7 @@ object Graph {
         col("vec_id") === col("_pn_id"), "left_anti"))
     graft.core.SegmentedIndex.tombstone(
       tombstoneStored, store,
-      keyCol = "vec_id", uptoGen = Some(gen - 1))
+      keyCol = "vec_id", uptoGen = gen - 1)
     if (nRec > 0)
       graft.core.SegmentedIndex.appendSegment(
         knnForQueries(bCur.join(broadcast(recomputeIds), Seq("vec_id"), "left_semi"),
@@ -1072,7 +1071,7 @@ object Graph {
       val cents = Some(Similarity.ivfCentroids(spark, dir))
       def liveEdges = graft.core.SegmentedIndex.live(spark,
         spark.read.parquet(store), store,
-        keyCol = "vec_id", genCol = Some("gen"))
+        keyCol = "vec_id", genCol = "gen")
       val cls = col("vec_id") % 13
       // epoch e's post-image IS epoch e+1's pre-image: carry the
       // materialized snapshot across iterations instead of deriving
@@ -1108,8 +1107,7 @@ object Graph {
         // anti-join)
         def covered(): Double = graft.core.SegmentedIndex.coveredFractionEstimate(
           spark.read.parquet(store), store,
-          genScoped = true, rowsPerInstance = Similarity.KnnEdgeK.toDouble,
-          requireTracked = true)
+          rowsPerInstance = Similarity.KnnEdgeK.toDouble, requireTracked = true)
         def compact(e: Int): Unit = graft.core.SegmentedIndex.compactWith(store) { stage =>
           liveEdges.drop("gen").write.parquet(s"$stage/gen=$e")
         }

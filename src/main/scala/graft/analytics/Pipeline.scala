@@ -556,15 +556,14 @@ object Pipeline {
   }
 
   /** The rebuild twin: snapshot B's embeddings written from scratch
-    * under the SAME deterministic codebook fit (the fit sees snapshot
-    * A, exactly as the incremental path's step 1 did). Called by
-    * Verify to compute the `p08_eq_fullrebuild` invariant. */
+    * under the SAME codebook — the snapshot-A fit the memoized
+    * [[p08BaselineLayout]] stores (the incremental path's step 1),
+    * read back instead of refit. Called by Verify to compute the
+    * `p08_eq_fullrebuild` invariant. */
   private[graft] def p08FullRebuildProbe(spark: SparkSession, dir: String): DataFrame =
     graft.core.TempDirs.scoped("graft-p08-rebuild") { root =>
     val docs = Tables.documents(spark, dir)
-    val fitDir = root.resolve("fit/index").toString
-    val cents = Similarity.writeIvfLayout(p08Normalized(docs), fitDir,
-      k = P08Cells, iters = 10)
+    val cents = Similarity.readIvfCodebook(spark, p08BaselineLayout(spark, dir))
     val out = root.resolve("index").toString
     Similarity.writeIvfLayoutWith(cents,
       p08Normalized(Dedup.cdcSnapshotBText(docs)), out)
@@ -996,7 +995,7 @@ object Pipeline {
         // the metadata-cheap instance estimate — one code row per
         // (vec, generation), exact for this layout
         def covered(): Double = graft.core.SegmentedIndex.coveredFractionEstimate(
-          spark.read.parquet(out), out, genScoped = true, requireTracked = true)
+          spark.read.parquet(out), out, requireTracked = true)
         def compact(e: Int): Unit = Similarity.compactIvfPqCorpus(spark, out)
         // familyDigest is order-independent (sum of per-row crc32), so
         // the probe feeds it UNSORTED
@@ -1018,18 +1017,16 @@ object Pipeline {
     * shared p13 epoch rules ([[p13DeleteClasses]]/[[p13ChangeClass]]/
     * final-epoch adds, ONE definition across the lexical, PQ, and
     * plain-vector families) chained through ONE stored layout seeded
-    * from the memoized snapshot-A baseline. The plain layout stores
-    * no generation column, so the single-application loop (p08) had
-    * to compact between every delete and re-add; the chain instead
-    * reads the PUBLISHED FILE NAMES back as generations
+    * from the memoized snapshot-A baseline. Where p08 deletes
+    * epoch-wide and compacts before its re-add, the chain scopes each
+    * delete to the PUBLISHED FILE NAMES' generations
     * ([[Similarity.withFileGen]] — `gen<g>-part-…` from the appends,
-    * 0 for the build/compaction files) and runs GEN-SCOPED tombstones
-    * over them: per epoch, tombstone the dirty ids at `upto_gen =
-    * e−1`, re-embed + append the revised docs at generation `e` (live
-    * immediately), compact ONLY on the covered-fraction policy — the
-    * metadata-cheap instance estimate, one row per (vec, generation),
-    * exact for this layout. Per-epoch `eq_rebuild` = (gen-scoped
-    * probe over the maintained store) ≡ (snapshot e written from
+    * 0 for the build/compaction files): per epoch, tombstone the dirty
+    * ids at `upto_gen = e−1`, re-embed + append the revised docs at
+    * generation `e` (live immediately), compact ONLY on the
+    * covered-fraction policy — the metadata-cheap instance estimate,
+    * one row per (vec, generation), exact for this layout. Per-epoch
+    * `eq_rebuild` = (probe over the maintained store) ≡ (snapshot e written from
     * scratch under the same stored codebook); Verify pins
     * `p15_eq_every_epoch` / `p15_compaction_fired`. `rebuildCheck =
     * false` is [[epochChain]]'s probe mode. Rows-only (k-means). */
@@ -1052,16 +1049,16 @@ object Pipeline {
           // localized once — jobless tombstone localize + free |dirty|
           dirtyL = graft.core.Bounded.localize(
             p13DirtyIds(docs, e).select(col("doc_id").as("vec_id")))
-          Similarity.deleteFromIvfCorpusGenScoped(spark, out, dirtyL.df, uptoGen = e - 1L)
+          Similarity.deleteFromIvfCorpus(spark, out, dirtyL.df, uptoGen = e - 1L)
           Similarity.appendIvfCorpusWith(cents, out, p08Vectors(p13ReAddText(docs, e)),
             storedCols, gen = e.toLong)
           dirtyL.count
         }
         def covered(): Double = graft.core.SegmentedIndex.coveredFractionEstimate(
-          spark.read.parquet(out), out, genScoped = true, requireTracked = true)
-        def compact(e: Int): Unit = Similarity.compactIvfCorpusGenScoped(spark, out)
+          spark.read.parquet(out), out, requireTracked = true)
+        def compact(e: Int): Unit = Similarity.compactIvfCorpus(spark, out)
         override def live(e: Int): Option[DataFrame] = Some(
-          Similarity.ivfStoredTopKWith(cents, spark, out, queries, k = 10, genScoped = true))
+          Similarity.ivfStoredTopKWith(cents, spark, out, queries, k = 10))
         override def rebuild(e: Int, scratch: java.nio.file.Path): DataFrame = {
           val ro = scratch.resolve("index").toString
           Similarity.writeIvfLayoutWith(cents,

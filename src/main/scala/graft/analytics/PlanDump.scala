@@ -80,10 +80,10 @@ object PlanDump {
     graft.core.SegmentedIndex.appendSegment(
       (1L to 100L).map(i => (i, i * 2.0)).toDF("vec_id", "x"), store, 0L)
     graft.core.SegmentedIndex.tombstone(
-      (1L to 10L).toDF("vec_id"), store, "vec_id", Some(0L))
+      (1L to 10L).toDF("vec_id"), store, "vec_id", 0L)
     dump("internal_live_view")(graft.core.SegmentedIndex.live(
       spark, spark.read.parquet(store), store,
-      keyCol = "vec_id", genCol = Some("gen")))
+      keyCol = "vec_id", genCol = "gen"))
     dump("internal_live_as_of")(graft.core.SegmentedIndex.liveAsOf(
       spark, spark.read.parquet(store), store,
       keyCol = "vec_id", genCol = "gen", asOfGen = 1L))

@@ -828,25 +828,11 @@ object Similarity {
   private[analytics] def writeIvfLayout(corpus: DataFrame, out: String,
                                         k: Int, iters: Int): Array[(Int, Array[Double])] = {
     val e = corpus.cache()
-    val centroids =
-      try {
-        val cents = lloydIvf(localFitSample(e), k, iters)
-        e.withColumn("cell", cellOf(cents, col("v"), col("norm")))
-          .repartition(col("cell"))
-          .write.mode("overwrite").partitionBy("cell").parquet(out)
-        cents
-      } finally e.unpersist()
-    val spark2 = corpus.sparkSession
-    import spark2.implicits._
-    centroids.toSeq.map { case (c, v) => (c, v.toSeq) }
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$out/_codebook")
-    // opt into the O(1) row-count sidecar (one driver-side footer
-    // walk of the freshly-written layout — no Spark job; maintained
-    // by arithmetic from here)
-    graft.core.SegmentedIndex.writeRowCount(out,
-      graft.core.SegmentedIndex.footerRowCountOf(java.nio.file.Paths.get(out)))
-    centroids
+    try {
+      val cents = lloydIvf(localFitSample(e), k, iters)
+      writeIvfLayoutWith(cents, e, out)
+      cents
+    } finally e.unpersist()
   }
 
   /** Append new vectors into an existing [[writeIvfCorpus]] layout
@@ -933,9 +919,8 @@ object Similarity {
     * files, so a replayed at-least-once batch replaces its own prior
     * append instead of duplicating it; explicit generation numbers
     * must be unique per layout lifetime except on replay
-    * (batchId-derived). The sidecar tombstones stay epoch-wide by
-    * default; the p15 chain reads the file-name generations back
-    * through [[withFileGen]] for gen-scoped deletes. */
+    * (batchId-derived); [[withFileGen]] reads the generation back for
+    * the tombstone anti-join. */
   private[analytics] def appendIvfCorpusWith(cents: Array[(Int, Array[Double])],
                                              out: String, vecs: DataFrame,
                                              storedCols: Set[String],
@@ -971,14 +956,16 @@ object Similarity {
   /** Tombstone vector ids in a stored IVF layout — the DELETE half of
     * index maintenance (the CDC loop's d15 for vectors). O(|ids|)
     * append into the `_tombstones` sidecar: nothing in the data dirs
-    * is touched, probes exclude tombstoned ids immediately (a bounded
-    * anti-join — tombstones accumulate only between compactions), and
-    * the next [[compactIvfCorpus]] drops the rows physically and
-    * clears the sidecar. An id tombstoned then re-appended is LIVE
-    * again only if the append lands after the compaction that applied
-    * the tombstone — within one epoch, delete-then-add of the same id
-    * must compact in between (the single-maintainer discipline the
-    * stored layout already assumes). Deletion carries the SAME
+    * is touched, probes exclude the ids' rows at or below `uptoGen`
+    * (file-name generations — see [[withFileGen]]) immediately (a
+    * bounded anti-join — tombstones accumulate only between
+    * compactions), and the next [[compactIvfCorpus]] drops the rows
+    * physically and clears the sidecar. With the default `uptoGen =
+    * Long.MaxValue` (the epoch-wide delete p08 runs) an id tombstoned
+    * then re-appended is LIVE again only if the append lands after the
+    * compaction that applied the tombstone; a scoped delete (`uptoGen
+    * = e−1`, the p15 chain) leaves a re-append at generation `e` live
+    * immediately, no compaction in between. Deletion carries the SAME
     * single-maintainer guarantee as compaction: a probe plan BUILT
     * before the tombstone landed keeps its construction-time snapshot
     * (Spark fixes the sidecar's file index when the plan is built),
@@ -991,21 +978,20 @@ object Similarity {
     * post-compaction append resurrects the id — nothing lost, nothing
     * duplicated. Plain layout only; the PQ layout (codes + `_refine`)
     * keeps its own lifecycle. */
-  def deleteFromIvfCorpus(spark: SparkSession, out: String, ids: DataFrame): Unit =
+  def deleteFromIvfCorpus(spark: SparkSession, out: String, ids: DataFrame,
+                          uptoGen: Long = Long.MaxValue): Unit =
     graft.core.SegmentedIndex.tombstone(
       ids.select(col("vec_id").cast("long").as("vec_id")), out,
-      keyCol = "vec_id", uptoGen = None)
+      keyCol = "vec_id", uptoGen = uptoGen)
 
   /** The plain IVF layout's rows with their GENERATION recovered from
     * the published file names (`gen<g>-part-…` — the
     * [[graft.core.SegmentedIndex.publishGeneration]] prefix; unprefixed
     * files — the initial build, or a compaction rewrite — read as
     * generation 0). The layout stores no generation COLUMN, so this
-    * `_metadata.file_path` derivation is what lets the p15 multi-epoch
-    * chain run GEN-SCOPED tombstones (delete-then-re-add within one
-    * epoch, no compaction required between) over the unchanged stored
-    * schema: existing probes, appends, and layouts see nothing new.
-    * Metadata column, not a UDF over paths — stays inside codegen. */
+    * `_metadata.file_path` derivation is the `genCol` the tombstones'
+    * `upto_gen` is compared against ([[liveIvf]]). Metadata column,
+    * not a UDF over paths — stays inside codegen. */
   private[analytics] def withFileGen(df: DataFrame): DataFrame = {
     // ANSI-safe: regexp_extract yields "" for unprefixed files, and
     // CaseWhen short-circuits before the cast ever sees it
@@ -1013,34 +999,15 @@ object Similarity {
     df.withColumn("gen", when(g === "", lit(0L)).otherwise(g.cast("long")))
   }
 
-  /** Gen-scoped logical deletion from a plain IVF layout: suppress
-    * `ids`' rows at or below `uptoGen` (file-name generations — see
-    * [[withFileGen]]). A later re-append at a higher generation is
-    * live immediately; the epoch-wide [[deleteFromIvfCorpus]] stays
-    * the single-application (p08) path. A layout must use ONE
-    * tombstone convention between compactions — the two sidecar
-    * schemas differ. */
-  def deleteFromIvfCorpusGenScoped(spark: SparkSession, out: String,
-                                   ids: DataFrame, uptoGen: Long): Unit =
-    graft.core.SegmentedIndex.tombstone(
-      ids.select(col("vec_id").cast("long").as("vec_id")), out,
-      keyCol = "vec_id", uptoGen = Some(uptoGen))
-
-  /** [[compactIvfCorpus]] for a layout carrying GEN-SCOPED tombstones
-    * ([[deleteFromIvfCorpusGenScoped]]): apply them against the
-    * file-name generations and rewrite cell-partitioned. The rewrite
-    * publishes unprefixed files — generation 0 — so every later
-    * gen-scoped tombstone (`upto_gen ≥ 0`) covers compacted rows
-    * exactly as it covered their pre-compaction originals. */
-  def compactIvfCorpusGenScoped(spark: SparkSession, out: String): Unit =
-    graft.core.SegmentedIndex.compactWith(out) { tmp =>
-      graft.core.SegmentedIndex.rewriteClustered(
-          graft.core.SegmentedIndex.live(spark,
-            withFileGen(spark.read.parquet(out)), out,
-            keyCol = "vec_id", genCol = Some("gen"))
-          .drop("gen"), out, "cell")
-        .write.mode("overwrite").partitionBy("cell").parquet(tmp)
-    }
+  /** A scan of the plain IVF layout at `out` minus its tombstoned rows
+    * ([[graft.core.SegmentedIndex.live]] over [[withFileGen]]). With
+    * no tombstones the scan comes back as it was: once a plan names
+    * `_metadata`, Spark's file scan reads every metadata field even
+    * when a projection above drops the column. */
+  private def liveIvf(spark: SparkSession, scan: DataFrame, out: String): DataFrame =
+    if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(out, "_tombstones"))) scan
+    else graft.core.SegmentedIndex.live(spark, withFileGen(scan), out,
+      keyCol = "vec_id", genCol = "gen").drop("gen")
 
   /** [[writeIvfLayout]] under a GIVEN codebook — no fit: assign cells
     * with `cents` and write the partitioned layout + codebook. The
@@ -1078,10 +1045,8 @@ object Similarity {
     * exact rerank, bounded top-k. */
   def ivfStoredTopK(spark: SparkSession, out: String,
                     queries: DataFrame, k: Int, nProbe: Int = 6,
-                    where: Option[org.apache.spark.sql.Column] = None,
-                    genScoped: Boolean = false): DataFrame =
-    ivfStoredTopKWith(readIvfCodebook(spark, out), spark, out, queries, k, nProbe,
-      where, genScoped)
+                    where: Option[org.apache.spark.sql.Column] = None): DataFrame =
+    ivfStoredTopKWith(readIvfCodebook(spark, out), spark, out, queries, k, nProbe, where)
 
   /** [[ivfStoredTopK]] with a pre-collected codebook — the per-batch
     * entry a query-serving stream uses so the K-row codebook read
@@ -1090,31 +1055,9 @@ object Similarity {
   private[analytics] def ivfStoredTopKWith(centroids: Array[(Int, Array[Double])],
                     spark: SparkSession, out: String,
                     queries: DataFrame, k: Int, nProbe: Int = 6,
-                    where: Option[org.apache.spark.sql.Column] = None,
-                    genScoped: Boolean = false): DataFrame = {
+                    where: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     import graft.functions.VectorFunctions._
-    def probesOf(q: DataFrame) = q.select(col("query_id"), col("qv"), col("qnorm"),
-      explode(slice(array_sort(cellScores(centroids, col("qv"), col("qnorm"))),
-        1, nProbe).getField("cell")).as("cell"))
-    // |queries|·nProbe-bounded: ONE collect job materializes the probe
-    // pairs driver-locally — the probed-cell set falls out of the
-    // collected rows (the old separate distinct+collect action) and
-    // the scored join's broadcast of them builds joblessly
-    val probesL = graft.core.Bounded.localize(probesOf(queries))
-    val probedCells =
-      if (probesL.local) {
-        val i = probesL.df.schema.fieldIndex("cell")
-        probesL.rows.map(_.getInt(i)).distinct.sorted
-      } else {
-        // over-cap: the checkpoint localize already built serves BOTH
-        // consumers (the r17 shape released it and re-ran probesOf
-        // twice more — the distinct+collect AND the scored join); the
-        // block sticks around until the caller's action completes and
-        // the session sweeps it
-        probesL.df.select("cell").distinct()
-          .collect().map(_.getInt(0)).sorted
-      }
-    val probes = probesL.df
+    val (probes, probedCells) = localizedProbes(centroids, queries, nProbe)
     // `where` is a metadata predicate over columns DENORMALIZED into
     // the layout ([[writeIvfLayout]] persists whatever extra columns
     // ride on the corpus frame): it lands directly on the pruned scan,
@@ -1124,25 +1067,44 @@ object Similarity {
     val pruned0 = spark.read.parquet(out)
       .filter(col("cell").isin(probedCells.map(Int.box): _*))
     val pruned1 = where.map(pruned0.filter).getOrElse(pruned0)
-    // tombstoned ids (deleteFromIvfCorpus) are excluded at probe time:
-    // the sidecar is bounded by deletions since the last compaction,
-    // so the anti-join probe side broadcasts; layouts without the
-    // sidecar pay nothing. `genScoped` layouts
-    // (deleteFromIvfCorpusGenScoped — the p15 chain) anti-join against
-    // the file-name generation instead, so a same-epoch re-append
-    // stays live.
-    val pruned =
-      if (genScoped)
-        graft.core.SegmentedIndex.live(spark, withFileGen(pruned1), out,
-          keyCol = "vec_id", genCol = Some("gen")).drop("gen")
-      else
-        graft.core.SegmentedIndex.live(spark, pruned1, out,
-          keyCol = "vec_id", genCol = None)
+    // tombstoned rows (deleteFromIvfCorpus) are excluded at probe
+    // time against the file-name generation: the sidecar is bounded by
+    // deletions since the last compaction, so the anti-join probe side
+    // broadcasts; layouts without the sidecar pay nothing
+    val pruned = liveIvf(spark, pruned1, out)
     val scored = broadcast(probes).join(pruned, "cell")
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         round(array_dot(col("qv"), col("v")) / (col("qnorm") * col("norm")), 4).as("cos_sim"))
     rankTopK(scored, k)
+  }
+
+  /** The probe pairs of `queries` — each query (with `extra` columns)
+    * once per each of its `nProbe` nearest cells — and the probed-cell
+    * set. |queries|·nProbe-bounded: ONE collect job materializes the
+    * pairs driver-locally, the cell set falls out of the collected rows
+    * (the old separate distinct+collect action), and a join's broadcast
+    * of them builds joblessly. */
+  private def localizedProbes(centroids: Array[(Int, Array[Double])], queries: DataFrame,
+                              nProbe: Int, extra: Column*): (DataFrame, Seq[Int]) = {
+    val probesL = graft.core.Bounded.localize(queries.select(
+      Seq(col("query_id"), col("qv"), col("qnorm")) ++ extra :+
+        explode(slice(array_sort(cellScores(centroids, col("qv"), col("qnorm"))),
+          1, nProbe).getField("cell")).as("cell"): _*))
+    val probedCells =
+      if (probesL.local) {
+        val i = probesL.df.schema.fieldIndex("cell")
+        probesL.rows.map(_.getInt(i)).distinct.sorted.toSeq
+      } else {
+        // over-cap: the checkpoint localize already built serves BOTH
+        // consumers (the r17 shape released it and re-ran the probe
+        // plan twice more — the distinct+collect AND the join); the
+        // block sticks around until the caller's action completes and
+        // the session sweeps it
+        probesL.df.select("cell").distinct()
+          .collect().map(_.getInt(0)).sorted.toSeq
+      }
+    (probesL.df, probedCells)
   }
 
   /** s09 gate: write → read back → pruned probe, end to end over a
@@ -1318,7 +1280,7 @@ object Similarity {
                             uptoGen: Long = Long.MaxValue): Unit =
     graft.core.SegmentedIndex.tombstone(
       ids.select(col("vec_id").cast("long").as("vec_id")), out,
-      keyCol = "vec_id", uptoGen = Some(uptoGen))
+      keyCol = "vec_id", uptoGen = uptoGen)
 
   /** Append vectors to a stored IVF-PQ layout under its STORED
     * codebooks (no refit): assign cells, nibble-pack codes, append to
@@ -1398,7 +1360,7 @@ object Similarity {
   def compactIvfPqCorpus(spark: SparkSession, out: String): Unit =
     graft.core.SegmentedIndex.compactWith(out, skipSidecars = Set("_refine")) { tmp =>
       def liveOf(path: String) = graft.core.SegmentedIndex.live(spark,
-        spark.read.parquet(path), out, keyCol = "vec_id", genCol = Some("gen"))
+        spark.read.parquet(path), out, keyCol = "vec_id", genCol = "gen")
       // scale-adaptive rewrite (rewriteClustered): cluster-by-cell for
       // big layouts, one task under the driver-local cap — same per-cell
       // files, one exchange stage-job fewer per layout
@@ -1441,32 +1403,14 @@ object Similarity {
         array_dot(subv(col("qv"), m), typedLit(books(m)(cell).toSeq))
       }: _*)
     }: _*)
-    def probesOf(q: DataFrame) = q.select(
-      col("query_id"), col("qv"), col("qnorm"), luts.as("luts"),
-      explode(slice(array_sort(cellScores(centroids, col("qv"), col("qnorm"))),
-        1, nProbe).getField("cell")).as("cell"))
-    // |queries|·nProbe-bounded (the ivfStoredTopKWith move): one
-    // collect job yields the probed-cell set for free and makes the
-    // ADC join's broadcast jobless
-    val probesL = graft.core.Bounded.localize(probesOf(queries))
-    val probedCells =
-      if (probesL.local) {
-        val i = probesL.df.schema.fieldIndex("cell")
-        probesL.rows.map(_.getInt(i)).distinct.sorted
-      } else {
-        // over-cap: reuse the checkpoint for both consumers (see
-        // ivfStoredTopKWith — the r17 shape paid the probe plan thrice)
-        probesL.df.select("cell").distinct()
-          .collect().map(_.getInt(0)).sorted
-      }
-    val probes = probesL.df
+    val (probes, probedCells) = localizedProbes(centroids, queries, nProbe, luts.as("luts"))
     // tombstoned generations (deleteFromIvfPqCorpus) excluded at ADC
     // time — gen-scoped, so a same-epoch re-append at a higher gen is
     // probe-visible with no compaction in between
     val codeScan = graft.core.SegmentedIndex.live(spark,
       spark.read.parquet(out)
         .filter(col("cell").isin(probedCells.map(Int.box): _*)),
-      out, keyCol = "vec_id", genCol = Some("gen"))
+      out, keyCol = "vec_id", genCol = "gen")
     val adcSum = (0 until PqM).map { m =>
       element_at(element_at(col("luts"), m + 1),
         shiftright(col("code"), 4 * m).bitwiseAND(lit(15)) + 1)
@@ -1485,7 +1429,7 @@ object Similarity {
     val refineScan = graft.core.SegmentedIndex.live(spark,
         spark.read.parquet(s"$out/_refine")
           .filter(col("cell").isin(probedCells.map(Int.box): _*)),
-        out, keyCol = "vec_id", genCol = Some("gen"))
+        out, keyCol = "vec_id", genCol = "gen")
       .select(col("vec_id").as("neighbor_id"), col("v"), col("norm"))
     val exact = shortlist
       .join(refineScan, "neighbor_id")
@@ -1539,13 +1483,13 @@ object Similarity {
     * never concurrently with them — IvfAppendSpec pins the interleaved
     * probe/append/compact sequence losing and duplicating nothing. */
   def compactIvfCorpus(spark: SparkSession, out: String): Unit =
-    // compaction APPLIES tombstones (the live view) and rewrites
-    // cell-partitioned; sidecar carry + tombstone clearing + the
+    // compaction APPLIES tombstones (the live view over the file-name
+    // generations) and rewrites cell-partitioned into unprefixed files,
+    // generation 0; sidecar carry + tombstone clearing + the
     // two-rename swap are the shared SegmentedIndex shell
     graft.core.SegmentedIndex.compactWith(out) { tmp =>
       graft.core.SegmentedIndex.rewriteClustered(
-          graft.core.SegmentedIndex.live(spark, spark.read.parquet(out), out,
-            keyCol = "vec_id", genCol = None), out, "cell")
+          liveIvf(spark, spark.read.parquet(out), out), out, "cell")
         .write.mode("overwrite").partitionBy("cell").parquet(tmp)
     }
 

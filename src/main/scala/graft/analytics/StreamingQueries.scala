@@ -903,7 +903,7 @@ object StreamingQueries {
       // segmented stores are deleted when this returns
       graft.core.SegmentedIndex.live(spark,
           spark.read.parquet(edgeStore), edgeStore,
-          keyCol = "vec_id", genCol = Some("gen"))
+          keyCol = "vec_id", genCol = "gen")
         .select("vec_id", "rnk", "neighbor_id", "cos_sim")
         .orderBy("vec_id", "rnk").localCheckpoint(true)
     }
@@ -986,7 +986,7 @@ object StreamingQueries {
       // corpus maintenance: tombstone the batch's dirty ids, append
       // its after-images as segment g
       graft.core.SegmentedIndex.tombstone(dirtyOld, corpusStore,
-        keyCol = "vec_id", uptoGen = Some(g - 1))
+        keyCol = "vec_id", uptoGen = g - 1)
       graft.core.SegmentedIndex.appendSegment(newRows, corpusStore, g)
       // edge maintenance against the batch's post-image corpus,
       // read FROM THE STORE the two writes above just produced:
@@ -1021,10 +1021,9 @@ object StreamingQueries {
     // pass the read-amp threshold — correctness never depends on it
     def edgesLive = graft.core.SegmentedIndex.live(spark,
       spark.read.parquet(edgeStore), edgeStore,
-      keyCol = "vec_id", genCol = Some("gen"))
+      keyCol = "vec_id", genCol = "gen")
     graft.core.SegmentedIndex.maybeCompact(
       spark.read.parquet(edgeStore), edgeStore,
-      keyCol = "vec_id", genCol = Some("gen"),
       rowsPerInstance = Similarity.KnnEdgeK.toDouble) { tmpDir =>
       edgesLive.drop("gen").write.parquet(s"$tmpDir/gen=0")
     }

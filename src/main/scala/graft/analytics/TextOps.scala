@@ -248,7 +248,7 @@ object TextOps {
                                             docIds: DataFrame,
                                             uptoGen: Long = Long.MaxValue): Unit =
     graft.core.SegmentedIndex.tombstone(docIds.select(col("doc_id")), out,
-      keyCol = "doc_id", uptoGen = Some(uptoGen))
+      keyCol = "doc_id", uptoGen = uptoGen)
 
   /** Stored schema of a postings layout — read EXPLICITLY everywhere
     * so a fully-tombstoned, freshly-compacted layout (zero data files)
@@ -265,7 +265,7 @@ object TextOps {
   private[analytics] def postingsLive(spark: SparkSession, out: String): DataFrame =
     graft.core.SegmentedIndex.live(spark,
       spark.read.schema(postingsSchema).parquet(out), out,
-      keyCol = "doc_id", genCol = Some("gen"))
+      keyCol = "doc_id", genCol = "gen")
 
   private val dfSidecarSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("term", org.apache.spark.sql.types.StringType),
@@ -373,13 +373,12 @@ object TextOps {
     * for layouts without a sidecar. */
   private[analytics] def postingsCoveredFraction(spark: SparkSession,
                                                  out: String): Double =
-    if (graft.core.SegmentedIndex.tombstoneInstances(out,
-        genScoped = true) == 0L) 0.0
+    if (graft.core.SegmentedIndex.tombstoneInstances(out) == 0L) 0.0
     else if (!java.nio.file.Files.isDirectory(
         java.nio.file.Paths.get(out, "_df")))
       graft.core.SegmentedIndex.coveredFraction(spark,
         spark.read.schema(postingsSchema).parquet(out), out,
-        keyCol = "doc_id", genCol = Some("gen"))
+        keyCol = "doc_id", genCol = "gen")
     else {
       // denominator from the maintained `_rowcount` sidecar when the
       // layout tracks one (O(1), no listing); footer count otherwise

@@ -14,11 +14,12 @@ import org.apache.spark.sql.functions._
   * append log (m12/st24):
   *
   *  - DELETE is an O(|diff|) tombstone append into a `_tombstones`
-  *    sidecar — no data file is touched. Tombstones are optionally
-  *    GENERATION-SCOPED (the Lucene per-segment delete): a tombstone
-  *    suppresses a key's rows at or below its `upto_gen`, so a
-  *    re-append at a higher generation is live immediately and a
-  *    streaming maintainer never needs a mid-stream compaction.
+  *    sidecar — no data file is touched. Every tombstone is
+  *    GENERATION-SCOPED (the Lucene per-segment delete): it suppresses
+  *    a key's rows at or below its `upto_gen`, so a re-append at a
+  *    higher generation is live immediately and a streaming maintainer
+  *    never needs a mid-stream compaction. `upto_gen = Long.MaxValue`
+  *    is the epoch-wide delete: every generation, until compaction.
   *  - LIVE is the stored rows minus tombstone-covered rows: a
   *    broadcast anti-join bounded by the diff, gone after compaction.
   *  - COMPACT rewrites the live rows into a sibling staging dir,
@@ -115,14 +116,13 @@ object SegmentedIndex {
 
   /** Tombstone `keys` under `keyCol` (explicit — [[live]] later joins
     * on the same name, and a positional guess would silently tombstone
-    * the wrong column of a multi-column frame) in the layout at `out`.
-    * `uptoGen = Some(g)` writes generation-scoped tombstones; `None`
-    * writes plain key tombstones (suppress every generation — the IVF
-    * corpus's epoch-wide delete). One bounded file per call; re-writing
-    * the same keys is idempotent ([[tombstonesOf]] max-folds per key),
-    * so an at-least-once maintainer may replay this safely. */
-  def tombstone(keys: DataFrame, out: String, keyCol: String,
-                uptoGen: Option[Long]): Unit = {
+    * the wrong column of a multi-column frame) in the layout at `out`:
+    * their rows at or below generation `uptoGen` are suppressed
+    * (`Long.MaxValue`: every generation until the next compaction).
+    * One bounded file of (key, upto_gen) per call; re-writing the same
+    * keys is idempotent ([[tombstonesOf]] max-folds per key), so an
+    * at-least-once maintainer may replay this safely. */
+  def tombstone(keys: DataFrame, out: String, keyCol: String, uptoGen: Long): Unit = {
     // the key set is diff-bounded by contract: dedupe DRIVER-SIDE
     // (one collect job — free when the caller passes a LocalRelation)
     // instead of a distinct() exchange, so the sidecar write is one
@@ -134,25 +134,27 @@ object SegmentedIndex {
         sel.sparkSession.createDataFrame(
           java.util.Arrays.asList(l.rows.distinct: _*), sel.schema)
       else l.df.distinct()
-    uptoGen.fold(rows)(g => rows.withColumn("upto_gen", lit(g)))
+    rows.withColumn("upto_gen", lit(uptoGen))
       .coalesce(1).write.mode("append").parquet(s"$out/_tombstones")
     l.release()
   }
 
-  /** The accumulated tombstones, max-folded per key (a key deleted
-    * twice keeps the widest suppression), or None when the sidecar
-    * does not exist. `genScoped` must match how [[tombstone]] wrote
-    * them. */
-  def tombstonesOf(spark: SparkSession, out: String,
-                   genScoped: Boolean): Option[DataFrame] =
+  /** The accumulated tombstones as (key, upto_gen), max-folded per key
+    * (a key deleted twice keeps the widest suppression), or None when
+    * the sidecar does not exist. */
+  def tombstonesOf(spark: SparkSession, out: String): Option[DataFrame] =
+    foldTombstones(spark, out, maxUpto = Long.MaxValue)
+
+  /** [[tombstonesOf]] over the sidecar's rows with `upto_gen <=
+    * maxUpto`: driver-local when bounded, else a Spark aggregate. */
+  private def foldTombstones(spark: SparkSession, out: String,
+                             maxUpto: Long): Option[DataFrame] =
     if (!Files.isDirectory(Paths.get(out, "_tombstones"))) None
-    else Some(tombstonesLocal(spark, out, genScoped, asOfGen = None)
-      .getOrElse {
-        val raw = spark.read.parquet(s"$out/_tombstones")
-        if (genScoped)
-          raw.groupBy(raw.columns.head).agg(max(col("upto_gen")).as("upto_gen"))
-        else raw.distinct()
-      })
+    else Some(tombstonesLocal(spark, out, maxUpto).getOrElse {
+      val raw = spark.read.parquet(s"$out/_tombstones")
+      raw.filter(col("upto_gen") <= maxUpto)
+        .groupBy(raw.columns.head).agg(max(col("upto_gen")).as("upto_gen"))
+    })
 
   /** The tombstone fold as a DRIVER-LOCAL relation — None when the
     * sidecar is over-cap or has a shape the driver reader doesn't
@@ -166,19 +168,17 @@ object SegmentedIndex {
     * view broadcast it at all, so the fold is a microsecond driver
     * read ([[ParquetRows.foreach]] — the policy path's reader), and a
     * broadcast over the resulting LocalRelation builds with ZERO jobs.
-    * `asOfGen` applies [[liveAsOf]]'s `upto_gen < asOfGen` filter
+    * Only rows with `upto_gen <= maxUpto` fold: [[liveAsOf]] filters
     * before the max-fold (the replay-stability rule). */
   private[graft] def tombstonesLocal(spark: SparkSession, out: String,
-                                     genScoped: Boolean,
-                                     asOfGen: Option[Long]): Option[DataFrame] =
+                                     maxUpto: Long): Option[DataFrame] =
     try {
       val dir = Paths.get(out, "_tombstones")
       if (footerRowCountOf(dir) > Bounded.maxRows(spark)) return None
       var keyName: String = null
       var keyType: org.apache.spark.sql.types.DataType = null
-      // genScoped: key -> max upto_gen; plain: insertion-ordered key set
+      // key -> max upto_gen
       val maxGen = new java.util.HashMap[Any, java.lang.Long]()
-      val seen = new java.util.LinkedHashSet[Any]()
       def keyOf(g: org.apache.parquet.example.data.Group): Any = {
         if (keyName == null) {
           keyName = g.getType.getFieldName(0)
@@ -204,29 +204,20 @@ object SegmentedIndex {
       }
       ParquetRows.foreach(dir) { g =>
         val k = keyOf(g)
-        if (genScoped) {
-          val i = g.getType.getFieldIndex("upto_gen")
-          val u = if (g.getFieldRepetitionCount(i) == 0) Long.MinValue
-                  else g.getLong(i, 0)
-          if (asOfGen.forall(u < _)) {
-            val prev = maxGen.get(k)
-            if (prev == null || u > prev) maxGen.put(k, u)
-          }
-        } else { seen.add(k); () }
+        val i = g.getType.getFieldIndex("upto_gen")
+        val u = if (g.getFieldRepetitionCount(i) == 0) Long.MinValue
+                else g.getLong(i, 0)
+        if (u <= maxUpto) {
+          val prev = maxGen.get(k)
+          if (prev == null || u > prev) maxGen.put(k, u)
+        }
       }
       if (keyName == null) return None // empty sidecar: let Spark read it
       import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      import scala.jdk.CollectionConverters._
-      val (schema, rows) =
-        if (genScoped)
-          (StructType(Seq(StructField(keyName, keyType),
-            StructField("upto_gen", LongType))),
-            maxGen.entrySet().iterator().asScala
-              .map(e => org.apache.spark.sql.Row(e.getKey, e.getValue.longValue()))
-              .toList)
-        else
-          (StructType(Seq(StructField(keyName, keyType))),
-            seen.iterator().asScala.map(org.apache.spark.sql.Row(_)).toList)
+      val schema = StructType(Seq(StructField(keyName, keyType),
+        StructField("upto_gen", LongType)))
+      val rows = maxGen.entrySet().iterator().asScala
+        .map(e => org.apache.spark.sql.Row(e.getKey, e.getValue.longValue())).toList
       Some(spark.createDataFrame(rows.asJava, schema))
     } catch {
       case scala.util.control.NonFatal(e) =>
@@ -248,19 +239,21 @@ object SegmentedIndex {
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** `raw` minus tombstone-covered rows: the diff-bounded broadcast
-    * anti-join every probe/report pays between compactions. For
-    * gen-scoped layouts `genCol` names the stored generation column;
-    * a row is suppressed when its generation is at or below the
-    * tombstone's `upto_gen`. */
+    * anti-join every probe/report pays between compactions. `genCol`
+    * names the stored generation column; a row is suppressed when its
+    * generation is at or below the tombstone's `upto_gen`. With no
+    * sidecar, `raw` comes back unchanged. */
   def live(spark: SparkSession, raw: DataFrame, out: String,
-           keyCol: String, genCol: Option[String]): DataFrame =
-    tombstonesOf(spark, out, genScoped = genCol.isDefined).fold(raw) { t =>
-      val ts = broadcast(t.withColumnRenamed(keyCol, "_t_key"))
-      genCol match {
-        case Some(g) => raw.join(ts,
-          col(keyCol) === col("_t_key") && col(g) <= col("upto_gen"), "left_anti")
-        case None => raw.join(ts, col(keyCol) === col("_t_key"), "left_anti")
-      }
+           keyCol: String, genCol: String): DataFrame =
+    suppress(raw, tombstonesOf(spark, out), keyCol, genCol)
+
+  /** The anti-join of [[live]] and [[liveAsOf]] against folded
+    * tombstones `t` (broadcast: the sidecar is diff-bounded). */
+  private def suppress(raw: DataFrame, t: Option[DataFrame],
+                       keyCol: String, genCol: String): DataFrame =
+    t.fold(raw) { folded =>
+      raw.join(broadcast(folded.withColumnRenamed(keyCol, "_t_key")),
+        col(keyCol) === col("_t_key") && col(genCol) <= col("upto_gen"), "left_anti")
     }
 
   /** [[live]] as of generation `asOfGen` — the TIME-TRAVEL read that
@@ -272,26 +265,13 @@ object SegmentedIndex {
     * appends tombstones at g−1 — so a REPLAYED batch g reading
     * `liveAsOf(g−1)` sees exactly what its first attempt saw, computes
     * the same recompute set, and its segment-overwrite + tombstone
-    * re-append land idempotently. Gen-scoped layouts only; the
-    * tombstone filter runs BEFORE the per-key max-fold (a later batch's
-    * wider tombstone must not mask an earlier batch's). */
+    * re-append land idempotently. The tombstone filter runs BEFORE the
+    * per-key max-fold (a later batch's wider tombstone must not mask
+    * an earlier batch's). */
   def liveAsOf(spark: SparkSession, raw: DataFrame, out: String,
-               keyCol: String, genCol: String, asOfGen: Long): DataFrame = {
-    val upTo = raw.filter(col(genCol) <= asOfGen)
-    if (!Files.isDirectory(Paths.get(out, "_tombstones"))) upTo
-    else {
-      // driver-local fold when bounded (see tombstonesLocal) — the
-      // broadcast below then builds with zero jobs per consumer
-      val t = tombstonesLocal(spark, out, genScoped = true,
-          asOfGen = Some(asOfGen))
-        .getOrElse(spark.read.parquet(s"$out/_tombstones")
-          .filter(col("upto_gen") < asOfGen)
-          .groupBy(keyCol).agg(max(col("upto_gen")).as("upto_gen")))
-      val ts = broadcast(t.withColumnRenamed(keyCol, "_t_key"))
-      upTo.join(ts,
-        col(keyCol) === col("_t_key") && col(genCol) <= col("upto_gen"), "left_anti")
-    }
-  }
+               keyCol: String, genCol: String, asOfGen: Long): DataFrame =
+    suppress(raw.filter(col(genCol) <= asOfGen),
+      foldTombstones(spark, out, maxUpto = asOfGen - 1), keyCol, genCol)
 
   /** Write one GENERATION SEGMENT of a partition-dir layout: rows land
     * under `out/gen=<g>` with OVERWRITE, so an at-least-once maintainer
@@ -443,23 +423,22 @@ object SegmentedIndex {
     * scale; MaintainedStoreEstimateSpec pins the two equal on every
     * maintained-store shape). 0.0 when no tombstones exist. */
   def coveredFraction(spark: SparkSession, raw: DataFrame, out: String,
-                      keyCol: String, genCol: Option[String]): Double =
-    tombstonesOf(spark, out, genScoped = genCol.isDefined).fold(0.0) { _ =>
+                      keyCol: String, genCol: String): Double =
+    tombstonesOf(spark, out).fold(0.0) { _ =>
       val total = raw.count()
       if (total == 0L) 0.0
       else 1.0 - live(spark, raw, out, keyCol, genCol).count().toDouble / total
     }
 
-  /** Distinct tombstone INSTANCES in the sidecar: gen-scoped layouts
-    * count distinct (key, upto_gen) pairs — a key re-deleted at a
-    * later generation is a new instance, a REPLAYED at-least-once
-    * delete re-writing the same pair is not — plain layouts count
-    * distinct keys. A DRIVER-SIDE scan of the diff-bounded sidecar
+  /** Distinct tombstone INSTANCES in the sidecar: distinct (key,
+    * upto_gen) pairs — a key re-deleted at a later generation is a new
+    * instance, a REPLAYED at-least-once delete re-writing the same pair
+    * is not. A DRIVER-SIDE scan of the diff-bounded sidecar
     * (no Spark job — the policy path reads only sidecar + footer
     * metadata); the in-memory distinct set is bounded by the same
     * contract that lets [[live]] BROADCAST the fold of these rows.
     * 0 when the sidecar does not exist. */
-  def tombstoneInstances(out: String, genScoped: Boolean): Long = {
+  def tombstoneInstances(out: String): Long = {
     val seen = new java.util.HashSet[String]()
     ParquetRows.foreach(Paths.get(out, "_tombstones")) { g =>
       // field 0 is the key column ([[tombstone]] writes it first);
@@ -468,9 +447,7 @@ object SegmentedIndex {
       def repr(i: Int) =
         if (g.getFieldRepetitionCount(i) == 0) "\u0000null"
         else g.getValueToString(i, 0)
-      val key = repr(0)
-      seen.add(if (genScoped) key + "\u0000" + repr(g.getType.getFieldIndex("upto_gen"))
-               else key)
+      seen.add(repr(0) + "\u0000" + repr(g.getType.getFieldIndex("upto_gen")))
     }
     seen.size().toLong
   }
@@ -479,14 +456,11 @@ object SegmentedIndex {
     * count as a Spark query, so MaintainedStoreEstimateSpec can pin
     * the driver-side scan against an independent derivation on every
     * sidecar shape. Never on the policy path. */
-  private[graft] def tombstoneInstancesSpark(spark: SparkSession, out: String,
-                                             genScoped: Boolean): Long =
+  private[graft] def tombstoneInstancesSpark(spark: SparkSession, out: String): Long =
     if (!Files.isDirectory(Paths.get(out, "_tombstones"))) 0L
     else {
       val raw = spark.read.parquet(s"$out/_tombstones")
-      val keyed = if (genScoped) raw.select(col(raw.columns.head), col("upto_gen"))
-                  else raw.select(col(raw.columns.head))
-      keyed.distinct().count()
+      raw.select(col(raw.columns.head), col("upto_gen")).distinct().count()
     }
 
   /** METADATA-CHEAP covered-fraction estimate — what [[maybeCompact]]
@@ -519,11 +493,10 @@ object SegmentedIndex {
     * reset path already hit exactly that trap once (the r16 verdict's
     * item 5). */
   def coveredFractionEstimate(raw: => DataFrame, out: String,
-                              genScoped: Boolean,
                               rowsPerInstance: Double = 1.0,
                               requireTracked: Boolean = false): Double = {
     if (requireTracked) assertTracked(out)
-    val instances = tombstoneInstances(out, genScoped)
+    val instances = tombstoneInstances(out)
     if (instances == 0L) 0.0
     else {
       // denominator: the maintained `_rowcount` sidecar when the
@@ -571,13 +544,11 @@ object SegmentedIndex {
     * maintained layout fails loudly here instead of silently paying
     * a per-epoch metadata walk. */
   def maybeCompact(raw: => DataFrame, out: String,
-                   keyCol: String, genCol: Option[String],
                    skipSidecars: Set[String] = Set.empty,
                    rowsPerInstance: Double = 1.0)
                   (writeRewrite: String => Unit): Boolean = {
     val frac = coveredFractionEstimate(raw, out,
-      genScoped = genCol.isDefined, rowsPerInstance = rowsPerInstance,
-      requireTracked = true)
+      rowsPerInstance = rowsPerInstance, requireTracked = true)
     val due = compactDue(frac)
     if (due) compactWith(out, skipSidecars)(writeRewrite)
     due

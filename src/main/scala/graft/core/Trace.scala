@@ -8,8 +8,8 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
-  SparkListenerSQLExecutionStart}
-import org.apache.spark.sql.util.QueryExecutionListener
+  SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
+import org.apache.spark.sql.graftdiag.ExecutionShim
 
 /** The Spark cost of a block of driver code: job, stage, task and byte
   * counts, and its wall time split into planning, running jobs and the
@@ -23,11 +23,13 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * fixed input the job and stage counts are the same every warm pass,
   * so a +1 is a plan change by construction.
   *
-  * One listener pair is installed per JVM: a `SparkListener` on the
-  * shared bus and a `QueryExecutionListener` on the first measured
-  * session. [[measure]] drains the bus before and after the block, so
-  * the counts hold every event of the block's finished work, and
-  * neither drain sits inside the timed region.
+  * One `SparkListener` is installed per JVM, on the shared bus. It
+  * reads planning phases and scan metrics off the query each named SQL
+  * execution's end event carries, so it sees every session's Dataset
+  * actions, the `newSession()` clones that drive streams included.
+  * [[measure]] drains the bus before and after the block, so the
+  * counts hold every event of the block's finished work, and neither
+  * drain sits inside the timed region.
   *
   * Attribution needs no job tagging, and that is a requirement on the
   * caller: measure one block at a time, from one thread, and start no
@@ -37,10 +39,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * (`TableStore.eachTable`, futures inside a gate). `job_s` is the
   * union of those jobs' intervals, so concurrent jobs count once, and
   * `plan_s` is planning time outside any running job, so
-  * `plan_s + job_s <= wall_s` and `gap_s` is the rest. Planning is
-  * seen for Dataset actions of the first measured session only;
-  * streaming micro-batches, which run on drive sessions, show as jobs
-  * and gap.
+  * `plan_s + job_s <= wall_s` and `gap_s` is the rest. A streaming
+  * micro-batch's own planning (an unnamed execution) shows as gap;
+  * the Dataset actions a `foreachBatch` runs show as plan and jobs.
   *
   * Cold blocks include once-per-JVM fixture construction and are not
   * stable run to run; `graft.Bench` measures stability per gate
@@ -79,8 +80,7 @@ object Trace {
     * a block's start. */
   private final case class Mark(c: Array[Long], jobRecords: Int, planRecords: Int, gcMs: Long)
 
-  private final class Listener extends SparkListener with QueryExecutionListener
-      with AdaptiveSparkPlanHelper {
+  private final class Listener extends SparkListener with AdaptiveSparkPlanHelper {
     // jobs, stages, tasks, shuffle read, shuffle write, input, aqe
     // re-plans, bytes written, files read, rows scanned, files written
     private val c = new Array[Long](11)
@@ -146,13 +146,9 @@ object Trace {
         if (open > 0)
           execSite(s.executionId) = graftFrame(s.details).getOrElse("sql:" + s.description.take(40))
       }
+      case e: SparkListenerSQLExecutionEnd => ExecutionShim.namedQueryExecution(e).foreach(record)
       case _ => ()
     }
-
-    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-      record(qe)
-    override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
-      record(qe)
 
     private def record(qe: QueryExecution): Unit = synchronized {
       if (open > 0) qe.tracker.phases.values.foreach { p =>
@@ -191,13 +187,12 @@ object Trace {
 
   private var listener: Option[Listener] = None
 
-  /** Register the listeners (at most once per JVM; later calls are
+  /** Register the listener (at most once per JVM; later calls are
     * no-ops, so specs sharing a session can install unconditionally). */
   def install(spark: SparkSession): Unit = synchronized {
     if (listener.isEmpty) {
       val l = new Listener
       spark.sparkContext.addSparkListener(l)
-      spark.listenerManager.register(l)
       listener = Some(l)
     }
   }

@@ -151,14 +151,14 @@ object ChainProbe {
         SegmentedIndex.footerRowCountOf(java.nio.file.Paths.get(segOut)))
       SegmentedIndex.tombstone(
         emb.filter(col("vec_id") % 13 < 2).select("vec_id"),
-        segOut, "vec_id", uptoGen = Some(0L))
-      val segInst = SegmentedIndex.tombstoneInstances(segOut, genScoped = true)
+        segOut, "vec_id", uptoGen = 0L)
+      val segInst = SegmentedIndex.tombstoneInstances(segOut)
       val t0 = System.nanoTime()
       val segEst = SegmentedIndex.coveredFractionEstimate(
-        spark.read.parquet(segOut), segOut, genScoped = true, requireTracked = true)
+        spark.read.parquet(segOut), segOut, requireTracked = true)
       val segEstMs = (System.nanoTime() - t0) / 1e6
       val segExact = SegmentedIndex.coveredFraction(spark,
-        spark.read.parquet(segOut), segOut, keyCol = "vec_id", genCol = Some("gen"))
+        spark.read.parquet(segOut), segOut, keyCol = "vec_id", genCol = "gen")
       println(f"[estexact] gen-partition shape at ${rep}x: instances=$segInst " +
         f"estimate=$segEst%.6f (driver-side, $segEstMs%.1f ms, zero Spark jobs) " +
         f"exact=$segExact%.6f diff=${math.abs(segEst - segExact)}%.2e")
@@ -176,11 +176,11 @@ object ChainProbe {
       }
       SegmentedIndex.tombstone(
         emb.filter(col("vec_id") % 13 < 2).select("vec_id"),
-        pubOut, "vec_id", uptoGen = Some(1L))
+        pubOut, "vec_id", uptoGen = 1L)
       val pubEst = SegmentedIndex.coveredFractionEstimate(
-        spark.read.parquet(pubOut), pubOut, genScoped = true, requireTracked = true)
+        spark.read.parquet(pubOut), pubOut, requireTracked = true)
       val pubExact = SegmentedIndex.coveredFraction(spark,
-        spark.read.parquet(pubOut), pubOut, keyCol = "vec_id", genCol = Some("gen"))
+        spark.read.parquet(pubOut), pubOut, keyCol = "vec_id", genCol = "gen")
       println(f"[estexact] gen-named publish shape at ${rep}x: estimate=$pubEst%.6f " +
         f"exact=$pubExact%.6f diff=${math.abs(pubEst - pubExact)}%.2e")
     }

@@ -21,9 +21,9 @@ class MaintainedStoreEstimateSpec extends AnyFunSuite {
 
   private def exactOf(out: String, rowsPerKey: Int): (Double, Double) = {
     val exact = SegmentedIndex.coveredFraction(spark,
-      spark.read.parquet(out), out, keyCol = "id", genCol = Some("gen"))
+      spark.read.parquet(out), out, keyCol = "id", genCol = "gen")
     val est = SegmentedIndex.coveredFractionEstimate(
-      spark.read.parquet(out), out, genScoped = true,
+      spark.read.parquet(out), out,
       rowsPerInstance = rowsPerKey.toDouble)
     (exact, est)
   }
@@ -36,19 +36,19 @@ class MaintainedStoreEstimateSpec extends AnyFunSuite {
       (1L to 10L).flatMap(i => Seq((i, "a"), (i, "b"))).toDF("id", "payload"),
       out, gen = 0L)
     // epoch 1: tombstone 3 keys at gen 0, re-add one of them at gen 1
-    SegmentedIndex.tombstone((1L to 3L).toDF("id"), out, "id", uptoGen = Some(0L))
+    SegmentedIndex.tombstone((1L to 3L).toDF("id"), out, "id", uptoGen = 0L)
     SegmentedIndex.appendSegment(
       Seq((2L, "a2"), (2L, "b2")).toDF("id", "payload"), out, gen = 1L)
     val (e1, g1) = exactOf(out, 2)
     assert(math.abs(e1 - g1) < Tol, s"epoch-1 estimate $g1 != exact $e1")
     // epoch 2: re-delete the re-added key (now covering BOTH its
     // generations via two distinct instances) plus a fresh key
-    SegmentedIndex.tombstone(Seq(2L, 4L).toDF("id"), out, "id", uptoGen = Some(1L))
+    SegmentedIndex.tombstone(Seq(2L, 4L).toDF("id"), out, "id", uptoGen = 1L)
     val (e2, g2) = exactOf(out, 2)
     assert(math.abs(e2 - g2) < Tol, s"epoch-2 estimate $g2 != exact $e2")
     assert(g2 > g1, "coverage must grow with the second epoch")
     // a REPLAYED tombstone write changes neither measure
-    SegmentedIndex.tombstone(Seq(2L, 4L).toDF("id"), out, "id", uptoGen = Some(1L))
+    SegmentedIndex.tombstone(Seq(2L, 4L).toDF("id"), out, "id", uptoGen = 1L)
     val (e3, g3) = exactOf(out, 2)
     assert((e3, g3) == (e2, g2), "replayed delete moved the measurement")
   }
@@ -58,11 +58,12 @@ class MaintainedStoreEstimateSpec extends AnyFunSuite {
     val out = TempDirs.create("graft-est-plain").resolve("corpus").toString
     (1L to 8L).map(i => (i, s"v$i")).toDF("id", "payload")
       .write.parquet(out)
-    SegmentedIndex.tombstone((1L to 3L).toDF("id"), out, "id", uptoGen = None)
+    SegmentedIndex.tombstone((1L to 3L).toDF("id"), out, "id", uptoGen = Long.MaxValue)
+    // a layout that stores no generation reads as generation 0
     val exact = SegmentedIndex.coveredFraction(spark,
-      spark.read.parquet(out), out, keyCol = "id", genCol = None)
+      spark.read.parquet(out).withColumn("gen", lit(0L)), out, keyCol = "id", genCol = "gen")
     val est = SegmentedIndex.coveredFractionEstimate(
-      spark.read.parquet(out), out, genScoped = false)
+      spark.read.parquet(out), out)
     assert(math.abs(exact - est) < Tol, s"plain estimate $est != exact $exact")
     assert(est == 3.0 / 8)
   }
@@ -72,8 +73,8 @@ class MaintainedStoreEstimateSpec extends AnyFunSuite {
     val out = TempDirs.create("graft-est-none").resolve("corpus").toString
     Seq((1L, "x")).toDF("id", "payload").write.parquet(out)
     assert(SegmentedIndex.coveredFractionEstimate(
-      spark.read.parquet(out), out, genScoped = false) == 0.0)
-    assert(SegmentedIndex.tombstoneInstances(out, genScoped = false) == 0L)
+      spark.read.parquet(out), out) == 0.0)
+    assert(SegmentedIndex.tombstoneInstances(out) == 0L)
   }
 
   test("tracked layout: _rowcount equals the footer count through append / replay / tombstone / compact") {
@@ -97,7 +98,7 @@ class MaintainedStoreEstimateSpec extends AnyFunSuite {
       Seq((2L, "a1"), (2L, "b1")).toDF("id", "payload"), out, gen = 1L)
     assert(sidecar == footer, s"replayed append drifted: $sidecar != $footer")
     // tombstones change NO stored rows
-    SegmentedIndex.tombstone(Seq(1L, 2L).toDF("id"), out, "id", uptoGen = Some(0L))
+    SegmentedIndex.tombstone(Seq(1L, 2L).toDF("id"), out, "id", uptoGen = 0L)
     assert(sidecar == footer, s"tombstone moved the row count: $sidecar != $footer")
     // the estimate (sidecar denominator) still equals the exact anti-join
     val (e, g) = exactOf(out, 2)
@@ -105,7 +106,7 @@ class MaintainedStoreEstimateSpec extends AnyFunSuite {
     // compaction re-bases the count from the fresh rewrite
     SegmentedIndex.compactWith(out) { tmp =>
       SegmentedIndex.live(spark, spark.read.parquet(out), out,
-          keyCol = "id", genCol = Some("gen")).drop("gen")
+          keyCol = "id", genCol = "gen").drop("gen")
         .write.parquet(s"$tmp/gen=0")
     }
     assert(sidecar == footer, s"compaction drifted: $sidecar != $footer")
@@ -149,10 +150,10 @@ class MaintainedStoreEstimateSpec extends AnyFunSuite {
       (1L to 10L).flatMap(i => Seq((i, "a"), (i, "b"))).toDF("id", "payload"),
       out, gen = 0L)
     SegmentedIndex.writeRowCount(out, 20L)
-    SegmentedIndex.tombstone((1L to 4L).toDF("id"), out, "id", uptoGen = Some(0L))
+    SegmentedIndex.tombstone((1L to 4L).toDF("id"), out, "id", uptoGen = 0L)
     graft.core.DirSwap.deleteTree(java.nio.file.Paths.get(out, "gen=0"))
     val est = SegmentedIndex.coveredFractionEstimate(null, out,
-      genScoped = true, rowsPerInstance = 2.0, requireTracked = true)
+      rowsPerInstance = 2.0, requireTracked = true)
     assert(est == 8.0 / 20, s"no-scan estimate wrong: $est")
   }
 
@@ -207,7 +208,7 @@ class MaintainedStoreEstimateSpec extends AnyFunSuite {
     TextOps.updateDfSidecar(spark, out, removed, added, gen = 1L)
     val est = TextOps.postingsCoveredFraction(spark, out)
     val exact = SegmentedIndex.coveredFraction(spark,
-      spark.read.parquet(out), out, keyCol = "doc_id", genCol = Some("gen"))
+      spark.read.parquet(out), out, keyCol = "doc_id", genCol = "gen")
     assert(math.abs(est - exact) < Tol,
       s"postings sidecar estimate $est != exact $exact")
     assert(est > 0.0)
@@ -242,11 +243,11 @@ class MaintainedStoreEstimateSpec extends AnyFunSuite {
       out, gen = 0L)
     SegmentedIndex.writeRowCount(out,
       SegmentedIndex.footerRowCountOf(java.nio.file.Paths.get(out)))
-    SegmentedIndex.tombstone((1L to 3L).toDF("id"), out, "id", uptoGen = Some(0L))
+    SegmentedIndex.tombstone((1L to 3L).toDF("id"), out, "id", uptoGen = 0L)
     val (est, jobs) = sparkJobsDuring {
       SegmentedIndex.coveredFractionEstimate(
         fail("the tracked policy path forced the raw frame"): org.apache.spark.sql.DataFrame,
-        out, genScoped = true, rowsPerInstance = 2.0, requireTracked = true)
+        out, rowsPerInstance = 2.0, requireTracked = true)
     }
     assert(est == 6.0 / 20)
     assert(jobs == 0, s"tracked estimate submitted $jobs Spark job(s)")
@@ -271,19 +272,19 @@ class MaintainedStoreEstimateSpec extends AnyFunSuite {
     import spark.implicits._
     val gen = TempDirs.create("graft-inst-gen").resolve("edges").toString
     Seq((1L, "a")).toDF("id", "payload").write.parquet(gen)
-    SegmentedIndex.tombstone((1L to 5L).toDF("id"), gen, "id", uptoGen = Some(0L))
-    SegmentedIndex.tombstone(Seq(2L, 6L).toDF("id"), gen, "id", uptoGen = Some(3L))
-    SegmentedIndex.tombstone(Seq(2L, 6L).toDF("id"), gen, "id", uptoGen = Some(3L)) // replay
-    assert(SegmentedIndex.tombstoneInstances(gen, genScoped = true) ==
-      SegmentedIndex.tombstoneInstancesSpark(spark, gen, genScoped = true))
-    assert(SegmentedIndex.tombstoneInstances(gen, genScoped = true) == 7L)
+    SegmentedIndex.tombstone((1L to 5L).toDF("id"), gen, "id", uptoGen = 0L)
+    SegmentedIndex.tombstone(Seq(2L, 6L).toDF("id"), gen, "id", uptoGen = 3L)
+    SegmentedIndex.tombstone(Seq(2L, 6L).toDF("id"), gen, "id", uptoGen = 3L) // replay
+    assert(SegmentedIndex.tombstoneInstances(gen) ==
+      SegmentedIndex.tombstoneInstancesSpark(spark, gen))
+    assert(SegmentedIndex.tombstoneInstances(gen) == 7L)
     val plain = TempDirs.create("graft-inst-plain").resolve("corpus").toString
     Seq((1L, "a")).toDF("id", "payload").write.parquet(plain)
-    SegmentedIndex.tombstone((1L to 4L).toDF("id"), plain, "id", uptoGen = None)
-    SegmentedIndex.tombstone(Seq(3L, 4L, 5L).toDF("id"), plain, "id", uptoGen = None)
-    assert(SegmentedIndex.tombstoneInstances(plain, genScoped = false) ==
-      SegmentedIndex.tombstoneInstancesSpark(spark, plain, genScoped = false))
-    assert(SegmentedIndex.tombstoneInstances(plain, genScoped = false) == 5L)
+    SegmentedIndex.tombstone((1L to 4L).toDF("id"), plain, "id", uptoGen = Long.MaxValue)
+    SegmentedIndex.tombstone(Seq(3L, 4L, 5L).toDF("id"), plain, "id", uptoGen = Long.MaxValue)
+    assert(SegmentedIndex.tombstoneInstances(plain) ==
+      SegmentedIndex.tombstoneInstancesSpark(spark, plain))
+    assert(SegmentedIndex.tombstoneInstances(plain) == 5L)
   }
 
   test("an untracked layout fails LOUDLY at the policy sites instead of silently listing the layout") {
@@ -291,17 +292,15 @@ class MaintainedStoreEstimateSpec extends AnyFunSuite {
     val out = TempDirs.create("graft-est-untracked").resolve("edges").toString
     SegmentedIndex.appendSegment(
       Seq((1L, "a"), (2L, "b")).toDF("id", "payload"), out, gen = 0L)
-    SegmentedIndex.tombstone(Seq(1L).toDF("id"), out, "id", uptoGen = Some(0L))
+    SegmentedIndex.tombstone(Seq(1L).toDF("id"), out, "id", uptoGen = 0L)
     intercept[IllegalArgumentException] {
-      SegmentedIndex.maybeCompact(spark.read.parquet(out), out,
-        keyCol = "id", genCol = Some("gen")) { _ => fail("must not rewrite") }
+      SegmentedIndex.maybeCompact(spark.read.parquet(out), out) { _ => fail("must not rewrite") }
     }
     intercept[IllegalArgumentException] {
       SegmentedIndex.coveredFractionEstimate(spark.read.parquet(out), out,
-        genScoped = true, requireTracked = true)
+        requireTracked = true)
     }
     // the legacy fallback stays reachable for un-maintained layouts
-    assert(SegmentedIndex.coveredFractionEstimate(spark.read.parquet(out), out,
-      genScoped = true) == 0.5)
+    assert(SegmentedIndex.coveredFractionEstimate(spark.read.parquet(out), out) == 0.5)
   }
 }

@@ -139,7 +139,7 @@ class PlanSpec extends AnyFunSuite {
       Tables.embeddings(spark, dir).limit(8)
         .select(col("vec_id") + 1000000L as "vec_id", col("embedding")),
       spark.read.parquet(out).columns.toSet, gen = 1L)
-    Similarity.deleteFromIvfCorpusGenScoped(spark, out,
+    Similarity.deleteFromIvfCorpus(spark, out,
       spark.read.parquet(out).select("vec_id").limit(2), uptoGen = 0L)
     val one = spark.read.parquet(out).orderBy("vec_id").limit(1)
       .select(col("vec_id"), col("v"), col("norm")).collect().head
@@ -147,8 +147,7 @@ class PlanSpec extends AnyFunSuite {
     import spark2.implicits._
     val queries = Seq((one.getLong(0), one.getSeq[Double](1), one.getDouble(2)))
       .toDF("query_id", "qv", "qnorm")
-    val df = Similarity.ivfStoredTopK(spark, out, queries, k = 5, nProbe = 2,
-      genScoped = true)
+    val df = Similarity.ivfStoredTopK(spark, out, queries, k = 5, nProbe = 2)
     val plan = df.queryExecution.executedPlan.toString
     val corpusScans = plan.linesIterator.filter(l =>
       l.contains("FileScan parquet") && l.contains("corpus")
@@ -575,9 +574,9 @@ class PlanSpec extends AnyFunSuite {
     graft.core.SegmentedIndex.appendSegment(
       (1L to 50L).map(i => (i, i % 7)).toDF("id", "payload"), out, gen = 0L)
     graft.core.SegmentedIndex.tombstone(Seq(1L, 2L, 3L).toDF("id"), out, "id",
-      uptoGen = Some(0L))
+      uptoGen = 0L)
     val plan = graft.core.SegmentedIndex.live(spark,
-        spark.read.parquet(out), out, keyCol = "id", genCol = Some("gen"))
+        spark.read.parquet(out), out, keyCol = "id", genCol = "gen")
       .queryExecution.executedPlan.toString
     assert("BroadcastHashJoin \\[id".r.findFirstIn(plan).isDefined &&
         plan.contains("LeftAnti"),

@@ -25,9 +25,9 @@ class SegmentedIndexSpec extends AnyFunSuite {
   test("gen-scoped tombstone suppresses at-or-below generations; higher re-append is live") {
     import spark.implicits._
     val out = freshLayout()
-    SegmentedIndex.tombstone(Seq(2L).toDF("id"), out, keyCol = "id", uptoGen = Some(0L))
+    SegmentedIndex.tombstone(Seq(2L).toDF("id"), out, keyCol = "id", uptoGen = 0L)
     def liveIds() = SegmentedIndex.live(spark, spark.read.parquet(out), out,
-      keyCol = "id", genCol = Some("gen")).select("id").as[Long].collect().sorted.toSeq
+      keyCol = "id", genCol = "gen").select("id").as[Long].collect().sorted.toSeq
     assert(liveIds() == Seq(1L, 3L))
     // re-append the same id at a HIGHER generation: live immediately,
     // no compaction in between
@@ -41,10 +41,10 @@ class SegmentedIndexSpec extends AnyFunSuite {
     val out = freshLayout()
     Seq((3L, "c9", 9L)).toDF("id", "payload", "gen")
       .write.mode("append").parquet(out)
-    SegmentedIndex.tombstone(Seq(3L).toDF("id"), out, keyCol = "id", uptoGen = None)
-    SegmentedIndex.tombstone(Seq(3L).toDF("id"), out, keyCol = "id", uptoGen = None)
+    SegmentedIndex.tombstone(Seq(3L).toDF("id"), out, keyCol = "id", uptoGen = Long.MaxValue)
+    SegmentedIndex.tombstone(Seq(3L).toDF("id"), out, keyCol = "id", uptoGen = Long.MaxValue)
     val live = SegmentedIndex.live(spark, spark.read.parquet(out), out,
-      keyCol = "id", genCol = None)
+      keyCol = "id", genCol = "gen")
     assert(live.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
   }
 
@@ -53,10 +53,10 @@ class SegmentedIndexSpec extends AnyFunSuite {
     val out = freshLayout()
     // a non-tombstone sidecar that must survive the rewrite verbatim
     Seq(("meta", 7L)).toDF("k", "v").write.parquet(s"$out/_side")
-    SegmentedIndex.tombstone(Seq(1L).toDF("id"), out, keyCol = "id", uptoGen = Some(Long.MaxValue))
+    SegmentedIndex.tombstone(Seq(1L).toDF("id"), out, keyCol = "id", uptoGen = Long.MaxValue)
     SegmentedIndex.compactWith(out) { tmp =>
       SegmentedIndex.live(spark, spark.read.parquet(out), out,
-          keyCol = "id", genCol = Some("gen"))
+          keyCol = "id", genCol = "gen")
         .write.mode("overwrite").parquet(tmp)
     }
     assert(!Files.isDirectory(Paths.get(out, "_tombstones")),
@@ -70,7 +70,7 @@ class SegmentedIndexSpec extends AnyFunSuite {
     Seq((1L, "a2", 5L)).toDF("id", "payload", "gen")
       .write.mode("append").parquet(out)
     assert(SegmentedIndex.live(spark, spark.read.parquet(out), out,
-        keyCol = "id", genCol = Some("gen"))
+        keyCol = "id", genCol = "gen")
       .select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
   }
 
@@ -78,7 +78,7 @@ class SegmentedIndexSpec extends AnyFunSuite {
     import spark.implicits._
     val out = TempDirs.create("graft-segidx-spec").resolve("seg").toString
     def liveIds() = SegmentedIndex.live(spark, spark.read.parquet(out), out,
-      keyCol = "id", genCol = Some("gen"))
+      keyCol = "id", genCol = "gen")
       .select("id").as[Long].collect().sorted.toSeq
     // seed: segment 0 holds keys 1..4 (appendSegment carries no gen
     // column — the partition dir IS the generation)
@@ -90,7 +90,7 @@ class SegmentedIndexSpec extends AnyFunSuite {
     // re-image key 2, add key 5
     def applyBatch1(): Unit = {
       SegmentedIndex.tombstone(Seq(2L).toDF("id"), out, keyCol = "id",
-        uptoGen = Some(0L))
+        uptoGen = 0L)
       SegmentedIndex.appendSegment(
         Seq((2L, "b2"), (5L, "e")).toDF("id", "payload"), out, gen = 1L)
     }
@@ -125,20 +125,18 @@ class SegmentedIndexSpec extends AnyFunSuite {
       SegmentedIndex.footerRowCountOf(Paths.get(out)))
     def rewrite(tmp: String): Unit =
       SegmentedIndex.live(spark, spark.read.parquet(out), out,
-          keyCol = "id", genCol = Some("gen")).drop("gen")
+          keyCol = "id", genCol = "gen").drop("gen")
         .write.parquet(s"$tmp/gen=0")
     // 3 of 10 rows covered (0.3 ≤ 0.5): policy must NOT compact
     SegmentedIndex.tombstone((1L to 3L).toDF("id"), out, keyCol = "id",
-      uptoGen = Some(0L))
-    assert(!SegmentedIndex.maybeCompact(spark.read.parquet(out), out,
-      keyCol = "id", genCol = Some("gen"))(rewrite))
+      uptoGen = 0L)
+    assert(!SegmentedIndex.maybeCompact(spark.read.parquet(out), out)(rewrite))
     assert(Files.isDirectory(Paths.get(out, "_tombstones")))
     // 6 of 10 covered (0.6 > 0.5): policy compacts, tombstones clear,
     // live rows survive physically
     SegmentedIndex.tombstone((4L to 6L).toDF("id"), out, keyCol = "id",
-      uptoGen = Some(0L))
-    assert(SegmentedIndex.maybeCompact(spark.read.parquet(out), out,
-      keyCol = "id", genCol = Some("gen"))(rewrite))
+      uptoGen = 0L)
+    assert(SegmentedIndex.maybeCompact(spark.read.parquet(out), out)(rewrite))
     assert(!Files.isDirectory(Paths.get(out, "_tombstones")))
     assert(spark.read.parquet(out).select("id").as[Long].collect().sorted.toSeq
       == (7L to 10L))

@@ -93,13 +93,26 @@ class TraceSpec extends AnyFunSuite {
     assert(c.jobList.isEmpty && c.jobS == 0.0, c)
   }
 
+  // a query with enough planning (CTEs, a window, a join) to read above 0
+  private val planHeavySql =
+    """WITH a AS (SELECT id % 7 AS k, id AS v FROM range(0, 2000, 1, 2)),
+      |     b AS (SELECT k, sum(v) AS s, count(*) AS n FROM a GROUP BY k),
+      |     w AS (SELECT k, s, rank() OVER (ORDER BY s DESC) AS r FROM b)
+      |SELECT w.k, w.r, b.n FROM w JOIN b ON w.k = b.k WHERE w.r <= 5
+      |ORDER BY w.r""".stripMargin
+
   test("a SQL action's planning shows as plan_s") {
-    val c = cost(spark.sql(
-      """WITH a AS (SELECT id % 7 AS k, id AS v FROM range(0, 2000, 1, 2)),
-        |     b AS (SELECT k, sum(v) AS s, count(*) AS n FROM a GROUP BY k),
-        |     w AS (SELECT k, s, rank() OVER (ORDER BY s DESC) AS r FROM b)
-        |SELECT w.k, w.r, b.n FROM w JOIN b ON w.k = b.k WHERE w.r <= 5
-        |ORDER BY w.r""".stripMargin).collect())
+    val c = cost(spark.sql(planHeavySql).collect())
+    assert(c.jobs > 0, c)
+    assert(c.planS > 0, c)
+    assert(c.planS + c.jobS <= c.wallS, c)
+  }
+
+  test("planning on a newSession() clone shows as plan_s") {
+    // the streaming drives plan every micro-batch's actions on a clone
+    // with its own listener manager; the shared bus still sees them
+    val clone = spark.newSession()
+    val c = cost(clone.sql(planHeavySql).collect())
     assert(c.jobs > 0, c)
     assert(c.planS > 0, c)
     assert(c.planS + c.jobS <= c.wallS, c)
