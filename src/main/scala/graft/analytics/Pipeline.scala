@@ -502,15 +502,16 @@ object Pipeline {
     *
     *   1. yesterday's index: IVF layout fit + written over snapshot
     *      A's embeddings;
-    *   2. d14's diff arrives: deleted+changed ids are TOMBSTONED
-    *      ([[Similarity.deleteFromIvfCorpus]] — O(|diff|), no data
-    *      file touched);
-    *   3. compaction applies the tombstones physically (and clears
-    *      the sidecar — the epoch boundary that makes same-id
-    *      re-adds safe);
-    *   4. changed+added docs are re-embedded (diff-sized — the
-    *      expensive model pass never sees the unchanged corpus) and
-    *      APPENDED under the stored codebook.
+    *   2. d14's diff arrives as ONE batch at generation 1
+    *      ([[Similarity.applyIvfBatch]], the rule p15 applies per
+    *      epoch): deleted+changed ids are TOMBSTONED at `upto_gen = 0`
+    *      (O(|diff|), no data file touched), and changed+added docs
+    *      are re-embedded (diff-sized — the expensive model pass never
+    *      sees the unchanged corpus) and APPENDED under the stored
+    *      codebook at generation 1, live at once;
+    *   3. one compaction applies the tombstones physically and clears
+    *      the sidecar, as st25 does at the end of its stream;
+    *   4. the compacted layout is probed.
     *
     * The result must equal a FULL REBUILD of snapshot B under the
     * same quantizer, exactly — Verify re-probes the rebuild twin and
@@ -528,28 +529,24 @@ object Pipeline {
                                        root: java.nio.file.Path,
                                        diff: DataFrame): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    // the CDC diff is |diff|-bounded and consumed several times below
-    // (two class filters + a semi join): ONE collect job takes it
-    // driver-local — the standalone gate otherwise re-ran the whole
-    // d14 snapshot-diff plan per consumer, and every broadcast of a
-    // class filter cost a collect job
+    // |diff|-bounded and consumed several times below (two class
+    // filters + a semi join): ONE collect job takes it driver-local, so
+    // no consumer re-runs the d14 plan or pays a broadcast collect
     val diffL = graft.core.Bounded.localize(diff)
-    // yesterday's index arrives as a COPY of the memoized baseline —
-    // no per-invocation fit + corpus re-assignment (r12 finding #3)
+    // yesterday's index: a COPY of the memoized baseline
     val out = copyBaseline(p08BaselineLayout(spark, dir), root.resolve("index"))
     val cents = Similarity.readIvfCodebook(spark, out)
-    Similarity.deleteFromIvfCorpus(spark, out,
-      diffL.df.filter(col("change_type").isin("deleted", "changed"))
-        .select(col("doc_id").as("vec_id")))
+    Similarity.applyIvfBatch(spark, cents, spark.read.parquet(out).columns.toSet, out,
+      gen = 1L,
+      dirty = diffL.df.filter(col("change_type").isin("deleted", "changed"))
+        .select(col("doc_id").as("vec_id")),
+      adds = p08Vectors(Dedup.cdcSnapshotBText(docs).join(
+        diffL.df.filter(col("change_type").isin("changed", "added")).select("doc_id"),
+        Seq("doc_id"), "left_semi")))
     Similarity.compactIvfCorpus(spark, out)
-    val reEmbed = p08Vectors(Dedup.cdcSnapshotBText(docs).join(
-      diffL.df.filter(col("change_type").isin("changed", "added")).select("doc_id"),
-      Seq("doc_id"), "left_semi"))
-    Similarity.appendIvfCorpusWith(cents, out, reEmbed,
-      spark.read.parquet(out).columns.toSet)
     // materialize the |queries|×k result eagerly: the scoped layout is
     // deleted when this returns (TempDirs.scoped contract)
-    val res = Similarity.ivfStoredTopK(spark, out, p08QuerySet(docs), k = 10)
+    val res = Similarity.ivfStoredTopKWith(cents, spark, out, p08QuerySet(docs), k = 10)
       .orderBy("query_id", "rnk").localCheckpoint(true)
     diffL.release()
     res
@@ -567,7 +564,7 @@ object Pipeline {
     val out = root.resolve("index").toString
     Similarity.writeIvfLayoutWith(cents,
       p08Normalized(Dedup.cdcSnapshotBText(docs)), out)
-    Similarity.ivfStoredTopK(spark, out, p08QuerySet(docs), k = 10)
+    Similarity.ivfStoredTopKWith(cents, spark, out, p08QuerySet(docs), k = 10)
       .orderBy("query_id", "rnk").localCheckpoint(true)
   }
 
@@ -578,14 +575,18 @@ object Pipeline {
     *   1. yesterday's index: IVF-PQ layout (nibble-packed codes +
     *      `_refine` raw sidecar + both codebooks) fit + written over
     *      snapshot A;
-    *   2. d14's deleted+changed ids are TOMBSTONED
-    *      ([[Similarity.deleteFromIvfPqCorpus]] — O(|diff|); ADC
-    *      probes exclude them immediately);
-    *   3. compaction applies the tombstones physically to the codes
-    *      AND the refine sidecar and clears them — the epoch boundary;
-    *   4. changed+added docs re-embed (diff-sized) and append under
-    *      the STORED codebooks — cells assigned, codes packed, raw
-    *      vectors into `_refine` — no refit.
+    *   2. d14's diff arrives as ONE batch at generation 1
+    *      ([[Similarity.applyIvfPqBatch]], the rule p14 applies per
+    *      epoch and st25 per microbatch): deleted+changed ids are
+    *      TOMBSTONED at `upto_gen = 0` (O(|diff|); ADC probes exclude
+    *      them immediately), and changed+added docs re-embed
+    *      (diff-sized) and append at generation 1 under the memoized
+    *      codebooks — cells assigned, codes packed, raw vectors into
+    *      `_refine` — no refit;
+    *   3. one compaction applies the tombstones physically to the
+    *      codes AND the refine sidecar and clears them, as st25 does
+    *      at the end of its stream;
+    *   4. the compacted layout is probed.
     *
     * Result must equal a full PQ rebuild of snapshot B under the same
     * quantizers (`p11_eq_fullrebuild`). Rows-only (k-means + PQ). */
@@ -605,18 +606,19 @@ object Pipeline {
     // |diff|-bounded, consumed by two class filters + a semi join —
     // driver-local once (the p08MaintainAt rationale)
     val diffL = graft.core.Bounded.localize(diff)
-    // yesterday's index arrives as a COPY of the memoized baseline —
-    // no per-invocation corpus re-encode (r12 finding #3)
+    // yesterday's index: a COPY of the memoized baseline, which stores
+    // exactly these memoized codebooks
     val out = copyBaseline(p11BaselineLayout(spark, dir), root.resolve("index"))
-    Similarity.deleteFromIvfPqCorpus(spark, out,
-      diffL.df.filter(col("change_type").isin("deleted", "changed"))
-        .select(col("doc_id").as("vec_id")))
+    val (cents, books) = p11Codebooks(spark, dir)
+    Similarity.applyIvfPqBatch(spark, cents, books, out, gen = 1L,
+      dirty = Some(diffL.df.filter(col("change_type").isin("deleted", "changed"))
+        .select(col("doc_id").as("vec_id"))),
+      adds = Some(p11Vectors(Dedup.cdcSnapshotBText(docs).join(
+        diffL.df.filter(col("change_type").isin("changed", "added")).select("doc_id"),
+        Seq("doc_id"), "left_semi"))))
     Similarity.compactIvfPqCorpus(spark, out)
-    val reEmbed = p11Vectors(Dedup.cdcSnapshotBText(docs).join(
-      diffL.df.filter(col("change_type").isin("changed", "added")).select("doc_id"),
-      Seq("doc_id"), "left_semi"))
-    Similarity.appendIvfPqCorpus(spark, out, reEmbed)
-    val res = Similarity.ivfPqStoredTopK(spark, out, p11QuerySet(docs), k = 10)
+    val res = Similarity.ivfPqStoredTopKWith(cents, books, spark, out,
+        p11QuerySet(docs), k = 10)
       .orderBy("query_id", "rnk").localCheckpoint(true)
     diffL.release()
     res
@@ -632,7 +634,7 @@ object Pipeline {
     val out = root.resolve("index").toString
     Similarity.writeIvfPqLayoutWith(cents, books,
       p11Normalized(Dedup.cdcSnapshotBText(docs)), out)
-    Similarity.ivfPqStoredTopK(spark, out, p11QuerySet(docs), k = 10)
+    Similarity.ivfPqStoredTopKWith(cents, books, spark, out, p11QuerySet(docs), k = 10)
       .orderBy("query_id", "rnk").localCheckpoint(true)
   }
 
@@ -642,15 +644,18 @@ object Pipeline {
     *
     *   1. yesterday's index: postings layout + `_df` sidecar written
     *      over snapshot A ([[TextOps.writePostingsLayout]]);
-    *   2. d14's deleted+changed ids are TOMBSTONED (O(|diff|), no
-    *      postings file touched);
-    *   3. compaction applies the tombstones physically and clears the
-    *      sidecar — the epoch boundary that makes same-id re-adds safe;
-    *   4. changed+added docs RE-TOKENIZE (diff-sized — the tokenize
-    *      pass never sees the unchanged corpus) and append;
-    *   5. the `_df` sidecar folds the diff's per-term removed/added
-    *      document counts — a |vocab|-bounded merge, never a corpus
-    *      recount.
+    *   2. d14's diff arrives as ONE batch at generation 1
+    *      ([[TextOps.applyPostingsBatch]], the rule p13 applies per
+    *      epoch and st23 per microbatch): deleted+changed ids are
+    *      TOMBSTONED at `upto_gen = 0` (O(|diff|), no postings file
+    *      touched), changed+added docs RE-TOKENIZE (diff-sized — the
+    *      tokenize pass never sees the unchanged corpus) and append at
+    *      generation 1, and the diff's per-term removed/added document
+    *      counts land as a `_df` delta — a |vocab|-bounded merge,
+    *      never a corpus recount;
+    *   3. one compaction applies the tombstones physically, clears the
+    *      sidecar and folds the delta into the `_df` base, as st23
+    *      does at the end of its stream.
     *
     * Report: per term, df FROM THE SIDECAR beside total tf from the
     * live postings scan — fully oracle-checked against DuckDB's
@@ -683,29 +688,21 @@ object Pipeline {
     // |diff|-bounded, consumed by two class filters + two semi joins —
     // driver-local once (the p08MaintainAt rationale)
     val diffL = graft.core.Bounded.localize(diff)
-    // yesterday's index arrives as a COPY of the memoized baseline —
-    // no per-invocation corpus re-tokenize (the vector families'
-    // discipline applied to the lexical index)
+    // yesterday's index: a COPY of the memoized baseline
     copyBaseline(p10BaselineLayout(spark, dir), java.nio.file.Paths.get(out))
     val dirty = diffL.df.filter(col("change_type").isin("deleted", "changed"))
       .select("doc_id")
-    TextOps.deleteFromPostings(spark, out, dirty)
-    TextOps.compactPostings(spark, out)
-    // ONE side-tagged tokenize pass (the st23 move): the append
-    // segment and both per-term df deltas fold out of one localized
-    // aggregation instead of three tokenize plans. The removed side
-    // tokenizes the BEFORE-IMAGE (snapshot A's text for the dirty
-    // docs) — a doc's postings are a pure function of its text, so
-    // this equals the stored rows without scanning the index, and
-    // nothing here races the compaction above because the index is
-    // never read.
-    TextOps.maintainPostingsBatch(spark, out,
+    // the removed side tokenizes the BEFORE-IMAGE (snapshot A's text
+    // for the dirty docs) — a doc's postings are a pure function of
+    // its text, so this equals the stored rows without scanning the
+    // index
+    TextOps.applyPostingsBatch(spark, out, gen = 1L, dirty = Some(dirty),
       addDocs = Some(Dedup.cdcSnapshotBText(docs)
         .join(diffL.df.filter(col("change_type").isin("changed", "added"))
           .select("doc_id"), Seq("doc_id"), "left_semi")),
       rmDocs = Some(docs.join(broadcast(dirty), Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), col("text"))),
-      gen = 1L)
+        .select(col("doc_id"), col("text"))))
+    TextOps.compactPostings(spark, out)
     diffL.release()
     out
   }
@@ -885,12 +882,12 @@ object Pipeline {
   /** The p13 chain: [[ChainEpochs]] successive diff applications
     * against ONE postings layout at `out` (seeded from the memoized
     * snapshot-A baseline), compacting ONLY on the covered-fraction
-    * policy — never per epoch, unlike p10's single application. Per
-    * epoch: gen-scoped tombstone for the dirty ids (`upto_gen = e−1`,
-    * so the re-appends at gen `e` are live immediately with no
-    * compaction between), diff-sized re-tokenize + append,
-    * |vocab|-bounded df-sidecar fold. The gate reports the final
-    * postings, so the chain records no per-epoch digest; `onEpoch`
+    * policy. Per epoch, [[TextOps.applyPostingsBatch]] at generation
+    * `e`: tombstone for the dirty ids at `upto_gen = e−1` (so the
+    * re-appends at gen `e` are live immediately with no compaction
+    * between), diff-sized re-tokenize + append, |vocab|-bounded
+    * df-sidecar fold. The gate reports the final postings, so the
+    * chain records no per-epoch digest; `onEpoch`
     * fires after each epoch so MultiEpochPostingsSpec can pin
     * live-state equality to a from-scratch rebuild of
     * [[p13SnapshotText]] at EVERY epoch — before and after the
@@ -908,18 +905,13 @@ object Pipeline {
         // |dirty| comes free with it
         dirtyL = graft.core.Bounded.localize(p13DirtyIds(docs, e))
         val dirty = dirtyL.df
-        TextOps.deleteFromPostings(spark, out, dirty, uptoGen = e - 1L)
-        // ONE side-tagged tokenize pass per epoch (the st23 move): the
-        // append segment and both df-sidecar deltas fold out of one
-        // localized aggregation instead of three tokenize plans. The
-        // dirty docs' BEFORE-image text is the base table's (classes are
-        // disjoint across epochs), so the removed side never reads the
-        // stored index.
-        TextOps.maintainPostingsBatch(spark, out,
+        // the dirty docs' BEFORE-image text is the base table's (classes
+        // are disjoint across epochs), so the removed side never reads
+        // the stored index
+        TextOps.applyPostingsBatch(spark, out, gen = e.toLong, dirty = Some(dirty),
           addDocs = Some(p13ReAddText(docs, e)),
           rmDocs = Some(docs.join(broadcast(dirty), Seq("doc_id"), "left_semi")
-            .select(col("doc_id"), col("text"))),
-          gen = e.toLong)
+            .select(col("doc_id"), col("text"))))
         dirtyL.count
       }
       def covered(): Double = TextOps.postingsCoveredFraction(spark, out)
@@ -951,13 +943,13 @@ object Pipeline {
     * epoch rules ([[p13DeleteClasses]]/[[p13ChangeClass]]/final-epoch
     * adds, one definition shared by the lexical and vector families)
     * chained through ONE stored PQ layout seeded from the memoized
-    * snapshot-A baseline. Per epoch: gen-scoped tombstone for the
-    * dirty ids (`upto_gen = e−1`), diff-sized re-embed of snapshot
-    * e's changed/added docs appended under the STORED codebooks at
-    * generation e (an idempotent gen-named publish), compaction ONLY
-    * on the covered-fraction policy — never per epoch, unlike p11's
-    * single application. The per-doc vector rows make the covered
-    * trajectory exact class arithmetic: ≈ 0.29 / 0.56 / 0.40, so the
+    * snapshot-A baseline. Per epoch, [[Similarity.applyIvfPqBatch]] at
+    * generation `e`: tombstone for the dirty ids at `upto_gen = e−1`,
+    * diff-sized re-embed of snapshot e's changed/added docs appended
+    * under the STORED codebooks at generation e (an idempotent
+    * gen-named publish); compaction ONLY on the covered-fraction
+    * policy. The per-doc vector rows make the covered trajectory
+    * exact class arithmetic: ≈ 0.29 / 0.56 / 0.40, so the
     * compaction fires at epoch 2 and epoch 3 applies ON the
     * compacted store. Output: per-epoch receipts with `eq_rebuild` =
     * (probe top-k over the maintained store) ≡ (snapshot e rebuilt
@@ -984,12 +976,11 @@ object Pipeline {
           // then jobless, and |dirty| is free for the receipt column
           dirtyL = graft.core.Bounded.localize(
             p13DirtyIds(docs, e).select(col("doc_id").as("vec_id")))
-          Similarity.deleteFromIvfPqCorpus(spark, out, dirtyL.df, uptoGen = e - 1L)
           // re-embed DIRECTLY off the shared re-add construction —
           // equal to snapshot-e ⋉ re-add ids (disjoint classes) without
           // a per-epoch full-corpus snapshot derivation
-          Similarity.appendIvfPqCorpusWith(cents, books, out,
-            p11Vectors(p13ReAddText(docs, e)), gen = e.toLong)
+          Similarity.applyIvfPqBatch(spark, cents, books, out, gen = e.toLong,
+            dirty = Some(dirtyL.df), adds = Some(p11Vectors(p13ReAddText(docs, e))))
           dirtyL.count
         }
         // the metadata-cheap instance estimate — one code row per
@@ -1017,14 +1008,13 @@ object Pipeline {
     * shared p13 epoch rules ([[p13DeleteClasses]]/[[p13ChangeClass]]/
     * final-epoch adds, ONE definition across the lexical, PQ, and
     * plain-vector families) chained through ONE stored layout seeded
-    * from the memoized snapshot-A baseline. Where p08 deletes
-    * epoch-wide and compacts before its re-add, the chain scopes each
-    * delete to the PUBLISHED FILE NAMES' generations
-    * ([[Similarity.withFileGen]] — `gen<g>-part-…` from the appends,
-    * 0 for the build/compaction files): per epoch, tombstone the dirty
-    * ids at `upto_gen = e−1`, re-embed + append the revised docs at
-    * generation `e` (live immediately), compact ONLY on the
-    * covered-fraction policy — the metadata-cheap instance estimate,
+    * from the memoized snapshot-A baseline. Deletes are scoped to the
+    * PUBLISHED FILE NAMES' generations ([[Similarity.withFileGen]] —
+    * `gen<g>-part-…` from the appends, 0 for the build/compaction
+    * files): per epoch, [[Similarity.applyIvfBatch]] at generation `e`
+    * tombstones the dirty ids at `upto_gen = e−1` and re-embeds +
+    * appends the revised docs at `e` (live immediately); compact ONLY
+    * on the covered-fraction policy — the metadata-cheap instance estimate,
     * one row per (vec, generation), exact for this layout. Per-epoch
     * `eq_rebuild` = (probe over the maintained store) ≡ (snapshot e written from
     * scratch under the same stored codebook); Verify pins
@@ -1049,9 +1039,8 @@ object Pipeline {
           // localized once — jobless tombstone localize + free |dirty|
           dirtyL = graft.core.Bounded.localize(
             p13DirtyIds(docs, e).select(col("doc_id").as("vec_id")))
-          Similarity.deleteFromIvfCorpus(spark, out, dirtyL.df, uptoGen = e - 1L)
-          Similarity.appendIvfCorpusWith(cents, out, p08Vectors(p13ReAddText(docs, e)),
-            storedCols, gen = e.toLong)
+          Similarity.applyIvfBatch(spark, cents, storedCols, out, gen = e.toLong,
+            dirty = dirtyL.df, adds = p08Vectors(p13ReAddText(docs, e)))
           dirtyL.count
         }
         def covered(): Double = graft.core.SegmentedIndex.coveredFractionEstimate(
@@ -1091,9 +1080,9 @@ object Pipeline {
     *    the stored edge artifact),
     *  - image fingerprints (m12's diff-only decode+hash),
     *  - quality scores (p07's diff-only rescoring),
-    *  - IVF corpus (p08's tombstone → compact → stored-codebook
-    *    append), PQ codes+refine (p11's gen-scoped twin), and the
-    *    inverted postings (p10's loop with the df-sidecar fold) —
+    *  - IVF corpus (p08), PQ codes+refine (p11) and the inverted
+    *    postings with the df-sidecar fold (p10), each one batch
+    *    applied at generation 1 and then compacted —
     *    these three consume ONE localCheckpointed diff frame; g07,
     *    m12 and p07 apply the same fixture diff by construction
     *    (their inputs are derived images/vectors, not document text).

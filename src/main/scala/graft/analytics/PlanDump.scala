@@ -97,6 +97,11 @@ object PlanDump {
         col("norm").as("qnorm"))
     dump("internal_ivf_stored_topk")(
       Similarity.ivfStoredTopK(spark, ivf, queries, k = 10))
+    // the same probe once the layout has tombstones: the live view
+    // over the file-name generations
+    Similarity.deleteFromIvfCorpus(spark, ivf, Seq(0L, 100L).toDF("vec_id"), uptoGen = 0L)
+    dump("internal_ivf_stored_topk_tombstoned")(
+      Similarity.ivfStoredTopK(spark, ivf, queries, k = 10))
 
     // 3. kNN recompute-id set, materialized (the production path) and
     //    lazy (the PlanSpec contract)

@@ -953,57 +953,62 @@ object Similarity {
     }
   }
 
-  /** Tombstone vector ids in a stored IVF layout — the DELETE half of
-    * index maintenance (the CDC loop's d15 for vectors). O(|ids|)
-    * append into the `_tombstones` sidecar: nothing in the data dirs
-    * is touched, probes exclude the ids' rows at or below `uptoGen`
-    * (file-name generations — see [[withFileGen]]) immediately (a
-    * bounded anti-join — tombstones accumulate only between
-    * compactions), and the next [[compactIvfCorpus]] drops the rows
-    * physically and clears the sidecar. With the default `uptoGen =
-    * Long.MaxValue` (the epoch-wide delete p08 runs) an id tombstoned
-    * then re-appended is LIVE again only if the append lands after the
-    * compaction that applied the tombstone; a scoped delete (`uptoGen
-    * = e−1`, the p15 chain) leaves a re-append at generation `e` live
-    * immediately, no compaction in between. Deletion carries the SAME
-    * single-maintainer guarantee as compaction: a probe plan BUILT
-    * before the tombstone landed keeps its construction-time snapshot
-    * (Spark fixes the sidecar's file index when the plan is built),
-    * so tombstone visibility is defined by probe-construction order,
-    * never by execution order — the owning maintainer sequences
-    * delete → rebuild probes, exactly as st15's per-batch serving
-    * does. IncrementalIndexSpec pins the full interleaving: stale
-    * plans keep their snapshot, fresh probes hide the id immediately,
-    * a same-epoch re-append stays suppressed, and only a
-    * post-compaction append resurrects the id — nothing lost, nothing
-    * duplicated. Plain layout only; the PQ layout (codes + `_refine`)
-    * keeps its own lifecycle. */
+  /** Tombstone vector ids in a stored IVF or IVF-PQ layout — the
+    * DELETE half of index maintenance. O(|ids|) append into the
+    * `_tombstones` sidecar: no data file is touched, probes exclude the
+    * ids' rows at or below `uptoGen` immediately (a bounded anti-join
+    * against the plain layout's file-name generation, [[withFileGen]],
+    * or the PQ layout's `gen` column), and the next compaction drops
+    * the rows physically (PQ: codes AND `_refine`) and clears the
+    * sidecar. The default `uptoGen = Long.MaxValue` suppresses every
+    * generation until that compaction; the maintainers delete at
+    * `gen − 1` ([[applyIvfBatch]]). Visibility follows probe
+    * CONSTRUCTION order: a probe plan built before the tombstone landed
+    * keeps its snapshot (Spark fixes the sidecar's file index at plan
+    * time), so the single maintainer sequences delete → rebuild probes.
+    * IncrementalIndexSpec pins the interleaving: stale plans keep
+    * their snapshot, fresh probes hide the id, a same-epoch re-append
+    * stays suppressed, a post-compaction append resurrects it. */
   def deleteFromIvfCorpus(spark: SparkSession, out: String, ids: DataFrame,
                           uptoGen: Long = Long.MaxValue): Unit =
     graft.core.SegmentedIndex.tombstone(
       ids.select(col("vec_id").cast("long").as("vec_id")), out,
       keyCol = "vec_id", uptoGen = uptoGen)
 
+  /** Apply one CDC batch to a plain IVF layout at generation `gen`:
+    * tombstone the `dirty` ids (vec_id) at `upto_gen = gen − 1`, then
+    * append `adds` (vec_id, embedding, stored metadata) at `gen`, live
+    * at once. The family's one generation rule: p08 applies at 1 and
+    * then compacts, the p15 chain applies epoch `e` at `e`. A replay at
+    * the same `gen` lands on the same live rows. */
+  private[analytics] def applyIvfBatch(spark: SparkSession,
+                                       cents: Array[(Int, Array[Double])],
+                                       storedCols: Set[String], out: String,
+                                       gen: Long, dirty: DataFrame,
+                                       adds: DataFrame): Unit = {
+    deleteFromIvfCorpus(spark, out, dirty, uptoGen = gen - 1)
+    appendIvfCorpusWith(cents, out, adds, storedCols, gen)
+  }
+
   /** The plain IVF layout's rows with their GENERATION recovered from
     * the published file names (`gen<g>-part-…` — the
     * [[graft.core.SegmentedIndex.publishGeneration]] prefix; unprefixed
     * files — the initial build, or a compaction rewrite — read as
     * generation 0). The layout stores no generation COLUMN, so this
-    * `_metadata.file_path` derivation is the `genCol` the tombstones'
-    * `upto_gen` is compared against ([[liveIvf]]). Metadata column,
-    * not a UDF over paths — stays inside codegen. */
+    * file-name derivation is the `genCol` the tombstones' `upto_gen`
+    * is compared against ([[liveIvf]]). `input_file_name()`, not
+    * `_metadata.file_path`: naming `_metadata` adds a metadata column
+    * to the parquet scan's output and a struct projection above it. */
   private[analytics] def withFileGen(df: DataFrame): DataFrame = {
     // ANSI-safe: regexp_extract yields "" for unprefixed files, and
     // CaseWhen short-circuits before the cast ever sees it
-    val g = regexp_extract(col("_metadata.file_path"), "gen([0-9]+)-[^/]*$", 1)
+    val g = regexp_extract(input_file_name(), "gen([0-9]+)-[^/]*$", 1)
     df.withColumn("gen", when(g === "", lit(0L)).otherwise(g.cast("long")))
   }
 
   /** A scan of the plain IVF layout at `out` minus its tombstoned rows
-    * ([[graft.core.SegmentedIndex.live]] over [[withFileGen]]). With
-    * no tombstones the scan comes back as it was: once a plan names
-    * `_metadata`, Spark's file scan reads every metadata field even
-    * when a projection above drops the column. */
+    * ([[graft.core.SegmentedIndex.live]] over [[withFileGen]]); with
+    * no tombstones, the scan as it was. */
   private def liveIvf(spark: SparkSession, scan: DataFrame, out: String): DataFrame =
     if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(out, "_tombstones"))) scan
     else graft.core.SegmentedIndex.live(spark, withFileGen(scan), out,
@@ -1270,17 +1275,18 @@ object Similarity {
       rows.filter(_._1 == m).sortBy(_._2).map(_._3))
   }
 
-  /** Tombstone vector ids in a stored IVF-PQ layout — the PQ member
-    * of the index-maintenance family ([[deleteFromIvfCorpus]]'s
-    * semantics over the code layout): O(|ids|) sidecar append, probes
-    * exclude the ids at ADC time immediately, the next
-    * [[compactIvfPqCorpus]] drops code AND refine rows physically.
-    * Same single-maintainer + epoch discipline as the plain layout. */
-  def deleteFromIvfPqCorpus(spark: SparkSession, out: String, ids: DataFrame,
-                            uptoGen: Long = Long.MaxValue): Unit =
-    graft.core.SegmentedIndex.tombstone(
-      ids.select(col("vec_id").cast("long").as("vec_id")), out,
-      keyCol = "vec_id", uptoGen = uptoGen)
+  /** [[applyIvfBatch]] for a stored IVF-PQ layout (codes and `_refine`
+    * rows): p11 applies at 1 and then compacts, the p14 chain applies
+    * epoch `e` at `e`, st25 batch `b` at `b + 1`. None skips a side. */
+  private[analytics] def applyIvfPqBatch(spark: SparkSession,
+                                         cents: Array[(Int, Array[Double])],
+                                         books: Array[Array[Array[Double]]],
+                                         out: String, gen: Long,
+                                         dirty: Option[DataFrame],
+                                         adds: Option[DataFrame]): Unit = {
+    dirty.foreach(deleteFromIvfCorpus(spark, out, _, uptoGen = gen - 1))
+    adds.foreach(appendIvfPqCorpusWith(cents, books, out, _, gen))
+  }
 
   /** Append vectors to a stored IVF-PQ layout under its STORED
     * codebooks (no refit): assign cells, nibble-pack codes, append to
@@ -1404,7 +1410,7 @@ object Similarity {
       }: _*)
     }: _*)
     val (probes, probedCells) = localizedProbes(centroids, queries, nProbe, luts.as("luts"))
-    // tombstoned generations (deleteFromIvfPqCorpus) excluded at ADC
+    // tombstoned generations (deleteFromIvfCorpus) excluded at ADC
     // time — gen-scoped, so a same-epoch re-append at a higher gen is
     // probe-visible with no compaction in between
     val codeScan = graft.core.SegmentedIndex.live(spark,

@@ -736,11 +736,13 @@ object StreamingQueries {
 
   /** st23 gate: STREAMING inverted-index maintenance — p10's loop
     * consumed from a CDC change FEED instead of a nightly diff: each
-    * microbatch of change rows applies a GENERATION-SCOPED tombstone
-    * (covers generations below this batch's — a re-append in the same
-    * batch is live immediately, the Lucene per-segment-delete move),
-    * appends the diff's re-tokenized postings at the batch's
-    * generation, and folds the per-term df deltas — all inside
+    * microbatch of change rows is one [[TextOps.applyPostingsBatch]] at
+    * generation `batchId + 1` (p10 applies its one batch at 1): a
+    * GENERATION-SCOPED tombstone (covers generations below this
+    * batch's — a re-append in the same batch is live immediately, the
+    * Lucene per-segment-delete move), the diff's re-tokenized postings
+    * appended at the batch's generation, and the per-term df deltas
+    * folded — all inside
     * foreachBatch (single-maintainer, the st13/st22 discipline). NO
     * per-batch compaction: per-batch work is diff-bounded (tombstone
     * write + diff tokenize + |vocab| sidecar merge), never a corpus
@@ -761,21 +763,6 @@ object StreamingQueries {
         .localCheckpoint(true)
     }
 
-  /** st25 gate: STREAMING IVF-PQ index maintenance — p11's epoch loop
-    * consumed from a CDC change FEED (st23's shape for the PQ-coded
-    * vector tier): each microbatch GENERATION-SCOPED-tombstones its
-    * deleted+changed ids (covers gens below this batch's, so the
-    * batch's own re-append is live immediately — the postings move,
-    * now on the PQ layout), re-embeds ONLY the batch's changed+added
-    * docs (content-derived stub at the PQ dimension) and appends codes
-    * + refine rows at the batch's generation under the STORED
-    * codebooks (collected once per stream). NO per-batch compaction —
-    * per-batch work is diff-bounded; ONE end-of-stream compaction
-    * applies the tombstones physically to codes AND refine. Per-doc
-    * change rows are independent and ops commute across docs, so the
-    * final index is slicing-invariant: the probe must equal p11's
-    * batch loop exactly (Verify: `st25_eq_p11`, and transitively the
-    * full PQ rebuild). Rows-only (k-means + PQ). */
   /** st25's staged change feed (the st23 staging rule — once per
     * (JVM, dataset), read in place). */
   private def st25FeedDir(spark: SparkSession, dir: String): String =
@@ -787,6 +774,21 @@ object StreamingQueries {
         .repartition(3).write.parquet(p)
     }
 
+  /** st25 gate: STREAMING IVF-PQ index maintenance — p11's epoch loop
+    * consumed from a CDC change FEED (st23's shape for the PQ-coded
+    * vector tier): each microbatch is one [[Similarity.applyIvfPqBatch]]
+    * at generation `batchId + 1` — GENERATION-SCOPED tombstones for its
+    * deleted+changed ids (covers gens below this batch's, so the
+    * batch's own re-append is live immediately), then ONLY the batch's
+    * changed+added docs re-embedded (content-derived stub at the PQ
+    * dimension) and appended as codes + refine rows under the STORED
+    * codebooks (collected once per stream). NO per-batch compaction —
+    * per-batch work is diff-bounded; ONE end-of-stream compaction
+    * applies the tombstones physically to codes AND refine. Per-doc
+    * change rows are independent and ops commute across docs, so the
+    * final index is slicing-invariant: the probe must equal p11's
+    * batch loop exactly (Verify: `st25_eq_p11`, and transitively the
+    * full PQ rebuild). Rows-only (k-means + PQ). */
   def st25StreamPqMaintain(spark: SparkSession, dir: String): DataFrame =
     graft.core.TempDirs.scoped("graft-st25") { tmp =>
     val docs = Tables.documents(spark, dir)
@@ -809,12 +811,9 @@ object StreamingQueries {
     EventStream.driveBatches(spark,
         EventStream.readStagedFeed(_, feedSchema, feedDir)) { (batch, batchId) =>
       val bs = batch.sparkSession
-      // generation from the replay-stable batchId (gen 0 is the
-      // base layout): a re-delivered batch re-tombstones
-      // idempotently (max-fold), and the code/refine appends are
-      // per-generation OVERWRITES (gen-named files), so replay
-      // replaces its own prior attempt — idempotent up to the
-      // end-of-stream compaction, after which no redelivery exists
+      // gen 0 is the base layout; batchId is replay-stable, and a
+      // redelivered batch re-applied at its own generation lands on the
+      // same live rows until the end-of-stream compaction
       val g = batchId + 1
       // ONE job reads the one-file microbatch driver-locally; the
       // branch decisions fold over the collected rows (no count job)
@@ -825,21 +824,20 @@ object StreamingQueries {
         batch.select(col("doc_id"), col("change_type"), col("text")))
       val byType = graft.core.Bounded.countsBy(batchL, "change_type")
       def n(t: String): Long = byType.getOrElse(t, 0L)
-      if (n("deleted") + n("changed") > 0)
-        Similarity.deleteFromIvfPqCorpus(bs, out,
-          batchL.df.filter(col("change_type").isin("deleted", "changed"))
-            .select(col("doc_id").as("vec_id")), uptoGen = g - 1)
-      if (n("changed") + n("added") > 0)
-        // the embed + cell-assign + PQ-encode input is the one HEAVY
-        // per-row transform in this loop: hand it the re-parallelized
-        // rows (Bounded.parallel — no shuffle, no extra job), not the
-        // LocalRelation, or ConvertToLocalRelation folds the embed
-        // driver-side single-threaded with interpreted expressions —
-        // the r17 verdict's st25 ×2–2.9 regression at 32 cores
-        Similarity.appendIvfPqCorpusWith(cents, books, out,
-          Pipeline.p11Vectors(graft.core.Bounded.parallel(batchL)
+      // the embed + cell-assign + PQ-encode input is the one HEAVY
+      // per-row transform in this loop: hand it the re-parallelized
+      // rows (Bounded.parallel — no shuffle, no extra job), not the
+      // LocalRelation, or ConvertToLocalRelation folds the embed
+      // driver-side single-threaded with interpreted expressions —
+      // the r17 verdict's st25 ×2–2.9 regression at 32 cores
+      Similarity.applyIvfPqBatch(bs, cents, books, out, gen = g,
+        dirty = if (n("deleted") + n("changed") == 0) None
+          else Some(batchL.df.filter(col("change_type").isin("deleted", "changed"))
+            .select(col("doc_id").as("vec_id"))),
+        adds = if (n("changed") + n("added") == 0) None
+          else Some(Pipeline.p11Vectors(graft.core.Bounded.parallel(batchL)
             .filter(col("change_type").isin("changed", "added"))
-            .select(col("doc_id"), col("text"))), gen = g)
+            .select(col("doc_id"), col("text")))))
       batchL.release()
     }
     Similarity.compactIvfPqCorpus(spark, out)
@@ -1081,11 +1079,7 @@ object StreamingQueries {
     EventStream.driveBatches(spark,
         EventStream.readStagedFeed(_, feedSchema, feedDir)) { (batch, batchId) =>
       val bs = batch.sparkSession
-      // replay-stable generation (st25's convention); tombstones
-      // max-fold idempotently and the postings append is a
-      // per-generation overwrite (gen-named files), so a
-      // redelivered batch lands on the same bytes
-      val g = batchId + 1
+      val g = batchId + 1 // gen 0 is the base layout; batchId is replay-stable
       // ONE job reads the one-file microbatch driver-locally; branch
       // decisions fold over the collected rows (no count job) and
       // both branch frames are filters over the LocalRelation — no
@@ -1101,31 +1095,22 @@ object StreamingQueries {
       // the tokenize pass is the loop's heavy per-row transform: it
       // reads the RE-PARALLELIZED rows (Bounded.parallel — no
       // shuffle, no extra job) so the explode+agg keeps codegen and
-      // every core, and it runs ONCE per batch over both images —
-      // maintainPostingsBatch derives the append segment AND both
-      // df-sidecar deltas from that one pass (the r17 shape
-      // tokenized the diff three times per batch). The tombstone
-      // write stays on the LocalRelation slice (driver-side dedupe,
-      // zero-job broadcast) — the r17 verdict's item-1 split.
+      // every core, and it runs ONCE per batch over both images. The
+      // tombstone write stays on the LocalRelation slice (driver-side
+      // dedupe, zero-job broadcast) — the r17 verdict's item-1 split.
       val batchPar = graft.core.Bounded.parallel(batchL)
       val nRm = nOf("deleted") + nOf("changed")
       val nAdd = nOf("changed") + nOf("added")
-      if (nRm > 0)
-        // covers every generation below this batch's: the base
-        // rows and nothing a later batch appends
-        TextOps.deleteFromPostings(bs, out, batchL.df
+      TextOps.applyPostingsBatch(bs, out, gen = g,
+        dirty = if (nRm == 0) None else Some(batchL.df
           .filter(col("change_type").isin("deleted", "changed"))
-          .select("doc_id"),
-          uptoGen = g - 1)
-      if (nRm + nAdd > 0)
-        TextOps.maintainPostingsBatch(bs, out,
-          addDocs = if (nAdd == 0) None else Some(batchPar
-            .filter(col("change_type").isin("changed", "added"))
-            .select(col("doc_id"), col("text"))),
-          rmDocs = if (nRm == 0) None else Some(batchPar
-            .filter(col("change_type").isin("deleted", "changed"))
-            .select(col("doc_id"), col("old_text").as("text"))),
-          gen = g)
+          .select("doc_id")),
+        addDocs = if (nAdd == 0) None else Some(batchPar
+          .filter(col("change_type").isin("changed", "added"))
+          .select(col("doc_id"), col("text"))),
+        rmDocs = if (nRm == 0) None else Some(batchPar
+          .filter(col("change_type").isin("deleted", "changed"))
+          .select(col("doc_id"), col("old_text").as("text"))))
       batchL.release()
     }
     // the single end-of-stream compaction: apply the accumulated

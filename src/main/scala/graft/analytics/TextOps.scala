@@ -411,24 +411,36 @@ object TextOps {
         .coalesce(1).write.mode("overwrite").parquet(tmp + "/_df")
     }
 
-  /** One microbatch's postings APPEND + `_df` sidecar delta in ONE
-    * tokenize pass (st23's per-batch body). The r17 shape tokenized
-    * the diff three times per batch — once for the append, once for
-    * the added-side delta, once for the removed-side delta — and paid
-    * an aggregation exchange in each plan plus the delta union's. Here
-    * ONE side-tagged tokenize+aggregate runs cluster-side (over the
-    * caller's re-parallelized frames) and lands driver-local via
-    * Bounded.localize; the append segment is then a single-stage
-    * single-task write of the add-side rows (same gen-named files,
-    * one file per generation) and both df deltas fold driver-side
-    * into one LocalRelation delta segment — identical rows to
-    * [[updateDfSidecar]]'s union-with-sign fold. 6→4 jobs per batch,
-    * zero redundant tokenizes. Over-cap batches fall back to exactly
-    * the r17 plans. */
-  private[analytics] def maintainPostingsBatch(spark: SparkSession, out: String,
-                                               addDocs: Option[DataFrame],
-                                               rmDocs: Option[DataFrame],
-                                               gen: Long): Unit = {
+  /** Apply one CDC batch to a postings layout at generation `gen`:
+    * tombstone the `dirty` doc ids at `upto_gen = gen − 1`, append
+    * `addDocs`' postings at `gen` (live at once), and land the per-term
+    * df delta of `addDocs` against `rmDocs` (the dirty docs'
+    * BEFORE-image text) as the `gen` delta segment. None skips a side.
+    * The family's one generation rule: p10 applies at 1 and then
+    * compacts, the p13 chain applies epoch `e` at `e`, st23 batch `b`
+    * at `b + 1`. A replay at the same `gen` lands on the same live rows.
+    * The tombstone reads the caller's `dirty` frame (a LocalRelation
+    * slice: driver-side dedupe, no job), the tokenize the text frames. */
+  private[analytics] def applyPostingsBatch(spark: SparkSession, out: String,
+                                            gen: Long, dirty: Option[DataFrame],
+                                            addDocs: Option[DataFrame],
+                                            rmDocs: Option[DataFrame]): Unit = {
+    dirty.foreach(deleteFromPostings(spark, out, _, uptoGen = gen - 1))
+    if (addDocs.isDefined || rmDocs.isDefined) appendBatch(spark, out, addDocs, rmDocs, gen)
+  }
+
+  /** [[applyPostingsBatch]]'s postings APPEND + `_df` sidecar delta in
+    * ONE tokenize pass: ONE side-tagged tokenize+aggregate runs
+    * cluster-side (over the caller's re-parallelized frames) and lands
+    * driver-local via Bounded.localize; the append segment is then a
+    * single-stage single-task write of the add-side rows (same
+    * gen-named files, one file per generation) and both df deltas fold
+    * driver-side into one LocalRelation delta segment — identical rows
+    * to [[updateDfSidecar]]'s union-with-sign fold. Over-cap batches
+    * fall back to separate cluster-side plans. */
+  private def appendBatch(spark: SparkSession, out: String,
+                          addDocs: Option[DataFrame], rmDocs: Option[DataFrame],
+                          gen: Long): Unit = {
     def sided(df: DataFrame, side: String) =
       df.select(col("doc_id"), explode(tokens).as("tok"))
         .filter(col("tok") =!= "")
@@ -471,20 +483,16 @@ object TextOps {
         spark.createDataFrame(deltaRows, dfDeltaSchema).coalesce(1),
         out + "/_df_deltas", gen)
     } else {
-      // over-cap: the r17 shape — separate cluster-side plans
+      // over-cap: separate cluster-side plans
       toksL.release()
       addDocs.foreach(d => appendPostings(d, out, gen))
       val removed = rmDocs.map(d =>
         postingsOf(d).groupBy("term").agg(count(lit(1)).as("n")))
       val added = addDocs.map(d =>
         postingsOf(d).groupBy("term").agg(count(lit(1)).as("n")))
-      (removed, added) match {
-        case (None, None) => ()
-        case (r, a) =>
-          val any = r.orElse(a).get
-          updateDfSidecar(spark, out,
-            r.getOrElse(any.limit(0)), a.getOrElse(any.limit(0)), gen = gen)
-      }
+      val any = removed.orElse(added).get
+      updateDfSidecar(spark, out,
+        removed.getOrElse(any.limit(0)), added.getOrElse(any.limit(0)), gen = gen)
     }
   }
 

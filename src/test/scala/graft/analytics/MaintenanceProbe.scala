@@ -113,7 +113,7 @@ object MaintenanceProbe {
         out, k = 16, iters = 10) // untimed: the build + both fits
       val diff = Tables.embeddings(spark, dir).filter(col("vec_id") < DiffN)
       val t0 = System.nanoTime()
-      Similarity.deleteFromIvfPqCorpus(spark, out,
+      Similarity.deleteFromIvfCorpus(spark, out,
         diff.select(col("vec_id")), uptoGen = 0L)
       Similarity.appendIvfPqCorpus(spark, out, diff, gen = 1L)
       val dt = (System.nanoTime() - t0) / 1e9

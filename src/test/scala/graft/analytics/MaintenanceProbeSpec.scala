@@ -126,7 +126,7 @@ class MaintenanceProbeSpec extends AnyFunSuite {
         out, k = 16, iters = 10) // build + both fits: excluded
       val diff = Tables.embeddings(spark, d).filter(col("vec_id") < DiffN)
       written(out) {
-        Similarity.deleteFromIvfPqCorpus(spark, out,
+        Similarity.deleteFromIvfCorpus(spark, out,
           diff.select(col("vec_id")), uptoGen = 0L)
         Similarity.appendIvfPqCorpus(spark, out, diff, gen = 1L)
       }

@@ -43,7 +43,7 @@ class PqMaintenanceSpec extends AnyFunSuite {
     val filesBefore = dataFiles()
 
     import spark.implicits._
-    Similarity.deleteFromIvfPqCorpus(spark, out, Seq(victim).toDF("vec_id"))
+    Similarity.deleteFromIvfCorpus(spark, out, Seq(victim).toDF("vec_id"))
     val after = Similarity.ivfPqStoredTopK(spark, out, queries, k = 10)
     assert(after.filter(col("neighbor_id") === victim).isEmpty,
       s"tombstoned id $victim still surfaces in ADC probes")
@@ -89,7 +89,7 @@ class PqMaintenanceSpec extends AnyFunSuite {
       .filter(col("rnk") === 1).select("neighbor_id").first().getLong(0)
     // the streaming-batch move: tombstone covering gen 0, re-append at
     // gen 1 in the same epoch — no compaction in between
-    Similarity.deleteFromIvfPqCorpus(spark, out, Seq(victim).toDF("vec_id"),
+    Similarity.deleteFromIvfCorpus(spark, out, Seq(victim).toDF("vec_id"),
       uptoGen = 0L)
     Similarity.appendIvfPqCorpus(spark, out,
       Tables.embeddings(spark, dir).filter(col("vec_id") === victim), gen = 1L)

@@ -122,4 +122,59 @@ class ReplayIdempotencySpec extends AnyFunSuite {
     assert(spark2.read.parquet(s"$out/_refine").count() == refine1,
       "replayed PQ append duplicated refine rows")
   }
+
+  test("each family's CDC-batch apply, replayed at the same generation, lands on the same live rows") {
+    val dir = "/root/testdata/sf0.001"
+    val root = TempDirs.create("graft-replay-apply")
+    def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    // apply, apply again at the same generation: the replay must change
+    // nothing, and the first apply must have changed something
+    def replay(family: String, live: () => Seq[String])(apply: => Unit): Unit = {
+      val before = live()
+      apply
+      val once = live()
+      assert(once != before, s"$family: the batch changed no live row")
+      apply
+      assert(live() == once, s"$family: the replayed batch changed the live rows")
+    }
+    // every family: the two lowest ids are dirty, the lowest re-added
+    // with new content, and id -1 added
+    val docs = Tables.documents(spark, dir).select("doc_id", "text")
+      .orderBy("doc_id").limit(32).as[(Long, String)].collect().toSeq
+    val pOut = root.resolve("postings").toString
+    TextOps.writePostingsLayout(spark, docs.toDF("doc_id", "text"), pOut)
+    val pIds = docs.map(_._1).take(2)
+    val textAdds = Seq((pIds(0), "alpha beta"), (-1L, "beta gamma")).toDF("doc_id", "text")
+    replay("postings", () => sorted(TextOps.postingsLive(spark, pOut)) ++
+        sorted(TextOps.readDfSidecar(spark, pOut))) {
+      TextOps.applyPostingsBatch(spark, pOut, gen = 1L,
+        dirty = Some(pIds.toDF("doc_id")), addDocs = Some(textAdds),
+        rmDocs = Some(docs.filter(d => pIds.contains(d._1)).toDF("doc_id", "text")))
+    }
+
+    val vOut = Pipeline.copyBaseline(Pipeline.p08BaselineLayout(spark, dir), root.resolve("ivf"))
+    val stored = spark.read.parquet(vOut).select("vec_id", "v").as[(Long, Seq[Double])]
+      .collect().sortBy(_._1).take(2)
+    val vecAdds = Seq((stored(0)._1, stored(0)._2.map(-_)), (-1L, stored(1)._2))
+      .toDF("vec_id", "embedding")
+    replay("ivf", () => sorted(SegmentedIndex.live(spark,
+        Similarity.withFileGen(spark.read.parquet(vOut)), vOut, "vec_id", "gen"))) {
+      Similarity.applyIvfBatch(spark, Similarity.readIvfCodebook(spark, vOut),
+        spark.read.parquet(vOut).columns.toSet, vOut, gen = 1L,
+        dirty = stored.map(_._1).toSeq.toDF("vec_id"), adds = vecAdds)
+    }
+
+    val qOut = Pipeline.copyBaseline(Pipeline.p11BaselineLayout(spark, dir), root.resolve("pq"))
+    val (cents, books) = Pipeline.p11Codebooks(spark, dir)
+    val qIds = spark.read.parquet(qOut).select("vec_id").as[Long].collect().sorted.take(2)
+    def qLive(path: String) =
+      sorted(SegmentedIndex.live(spark, spark.read.parquet(path), qOut, "vec_id", "gen"))
+    replay("ivf-pq", () => qLive(qOut) ++ qLive(s"$qOut/_refine")) {
+      Similarity.applyIvfPqBatch(spark, cents, books, qOut, gen = 1L,
+        dirty = Some(qIds.toSeq.toDF("vec_id")),
+        adds = Some(Pipeline.p11Vectors(textAdds.withColumn("doc_id",
+          when(col("doc_id") === pIds(0), qIds(0)).otherwise(col("doc_id"))))))
+    }
+  }
 }
