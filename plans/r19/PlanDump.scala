@@ -2,13 +2,16 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Dumps the optimized logical plans of TableStore point gets, an
-  * experiment delete and both rewrites, with expression IDs and the
-  * store path normalized, so two builds' dumps diff cleanly (only the
-  * delete's `put_time` literal differs run to run). Compile against a
-  * build's main classes and the Spark jars, then run
+/** Dumps the optimized logical plans of TableStore's Spark
+  * operations, the two rewrites, with expression IDs and the store path
+  * normalized, so two builds' dumps diff cleanly. Point gets run in
+  * the driver and plan nothing (their steps stay, to show it);
+  * `rmExperimentData` runs in the driver too and has no step. Compile
+  * against a build's main
+  * classes and the Spark jars, then run
   * `PlanDump <empty store dir> <output file>`; made
-  * `table_store_point_get_{before,after}.txt` here. */
+  * `table_store_point_get_{before,after}.txt` here (an earlier build,
+  * whose gets and experiment delete still planned on Spark). */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
@@ -35,7 +38,6 @@ object PlanDump {
     step("getMenu point get")(println(db.getMenu("p", "e2")))
     step("getMap point get (generation key time)")(println(db.getMap("p", "e1", "n", "o", "l", "m", "mv", "t")))
     step("getReportImage miss")(try db.getReportImage("p", "e1", "x.png") catch { case _: Exception => () })
-    step("rmExperimentData(p, e3)")(db.rmExperimentData("p", "e3"))
     step("compact(menu)")(db.compact("menu"))
     step("compactRetain(map, marker)")(db.compactRetain("map", marker))
     val out = plans.toArray.mkString("\n")

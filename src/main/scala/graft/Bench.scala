@@ -145,9 +145,8 @@ object Bench {
         .count()
     } catch { case _: Throwable => () }
     // store machinery: one TableStore put/flush/get/list round trip in
-    // a temp dir (parquet append write, driver-side parquet point read,
-    // newest-row window listing) — the classes and codegen the av*
-    // store gates hit first otherwise
+    // a temp dir (driver-side parquet write, point read and listing) —
+    // the parquet-mr classes the av* store gates hit first otherwise
     try {
       val dir = graft.core.TempDirs.create("graft-bench-warm")
       val db = new graft.store.TableStore(spark, dir.toString)

@@ -535,7 +535,7 @@ object Pipeline {
     val diffL = graft.core.Bounded.localize(diff)
     // yesterday's index: a COPY of the memoized baseline
     val out = copyBaseline(p08BaselineLayout(spark, dir), root.resolve("index"))
-    val cents = Similarity.readIvfCodebook(spark, out)
+    val cents = Similarity.readIvfCodebook(out)
     Similarity.applyIvfBatch(spark, cents, spark.read.parquet(out).columns.toSet, out,
       gen = 1L,
       dirty = diffL.df.filter(col("change_type").isin("deleted", "changed"))
@@ -560,7 +560,7 @@ object Pipeline {
   private[graft] def p08FullRebuildProbe(spark: SparkSession, dir: String): DataFrame =
     graft.core.TempDirs.scoped("graft-p08-rebuild") { root =>
     val docs = Tables.documents(spark, dir)
-    val cents = Similarity.readIvfCodebook(spark, p08BaselineLayout(spark, dir))
+    val cents = Similarity.readIvfCodebook(p08BaselineLayout(spark, dir))
     val out = root.resolve("index").toString
     Similarity.writeIvfLayoutWith(cents,
       p08Normalized(Dedup.cdcSnapshotBText(docs)), out)
@@ -962,8 +962,8 @@ object Pipeline {
     graft.core.TempDirs.scoped("graft-p14") { root =>
       val docs = Tables.documents(spark, dir)
       val out = copyBaseline(p11BaselineLayout(spark, dir), root.resolve("index"))
-      val cents = Similarity.readIvfCodebook(spark, out)
-      val books = Similarity.readPqCodebooks(spark, out)
+      val cents = Similarity.readIvfCodebook(out)
+      val books = Similarity.readPqCodebooks(out)
       // |queries|-bounded, consumed ~3× per probe call × 3 epochs —
       // materialize the embed once per invocation, DRIVER-LOCAL so
       // each probe's broadcast of it builds with zero jobs
@@ -1025,7 +1025,7 @@ object Pipeline {
     graft.core.TempDirs.scoped("graft-p15") { root =>
       val docs = Tables.documents(spark, dir)
       val out = copyBaseline(p08BaselineLayout(spark, dir), root.resolve("index"))
-      val cents = Similarity.readIvfCodebook(spark, out)
+      val cents = Similarity.readIvfCodebook(out)
       val storedCols = spark.read.parquet(out).columns.toSet
       // |queries|-bounded, consumed twice per probe call × 3 epochs —
       // materialize the embed once per invocation (the p14

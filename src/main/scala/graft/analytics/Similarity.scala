@@ -909,7 +909,7 @@ object Similarity {
     * loop, or take the advisory lock
     * ([[graft.lock.AdvisoryLock]]) around both. */
   def appendIvfCorpus(spark: SparkSession, out: String, vecs: DataFrame): Unit =
-    appendIvfCorpusWith(readIvfCodebook(spark, out), out, vecs,
+    appendIvfCorpusWith(readIvfCodebook(out), out, vecs,
       spark.read.parquet(out).columns.toSet)
 
   /** [[appendIvfCorpus]] with a pre-collected codebook and stored
@@ -1032,11 +1032,15 @@ object Similarity {
       graft.core.SegmentedIndex.footerRowCountOf(java.nio.file.Paths.get(out)))
   }
 
-  /** The codebook persisted by [[writeIvfCorpus]] — K rows, one
-    * driver-side collect. */
-  def readIvfCodebook(spark: SparkSession, out: String): Array[(Int, Array[Double])] =
-    spark.read.parquet(s"$out/_codebook")
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
+  /** The codebook persisted by [[writeIvfCorpus]] — K rows, read in
+    * the driver with no Spark job. */
+  def readIvfCodebook(out: String): Array[(Int, Array[Double])] = {
+    val rows = Array.newBuilder[(Int, Array[Double])]
+    graft.core.ParquetRows.foreach(java.nio.file.Paths.get(out, "_codebook")) { g =>
+      rows += ((g.getInteger("cell", 0), graft.core.ParquetRows.doubles(g, "centroid")))
+    }
+    rows.result().sortBy(_._1)
+  }
 
   /** Probe a [[writeIvfCorpus]] layout: collect the query set's probed
     * cells first (≤ K distinct values — driver-bounded however large
@@ -1051,7 +1055,7 @@ object Similarity {
   def ivfStoredTopK(spark: SparkSession, out: String,
                     queries: DataFrame, k: Int, nProbe: Int = 6,
                     where: Option[org.apache.spark.sql.Column] = None): DataFrame =
-    ivfStoredTopKWith(readIvfCodebook(spark, out), spark, out, queries, k, nProbe, where)
+    ivfStoredTopKWith(readIvfCodebook(out), spark, out, queries, k, nProbe, where)
 
   /** [[ivfStoredTopK]] with a pre-collected codebook — the per-batch
     * entry a query-serving stream uses so the K-row codebook read
@@ -1267,12 +1271,15 @@ object Similarity {
       .reduce(_.bitwiseOR(_)).as("code")
 
   /** The per-subspace PQ codebooks persisted by [[writeIvfPqLayout]] —
-    * M×Ks rows, one driver-side collect. */
-  def readPqCodebooks(spark: SparkSession, out: String): Array[Array[Array[Double]]] = {
-    val rows = spark.read.parquet(s"$out/_pq_codebooks")
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+    * M×Ks rows, read in the driver with no Spark job. */
+  def readPqCodebooks(out: String): Array[Array[Array[Double]]] = {
+    val rows = Array.newBuilder[(Int, Int, Array[Double])]
+    graft.core.ParquetRows.foreach(java.nio.file.Paths.get(out, "_pq_codebooks")) { g =>
+      rows += ((g.getInteger("m", 0), g.getInteger("cell", 0), graft.core.ParquetRows.doubles(g, "centroid")))
+    }
+    val all = rows.result()
     Array.tabulate(PqM)(m =>
-      rows.filter(_._1 == m).sortBy(_._2).map(_._3))
+      all.filter(_._1 == m).sortBy(_._2).map(_._3))
   }
 
   /** [[applyIvfBatch]] for a stored IVF-PQ layout (codes and `_refine`
@@ -1300,8 +1307,8 @@ object Similarity {
     * around both. */
   def appendIvfPqCorpus(spark: SparkSession, out: String, vecs: DataFrame,
                         gen: Long = -1L): Unit =
-    appendIvfPqCorpusWith(readIvfCodebook(spark, out),
-      readPqCodebooks(spark, out), out, vecs, gen)
+    appendIvfPqCorpusWith(readIvfCodebook(out),
+      readPqCodebooks(out), out, vecs, gen)
 
   /** [[appendIvfPqCorpus]] with pre-collected codebooks — the
     * per-batch entry for a streaming maintainer (st13's *With rule:
@@ -1389,7 +1396,7 @@ object Similarity {
   def ivfPqStoredTopK(spark: SparkSession, out: String,
                       queries: DataFrame, k: Int,
                       nProbe: Int = 8, refine: Int = 16): DataFrame =
-    ivfPqStoredTopKWith(readIvfCodebook(spark, out), readPqCodebooks(spark, out),
+    ivfPqStoredTopKWith(readIvfCodebook(out), readPqCodebooks(out),
       spark, out, queries, k, nProbe, refine)
 
   /** [[ivfPqStoredTopK]] with pre-collected codebooks — the *With rule

@@ -101,8 +101,9 @@ object StoreQueries {
       .toDF("op", "result").orderBy("op")
     }
 
-  /** Distributed bulk import (one Spark job per asset table) with
-    * cardinality verification; returns the imported catalog. */
+  /** Bulk import (in the driver, one parquet file per table partition
+    * directory, no Spark job) with cardinality verification; returns
+    * the imported catalog. */
   def av04BulkImport(spark: SparkSession, dir: String): DataFrame =
     graft.core.TempDirs.scoped("graft-storeq-av04") { tmp =>
     import spark.implicits._

@@ -261,7 +261,7 @@ object StreamingQueries {
       val all = Dedup.normalizedVectors(spark, dir)
       Similarity.writeIvfLayout(all.filter(col("vec_id") % 2 === 0), base,
         k = 16, iters = 10)
-      val cents = Similarity.readIvfCodebook(spark, base)
+      val cents = Similarity.readIvfCodebook(base)
       // cents is a collected array — nothing below reads the scoped
       // layout, but the aggregate is materialized before return anyway
       all.withColumn("cell", Similarity.cellOf(cents, col("v"), col("norm")))
@@ -433,7 +433,7 @@ object StreamingQueries {
                                         maxFilesPerTrigger: Option[Int],
                                         compactEvery: Int = 8): Unit = {
     val s = EventStream.boundedDriveSession(spark)
-    val cents = Similarity.readIvfCodebook(s, out)
+    val cents = Similarity.readIvfCodebook(out)
     val storedCols = s.read.parquet(out).columns.toSet
     val nBatches = new java.util.concurrent.atomic.AtomicLong(0L)
     EventStream.driveBatches(spark, EventStream.readEmbeddingsStream(_, streamDir,
@@ -485,7 +485,7 @@ object StreamingQueries {
                                        k: Int = 10, nProbe: Int = 6): Unit = {
     import graft.functions.VectorFunctions._
     val s = EventStream.boundedDriveSession(spark)
-    val cents = Similarity.readIvfCodebook(s, out)
+    val cents = Similarity.readIvfCodebook(out)
     EventStream.driveBatches(spark, EventStream.readEmbeddingsStream(_, streamDir,
         maxFilesPerTrigger).filter(col("vec_id") % 100 === 0)) { (batch, _) =>
       // ONE collect job materializes the batch's (bounded) query
@@ -806,8 +806,8 @@ object StreamingQueries {
       .add("doc_id", org.apache.spark.sql.types.LongType)
       .add("change_type", org.apache.spark.sql.types.StringType)
       .add("text", org.apache.spark.sql.types.StringType)
-    val cents = Similarity.readIvfCodebook(s, out)
-    val books = Similarity.readPqCodebooks(s, out)
+    val cents = Similarity.readIvfCodebook(out)
+    val books = Similarity.readPqCodebooks(out)
     EventStream.driveBatches(spark,
         EventStream.readStagedFeed(_, feedSchema, feedDir)) { (batch, batchId) =>
       val bs = batch.sparkSession

@@ -1,6 +1,6 @@
 package graft.core
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 import scala.util.Using
@@ -10,41 +10,91 @@ import org.apache.parquet.example.data.Group
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.conf.{HadoopParquetConfiguration, ParquetConfiguration}
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter, ParquetReader, ParquetWriter}
+import org.apache.parquet.hadoop.api.{InitContext, ReadSupport, WriteSupport}
 import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.InputFile
-import org.apache.parquet.schema.MessageType
+import org.apache.parquet.io.{InputFile, LocalOutputFile, OutputFile}
+import org.apache.parquet.io.api.{Binary, RecordConsumer}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.parquet.schema.Type.Repetition
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructType}
 
-/** DRIVER-SIDE parquet reads with parquet-mr: no Spark job, no
-  * planning, for reads whose size the caller bounds — a diff- or
+/** DRIVER-SIDE parquet reads and writes with parquet-mr: no Spark job,
+  * no planning, for data whose size the caller bounds — a diff- or
   * vocab-bounded index sidecar, one partition directory of a
-  * [[graft.store.TableStore]] table. A Spark job to read a few rows
-  * pays scheduler and listing overhead per call (≈0.09 s/job on the
-  * bench's cost fit), where reading them in the driver is
-  * microseconds. Single-maintainer layouts only — no writer races the
+  * [[graft.store.TableStore]] table. A Spark job to read or write a few
+  * rows pays scheduler and listing overhead per call (≈0.09 s/job on
+  * the bench's cost fit), where doing it in the driver is
+  * milliseconds. Single-maintainer layouts only — no writer races the
   * scan. */
 object ParquetRows {
 
-  /** The data files of a parquet directory tree. Partition directories
-    * (`gen=<g>`, `project=<p>`) are walked; underscore/dot-prefixed
-    * sidecars, markers and checksum files are skipped, as Spark's file
-    * listing skips them. Empty when `root` is not a directory. */
-  def dataFiles(root: Path): Seq[Path] = {
+  /** The files of a directory tree whose names `pick` accepts.
+    * Partition directories (`gen=<g>`, `project=<p>`) are walked;
+    * underscore/dot-prefixed directories are not. */
+  private def files(root: Path)(pick: String => Boolean): Seq[Path] = {
     val out = Seq.newBuilder[Path]
     def walk(dir: Path): Unit =
       Using.resource(Files.list(dir)) { s =>
         s.iterator().asScala.toList.foreach { p =>
           val n = p.getFileName.toString
-          if (!n.startsWith("_") && !n.startsWith(".")) {
-            if (Files.isDirectory(p)) walk(p)
-            else if (n.endsWith(".parquet")) out += p
-          }
+          if (Files.isDirectory(p)) { if (!n.startsWith("_") && !n.startsWith(".")) walk(p) }
+          else if (pick(n)) out += p
         }
       }
     if (Files.isDirectory(root)) walk(root)
     out.result()
+  }
+
+  /** The data files of a parquet directory tree. Underscore/dot-prefixed
+    * sidecars, markers, checksum files and [[write]]'s in-progress
+    * files are skipped, as Spark's file listing skips them. Empty when
+    * `root` is not a directory. */
+  def dataFiles(root: Path): Seq[Path] =
+    files(root)(n => !n.startsWith("_") && !n.startsWith(".") && n.endsWith(".parquet"))
+
+  /** In-progress files [[write]] left behind when its process died
+    * before the rename: `.part-<uuid>.snappy.parquet`. (Spark's
+    * checksum files, `.part-….crc`, are not among them.) */
+  def tempFiles(root: Path): Seq[Path] =
+    files(root)(n => n.startsWith(".part-") && n.endsWith(".parquet"))
+
+  /** The directory of one partition under `root`: `column=value` per
+    * partition column, escaped by Spark's own rule, a NULL or empty
+    * value going to Spark's default partition. */
+  def partitionDir(root: Path, columns: Seq[String], values: Seq[String]): Path =
+    columns.zip(values).foldLeft(root) { case (dir, (c, v)) =>
+      dir.resolve(ExternalCatalogUtils.getPartitionPathString(c, v))
+    }
+
+  /** Writes `rows` (of `schema`) as ONE new data file in `dir`, as a
+    * Spark write of one task would: the columns named in `leaveOut`
+    * (the partition columns, which `dir` carries) are left out of the
+    * file, the rest are SNAPPY-compressed with footer statistics. The
+    * file is written under a dot-prefixed name that no reader lists,
+    * then renamed into place atomically as `part-<uuid>.snappy.parquet`,
+    * so a reader sees all of its rows or none. Columns are strings,
+    * binaries or longs (the types [[graft.store.TableStore]] stores).
+    * Returns the new file. */
+  def write(dir: Path, schema: StructType, rows: Iterator[Row], conf: Configuration,
+            leaveOut: Set[String] = Set.empty): Path = {
+    Files.createDirectories(dir)
+    val name = s"part-${java.util.UUID.randomUUID()}.snappy.parquet"
+    val (tmp, dst) = (dir.resolve("." + name), dir.resolve(name))
+    try {
+      val w = new Writer(new LocalOutputFile(tmp), new RowWrite(schema, leaveOut))
+        .withConf(conf).withCompressionCodec(CompressionCodecName.SNAPPY)
+        .withWriteMode(ParquetFileWriter.Mode.CREATE).build()
+      try rows.foreach(w.write) finally w.close()
+      Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
+    } catch {
+      case e: Throwable => Files.deleteIfExists(tmp); throw e
+    }
   }
 
   /** Calls `f` on each row of the data files under `root`, streaming:
@@ -68,6 +118,14 @@ object ParquetRows {
       var g = r.read()
       while (g != null) { f(g); g = r.read() }
     } finally r.close()
+  }
+
+  /** A list-of-doubles field of a record, as Spark writes an
+    * `array<double>` (a LIST group of repeated one-field groups, in the
+    * standard and the legacy layout alike). */
+  def doubles(g: Group, field: String): Array[Double] = {
+    val list = g.getGroup(field, 0)
+    Array.tabulate(list.getFieldRepetitionCount(0))(i => list.getGroup(0, i).getDouble(0, 0))
   }
 
   /** The greatest value of the int64 `column` over `files`, from the
@@ -96,6 +154,61 @@ object ParquetRows {
 
   private def inputFile(p: Path, conf: Configuration) =
     HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p.toUri), conf)
+
+  /** A record writer over the caller's configuration (the reader's
+    * reason below holds for writers too). */
+  private final class Writer(file: OutputFile, support: RowWrite)
+      extends ParquetWriter.Builder[Row, Writer](file) {
+    override protected def self(): Writer = this
+    override protected def getWriteSupport(conf: Configuration): WriteSupport[Row] = support
+    override protected def getWriteSupport(conf: ParquetConfiguration): WriteSupport[Row] = support
+  }
+
+  /** Writes Spark rows of `schema`, less the `leaveOut` columns, in the
+    * parquet shape Spark's own writer gives them: strings as UTF-8
+    * binaries, non-nullable fields required, and the Spark schema of
+    * the written columns in the footer. */
+  private final class RowWrite(schema: StructType, leaveOut: Set[String]) extends WriteSupport[Row] {
+    private val fields = schema.fields.zipWithIndex.filterNot { case (f, _) => leaveOut(f.name) }
+    private val messageType = new MessageType("spark_schema", fields.toSeq.map[Type] { case (f, _) =>
+      val rep = if (f.nullable) Repetition.OPTIONAL else Repetition.REQUIRED
+      f.dataType match {
+        case StringType =>
+          Types.primitive(PrimitiveTypeName.BINARY, rep).as(LogicalTypeAnnotation.stringType()).named(f.name)
+        case BinaryType => Types.primitive(PrimitiveTypeName.BINARY, rep).named(f.name)
+        case LongType => Types.primitive(PrimitiveTypeName.INT64, rep).named(f.name)
+        case t => throw new IllegalArgumentException(s"ParquetRows.write: unsupported type $t of ${f.name}")
+      }
+    }.asJava)
+    private val footer = Map("org.apache.spark.sql.parquet.row.metadata" ->
+      StructType(fields.map(_._1)).json).asJava
+    private var out: RecordConsumer = _
+
+    override def init(conf: Configuration): WriteSupport.WriteContext =
+      new WriteSupport.WriteContext(messageType, footer)
+    override def init(conf: ParquetConfiguration): WriteSupport.WriteContext =
+      new WriteSupport.WriteContext(messageType, footer)
+    override def prepareForWrite(c: RecordConsumer): Unit = out = c
+
+    override def write(r: Row): Unit = {
+      out.startMessage()
+      var i = 0
+      while (i < fields.length) {
+        val (f, j) = fields(i)
+        if (!r.isNullAt(j)) {
+          out.startField(f.name, i)
+          f.dataType match {
+            case StringType => out.addBinary(Binary.fromString(r.getString(j)))
+            case BinaryType => out.addBinary(Binary.fromConstantByteArray(r.getAs[Array[Byte]](j)))
+            case _ => out.addLong(r.getLong(j))
+          }
+          out.endField(f.name, i)
+        }
+        i += 1
+      }
+      out.endMessage()
+    }
+  }
 
   /** A record reader over the caller's configuration. (The public
     * `ParquetReader.builder` first builds a fresh Hadoop

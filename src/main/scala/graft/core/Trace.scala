@@ -36,7 +36,7 @@ import org.apache.spark.sql.graftdiag.ExecutionShim
   * Spark work on other threads meanwhile unless it belongs to the
   * block. Every event between the two drains is charged to the block,
   * including jobs the block runs concurrently itself
-  * (`TableStore.eachTable`, futures inside a gate). `job_s` is the
+  * (`TableStore.concurrently`, futures inside a gate). `job_s` is the
   * union of those jobs' intervals, so concurrent jobs count once, and
   * `plan_s` is planning time outside any running job, so
   * `plan_s + job_s <= wall_s` and `gap_s` is the rest. A streaming

@@ -278,13 +278,19 @@ final class JsonFileStore(basedirRaw: String) extends AssetStore {
       case (Some(p), None) => basedir.resolve(ArgCodec.encodeFname(p))
       case _ => basedir
     }
-    if (!Files.exists(root)) return Seq.empty
-    val files = Files.walk(root).iterator().asScala
-      .filter(Files.isRegularFile(_)).toSeq.sortBy(_.toString)
-    files.flatMap(queryEntryForFile)
+    assetFiles(root).map(_._1)
       .filter(e => routeSet.contains(e.route))
       .filter(e => kwargs.forall { case (k, v) => e.meta.get(k).contains(v) })
   }
+
+  /** Every asset file under `root` with its reverse-parsed entry, in
+    * path order: the walk [[query]] lists and `CopyDb.bulkImport`
+    * imports. */
+  def assetFiles(root: Path = basedir): Seq[(QueryEntry, Path)] =
+    if (!Files.exists(root)) Seq.empty
+    else scala.util.Using.resource(Files.walk(root))(_.iterator().asScala
+        .filter(Files.isRegularFile(_)).toSeq).sortBy(_.toString)
+      .flatMap(p => queryEntryForFile(p).map(_ -> p))
 
   def rmByUri(uri: String): Unit = {
     getByUri(uri, AccessType.FilePath) match {

@@ -12,7 +12,7 @@ import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -31,12 +31,19 @@ import graft.lock.{AdvisoryLock, Locking}
   *  - Writes are an append log; readers resolve the newest row per key
   *    (the parquet equivalent of sqlite's `REPLACE INTO` + UNIQUE key,
   *    `sqlitedb.py:341-369,500-531`). Point puts buffer in memory and
-  *    flush as batch appends — one parquet file per flushed batch, not
-  *    per asset, so a bulk copy produces a handful of files per table.
-  *  - Point gets run in the driver with no Spark job: they read the
-  *    one `(project, experiment)` partition directory with parquet-mr,
-  *    key equalities pushed down (column pruning + row-group and page
-  *    min/max skipping), and resolve the newest row in process.
+  *    flush as batch appends — one parquet file per touched
+  *    `(project, experiment)` partition directory, not per asset.
+  *  - Every operation that names partitions runs in the driver with no
+  *    Spark job, as the reference's sqlite commit does: flush, `rmByUri`
+  *    tombstones, `rmExperimentData`, the [[query]]/`listAll` catalog,
+  *    point gets and the bulk import ([[importFiles]]). Writes go
+  *    through [[graft.core.ParquetRows.write]] (a temp file renamed into
+  *    place, laid out as Spark's partitioned write lays it out); reads
+  *    share one newest-per-key resolve ([[liveHits]]) over parquet-mr,
+  *    key equalities pushed down.
+  *  - Whole-table work stays on Spark: [[compact]], [[compactRetain]],
+  *    [[bulkAppend]] of a DataFrame, and the analytics bridges
+  *    [[liveFrame]], [[liveFrameAsOf]] and [[contentHashFrame]].
   *  - Tables sharing storage in the reference share here too:
   *    GLOB_STATS / HEATMAP / REGIONAL_STATS → one `glob_stats` table
   *    (`sqlitedb.py:184-249`).
@@ -62,6 +69,7 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
   /** The one Hadoop configuration of the store's driver-side reads. */
   private val hadoopConf = spark.sparkContext.hadoopConfiguration
   recoverInterruptedRewrites()
+  removeInterruptedWrites()
   seedSeq()
 
   def name: String = "table_store"
@@ -71,9 +79,10 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
 
   private def tablePath(t: Table) = s"$basedir/${t.name}"
 
-  // per-table write monitors: two appends to the SAME table must not
-  // write into one directory concurrently (shared _temporary dir), but
-  // different tables are independent paths and may write in parallel
+  // per-table write monitors: two Spark appends to the SAME table must
+  // not write into one directory concurrently (shared _temporary dir),
+  // but different tables are independent paths and may write in
+  // parallel. Driver-side writes add uniquely named files and need none.
   private val writeLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private def writeLock(t: Table): Object = writeLocks.computeIfAbsent(t.name, _ => new Object)
   // per-table flush monitors: a get flushes first and must wait for
@@ -81,10 +90,9 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
   // to see, but not for writes that hold no pending rows
   private val flushLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** The one physical write of table rows, partitioned on the table's
-    * leading key columns: point gets and rmExperimentData prune to one
-    * directory subtree at scale (`NULL` keys land in the default
-    * partition and read back as NULL). */
+  /** The one Spark write of table rows, partitioned on the table's
+    * leading key columns (`NULL` keys land in the default partition
+    * and read back as NULL), for the whole-table operations. */
   private def write(t: Table, rows: DataFrame, mode: SaveMode, path: String): Unit = {
     val w = rows.write.mode(mode)
     (if (t.partitionCols.nonEmpty) w.partitionBy(t.partitionCols: _*) else w).parquet(path)
@@ -93,26 +101,43 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
   private def append(t: Table, rows: DataFrame): Unit =
     writeLock(t).synchronized(write(t, rows, SaveMode.Append, tablePath(t)))
 
+  /** The one driver-side write: `rows` (full table rows) as one new
+    * file in the partition directory of `partValues`. */
+  private def writeDir(t: Table, partValues: Seq[String], rows: Iterator[Row]): Unit =
+    ParquetRows.write(ParquetRows.partitionDir(Paths.get(tablePath(t)), t.partitionCols, partValues),
+      t.schema, rows, hadoopConf, t.partitionCols.toSet)
+
+  /** The partition values of a key (`key` gives each key column's
+    * value or null), empty ones as NULL: both name Spark's default
+    * partition, so rows of one directory group together. */
+  private def partValuesOf(t: Table, key: String => String): Seq[String] =
+    t.partitionCols.map(c => Option(key(c)).filter(_.nonEmpty).orNull)
+
   private def flush(t: Table): Unit =
     flushLocks.computeIfAbsent(t.name, _ => new Object).synchronized {
-      // snapshot-and-clear under the store lock; the Spark write runs
-      // outside it so concurrent flushes of other tables proceed
+      // snapshot-and-clear under the store lock; the write runs outside
+      // it so concurrent flushes of other tables proceed
       val snapshot = synchronized {
         pending.get(t.name).filter(_.nonEmpty).map { rows =>
           val r = rows.toSeq; rows.clear(); r
         }
       }
       snapshot.foreach { rows =>
-        try append(t, spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), t.schema))
+        // one file per touched partition directory
+        def dirOf(r: Row) = partValuesOf(t, c => r.getString(t.keys.indexOf(c)))
+        val dirs = rows.groupBy(dirOf)
+        var unwritten = dirs.keySet
+        try dirs.foreach { case (vals, rs) => writeDir(t, vals, rs.iterator); unwritten -= vals }
         catch {
           case e: Throwable =>
-            // failed write must not lose the buffered rows: put the
-            // snapshot back at the FRONT (it predates anything appended
-            // meanwhile) so the next flush retries it
+            // a failed write must not lose the buffered rows: put the
+            // rows of the directories not written back at the FRONT
+            // (they predate anything appended meanwhile) so the next
+            // flush retries them
             synchronized {
               pending.getOrElseUpdate(
                 t.name, scala.collection.mutable.ArrayBuffer.empty)
-                .prependAll(rows)
+                .prependAll(rows.filter(r => unwritten(dirOf(r))))
             }
             throw e
         }
@@ -138,8 +163,9 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
         .withColumn("mtime", col("put_time"))
     }
 
-  /** The one newest-per-key resolve: each key's row with the greatest
-    * `(put_time, seq)`, dropped when that row is an rm tombstone. */
+  /** The newest-per-key resolve on Spark, for the whole-table
+    * operations: each key's row with the greatest `(put_time, seq)`,
+    * dropped when that row is an rm tombstone — [[liveHits]]'s rule. */
   private def newest(t: Table, rows: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(t.keys.map(col): _*).orderBy(col("put_time").desc, col("seq").desc)
@@ -195,43 +221,65 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
     * sqlite's per-generation tables, `sqlitedb.py:184-249`), and among
     * matches the row with the most exactly-matching keys and the
     * fewest non-null surplus keys wins (`sqlitedb.py:441-449`).
-    *
-    * Served in the driver, with no Spark job: parquet-mr streams the
-    * rows of `files` ([[getFiles]]) with the key equalities (and
-    * `seq < asOf`) pushed down, and only the newest `(put_time, seq)`
-    * row per matching full key is held — memory is bounded by the keys
-    * that match, not by the partition. Rows at or after `asOf` are
-    * dropped first, then a key whose newest row is an `rm` tombstone
-    * drops out, exactly as [[liveRows]] resolves. `payload` names the
-    * one payload column to read (`json` or `blob`); the other comes
-    * back null. */
+    * Served by [[liveHits]] over `files` ([[getFiles]]); `payload`
+    * names the one payload column to read (`json` or `blob`), the
+    * other comes back null. */
   private def lookupRow(t: Table, keyVals: Map[String, String], files: Seq[(Path, Map[String, String])],
                         payload: Option[String], asOf: Option[Long] = None): Option[Hit] = {
     val keys = t.keys
     val wc = t.generationKeys
     val provided = keyVals.view.filterKeys(keys.contains).toMap
-    val dataKeys = keys.filterNot(t.partitionCols.contains)
-    val pushed = (provided.filter { case (k, _) => dataKeys.contains(k) }.toSeq.map { case (k, v) =>
-      val c = FilterApi.binaryColumn(k)
-      val eq = FilterApi.eq(c, Binary.fromString(v))
-      if (wc.contains(k)) FilterApi.or(eq, FilterApi.eq(c, null: Binary)) else eq
-    } ++ asOf.map(s => FilterApi.lt(FilterApi.longColumn("seq"), java.lang.Long.valueOf(s))))
-      .reduceOption(FilterApi.and(_, _)).fold(FilterCompat.NOOP)(FilterCompat.get)
-    val columns = Some(dataKeys.toSet ++ Set("put_time", "seq", "op") ++ payload)
-    // rows are checked here too: the pushed filter is an optimization,
-    // and whether parquet-mr also drops single rows with it is a
-    // setting of the shared configuration, not of this reader.
     // (key index, requested value, whether a NULL matches it too)
     val wanted = keys.indices.flatMap(i => provided.get(keys(i)).map(v => (i, v, wc(keys(i)))))
+    val hits = liveHits(t, files, payload, pushdown(t, provided, wc, asOf), asOf) { kv =>
+      wanted.forall { case (i, v, orNull) => v == kv(i) || (orNull && kv(i) == null) }
+    }
+    val providedWc = keys.indices.filter(i => provided.contains(keys(i)) && wc.contains(keys(i)))
+    val surplus = keys.indices.filterNot(i => provided.contains(keys(i)))
+    hits.minByOption { h =>
+      (providedWc.count(h.keys(_) == null), surplus.count(h.keys(_) != null), -h.putTime, -h.seq)
+    }
+  }
+
+  /** The parquet-mr filter of a [[liveHits]] scan: each provided key
+    * that is a data column equal to its value (or NULL too, for the
+    * keys in `orNull`), and `seq < asOf`. Provided partition keys
+    * select directories instead ([[getFiles]]). */
+  private def pushdown(t: Table, provided: Map[String, String], orNull: Set[String],
+                       asOf: Option[Long]): FilterCompat.Filter =
+    (provided.filter { case (k, _) => !t.partitionCols.contains(k) }.toSeq.map { case (k, v) =>
+      val c = FilterApi.binaryColumn(k)
+      val eq = FilterApi.eq(c, Binary.fromString(v))
+      if (orNull(k)) FilterApi.or(eq, FilterApi.eq(c, null: Binary)) else eq
+    } ++ asOf.map(s => FilterApi.lt(FilterApi.longColumn("seq"), java.lang.Long.valueOf(s))))
+      .reduceOption(FilterApi.and(_, _)).fold(FilterCompat.NOOP)(FilterCompat.get)
+
+  /** The one driver-side newest-per-key resolve, shared by point gets,
+    * [[query]] and [[rmExperimentData]]: parquet-mr streams the rows of
+    * `files` with `filter` pushed down, rows at or after `asOf` and
+    * rows whose full key `keep` rejects are dropped, and only each
+    * full key's newest `(put_time, seq)` row is held — memory is
+    * bounded by the keys kept, not by the rows scanned. Keys whose
+    * newest row is an `rm` tombstone drop out, exactly as
+    * [[liveRows]] resolves on Spark. Rows carry the key columns,
+    * `put_time`, `seq`, `op` and the `payload` column if one is named.
+    * (`keep` is applied to every row: whether parquet-mr also drops
+    * single rows with the pushed filter is a setting of the shared
+    * configuration, not of this reader.) */
+  private def liveHits(t: Table, files: Seq[(Path, Map[String, String])], payload: Option[String],
+                       filter: FilterCompat.Filter, asOf: Option[Long])(
+                       keep: Seq[String] => Boolean): Iterable[Hit] = {
+    val keys = t.keys
+    val columns = Some(keys.filterNot(t.partitionCols.contains).toSet ++ Set("put_time", "seq", "op") ++ payload)
     val newestPerKey = scala.collection.mutable.HashMap.empty[Seq[String], Hit]
     getFilesOpened.addAndGet(files.size)
     for ((file, partVals) <- files)
-      graft.core.ParquetRows.readFile(file, hadoopConf, columns, pushed) { g =>
+      ParquetRows.readFile(file, hadoopConf, columns, filter) { g =>
         getRowsDecoded.incrementAndGet()
         val seq = g.getLong("seq", 0)
         if (asOf.forall(seq < _)) {
           val kv = keys.map(k => partVals.getOrElse(k, string(g, k)))
-          if (wanted.forall { case (i, v, orNull) => v == kv(i) || (orNull && kv(i) == null) }) {
+          if (keep(kv)) {
             val hit = Hit(kv, g.getLong("put_time", 0), seq, g)
             if (newestPerKey.get(kv).forall(h => hit.putTime > h.putTime ||
                 (hit.putTime == h.putTime && seq > h.seq)))
@@ -239,18 +287,14 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
           }
         }
       }
-    val providedWc = keys.indices.filter(i => provided.contains(keys(i)) && wc.contains(keys(i)))
-    val surplus = keys.indices.filterNot(i => provided.contains(keys(i)))
-    newestPerKey.values.filter(h => string(h.row, "op") == "put").minByOption { h =>
-      (providedWc.count(h.keys(_) == null), surplus.count(h.keys(_) != null), -h.putTime, -h.seq)
-    }
+    newestPerKey.values.filter(h => string(h.row, "op") == "put")
   }
 
   /** A get's cache validator: the sorted listing of the data files it
     * reads. It is exact because no write changes a file in place:
-    * flush, rmByUri, rmExperimentData and bulkAppend add new, uniquely
-    * named files, and compact/compactRetain swap in a whole new table
-    * directory. It sees the writes of other store instances on the
+    * flush, rmByUri, rmExperimentData, importFiles and bulkAppend add
+    * new, uniquely named files, and compact/compactRetain swap in a
+    * whole new table directory. It sees the writes of other store instances on the
     * same basedir too. */
   private def stampOf(t: Table, keyVals: Map[String, String],
                       files: Seq[(Path, Map[String, String])]): AssetStore.DocStamp =
@@ -262,8 +306,9 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
     Some(stampOf(t, keyVals, getFiles(t, keyVals)))
   }
 
-  /** What driver-side gets read: data files opened, and rows the
-    * parquet reader returned after its pushed-down filter. */
+  /** What driver-side reads ([[liveHits]]) read: data files opened,
+    * and rows the parquet reader returned after its pushed-down
+    * filter. */
   val getFilesOpened = new java.util.concurrent.atomic.AtomicLong(0)
   val getRowsDecoded = new java.util.concurrent.atomic.AtomicLong(0)
 
@@ -296,7 +341,7 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
           case None => Nil
         }
       }
-    }.flatMap { case (dir, vals) => graft.core.ParquetRows.dataFiles(dir).map(_ -> vals) }
+    }.flatMap { case (dir, vals) => ParquetRows.dataFiles(dir).map(_ -> vals) }
   }
 
   protected def _get(route: Route, routeArgs: Map[String, String],
@@ -342,21 +387,24 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
   private def queryImpl(assetTypes: Seq[Route], kwargs: Map[String, String],
                         asOf: Option[Long]): Seq[QueryEntry] = {
     val routeSet = assetTypes.toSet
-    flushAll()
-    eachTable(tables.filter(t => routeSet.contains(t.route)))(queryTable(_, kwargs, asOf)).flatten
+    concurrently(tables.filter(t => routeSet.contains(t.route)))(queryTable(_, kwargs, asOf)).flatten
   }
 
+  /** One table's live keys matching `kwargs`, by [[liveHits]] over the
+    * partition directories `kwargs` select: the catalog collects every
+    * such key anyway, so resolving in the driver holds no more than the
+    * result. */
   private def queryTable(t: Table, kwargs: Map[String, String],
                          asOf: Option[Long]): Seq[QueryEntry] =
     // non-key kwargs can never match a table without the column:
-    // decided before the table is listed or planned at all
+    // decided before the table is listed at all
     if (kwargs.keys.exists(k => !t.keys.contains(k))) Seq.empty
-    else liveRows(t, asOf).toSeq.flatMap { df =>
-      val pred = kwargs.map { case (k, v) => col(k) === v }
-        .reduceOption(_ && _).getOrElse(lit(true))
-      df.filter(pred).collect().toSeq.map { r =>
-        QueryEntry.of(t.route, t.keys.flatMap(k => Option(r.getAs[String](k)).map(k -> _)).toMap)
-      }
+    else {
+      val wanted = t.keys.indices.flatMap(i => kwargs.get(t.keys(i)).map(i -> _))
+      liveHits(t, getFiles(t, kwargs), None, pushdown(t, kwargs, Set.empty, asOf), asOf) { kv =>
+        wanted.forall { case (i, v) => kv(i) == v }
+      }.map(h => QueryEntry.of(t.route, t.keys.zip(h.keys).collect { case (k, v) if v != null => k -> v }.toMap))
+        .toSeq.sortBy(_.uri)
     }
 
   def rmByUri(uri: String): Unit = {
@@ -364,44 +412,69 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
     appendRow(byRoute(route), args ++ (kw - "version"), None, None, "rm")
   }
 
-  /** Experiment-wide delete as ONE distributed tombstone write per
-    * table: the live keys of the experiment (a partition-pruned scan —
-    * tables are partitioned on project/experiment) are written back as
-    * `rm` rows. No `collect()`: at millions of assets per experiment
-    * nothing funnels through the driver. */
-  def rmExperimentData(project: String, experiment: String): Unit =
-    tables.filter(_.keys.contains("experiment")).foreach { t =>
-      liveRows(t).foreach { df =>
-        append(t, logBatch(t,
-          df.filter(col("project") === project && col("experiment") === experiment),
-          lit(null), lit(null), "rm"))
+  /** Experiment-wide delete: per table with an `experiment` column,
+    * the live keys of the one `(project, experiment)` directory
+    * ([[liveHits]]) are written back into it as `rm` rows, one file and
+    * one batch seq per table, in the driver. */
+  def rmExperimentData(project: String, experiment: String): Unit = {
+    val pe = Map("project" -> project, "experiment" -> experiment)
+    concurrently(tables.filter(_.keys.contains("experiment"))) { t =>
+      val live = liveHits(t, getFiles(t, pe), None, FilterCompat.NOOP, None)(_ => true)
+      if (live.nonEmpty) {
+        val (putTime, batchSeq) = (System.currentTimeMillis(), TableStore.seqCounter.getAndIncrement())
+        writeDir(t, t.partitionCols.map(pe), live.iterator.map(h =>
+          Row.fromSeq(h.keys ++ Seq(null, null, putTime, batchSeq, "rm"))))
       }
     }
+  }
+
+  /** Bulk load of asset files, in the driver: each `(entry, file)`
+    * becomes a row of its route's table with the entry's keys and the
+    * file's bytes as payload (`blob` on blob routes, UTF-8 `json`
+    * otherwise). Each table's rows form one log batch under one batch
+    * seq and `put_time`, as [[bulkAppend]] stamps them; each
+    * `(table, partition directory)` is written as one file, several
+    * directories at a time, each reading its payload files as its
+    * writer consumes them. Returns the number of rows written. */
+  private[graft] def importFiles(assets: Seq[(QueryEntry, Path)]): Long = {
+    val putTime = System.currentTimeMillis()
+    val units = assets.groupBy { case (e, _) => byRoute(e.route) }.toSeq.sortBy(_._1.name).flatMap {
+      case (t, xs) =>
+        val batchSeq = TableStore.seqCounter.getAndIncrement()
+        xs.groupBy { case (e, _) => partValuesOf(t, e.meta.get(_).orNull) }
+          .toSeq.map { case (vals, ys) => (t, batchSeq, vals, ys) }
+    }
+    concurrently(units) { case (t, batchSeq, vals, ys) =>
+      val blob = Route.blobRoutes.contains(t.route)
+      writeDir(t, vals, ys.iterator.map { case (e, file) =>
+        val bytes = Files.readAllBytes(file)
+        Row.fromSeq(t.keys.map(e.meta.get(_).orNull) ++ Seq(
+          if (blob) null else new String(bytes, java.nio.charset.StandardCharsets.UTF_8),
+          if (blob) bytes else null, putTime, batchSeq, "put"))
+      })
+    }
+    assets.size.toLong
+  }
 
   /** Bulk append pre-built rows (distributed ETL path): `rows` must
     * carry this table's key columns plus `json`/`blob`; bookkeeping
-    * columns are added here. One partitioned write, no driver loop. */
+    * columns are added here. One partitioned Spark write, no driver
+    * loop, and one log batch under ONE counter-issued seq: successive
+    * batches in the same millisecond still resolve newest-wins in
+    * APPEND ORDER (a per-row monotonically_increasing_id would overlap
+    * across batches and leave the winner partition-layout-dependent),
+    * and a later same-millisecond put (higher seq) still wins over the
+    * batch. Duplicate keys WITHIN one batch have no defined "newest"
+    * (append semantics). [[importFiles]] and [[rmExperimentData]] stamp
+    * their batches the same way. */
   def bulkAppend(table: String, rows: DataFrame): Unit = {
     val t = TableStore.table(table)
-    append(t, logBatch(t, rows, col("json"), col("blob"), "put"))
-  }
-
-  /** `rows`' key columns plus the `json`/`blob` payload as one log
-    * batch under ONE counter-issued seq: successive batches in the same
-    * millisecond still resolve newest-wins in APPEND ORDER (a per-row
-    * monotonically_increasing_id would overlap across batches and leave
-    * the winner partition-layout-dependent), and a later
-    * same-millisecond put (higher seq) still wins over the batch.
-    * Duplicate keys WITHIN one batch have no defined "newest" (append
-    * semantics). */
-  private def logBatch(t: Table, rows: DataFrame, json: Column, blob: Column,
-                       op: String): DataFrame = {
     val batchSeq = TableStore.seqCounter.getAndIncrement()
-    rows.select((t.keys.map(k => col(k).cast("string").as(k)) ++ Seq(
-        json.cast("string").as("json"), blob.cast("binary").as("blob"))): _*)
+    append(t, rows.select((t.keys.map(k => col(k).cast("string").as(k)) ++ Seq(
+        col("json").cast("string").as("json"), col("blob").cast("binary").as("blob"))): _*)
       .withColumn("put_time", lit(System.currentTimeMillis()))
       .withColumn("seq", lit(batchSeq))
-      .withColumn("op", lit(op))
+      .withColumn("op", lit("put")))
   }
 
   /** Rewrite a table directory from `rows`, preserving the partition
@@ -442,14 +515,22 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
       .distinct.foreach(t => DirSwap.recover(s"$basedir/$t"))
   }
 
+  /** Delete the in-progress files of driver-side writes whose process
+    * died before the rename ([[graft.core.ParquetRows.tempFiles]]): no
+    * reader ever listed them, so the store reads as if those writes
+    * never happened. Runs once per open, next to
+    * [[recoverInterruptedRewrites]]. */
+  private def removeInterruptedWrites(): Unit =
+    tables.flatMap(t => ParquetRows.tempFiles(Paths.get(tablePath(t)))).foreach(Files.deleteIfExists)
+
   /** Continue the write sequence above every `seq` already in the
     * log, read from parquet footer statistics (no Spark job): the
     * counter is per JVM, so without this a marker pinned before a
     * restart would see the writes made after it. Raise-only — a second
     * store open in the same JVM never moves the sequence back. */
   private def seedSeq(): Unit =
-    graft.core.ParquetRows.maxLong(
-        tables.flatMap(t => graft.core.ParquetRows.dataFiles(Paths.get(tablePath(t)))), "seq", hadoopConf)
+    ParquetRows.maxLong(
+        tables.flatMap(t => ParquetRows.dataFiles(Paths.get(tablePath(t)))), "seq", hadoopConf)
       .foreach(m => TableStore.seqCounter.accumulateAndGet(m + 1, (a: Long, b: Long) => math.max(a, b)))
 
   /** Compact a table: rewrite with only the newest row per live key.
@@ -540,9 +621,9 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
   def lock(): AdvisoryLock = Locking.forBasedir(basedir)
 
   /** Flush pending appends (call before handing the dir to another
-    * reader). Tables flush concurrently, see [[TableStore.eachTable]]. */
+    * reader). Tables flush concurrently, see [[TableStore.concurrently]]. */
   def flushAll(): Unit =
-    eachTable(synchronized(pending.filter(_._2.nonEmpty).keys.toSeq).map(TableStore.table))(flush)
+    concurrently(synchronized(pending.filter(_._2.nonEmpty).keys.toSeq).map(TableStore.table))(flush)
 
   override def close(): Unit = {
     flushAll()
@@ -579,9 +660,9 @@ object TableStore {
     * raises it above the seqs already on disk. */
   private[store] val seqCounter = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** A point get's winning row: its full key, `(put_time, seq)` and
-    * the parquet record, which carries the payload column the get
-    * read (the other payload reads as null). */
+  /** A row [[TableStore.liveHits]] resolved: its full key,
+    * `(put_time, seq)` and the parquet record, which carries the
+    * payload column the scan read (the other payload reads as null). */
   private final case class Hit(keys: Seq[String], putTime: Long, seq: Long, row: Group) {
     def json: String = string(row, "json")
     def blob: Array[Byte] = binary(row, "blob").map(_.getBytes).orNull
@@ -642,14 +723,14 @@ object TableStore {
 
   def tableFor(route: Route): String = byRoute(route).name
 
-  /** Runs `f` on each table concurrently and waits for all of them:
-    * per-table scans and writes are independent Spark jobs on their own
-    * directories, which Spark's scheduler interleaves, so running them
-    * one after another would leave the cluster idle per small job. */
-  private[graft] def eachTable[B](ts: Seq[Table])(f: Table => B): Seq[B] = {
+  /** Runs `f` on each of `xs` (a table, or a table's partition
+    * directory) concurrently and waits for all of them: their reads and
+    * writes touch disjoint directories, and running them one after
+    * another would leave the disk and the other cores idle. */
+  private[graft] def concurrently[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(Future.sequence(ts.map(t => Future(f(t)))), Duration.Inf)
+    Await.result(Future.sequence(xs.map(x => Future(f(x)))), Duration.Inf)
   }
 }

@@ -42,7 +42,7 @@ class IvfAppendSpec extends AnyFunSuite {
     // 2. every appended vector sits in the cell the stored codebook
     //    assigns — i.e. the grown layout equals a one-shot assignment
     //    of the full corpus under the base codebook
-    val cents = Similarity.readIvfCodebook(spark, out)
+    val cents = Similarity.readIvfCodebook(out)
     val expected = all
       .withColumn("cell", Similarity.cellOf(cents, col("v"), col("norm")))
       .select(col("vec_id"), col("cell"))

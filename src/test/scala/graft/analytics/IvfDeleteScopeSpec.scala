@@ -32,7 +32,7 @@ class IvfDeleteScopeSpec extends AnyFunSuite {
 
     Similarity.deleteFromIvfCorpus(spark, out, Seq(a).toDF("vec_id"))
     Similarity.deleteFromIvfCorpus(spark, out, Seq(b).toDF("vec_id"), uptoGen = 0L)
-    Similarity.appendIvfCorpusWith(Similarity.readIvfCodebook(spark, out), out,
+    Similarity.appendIvfCorpusWith(Similarity.readIvfCodebook(out), out,
       Seq((b, bNew)).toDF("vec_id", "embedding"), spark.read.parquet(out).columns.toSet,
       gen = 1L)
 

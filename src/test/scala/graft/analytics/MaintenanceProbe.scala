@@ -94,7 +94,7 @@ object MaintenanceProbe {
         .resolve("corpus").toString
       Similarity.writeIvfLayout(Dedup.normalizedVectors(spark, dir),
         out, k = 16, iters = 10) // untimed: the build + fit
-      val cents = Similarity.readIvfCodebook(spark, out)
+      val cents = Similarity.readIvfCodebook(out)
       val diff = Tables.embeddings(spark, dir).filter(col("vec_id") < DiffN)
       val t0 = System.nanoTime()
       Similarity.deleteFromIvfCorpus(spark, out,

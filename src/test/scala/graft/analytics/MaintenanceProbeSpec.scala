@@ -108,7 +108,7 @@ class MaintenanceProbeSpec extends AnyFunSuite {
         .resolve("corpus").toString
       Similarity.writeIvfLayout(Dedup.normalizedVectors(spark, d),
         out, k = 16, iters = 10) // build + fit: excluded
-      val cents = Similarity.readIvfCodebook(spark, out)
+      val cents = Similarity.readIvfCodebook(out)
       val diff = Tables.embeddings(spark, d).filter(col("vec_id") < DiffN)
       written(out) {
         Similarity.deleteFromIvfCorpus(spark, out, diff.select(col("vec_id")))

@@ -134,7 +134,7 @@ class PlanSpec extends AnyFunSuite {
     val tmp = graft.core.TempDirs.create("graft-ivf-genscoped-plan")
     val out = s"$tmp/corpus"
     Similarity.writeIvfCorpus(spark, dir, out)
-    val cents = Similarity.readIvfCodebook(spark, out)
+    val cents = Similarity.readIvfCodebook(out)
     Similarity.appendIvfCorpusWith(cents, out,
       Tables.embeddings(spark, dir).limit(8)
         .select(col("vec_id") + 1000000L as "vec_id", col("embedding")),

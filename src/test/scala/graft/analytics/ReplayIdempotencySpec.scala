@@ -160,7 +160,7 @@ class ReplayIdempotencySpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
     replay("ivf", () => sorted(SegmentedIndex.live(spark,
         Similarity.withFileGen(spark.read.parquet(vOut)), vOut, "vec_id", "gen"))) {
-      Similarity.applyIvfBatch(spark, Similarity.readIvfCodebook(spark, vOut),
+      Similarity.applyIvfBatch(spark, Similarity.readIvfCodebook(vOut),
         spark.read.parquet(vOut).columns.toSet, vOut, gen = 1L,
         dirty = stored.map(_._1).toSeq.toDF("vec_id"), adds = vecAdds)
     }

@@ -171,7 +171,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(cellMismatch == 0, s"$cellMismatch vectors in different cells across code/refine")
     // every nibble is a valid sub-centroid id (0..15) and the books
     // round-trip with full shape
-    val books = Similarity.readPqCodebooks(spark, out)
+    val books = Similarity.readPqCodebooks(out)
     assert(books.length == 8 && books.forall(_.length == 16))
     val badNibbles = codes.filter(
       (0 until 8).map(m => org.apache.spark.sql.functions.shiftright(col("code"), 4 * m)
@@ -183,7 +183,7 @@ class SimilaritySpec extends AnyFunSuite {
     val out = graft.core.TempDirs.create("graft-ivf-roundtrip")
       .resolve("corpus").toString
     val centroids = Similarity.writeIvfCorpus(spark, dir, out)
-    assert(Similarity.readIvfCodebook(spark, out).map(_._1).toSeq ==
+    assert(Similarity.readIvfCodebook(out).map(_._1).toSeq ==
       centroids.map(_._1).toSeq, "codebook round trip lost cells")
     val stored = spark.read.parquet(out)
     val n = Tables.embeddings(spark, dir).count()

@@ -34,7 +34,7 @@ class StreamVecAppendSpec extends AnyFunSuite {
     val base = s"$tmp/base"
     val all = Dedup.normalizedVectors(spark, dir)
     Similarity.writeIvfLayout(all.filter(col("vec_id") % 2 === 0), base, k = 16, iters = 10)
-    val cents = Similarity.readIvfCodebook(spark, base)
+    val cents = Similarity.readIvfCodebook(base)
     val batch = all
       .withColumn("cell", Similarity.cellOf(cents, col("v"), col("norm")))
       .groupBy(col("cell").cast("long").as("cell"))

@@ -65,19 +65,18 @@ class TraceSpec extends AnyFunSuite {
     assert(n.path("input_b").asLong() == 4096)
   }
 
-  test("a flushAll over several tables counts every concurrent job once in job_s") {
-    val db = new TableStore(spark, TempDirs.create("graft-trace-flush").toString)
-    def flushCost(tables: Int): Trace.Cost = {
-      db.putMenu("""{"v": 1}""", "p", "e")
-      if (tables > 1) db.putConfig("""{"v": 1}""", "p", "e")
-      if (tables > 2) db.putStatistics("""{"v": 1}""", "p", "e")
-      cost(db.flushAll())
-    }
+  test("concurrent appends over several tables count every concurrent job once in job_s") {
+    import org.apache.spark.sql.functions.lit
+    val db = new TableStore(spark, TempDirs.create("graft-trace-append").toString)
+    val rows = spark.range(1).select(lit("p").as("project"), lit("e").as("experiment"),
+      lit("""{"v": 1}""").as("json"), lit(null).cast("binary").as("blob"))
+    def appendCost(tables: Int): Trace.Cost =
+      cost(TableStore.concurrently(Seq("menu", "config", "statistics").take(tables))(db.bulkAppend(_, rows)))
     try {
-      flushCost(3) // prime the write path
-      val one = flushCost(1)
-      val three = flushCost(3)
-      assert(one.jobs > 0, s"a flush ran no job: $one")
+      appendCost(3) // prime the write path
+      val one = appendCost(1)
+      val three = appendCost(3)
+      assert(one.jobs > 0, s"an append ran no job: $one")
       assert(three.jobs == 3 * one.jobs, s"one table: $one, three tables: $three")
       assert(three.jobList.size == three.jobs)
       assert(three.jobList.forall(_.site.startsWith("graft.store.TableStore")), three.jobList)
