@@ -65,7 +65,7 @@ class TraceSpec extends AnyFunSuite {
     assert(n.path("input_b").asLong() == 4096)
   }
 
-  test("concurrent appends over several tables count every concurrent job once in job_s") {
+  test("concurrent appends over several tables count each job once in job_s") {
     import org.apache.spark.sql.functions.lit
     val db = new TableStore(spark, TempDirs.create("graft-trace-append").toString)
     val rows = spark.range(1).select(lit("p").as("project"), lit("e").as("experiment"),
