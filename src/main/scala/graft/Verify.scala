@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.core.ParquetRows
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -76,7 +78,7 @@ object Verify {
     //    exact baseline (floors asserted in SimilaritySpec: s03 ≥ 0.6,
     //    s02 ≥ 0.3, s04 ≥ 0.5, s06 ≥ 0.5).
     import org.apache.spark.sql.functions.col
-    def read(name: String) = spark.read.parquet(s"$outDir/$name")
+    def read(name: String) = ParquetRows.frame(spark, s"$outDir/$name")
     def recall(approx: String, exact: String, idCol: String): Double = {
       val ex = read(exact).select(col(idCol).as("q"), col("neighbor_id"))
       val hits = ex.join(read(approx).select(col(idCol).as("q"), col("neighbor_id")),

@@ -2,6 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.ParquetRows
 
 /** Distributed BPE merge learning (Sennrich et al. 2016) — the
   * tokenizer-training step of an LLM data pipeline: learn the first K
@@ -158,7 +159,7 @@ object BpeTrain {
   /** The merge table persisted by [[writeBpeMerges]] — K rows, one
     * driver-side collect, rank-sorted. */
   def readBpeMerges(spark: SparkSession, out: String): Seq[(Long, String, String, Long)] =
-    spark.read.parquet(out).collect()
+    ParquetRows.frame(spark, out).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
       .toSeq.sortBy(_._1)
 
@@ -188,7 +189,7 @@ object BpeTrain {
     * requires exact equality (which also pins the artifact round
     * trip). */
   def t27BpeMerges(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(mergesArtifact(spark, dir)).orderBy("rank")
+    ParquetRows.frame(spark, mergesArtifact(spark, dir)).orderBy("rank")
 
   /** Canonical BPE ENCODE of one word under a learned merge table:
     * start from chars + [[Eow]], repeatedly merge the present pair

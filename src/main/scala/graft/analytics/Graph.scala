@@ -2,6 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.ParquetRows
 
 /** Graph centrality over the corpus similarity graph — the
   * representativeness signal behind coreset selection and
@@ -602,7 +603,7 @@ object Graph {
           .footerRowCountOf(java.nio.file.Paths.get(store, "gen=0"))))
       val gen = 1L
       val live = graft.core.SegmentedIndex.live(spark,
-        spark.read.parquet(store), store,
+        ParquetRows.frame(spark, store), store,
         keyCol = "vec_id", genCol = "gen").drop("gen")
       applyKnnDiffToStore(a, live, b, g07DirtyOld(a), g07NewIds(b), store, gen,
         cents = Some(Similarity.ivfCentroids(spark, dir)),
@@ -615,9 +616,9 @@ object Graph {
       // edge rows per tombstoned (node, generation), exact for this
       // store (see coveredFractionEstimate)
       graft.core.SegmentedIndex.maybeCompact(
-        spark.read.parquet(store), store,
+        ParquetRows.frame(spark, store), store,
         rowsPerInstance = Similarity.KnnEdgeK.toDouble) { tmp =>
-        graft.core.SegmentedIndex.live(spark, spark.read.parquet(store), store,
+        graft.core.SegmentedIndex.live(spark, ParquetRows.frame(spark, store), store,
             keyCol = "vec_id", genCol = "gen").drop("gen")
           .write.parquet(s"$tmp/gen=$gen")
       }
@@ -669,7 +670,7 @@ object Graph {
     * from-scratch snapshot-B rebuild. */
   private[graft] def g07StoredEdges(spark: SparkSession, dir: String): DataFrame = {
     val store = g07StoreDir(spark, dir)
-    graft.core.SegmentedIndex.live(spark, spark.read.parquet(store), store,
+    graft.core.SegmentedIndex.live(spark, ParquetRows.frame(spark, store), store,
         keyCol = "vec_id", genCol = "gen")
       .select("vec_id", "rnk", "neighbor_id", "cos_sim")
       .orderBy("vec_id", "rnk")
@@ -1070,7 +1071,7 @@ object Graph {
           java.nio.file.Paths.get(store, "gen=0")))
       val cents = Some(Similarity.ivfCentroids(spark, dir))
       def liveEdges = graft.core.SegmentedIndex.live(spark,
-        spark.read.parquet(store), store,
+        ParquetRows.frame(spark, store), store,
         keyCol = "vec_id", genCol = "gen")
       val cls = col("vec_id") % 13
       // epoch e's post-image IS epoch e+1's pre-image: carry the
@@ -1106,7 +1107,7 @@ object Graph {
         // MaintainedStoreEstimateSpec pins it against the full
         // anti-join)
         def covered(): Double = graft.core.SegmentedIndex.coveredFractionEstimate(
-          spark.read.parquet(store), store,
+          ParquetRows.frame(spark, store), store,
           rowsPerInstance = Similarity.KnnEdgeK.toDouble, requireTracked = true)
         def compact(e: Int): Unit = graft.core.SegmentedIndex.compactWith(store) { stage =>
           liveEdges.drop("gen").write.parquet(s"$stage/gen=$e")

@@ -5,6 +5,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.ParquetRows
 
 /** Physical-layout operators — the moves that decide whether a 100 TB
   * query reads 100 TB or 100 GB. Correctness at small scale is the
@@ -116,7 +117,7 @@ object Layout {
     * At 100 TB this is the manifest a table format maintains on write;
     * building it here costs one pass and is reused per (JVM, dir). */
   private[analytics] def zoneMap(spark: SparkSession, layout: String): DataFrame =
-    zoneMapOf(spark.read.parquet(layout))
+    zoneMapOf(ParquetRows.frame(spark, layout))
 
   /** Files whose [lo, hi] zone intersects [start, end). The zone map is
     * file-count-sized (thousands of rows at 100 TB, never data-sized),
@@ -140,7 +141,7 @@ object Layout {
     // every zone) — an empty-path parquet read cannot infer a schema,
     // so synthesize the empty aggregate instead of crashing
     val src =
-      if (files.nonEmpty) spark.read.parquet(files: _*)
+      if (files.nonEmpty) ParquetRows.frame(spark, files: _*)
       else {
         import org.apache.spark.sql.types._
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -205,7 +206,7 @@ object Layout {
     * is read from file-count-sized state, not re-scanned. */
   def q36IncrementalAgg(spark: SparkSession, dir: String): DataFrame = {
     val statePath = ensureBaseState(spark, dir)
-    val base = spark.read.parquet(statePath)
+    val base = ParquetRows.frame(spark, statePath)
     val delta = partials(Tables.events(spark, dir)
       .filter(col("ts") >= lit(StateCutoff).cast("timestamp")))
     base.unionByName(delta)
@@ -241,7 +242,7 @@ object Layout {
     * oracle recomputes directly from events, so the gate proves
     * rollup(state) == recompute(all) at the coarser grain too. */
   def q37RollupReuse(spark: SparkSession, dir: String): DataFrame = {
-    val state = spark.read.parquet(ensureFullState(spark, dir))
+    val state = ParquetRows.frame(spark, ensureFullState(spark, dir))
     state.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_days"),
            sum(col("cnt")).as("n_events"),
@@ -280,7 +281,7 @@ object Layout {
     * deterministic and lives on the aggregate, NOT the join key — a
     * key predicate would be statically pushable and prove nothing. */
   def q38DppJoin(spark: SparkSession, dir: String): DataFrame = {
-    val fact = spark.read.parquet(ensureDayPartitionedEvents(spark, dir))
+    val fact = ParquetRows.frame(spark, ensureDayPartitionedEvents(spark, dir))
     val dim = fact.groupBy("day").agg(count(lit(1)).as("n"))
       .filter(col("n") % 7 < 3)
     fact.join(broadcast(dim), "day")
@@ -346,7 +347,7 @@ object Layout {
     * merged-vs-direct gap and the merged-vs-exact relative error as
     * invariants. Rows-only (DuckDB has no compatible sketch). */
   def q39HllState(spark: SparkSession, dir: String): DataFrame =
-    hllReport(spark, dir, spark.read.parquet(ensureHllState(spark, dir)))
+    hllReport(spark, dir, ParquetRows.frame(spark, ensureHllState(spark, dir)))
 
   /** Z-order bits per dimension and file count for the q40 layout. */
   private val ZBits = 5
@@ -429,7 +430,7 @@ object Layout {
   private[analytics] def zorderSurvivors(spark: SparkSession, layout: String,
                                          tsLo: String, tsHi: String,
                                          uLo: Long, uHi: Long): Seq[String] =
-    zoneMap2d(spark.read.parquet(layout))
+    zoneMap2d(ParquetRows.frame(spark, layout))
       .filter(col("ts_hi") >= lit(tsLo).cast("timestamp") &&
               col("ts_lo") <  lit(tsHi).cast("timestamp") &&
               col("u_hi") >= uLo && col("u_lo") < uHi)
@@ -451,8 +452,8 @@ object Layout {
     val uHi = zUserHi(spark, dir)
     val files = zorderSurvivors(spark, layout, ZoneStart, ZoneEnd, 0L, uHi)
     val src =
-      if (files.nonEmpty) spark.read.parquet(files: _*)
-      else spark.read.parquet(layout).limit(0)
+      if (files.nonEmpty) ParquetRows.frame(spark, files: _*)
+      else ParquetRows.frame(spark, layout).limit(0)
     src
       .filter(col("ts") >= lit(ZoneStart).cast("timestamp") &&
               col("ts") <  lit(ZoneEnd).cast("timestamp") &&

@@ -2,6 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.ParquetRows
 
 /** Multimodal-column plumbing: treat image/audio/video payloads as
   * opaque `binary` columns with typed metadata, processed partition-
@@ -450,7 +451,7 @@ object Multimodal {
   def m12ImageIndexMaintenance(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val ids = Tables.documents(spark, dir).select(col("doc_id")).as[Long]
-    val base = spark.read.parquet(m12BaseDir(spark, dir))
+    val base = ParquetRows.frame(spark, m12BaseDir(spark, dir))
     // decode ONLY the diff: re-crawled (% 10 == 3, new pattern) and
     // added (negative ids) images
     val diffKeys = m12KeysB(ids)
@@ -536,7 +537,7 @@ object Multimodal {
       import spark.implicits._
       val ids = Tables.documents(spark, dir).select(col("doc_id")).as[Long]
       val index = tmp.resolve("index").toString
-      spark.read.parquet(m12BaseDir(spark, dir))
+      ParquetRows.frame(spark, m12BaseDir(spark, dir))
         .withColumn("gen", lit(0L)).withColumn("op", lit("put"))
         .write.mode("overwrite").parquet(index)
       val rows = Pipeline.epochChain("m13", dir, rebuildCheck)(new Pipeline.ChainSteps {
@@ -554,33 +555,35 @@ object Multimodal {
         def applyDiff(e: Int): Long = {
           val cls = col("doc_id") % 16
           val delClasses = Pipeline.p13DeleteClasses(e).map(Int.box)
-          val rmIds = ids.toDF("doc_id").filter(cls.isin(delClasses: _*))
-          // decode + hash ONLY the diff: this epoch's re-crawled class
-          // (fresh pattern) and, final epoch, the added images
-          val diffKeys = m13KeysAt(ids, e).filter(kv =>
-            kv._2 == m13Key(e) || (e >= Pipeline.ChainEpochs && kv._2 == M13AddKey))
-          val puts = imageHashes(syntheticImagesKeyed(diffKeys))
+          // the epoch's whole diff in ONE bounded job, each row tagged
+          // with its kind: the rm ids, and the key pairs to decode +
+          // hash — this epoch's re-crawled class (fresh pattern) and,
+          // final epoch, the added images (negative ids). Every count
+          // below is driver arithmetic over it
+          val diff = graft.core.Bounded.localize(
+            m13KeysAt(ids, e).filter(kv =>
+                kv._2 == m13Key(e) || (e >= Pipeline.ChainEpochs && kv._2 == M13AddKey))
+              .toDF("doc_id", "key")
+              .withColumn("kind", when(col("doc_id") < 0, "add").otherwise("reput"))
+              .unionByName(ids.toDF("doc_id").filter(cls.isin(delClasses: _*))
+                .select(col("doc_id"), lit(null).cast("long").as("key"), lit("rm").as("kind"))))
+          val n = graft.core.Bounded.countsBy(diff, "kind").withDefaultValue(0L)
+          val puts = imageHashes(syntheticImagesKeyed(
+              diff.df.filter(col("kind") =!= "rm").select("doc_id", "key").as[(Long, Long)]))
             .withColumn("gen", lit(e.toLong)).withColumn("op", lit("put"))
-          val rms = rmIds
+          val rms = diff.df.filter(col("kind") === "rm")
             .select(col("doc_id"), lit(0L).as("ahash"),
               lit(e.toLong).as("gen"), lit("rm").as("op"))
-          puts.unionByName(rms).write.mode("append").parquet(index)
-          val nRm = rmIds.count()
-          // counted off the key pairs, not `puts` — re-counting puts
-          // would re-run the diff's decode+hash job. One pass yields
-          // both the re-put count and the epoch's full put-row count
-          // (re-puts + final-epoch adds, the negative ids)
-          val (nPutRows, nReput) = {
-            val r = diffKeys.toDF("doc_id", "key")
-              .agg(count(lit(1)), count(when(col("doc_id") >= 0, lit(1)))).head()
-            (r.getLong(0), r.getLong(1))
-          }
+          // one appended file: the diff is already on the driver, so a
+          // task per local slice would only add files
+          puts.unionByName(rms).coalesce(1).write.mode("append").parquet(index)
+          diff.release()
           // rm rows are dead twice over (themselves + their target),
           // re-crawls supersede exactly one, adds none; the denominator
           // advances by exactly what this epoch appended
-          deadSinceCompact += 2 * nRm + nReput
-          totalRows += nPutRows + nRm
-          nRm + nReput
+          deadSinceCompact += 2 * n("rm") + n("reput")
+          totalRows += n("rm") + n("reput") + n("add")
+          n("rm") + n("reput")
         }
         def covered(): Double =
           if (totalRows == 0L) 0.0 else deadSinceCompact.toDouble / totalRows
@@ -591,7 +594,7 @@ object Multimodal {
           graft.core.SegmentedIndex.compactWith(index) { stage =>
             val w = org.apache.spark.sql.expressions.Window
               .partitionBy("doc_id").orderBy(col("gen").desc)
-            spark.read.parquet(index)
+            log()
               .withColumn("_rn", row_number().over(w))
               .filter(col("_rn") === 1 && col("op") === "put")
               .drop("_rn")
@@ -603,8 +606,15 @@ object Multimodal {
           totalRows = graft.core.SegmentedIndex.footerRowCountOf(
             java.nio.file.Paths.get(index))
         }
+        // the log as ONE task while the tracked row count is within the
+        // localize cap: the window, the grouping, the sort and the
+        // digest above it then plan as a single stage, no shuffle
+        private def log(): DataFrame = {
+          val stored = ParquetRows.frame(spark, index)
+          graft.core.Bounded.singleTask(stored, Some(totalRows)).getOrElse(stored)
+        }
         override def live(e: Int): Option[DataFrame] = Some(hashGroups(
-          graft.core.SegmentedIndex.resolveNewest(spark.read.parquet(index),
+          graft.core.SegmentedIndex.resolveNewest(log(),
               keyCol = "doc_id", genCol = "gen", opCol = "op")
             .select("doc_id", "ahash")))
         override def rebuild(e: Int, scratch: java.nio.file.Path): DataFrame =
@@ -632,7 +642,7 @@ object Multimodal {
     val ids = Tables.documents(spark, dir).select(col("doc_id")).as[Long]
     val index = tmp.resolve("index").toString
     // generation 0: yesterday's index (the cached m12 base artifact)
-    spark.read.parquet(m12BaseDir(spark, dir))
+    ParquetRows.frame(spark, m12BaseDir(spark, dir))
       .withColumn("gen", lit(0L)).withColumn("op", lit("put"))
       .write.mode("overwrite").parquet(index)
     // the change feed, with REAL bytes for the new content
@@ -673,7 +683,7 @@ object Multimodal {
     // newest generation per doc wins; rm rows delete (the shared
     // append-log resolution) — then group
     val live = graft.core.SegmentedIndex.resolveNewest(
-        spark.read.parquet(index), keyCol = "doc_id", genCol = "gen", opCol = "op")
+        ParquetRows.frame(spark, index), keyCol = "doc_id", genCol = "gen", opCol = "op")
       .select("doc_id", "ahash")
     // |groups|-bounded report materialized eagerly; the scoped append
     // log is deleted when this returns

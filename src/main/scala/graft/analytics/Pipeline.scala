@@ -2,6 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.ParquetRows
 
 /** End-to-end training-data curation pipeline — the operators compose:
   * quality gate → exact dedup (normalized-hash groupBy) →
@@ -373,7 +374,7 @@ object Pipeline {
     * which is exactly what the oracle does. */
   def p07IncrementalQuality(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val scoresA = spark.read.parquet(ensureQualityScoresA(spark, dir))
+    val scoresA = ParquetRows.frame(spark, ensureQualityScoresA(spark, dir))
     val diff = Dedup.d14SnapshotCdc(spark, dir)
       .select(col("doc_id"), col("change_type"))
     val rescored = rescoreDiff(docs, diff)
@@ -536,7 +537,7 @@ object Pipeline {
     // yesterday's index: a COPY of the memoized baseline
     val out = copyBaseline(p08BaselineLayout(spark, dir), root.resolve("index"))
     val cents = Similarity.readIvfCodebook(out)
-    Similarity.applyIvfBatch(spark, cents, spark.read.parquet(out).columns.toSet, out,
+    Similarity.applyIvfBatch(spark, cents, ParquetRows.frame(spark, out).columns.toSet, out,
       gen = 1L,
       dirty = diffL.df.filter(col("change_type").isin("deleted", "changed"))
         .select(col("doc_id").as("vec_id")),
@@ -774,15 +775,17 @@ object Pipeline {
         compacted, eq)
     }
 
-  /** A chain gate's output: one row per epoch, the family's count and
-    * live-count columns named `nCol`/`liveCol`, materialized eagerly
-    * (the gate's scoped layout is deleted when it returns). */
+  /** A chain gate's output: one row per epoch in epoch order, the
+    * family's count and live-count columns named `nCol`/`liveCol`. The
+    * receipts are already on the driver, so the frame is a
+    * LocalRelation over them: it runs no job and outlives the gate's
+    * scoped layout. */
   private[graft] def receiptFrame(spark: SparkSession, receipts: Seq[EpochReceipt],
                                   nCol: String, liveCol: String): DataFrame = {
     import spark.implicits._
-    receipts.map(r => (r.epoch, r.n, r.nLive, r.covered, r.compacted, r.eqRebuild))
+    receipts.sortBy(_.epoch)
+      .map(r => (r.epoch, r.n, r.nLive, r.covered, r.compacted, r.eqRebuild))
       .toDF("epoch", nCol, liveCol, "covered_before", "compacted", "eq_rebuild")
-      .orderBy("epoch").localCheckpoint(true)
   }
 
   /** p13's per-epoch mutation classes (mod 16) — DISJOINT across
@@ -874,7 +877,7 @@ object Pipeline {
     * path survives that where a localCheckpoint would not. */
   private[analytics] def p13SnapshotAt(spark: SparkSession, dir: String,
                                        e: Int): DataFrame =
-    spark.read.parquet(graft.core.FixtureClock.staged("p13-snap", (dir, e)) { p =>
+    ParquetRows.frame(spark, graft.core.FixtureClock.staged("p13-snap", (dir, e)) { p =>
       p13SnapshotText(Tables.documents(spark, dir), e)
         .write.mode("overwrite").parquet(p)
     })
@@ -986,7 +989,7 @@ object Pipeline {
         // the metadata-cheap instance estimate — one code row per
         // (vec, generation), exact for this layout
         def covered(): Double = graft.core.SegmentedIndex.coveredFractionEstimate(
-          spark.read.parquet(out), out, requireTracked = true)
+          ParquetRows.frame(spark, out), out, requireTracked = true)
         def compact(e: Int): Unit = Similarity.compactIvfPqCorpus(spark, out)
         // familyDigest is order-independent (sum of per-row crc32), so
         // the probe feeds it UNSORTED
@@ -1026,7 +1029,7 @@ object Pipeline {
       val docs = Tables.documents(spark, dir)
       val out = copyBaseline(p08BaselineLayout(spark, dir), root.resolve("index"))
       val cents = Similarity.readIvfCodebook(out)
-      val storedCols = spark.read.parquet(out).columns.toSet
+      val storedCols = ParquetRows.frame(spark, out).columns.toSet
       // |queries|-bounded, consumed twice per probe call × 3 epochs —
       // materialize the embed once per invocation (the p14
       // convention), DRIVER-LOCAL so each probe's broadcast of it
@@ -1044,7 +1047,7 @@ object Pipeline {
           dirtyL.count
         }
         def covered(): Double = graft.core.SegmentedIndex.coveredFractionEstimate(
-          spark.read.parquet(out), out, requireTracked = true)
+          ParquetRows.frame(spark, out), out, requireTracked = true)
         def compact(e: Int): Unit = Similarity.compactIvfCorpus(spark, out)
         override def live(e: Int): Option[DataFrame] = Some(
           Similarity.ivfStoredTopKWith(cents, spark, out, queries, k = 10))

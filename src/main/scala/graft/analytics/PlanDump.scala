@@ -2,6 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.ParquetRows
 
 /** Dev harness for the r17 optimization receipts: write
   * `.explain("formatted")` for every declared query the round touched
@@ -82,16 +83,16 @@ object PlanDump {
     graft.core.SegmentedIndex.tombstone(
       (1L to 10L).toDF("vec_id"), store, "vec_id", 0L)
     dump("internal_live_view")(graft.core.SegmentedIndex.live(
-      spark, spark.read.parquet(store), store,
+      spark, ParquetRows.frame(spark, store), store,
       keyCol = "vec_id", genCol = "gen"))
     dump("internal_live_as_of")(graft.core.SegmentedIndex.liveAsOf(
-      spark, spark.read.parquet(store), store,
+      spark, ParquetRows.frame(spark, store), store,
       keyCol = "vec_id", genCol = "gen", asOfGen = 1L))
 
     // 2. stored IVF probe: the scored join's broadcast (probe) side
     val ivf = t.resolve("ivf").toString
     Similarity.writeIvfCorpus(spark, dir, ivf)
-    val stored = spark.read.parquet(ivf)
+    val stored = ParquetRows.frame(spark, ivf)
     val queries = stored.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("norm").as("qnorm"))

@@ -2,6 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.ParquetRows
 
 /** Distributed quality-classifier training — the fasttext-style step
   * of an LLM curation pipeline, re-expressed as Spark-native
@@ -170,7 +171,7 @@ object QualityModel {
   /** The scorer persisted by [[writeQualityModel]] — Dim rows, one
     * driver-side collect. */
   def readQualityModel(spark: SparkSession, out: String): QualityScorer = {
-    val rows = spark.read.parquet(s"$out/model").collect()
+    val rows = ParquetRows.frame(spark, s"$out/model").collect()
       .map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
       .sortBy(_._1)
     require(rows.length == Dim, s"quality model artifact has ${rows.length} rows, want $Dim")
@@ -222,7 +223,7 @@ object QualityModel {
     * `t28_final_acc` invariants off this dump, and QualityModelSpec
     * pins the semantics. */
   def t28QualityClassifier(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"${modelArtifact(spark, dir)}/trace").orderBy("iter")
+    ParquetRows.frame(spark, s"${modelArtifact(spark, dir)}/trace").orderBy("iter")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "t28_quality_classifier" -> t28QualityClassifier _)

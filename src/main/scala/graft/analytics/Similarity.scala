@@ -2,6 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.ParquetRows
 
 /** Similarity search over the `embeddings` table (64-dim float
   * vectors).
@@ -562,7 +563,7 @@ object Similarity {
     * 4-decimal rounded double), so the g-gates' single-node parity
     * invariants are unaffected by the materialization. */
   private[graft] def knnEdges(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(knnEdgesPath(spark, dir))
+    ParquetRows.frame(spark, knnEdgesPath(spark, dir))
 
   /** The memoized artifact's location — consumers that SEED a layout
     * from it (g07's store, st26's scoped store) copy the files
@@ -910,7 +911,7 @@ object Similarity {
     * ([[graft.lock.AdvisoryLock]]) around both. */
   def appendIvfCorpus(spark: SparkSession, out: String, vecs: DataFrame): Unit =
     appendIvfCorpusWith(readIvfCodebook(out), out, vecs,
-      spark.read.parquet(out).columns.toSet)
+      ParquetRows.frame(spark, out).columns.toSet)
 
   /** [[appendIvfCorpus]] with a pre-collected codebook and stored
     * column set — the per-batch entry a streaming ingest loop uses so
@@ -1073,7 +1074,7 @@ object Similarity {
     // so Catalyst pushes it into the parquet reader — the probe pays
     // partition pruning AND row-group predicate pushdown together
     // (PlanSpec pins both on the s13 gate's plan)
-    val pruned0 = spark.read.parquet(out)
+    val pruned0 = ParquetRows.frame(spark, out)
       .filter(col("cell").isin(probedCells.map(Int.box): _*))
     val pruned1 = where.map(pruned0.filter).getOrElse(pruned0)
     // tombstoned rows (deleteFromIvfCorpus) are excluded at probe
@@ -1128,7 +1129,7 @@ object Similarity {
     graft.core.TempDirs.scoped("graft-ivf-corpus") { root =>
     val out = root.resolve("corpus").toString
     writeIvfCorpus(spark, dir, out)
-    val stored = spark.read.parquet(out)
+    val stored = ParquetRows.frame(spark, out)
     val queries = stored.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("norm").as("qnorm"))
     ivfStoredTopK(spark, out, queries, k = 10)
@@ -1180,7 +1181,7 @@ object Similarity {
       .join(Tables.documents(spark, dir)
         .select(col("doc_id").as("vec_id"), col("lang")), "vec_id")
     writeIvfLayout(corpus, out, k = 16, iters = 10)
-    val stored = spark.read.parquet(out)
+    val stored = ParquetRows.frame(spark, out)
     val queries = stored.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("norm").as("qnorm"))
     ivfStoredTopK(spark, out, queries, k = 10,
@@ -1373,7 +1374,7 @@ object Similarity {
   def compactIvfPqCorpus(spark: SparkSession, out: String): Unit =
     graft.core.SegmentedIndex.compactWith(out, skipSidecars = Set("_refine")) { tmp =>
       def liveOf(path: String) = graft.core.SegmentedIndex.live(spark,
-        spark.read.parquet(path), out, keyCol = "vec_id", genCol = "gen")
+        ParquetRows.frame(spark, path), out, keyCol = "vec_id", genCol = "gen")
       // scale-adaptive rewrite (rewriteClustered): cluster-by-cell for
       // big layouts, one task under the driver-local cap — same per-cell
       // files, one exchange stage-job fewer per layout
@@ -1421,7 +1422,7 @@ object Similarity {
     // time — gen-scoped, so a same-epoch re-append at a higher gen is
     // probe-visible with no compaction in between
     val codeScan = graft.core.SegmentedIndex.live(spark,
-      spark.read.parquet(out)
+      ParquetRows.frame(spark, out)
         .filter(col("cell").isin(probedCells.map(Int.box): _*)),
       out, keyCol = "vec_id", genCol = "gen")
     val adcSum = (0 until PqM).map { m =>
@@ -1440,7 +1441,7 @@ object Similarity {
     // the identical live view before the shortlist join, or the exact
     // rerank would score the id against both
     val refineScan = graft.core.SegmentedIndex.live(spark,
-        spark.read.parquet(s"$out/_refine")
+        ParquetRows.frame(spark, s"$out/_refine")
           .filter(col("cell").isin(probedCells.map(Int.box): _*)),
         out, keyCol = "vec_id", genCol = "gen")
       .select(col("vec_id").as("neighbor_id"), col("v"), col("norm"))
@@ -1463,7 +1464,7 @@ object Similarity {
     graft.core.TempDirs.scoped("graft-ivfpq-corpus") { root =>
     val out = root.resolve("corpus").toString
     writeIvfPqLayout(Dedup.normalizedVectors(spark, dir), out)
-    val queries = spark.read.parquet(s"$out/_refine")
+    val queries = ParquetRows.frame(spark, s"$out/_refine")
       .filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("norm").as("qnorm"))
     ivfPqStoredTopK(spark, out, queries, k = 10)
@@ -1502,7 +1503,7 @@ object Similarity {
     // two-rename swap are the shared SegmentedIndex shell
     graft.core.SegmentedIndex.compactWith(out) { tmp =>
       graft.core.SegmentedIndex.rewriteClustered(
-          liveIvf(spark, spark.read.parquet(out), out), out, "cell")
+          liveIvf(spark, ParquetRows.frame(spark, out), out), out, "cell")
         .write.mode("overwrite").partitionBy("cell").parquet(tmp)
     }
 
@@ -1522,7 +1523,7 @@ object Similarity {
     writeIvfLayout(all.filter(col("vec_id") % 2 === 0), out, k = 16, iters = 10)
     appendIvfCorpus(spark, out,
       Tables.embeddings(spark, dir).filter(col("vec_id") % 2 =!= 0))
-    val stored = spark.read.parquet(out)
+    val stored = ParquetRows.frame(spark, out)
     val queries = stored.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("norm").as("qnorm"))
     ivfStoredTopK(spark, out, queries, k = 10)

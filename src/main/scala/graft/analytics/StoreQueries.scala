@@ -9,6 +9,7 @@ import graft.catalog.Catalog
 import graft.etl.CopyDb
 import graft.filters.JsonUtil
 import graft.store.{JsonFileStore, TableStore}
+import graft.core.ParquetRows
 
 /** Driver-gate entries that exercise the aerovaldb store surface
   * (SURVEY.md §2.1–§2.9) end-to-end as Spark jobs: build the golden
@@ -182,7 +183,7 @@ object StoreQueries {
     // executors reverse-parse + hash), the table backend via its
     // per-table live-row scan — so the audit never does per-asset
     // driver round-trips. Hashing is over the sorted-key CANONICAL
-    // JSON form (JsonUtil.canonicalMd5): the two backends legitimately
+    // JSON form (JsonUtil.contentMd5): the two backends legitimately
     // store the same asset with different formatting/field order, and
     // the audit wants formatting-independent CONTENT equality. Keys
     // are the version-stripped LOGICAL uri: the json backend's listing
@@ -320,10 +321,10 @@ object StoreQueries {
       jsonOf(db.getByUriAsOf(e1Uri, db.snapshotSeq())),
       db.listAll().size.toString)
     val before = observed()
-    val rowsBefore = spark.read.parquet(s"${db.basedir}/menu").count()
+    val rowsBefore = ParquetRows.frame(spark, s"${db.basedir}/menu").count()
     db.compactRetain("menu", marker)
     val after = observed()
-    val rowsAfter = spark.read.parquet(s"${db.basedir}/menu").count()
+    val rowsAfter = ParquetRows.frame(spark, s"${db.basedir}/menu").count()
     val rows = Seq(
       ("a_asof_e1", after.head),
       ("b_asof_e2_present", after(1)),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.streaming.EventStream
+import graft.core.ParquetRows
 
 /** Driver-gate entries for the streaming surface. st01 drives a real
   * Structured Streaming query (file source → watermark + window agg →
@@ -417,7 +418,7 @@ object StreamingQueries {
     vecAppendDrive(spark, dir, out, None)
     // |cells|-bounded occupancy report materialized eagerly; the scoped
     // layout is deleted when this returns
-    spark.read.parquet(out)
+    ParquetRows.frame(spark, out)
       .groupBy(col("cell").cast("long").as("cell"))
       .agg(count(lit(1)).as("n_vecs"), min(col("vec_id")).as("first_vec"))
       .orderBy("cell").localCheckpoint(true)
@@ -434,7 +435,7 @@ object StreamingQueries {
                                         compactEvery: Int = 8): Unit = {
     val s = EventStream.boundedDriveSession(spark)
     val cents = Similarity.readIvfCodebook(out)
-    val storedCols = s.read.parquet(out).columns.toSet
+    val storedCols = ParquetRows.frame(s, out).columns.toSet
     val nBatches = new java.util.concurrent.atomic.AtomicLong(0L)
     EventStream.driveBatches(spark, EventStream.readEmbeddingsStream(_, streamDir,
         maxFilesPerTrigger).filter(col("vec_id") % 2 =!= 0)) { (batch, batchId) =>
@@ -472,7 +473,7 @@ object StreamingQueries {
     val results = root.resolve("results").toString
     Similarity.writeIvfLayout(Dedup.normalizedVectors(spark, dir), out, k = 16, iters = 10)
     vecQueryDrive(spark, dir, out, results, None)
-    spark.read.parquet(results).orderBy("query_id", "rnk").localCheckpoint(true)
+    ParquetRows.frame(spark, results).orderBy("query_id", "rnk").localCheckpoint(true)
   }
 
   /** The st15 drive: stream the embeddings table, keep the standard
@@ -900,7 +901,7 @@ object StreamingQueries {
       // |5N|-bounded final graph materialized eagerly; the scoped
       // segmented stores are deleted when this returns
       graft.core.SegmentedIndex.live(spark,
-          spark.read.parquet(edgeStore), edgeStore,
+          ParquetRows.frame(spark, edgeStore), edgeStore,
           keyCol = "vec_id", genCol = "gen")
         .select("vec_id", "rnk", "neighbor_id", "cos_sim")
         .orderBy("vec_id", "rnk").localCheckpoint(true)
@@ -976,10 +977,10 @@ object StreamingQueries {
       // the replay-stable pre-images: live as of the previous
       // generation (immutable), never "whatever is on disk now"
       val aCur = graft.core.SegmentedIndex.liveAsOf(bs,
-        bs.read.parquet(corpusStore), corpusStore,
+        ParquetRows.frame(bs, corpusStore), corpusStore,
         keyCol = "vec_id", genCol = "gen", asOfGen = g - 1).drop("gen")
       val eCur = graft.core.SegmentedIndex.liveAsOf(bs,
-        bs.read.parquet(edgeStore), edgeStore,
+        ParquetRows.frame(bs, edgeStore), edgeStore,
         keyCol = "vec_id", genCol = "gen", asOfGen = g - 1).drop("gen")
       // corpus maintenance: tombstone the batch's dirty ids, append
       // its after-images as segment g
@@ -999,7 +1000,7 @@ object StreamingQueries {
       // — read work, bounded by the corpus scan the admission pass
       // does anyway, with zero per-batch scratch writes.
       val bCur = graft.core.SegmentedIndex.liveAsOf(bs,
-        bs.read.parquet(corpusStore), corpusStore,
+        ParquetRows.frame(bs, corpusStore), corpusStore,
         keyCol = "vec_id", genCol = "gen", asOfGen = g).drop("gen")
       // `added` rows are first-seen by the CDC contract — excluded
       // from the tombstone write so the compaction policy's
@@ -1018,10 +1019,10 @@ object StreamingQueries {
     // discipline): physically drop tombstone-covered rows once they
     // pass the read-amp threshold — correctness never depends on it
     def edgesLive = graft.core.SegmentedIndex.live(spark,
-      spark.read.parquet(edgeStore), edgeStore,
+      ParquetRows.frame(spark, edgeStore), edgeStore,
       keyCol = "vec_id", genCol = "gen")
     graft.core.SegmentedIndex.maybeCompact(
-      spark.read.parquet(edgeStore), edgeStore,
+      ParquetRows.frame(spark, edgeStore), edgeStore,
       rowsPerInstance = Similarity.KnnEdgeK.toDouble) { tmpDir =>
       edgesLive.drop("gen").write.parquet(s"$tmpDir/gen=0")
     }

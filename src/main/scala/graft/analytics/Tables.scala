@@ -1,17 +1,20 @@
 package graft.analytics
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.ParquetRows
 
 /** Loaders for the driver-provided star schema (TESTDATA.md).
   *
   * Each table is a single parquet file per scale factor. All reads go
-  * through `spark.read.parquet` so Catalyst gets parquet column pruning
-  * and predicate pushdown for free; at cluster scale these paths would
-  * be directories of many files and nothing here changes.
+  * through [[graft.core.ParquetRows.frame]]: the schema comes from the
+  * file's footer on the driver, with no inference job, and the scan is
+  * Spark's parquet scan, so Catalyst gets column pruning and predicate
+  * pushdown for free. At cluster scale these paths would be
+  * directories of many files and nothing here changes.
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    ParquetRows.frame(spark, s"$dir/$name.parquet")
 
   def region(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "nation")

@@ -2,6 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.ParquetRows
 
 /** Text-analysis operators for a large-scale training-data pipeline:
   * language distribution, token counting, quality scoring, language-ID
@@ -523,11 +524,11 @@ object TextOps {
 
   /** The stored postings: (doc_id, term, tf). */
   private[analytics] def postings(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(ensurePostings(spark, dir))
+    ParquetRows.frame(spark, ensurePostings(spark, dir))
 
   /** The |vocab|-row document-frequency sidecar: (term, df). */
   private[analytics] def postingsDf(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(ensurePostings(spark, dir) + "/_df")
+    ParquetRows.frame(spark, ensurePostings(spark, dir) + "/_df")
 
   /** TF-IDF distinctive-term extraction: top-3 terms per document by
     * tf·ln(N/df), ties broken by term. Both inputs come off the stored

@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.core.ParquetRows
 
 /** Corpus preparation operators that finish the training-data story:
   * chunking, deterministic sampling, shard packing. All pure column
@@ -91,7 +92,7 @@ object TextPrep {
       .sortWithinPartitions("lang", "shard_id", "doc_id")
       .write.partitionBy("lang", "shard_id")
       .mode("overwrite").parquet(outDir)
-    assigned.sparkSession.read.parquet(outDir).count()
+    ParquetRows.frame(assigned.sparkSession, outDir).count()
   }
 
   /** Materialize packed shards as JSONL — the line-delimited format

@@ -2,6 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.ParquetRows
 
 /** Distributed Unigram-LM tokenizer training (Kudo 2018, the
   * SentencePiece unigram model) — the other major tokenizer family
@@ -213,7 +214,7 @@ object UnigramTrain {
     * path (train once per corpus per JVM). Rows-only; Verify emits
     * `t33_parity_singlenode`. */
   def t33UnigramVocab(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(vocabArtifact(spark, dir)).orderBy("rank")
+    ParquetRows.frame(spark, vocabArtifact(spark, dir)).orderBy("rank")
 
   /** t34 gate: ENCODE the corpus with the trained unigram model and
     * report per-source compression stats — t29's shape, so the two
@@ -223,7 +224,7 @@ object UnigramTrain {
     * piece table rides in as a task literal. */
   def t34UnigramEncode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val rows = spark.read.parquet(vocabArtifact(spark, dir)).collect()
+    val rows = ParquetRows.frame(spark, vocabArtifact(spark, dir)).collect()
       .map(r => (r.getString(1), r.getDouble(3)))
     val logp = rows.toMap
     val srcWord = Tables.documents(spark, dir)

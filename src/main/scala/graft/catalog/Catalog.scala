@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 
-import graft.core.{QueryEntry, Route}
+import graft.core.{ParquetRows, QueryEntry, Route}
 import graft.store.JsonFileStore
 
 /** Spark-native asset catalog: distributed ingest of a JsonFileStore
@@ -103,8 +103,9 @@ object Catalog {
     * the tree ([[listing]]), then executors reverse-parse each path
     * with a per-partition store handle and hash its content — the
     * canonical-JSON form for JSON routes ([[graft.filters.JsonUtil
-    * .canonicalMd5]], so backend formatting differences are
-    * invisible), raw bytes for blob routes. URIs are version-stripped
+    * .contentMd5]], so backend formatting differences are invisible;
+    * the raw text of a document that does not parse), raw bytes for
+    * blob routes. URIs are version-stripped
     * to the logical identity. No file content ever reaches the
     * driver — at millions of assets this is one distributed pass,
     * shuffle-free. */
@@ -121,7 +122,7 @@ object Catalog {
             val digest =
               if (Route.blobRoutes.contains(e.route))
                 JsonUtil.md5hex(java.nio.file.Files.readAllBytes(p))
-              else JsonUtil.canonicalMd5(java.nio.file.Files.readString(p))
+              else JsonUtil.contentMd5(java.nio.file.Files.readString(p))
             (e.uri.takeWhile(_ != '?'), digest)
           }
         }
@@ -135,7 +136,7 @@ object Catalog {
     catalog.write.mode("overwrite").partitionBy("project").parquet(path)
 
   def load(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    ParquetRows.frame(spark, path)
 
   /** Incremental refresh: keep prior entries whose file mtime/size are
     * unchanged, re-parse only new or modified files, drop deleted ones.

@@ -50,6 +50,15 @@ object Bounded {
     def release(): Unit = if (!local) { df.unpersist(); () }
   }
 
+  /** `df` as ONE task when `bound`, a caller-known upper bound on its
+    * row count (a tracked layout's stored rows), is within the cap:
+    * `coalesce(1)`, no shuffle. A single-partition child satisfies
+    * every required distribution, so the windows, groupings, sorts
+    * and aggregates planned above it run in one stage instead of a
+    * shuffle each. None when the bound is unknown or over the cap. */
+  def singleTask(df: DataFrame, bound: Option[Long]): Option[DataFrame] =
+    bound.filter(_ <= maxRows(df.sparkSession)).map(_ => df.coalesce(1))
+
   /** Per-value row counts of a string column — a driver-side fold when
     * the frame is local, one aggregation job on the over-cap fallback
     * (where `rows` is empty and MUST NOT be folded over). */

@@ -1,6 +1,6 @@
 package graft.core
 
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 import scala.util.Using
@@ -20,8 +20,9 @@ import org.apache.parquet.io.api.{Binary, RecordConsumer}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.parquet.schema.Type.Repetition
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchemaShim
 import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructType}
 
 /** DRIVER-SIDE parquet reads and writes with parquet-mr: no Spark job,
@@ -31,7 +32,8 @@ import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructType}
   * rows pays scheduler and listing overhead per call (≈0.09 s/job on
   * the bench's cost fit), where doing it in the driver is
   * milliseconds. Single-maintainer layouts only — no writer races the
-  * scan. */
+  * scan. [[frame]] is the library's one schema-less Spark parquet
+  * read: the scan stays Spark's, and only the schema is read here. */
 object ParquetRows {
 
   /** The files of a directory tree whose names `pick` accepts.
@@ -51,18 +53,41 @@ object ParquetRows {
     out.result()
   }
 
+  private def isDataFile(name: String): Boolean =
+    !name.startsWith("_") && !name.startsWith(".") && name.endsWith(".parquet")
+
   /** The data files of a parquet directory tree. Underscore/dot-prefixed
     * sidecars, markers, checksum files and [[write]]'s in-progress
     * files are skipped, as Spark's file listing skips them. Empty when
     * `root` is not a directory. */
-  def dataFiles(root: Path): Seq[Path] =
-    files(root)(n => !n.startsWith("_") && !n.startsWith(".") && n.endsWith(".parquet"))
+  def dataFiles(root: Path): Seq[Path] = files(root)(isDataFile)
 
   /** In-progress files [[write]] left behind when its process died
     * before the rename: `.part-<uuid>.snappy.parquet`. (Spark's
     * checksum files, `.part-….crc`, are not among them.) */
   def tempFiles(root: Path): Seq[Path] =
     files(root)(n => n.startsWith(".part-") && n.endsWith(".parquet"))
+
+  /** `spark.read.parquet(paths: _*)` with the schema resolved on the
+    * driver. Spark's inference runs a Spark job on every such read to
+    * read one footer, that of the data file first in path order. This
+    * reads the same file's footer in the calling thread through
+    * Spark's own conversion, under the session's parquet settings, and
+    * hands the schema to the reader. Partition columns (`gen=`,
+    * `cell=`) are still discovered and appended by Spark. A path is a
+    * file or directory tree, local or a `file:` URI (as
+    * `input_file_name()` gives it). With no data file under `paths`
+    * the read is Spark's own, so a missing or empty path fails as it
+    * always did. Every schema-less parquet read of the library goes
+    * through here (ParquetReadGuardSpec). */
+  def frame(spark: SparkSession, paths: String*): DataFrame = {
+    val first = paths.flatMap { path =>
+      val root = if (path.startsWith("file:")) Paths.get(java.net.URI.create(path)) else Paths.get(path)
+      if (Files.isRegularFile(root)) Seq(root) else files(root)(isDataFile)
+    }.minByOption(_.toString)
+    first.flatMap(f => FooterSchemaShim.schemaOf(spark, new org.apache.hadoop.fs.Path(f.toUri)))
+      .fold(spark.read.parquet(paths: _*))(spark.read.schema(_).parquet(paths: _*))
+  }
 
   /** The directory of one partition under `root`: `column=value` per
     * partition column, escaped by Spark's own rule, a NULL or empty

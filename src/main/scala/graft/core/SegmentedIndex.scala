@@ -151,7 +151,7 @@ object SegmentedIndex {
                              maxUpto: Long): Option[DataFrame] =
     if (!Files.isDirectory(Paths.get(out, "_tombstones"))) None
     else Some(tombstonesLocal(spark, out, maxUpto).getOrElse {
-      val raw = spark.read.parquet(s"$out/_tombstones")
+      val raw = ParquetRows.frame(spark, s"$out/_tombstones")
       raw.filter(col("upto_gen") <= maxUpto)
         .groupBy(raw.columns.head).agg(max(col("upto_gen")).as("upto_gen"))
     })
@@ -459,7 +459,7 @@ object SegmentedIndex {
   private[graft] def tombstoneInstancesSpark(spark: SparkSession, out: String): Long =
     if (!Files.isDirectory(Paths.get(out, "_tombstones"))) 0L
     else {
-      val raw = spark.read.parquet(s"$out/_tombstones")
+      val raw = ParquetRows.frame(spark, s"$out/_tombstones")
       raw.select(col(raw.columns.head), col("upto_gen")).distinct().count()
     }
 
@@ -558,16 +558,13 @@ object SegmentedIndex {
     * layout's own tracked row count: a big layout clusters by
     * `partCol` (one output file per partition value — the §6 file
     * discipline a million-file deployment needs), while a layout whose
-    * stored rows fit under the driver-local cap skips the exchange and
-    * rewrites in ONE task — AQE would coalesce that shuffle to one
+    * stored rows fit under the driver-local cap rewrites in ONE task
+    * ([[Bounded.singleTask]]) — AQE would coalesce that shuffle to one
     * partition anyway, so the exchange only bought a stage-job.
     * `readRowCount` counts STORED rows (≥ live rows), so the bound is
     * sound; untracked layouts keep the clustered rewrite. */
   def rewriteClustered(df: DataFrame, out: String, partCol: String): DataFrame =
-    readRowCount(out) match {
-      case Some(n) if n <= Bounded.maxRows(df.sparkSession) => df.coalesce(1)
-      case _ => df.repartition(col(partCol))
-    }
+    Bounded.singleTask(df, readRowCount(out)).getOrElse(df.repartition(col(partCol)))
 
   /** The compaction shell every owner shares: heal a crashed prior
     * swap, hand the caller the staging dir to write the rewrite into

@@ -587,7 +587,9 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
   /** Distributed (uri, content md5) scan over every table's live rows:
     * URIs are rebuilt row-side from the key columns (the same rule as
     * [[query]]'s catalog scan) and payloads hash executor-side — the
-    * canonical-JSON form for JSON routes, raw bytes for blobs. No
+    * canonical-JSON form for JSON routes ([[JsonUtil.contentMd5]]:
+    * the raw text of a document that does not parse), raw bytes for
+    * blobs. No
     * per-asset driver round-trips: the replica audit over a
     * million-asset store is |tables| parquet scans unioned, hashes
     * computed as a mapped column. */
@@ -606,7 +608,7 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
             val uri = QueryEntry.of(route, meta).uri
             val digest =
               if (isBlob) JsonUtil.md5hex(r.getAs[Array[Byte]](keys.length + 1))
-              else JsonUtil.canonicalMd5(r.getString(keys.length))
+              else JsonUtil.contentMd5(r.getString(keys.length))
             (uri.takeWhile(_ != '?'), digest)
           }.toDF("uri", "content_md5")
       }

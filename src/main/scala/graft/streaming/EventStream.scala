@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+import graft.core.ParquetRows
 
 /** Structured Streaming over the events table — the streaming surface
   * the reference lacks entirely (SURVEY.md §2.10), built the
@@ -57,11 +58,9 @@ object EventStream {
     val probe = spark.newSession()
     probe.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     try {
-      val batch =
-        if (new java.io.File(s"$dir/events.parquet").isDirectory)
-          probe.read.parquet(s"$dir/events.parquet")
-        else probe.read.option("pathGlobFilter", "events.parquet").parquet(dir)
-      val t = batch.schema("ts").dataType
+      // one footer read on the driver, for the single-file and the
+      // part-file directory layout alike
+      val t = ParquetRows.frame(probe, s"$dir/events.parquet").schema("ts").dataType
       probedTsTypes.put(dir, t)
       t
     } catch {
@@ -211,8 +210,8 @@ object EventStream {
     * complete mode (bounded key space: dim-sized). */
   def enrichByNation(spark: SparkSession, dir: String): DataFrame = {
     val dim = broadcast(
-      spark.read.parquet(s"$dir/customer.parquet")
-        .join(spark.read.parquet(s"$dir/nation.parquet"),
+      ParquetRows.frame(spark, s"$dir/customer.parquet")
+        .join(ParquetRows.frame(spark, s"$dir/nation.parquet"),
           col("c_nationkey") === col("n_nationkey"))
         .select(col("c_custkey").as("user_id"), col("n_name").as("nation")))
     readEvents(spark, dir)

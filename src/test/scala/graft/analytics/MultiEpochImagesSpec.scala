@@ -58,6 +58,23 @@ class MultiEpochImagesSpec extends AnyFunSuite {
     assert(rows.last._3 >= 4, "final epoch lost planted pattern groups")
   }
 
+  test("warm pass: 14 Spark jobs, every epoch equal, compaction fired") {
+    // the warm job map, as the bench runs the gate (its count() under
+    // Trace): the base re-seed write; per epoch one bounded localize of
+    // the diff, one single-file append and one single-stage live digest;
+    // the one compaction's rewrite; the count of the receipt rows
+    val gate = (s: org.apache.spark.sql.SparkSession, d: String) =>
+      Multimodal.m13MultiEpochImages(s, d)
+    graft.Bench.runGate(spark, gate, dir)
+    val warm = graft.Bench.runGate(spark, gate, dir)
+    assert(warm.rows == Right(Pipeline.ChainEpochs.toLong))
+    assert(warm.cost.jobs == 14, s"m13's warm pass ran ${warm.cost.jobs} Spark jobs, not 14")
+    val rows = Multimodal.m13MultiEpochImages(spark, dir).collect()
+    assert(rows.length == Pipeline.ChainEpochs && rows.forall(_.getAs[Boolean]("eq_rebuild")),
+      "m13_eq_every_epoch")
+    assert(rows.exists(_.getAs[Boolean]("compacted")), "m13_compaction_fired")
+  }
+
   test("probe mode (rebuildCheck=false): twins skipped, eq_rebuild null, maintenance receipts unchanged") {
     // ChainProbe's contract: probe mode must not fabricate a verdict
     // (eq_rebuild reads null) and must not change the maintenance work

@@ -17,8 +17,6 @@ class DriverImportSpec extends AnyFunSuite {
   test("bulk import, flush, query and rmExperimentData run no Spark job") {
     val srcDir = graft.core.TempDirs.create("graft-driver-import-src")
     Fixture.build(srcDir)
-    // the audit hashes canonical JSON, which an invalid document has not
-    java.nio.file.Files.delete(srcDir.resolve("reports/project/experiment/invalid-json.json"))
     val src = new JsonFileStore(srcDir.toString)
     val db = new TableStore(spark, graft.core.TempDirs.create("graft-driver-import-dst").toString)
     try {
