@@ -23,21 +23,26 @@ object Bench {
       try Right(gate(spark, sfDir).count()) catch { case e: Throwable => Left(e) }
     }
     val fixtureS = (graft.core.FixtureClock.totalNanos - fix0) / 1e9
-    // release the per-query cache so storage memory never leaks
-    // across the run — BOTH the SQL cache and leftover
-    // localCheckpoint RDD blocks (the iterative graph gates cut
-    // lineage eagerly; their final cuts outlive the query and
-    // would otherwise accumulate across 160+ queries × 2 passes)
+    afterGate(spark, preIds)
+    GateRun(rows, cost, fixtureS)
+  }
+
+  /** The between-gate cleanup, given the persistent-RDD ids that
+    * existed before the gate ran. Releases the per-query cache so
+    * storage memory never leaks across the run — BOTH the SQL cache
+    * and leftover localCheckpoint RDD blocks (the iterative graph
+    * gates cut lineage eagerly; their final cuts outlive the query and
+    * would otherwise accumulate across 160+ queries × 2 passes) — and
+    * unloads state-store providers a streaming drive left loaded:
+    * deactivated providers otherwise wait out the 60s maintenance
+    * cadence holding their in-memory state maps. Sequential queries ⇒
+    * no active stream to disturb; reload is from the checkpoint on
+    * next use. */
+  def afterGate(spark: SparkSession, preIds: collection.Set[Int]): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs
       .foreach { case (id, rdd) => if (!preIds.contains(id)) rdd.unpersist(false) }
-    // unload state-store providers a streaming drive left loaded:
-    // deactivated providers otherwise wait out the 60s maintenance
-    // cadence holding their in-memory state maps. Sequential
-    // queries ⇒ no active stream to disturb; reload is from the
-    // checkpoint on next use.
     org.apache.spark.sql.graftdiag.StateShim.unloadAllProviders()
-    GateRun(rows, cost, fixtureS)
   }
 
   def main(args: Array[String]): Unit = {

@@ -35,20 +35,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // release the per-query cache between queries — SQL cache plus
-      // leftover localCheckpoint RDD blocks from the iterative graph
-      // gates (their final lineage cuts outlive the query)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs
-        .foreach { case (id, rdd) => if (!preIds.contains(id)) rdd.unpersist(false) }
-      // unload state-store providers the gate's streaming drives loaded:
-      // deactivated providers otherwise wait for the 60s maintenance
-      // cadence while holding their in-memory state maps — across 175
-      // gates that is hundreds of providers of avoidable old-gen. Safe
-      // here because gates run sequentially (no active stream between
-      // iterations); a provider is reloaded from its checkpoint on next
-      // use.
-      org.apache.spark.sql.graftdiag.StateShim.unloadAllProviders()
+      Bench.afterGate(spark, preIds)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

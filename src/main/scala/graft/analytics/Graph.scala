@@ -615,8 +615,7 @@ object Graph {
       // The measurement is the metadata-cheap instance estimate — k
       // edge rows per tombstoned (node, generation), exact for this
       // store (see coveredFractionEstimate)
-      graft.core.SegmentedIndex.maybeCompact(
-        ParquetRows.frame(spark, store), store,
+      graft.core.SegmentedIndex.maybeCompact(store,
         rowsPerInstance = Similarity.KnnEdgeK.toDouble) { tmp =>
         graft.core.SegmentedIndex.live(spark, ParquetRows.frame(spark, store), store,
             keyCol = "vec_id", genCol = "gen").drop("gen")
@@ -987,14 +986,13 @@ object Graph {
     val tombstoneStored = pureNewL.fold(tombstoneIds)(pn =>
       tombstoneIds.join(broadcast(pn.df),
         col("vec_id") === col("_pn_id"), "left_anti"))
-    graft.core.SegmentedIndex.tombstone(
-      tombstoneStored, store,
-      keyCol = "vec_id", uptoGen = gen - 1)
-    if (nRec > 0)
-      graft.core.SegmentedIndex.appendSegment(
-        knnForQueries(bCur.join(broadcast(recomputeIds), Seq("vec_id"), "left_semi"),
-          bCur, k),
-        store, gen)
+    graft.core.SegmentedIndex.applyBatch(Some(tombstoneStored), store, "vec_id", gen) {
+      if (nRec > 0)
+        graft.core.SegmentedIndex.appendSegment(
+          knnForQueries(bCur.join(broadcast(recomputeIds), Seq("vec_id"), "left_semi"),
+            bCur, k),
+          store, gen)
+    }
     recomputeIds.unpersist()
     dirtyL.release(); pureNewL.foreach(_.release())
     nRec
@@ -1107,8 +1105,7 @@ object Graph {
         // MaintainedStoreEstimateSpec pins it against the full
         // anti-join)
         def covered(): Double = graft.core.SegmentedIndex.coveredFractionEstimate(
-          ParquetRows.frame(spark, store), store,
-          rowsPerInstance = Similarity.KnnEdgeK.toDouble, requireTracked = true)
+          store, rowsPerInstance = Similarity.KnnEdgeK.toDouble)
         def compact(e: Int): Unit = graft.core.SegmentedIndex.compactWith(store) { stage =>
           liveEdges.drop("gen").write.parquet(s"$stage/gen=$e")
         }

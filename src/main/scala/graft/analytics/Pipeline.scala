@@ -917,7 +917,7 @@ object Pipeline {
             .select(col("doc_id"), col("text"))))
         dirtyL.count
       }
-      def covered(): Double = TextOps.postingsCoveredFraction(spark, out)
+      def covered(): Double = TextOps.postingsCoveredFraction(out)
       def compact(e: Int): Unit = TextOps.compactPostings(spark, out)
       override def release(e: Int): Unit = { onEpoch(e); dirtyL.release() }
     })
@@ -988,8 +988,7 @@ object Pipeline {
         }
         // the metadata-cheap instance estimate — one code row per
         // (vec, generation), exact for this layout
-        def covered(): Double = graft.core.SegmentedIndex.coveredFractionEstimate(
-          ParquetRows.frame(spark, out), out, requireTracked = true)
+        def covered(): Double = graft.core.SegmentedIndex.coveredFractionEstimate(out)
         def compact(e: Int): Unit = Similarity.compactIvfPqCorpus(spark, out)
         // familyDigest is order-independent (sum of per-row crc32), so
         // the probe feeds it UNSORTED
@@ -1012,9 +1011,8 @@ object Pipeline {
     * final-epoch adds, ONE definition across the lexical, PQ, and
     * plain-vector families) chained through ONE stored layout seeded
     * from the memoized snapshot-A baseline. Deletes are scoped to the
-    * PUBLISHED FILE NAMES' generations ([[Similarity.withFileGen]] —
-    * `gen<g>-part-…` from the appends, 0 for the build/compaction
-    * files): per epoch, [[Similarity.applyIvfBatch]] at generation `e`
+    * rows' stored `gen` (0 for the build, the epoch for its appends,
+    * kept through compaction): per epoch, [[Similarity.applyIvfBatch]] at generation `e`
     * tombstones the dirty ids at `upto_gen = e−1` and re-embeds +
     * appends the revised docs at `e` (live immediately); compact ONLY
     * on the covered-fraction policy — the metadata-cheap instance estimate,
@@ -1046,8 +1044,7 @@ object Pipeline {
             dirty = dirtyL.df, adds = p08Vectors(p13ReAddText(docs, e)))
           dirtyL.count
         }
-        def covered(): Double = graft.core.SegmentedIndex.coveredFractionEstimate(
-          ParquetRows.frame(spark, out), out, requireTracked = true)
+        def covered(): Double = graft.core.SegmentedIndex.coveredFractionEstimate(out)
         def compact(e: Int): Unit = Similarity.compactIvfCorpus(spark, out)
         override def live(e: Int): Option[DataFrame] = Some(
           Similarity.ivfStoredTopKWith(cents, spark, out, queries, k = 10))

@@ -814,7 +814,10 @@ object Similarity {
     * one file per (task × cell) — 32 tasks × K cells of small files —
     * while hashing by cell lands each cell in one task → one file per
     * cell directory at fixture scale (a real deployment repartitions
-    * to ~file-sized splits per cell instead). The codebook is written
+    * to ~file-sized splits per cell instead). Rows are (vec_id, v,
+    * norm, any metadata columns the corpus carries, gen), `gen` 0 at
+    * build — the IVF-PQ `_refine` sidecar's shape, so both layouts
+    * share their append, live view and compaction. The codebook is written
     * next to the data under `_codebook`: underscore-prefixed paths are
     * invisible to Spark's file index, so the corpus read stays clean
     * while probe sessions skip the refit. The fit cache is released as
@@ -916,104 +919,110 @@ object Similarity {
   /** [[appendIvfCorpus]] with a pre-collected codebook and stored
     * column set — the per-batch entry a streaming ingest loop uses so
     * the K-row codebook read and the layout-schema listing happen once
-    * per stream, not once per microbatch. `gen` names the published
-    * files, so a replayed at-least-once batch replaces its own prior
-    * append instead of duplicating it; explicit generation numbers
-    * must be unique per layout lifetime except on replay
-    * (batchId-derived); [[withFileGen]] reads the generation back for
-    * the tombstone anti-join. */
+    * per stream, not once per microbatch. `gen` is stored in the rows'
+    * `gen` column and names the published files, so a replayed
+    * at-least-once batch replaces its own prior append instead of
+    * duplicating it; explicit generation numbers must be unique per
+    * layout lifetime except on replay (batchId-derived). */
   private[analytics] def appendIvfCorpusWith(cents: Array[(Int, Array[Double])],
                                              out: String, vecs: DataFrame,
                                              storedCols: Set[String],
                                              gen: Long = -1L): Unit = {
-    // gen < 0 = "ad-hoc": draw a fresh cross-process-safe generation
-    // from the layout; an explicit non-negative gen is the replay
-    // (batchId-derived) contract and is published verbatim
-    val genPub = if (gen >= 0L) gen else nextAdhocGen(out)
-    import graft.functions.VectorFunctions._
     // the stored layout defines the schema: carry exactly its metadata
     // columns through the append (batch columns the layout doesn't
     // store are dropped), and fail fast when the batch can't supply
     // one — silently appending a narrower schema would read back null
     // metadata and filtered probes would drop every appended vector
-    val meta = (storedCols -- Set("vec_id", "v", "norm", "cell")).toSeq.sorted
+    val meta = (storedCols -- Set("vec_id", "v", "norm", "cell", "gen")).toSeq.sorted
     val missing = meta.filterNot(vecs.columns.contains)
     require(missing.isEmpty,
       s"IVF append schema mismatch: stored layout carries metadata column(s) " +
         s"[${missing.mkString(", ")}] the batch does not provide — appended " +
         "rows would read back with null metadata and filtered probes would " +
         "silently drop them")
-    graft.core.SegmentedIndex.publishGeneration(out, genPub) { stage =>
-      vecs
-        .select(col("vec_id") +: as_double_array(col("embedding")).as("v") +:
-          meta.map(col): _*)
-        .withColumn("norm", array_norm(col("v")))
-        .withColumn("cell", cellOf(cents, col("v"), col("norm")))
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(stage)
-    }
+    appendAssigned(cents, out, vecs, meta, gen)(
+      out -> ((Seq("vec_id", "v", "norm") ++ meta :+ "cell").map(col)))
+  }
+
+  /** The one vector append of both stored layouts: assign `vecs`
+    * (vec_id, embedding and the `meta` columns) to cells under `cents`
+    * ONCE, then publish generation `gen` (< 0 = ad-hoc: a fresh
+    * cross-process-safe generation, [[nextAdhocGen]]; explicit
+    * generations are the replay contract, published verbatim) of each
+    * `(path, columns)` layout from that one assigned batch, every row
+    * carrying `gen`. Batch-sized by contract (a CDC diff / microbatch,
+    * never the corpus): Bounded.localize runs the embed + cell
+    * assignment cluster-side in its one capped-collect job and hands
+    * the rows back driver-local, so each publish is ONE single-stage
+    * job; over-cap batches keep a checkpoint + repartition shape.
+    * Each publish is a per-generation OVERWRITE (gen-named files), so
+    * an at-least-once maintainer replaying a batch replaces its own
+    * prior rows instead of duplicating them. */
+  private def appendAssigned(cents: Array[(Int, Array[Double])], out: String,
+                             vecs: DataFrame, meta: Seq[String], gen: Long)
+                            (layouts: (String, Seq[Column])*): Unit = {
+    import graft.functions.VectorFunctions._
+    val genPub = if (gen >= 0L) gen else nextAdhocGen(out)
+    val assigned = graft.core.Bounded.localize(vecs
+      .select(col("vec_id") +: as_double_array(col("embedding")).as("v") +: meta.map(col): _*)
+      .withColumn("norm", array_norm(col("v")))
+      .withColumn("cell", cellOf(cents, col("v"), col("norm"))))
+    try layouts.foreach { case (path, cols) =>
+      // the parallel view (an RDD scan, not the LocalRelation) keeps
+      // projections such as the nibble-pack codegen'd instead of folded
+      // driver-side interpreted; coalesce(1) keeps the write one task
+      // writing one file per touched cell — exactly the repartition
+      // shape's output, without its exchange
+      val batch =
+        if (assigned.local)
+          graft.core.Bounded.parallel(assigned).select(cols: _*)
+            .withColumn("gen", lit(genPub)).coalesce(1)
+        else
+          assigned.df.select(cols: _*)
+            .withColumn("gen", lit(genPub)).repartition(col("cell"))
+      graft.core.SegmentedIndex.publishGeneration(path, genPub) { stage =>
+        batch.write.mode("overwrite").partitionBy("cell").parquet(stage)
+      }
+    } finally { assigned.release(); () }
   }
 
   /** Tombstone vector ids in a stored IVF or IVF-PQ layout — the
     * DELETE half of index maintenance. O(|ids|) append into the
     * `_tombstones` sidecar: no data file is touched, probes exclude the
-    * ids' rows at or below `uptoGen` immediately (a bounded anti-join
-    * against the plain layout's file-name generation, [[withFileGen]],
-    * or the PQ layout's `gen` column), and the next compaction drops
-    * the rows physically (PQ: codes AND `_refine`) and clears the
-    * sidecar. The default `uptoGen = Long.MaxValue` suppresses every
-    * generation until that compaction; the maintainers delete at
-    * `gen − 1` ([[applyIvfBatch]]). Visibility follows probe
-    * CONSTRUCTION order: a probe plan built before the tombstone landed
-    * keeps its snapshot (Spark fixes the sidecar's file index at plan
-    * time), so the single maintainer sequences delete → rebuild probes.
+    * ids' rows whose `gen` is at or below `uptoGen` immediately (a
+    * bounded anti-join), and the next compaction drops the rows
+    * physically (PQ: codes AND `_refine`) and clears the sidecar. The
+    * default `uptoGen = Long.MaxValue` suppresses every generation
+    * until that compaction; the maintainers delete at `gen − 1`
+    * ([[applyIvfBatch]]). Visibility follows probe CONSTRUCTION order:
+    * a probe plan built before the tombstone landed keeps its snapshot
+    * (Spark fixes the sidecar's file index at plan time), so the single
+    * maintainer sequences delete → rebuild probes.
     * IncrementalIndexSpec pins the interleaving: stale plans keep
     * their snapshot, fresh probes hide the id, a same-epoch re-append
     * stays suppressed, a post-compaction append resurrects it. */
   def deleteFromIvfCorpus(spark: SparkSession, out: String, ids: DataFrame,
                           uptoGen: Long = Long.MaxValue): Unit =
-    graft.core.SegmentedIndex.tombstone(
-      ids.select(col("vec_id").cast("long").as("vec_id")), out,
+    graft.core.SegmentedIndex.tombstone(vecIds(ids), out,
       keyCol = "vec_id", uptoGen = uptoGen)
 
-  /** Apply one CDC batch to a plain IVF layout at generation `gen`:
-    * tombstone the `dirty` ids (vec_id) at `upto_gen = gen − 1`, then
-    * append `adds` (vec_id, embedding, stored metadata) at `gen`, live
-    * at once. The family's one generation rule: p08 applies at 1 and
-    * then compacts, the p15 chain applies epoch `e` at `e`. A replay at
-    * the same `gen` lands on the same live rows. */
+  private def vecIds(ids: DataFrame): DataFrame =
+    ids.select(col("vec_id").cast("long").as("vec_id"))
+
+  /** Apply one CDC batch to a plain IVF layout at generation `gen`
+    * ([[graft.core.SegmentedIndex.applyBatch]]): tombstone the `dirty`
+    * ids (vec_id) at `upto_gen = gen − 1`, then append `adds` (vec_id,
+    * embedding, stored metadata) at `gen`, live at once. p08 applies at
+    * 1 and then compacts, the p15 chain applies epoch `e` at `e`. A
+    * replay at the same `gen` lands on the same live rows. */
   private[analytics] def applyIvfBatch(spark: SparkSession,
                                        cents: Array[(Int, Array[Double])],
                                        storedCols: Set[String], out: String,
                                        gen: Long, dirty: DataFrame,
-                                       adds: DataFrame): Unit = {
-    deleteFromIvfCorpus(spark, out, dirty, uptoGen = gen - 1)
-    appendIvfCorpusWith(cents, out, adds, storedCols, gen)
-  }
-
-  /** The plain IVF layout's rows with their GENERATION recovered from
-    * the published file names (`gen<g>-part-…` — the
-    * [[graft.core.SegmentedIndex.publishGeneration]] prefix; unprefixed
-    * files — the initial build, or a compaction rewrite — read as
-    * generation 0). The layout stores no generation COLUMN, so this
-    * file-name derivation is the `genCol` the tombstones' `upto_gen`
-    * is compared against ([[liveIvf]]). `input_file_name()`, not
-    * `_metadata.file_path`: naming `_metadata` adds a metadata column
-    * to the parquet scan's output and a struct projection above it. */
-  private[analytics] def withFileGen(df: DataFrame): DataFrame = {
-    // ANSI-safe: regexp_extract yields "" for unprefixed files, and
-    // CaseWhen short-circuits before the cast ever sees it
-    val g = regexp_extract(input_file_name(), "gen([0-9]+)-[^/]*$", 1)
-    df.withColumn("gen", when(g === "", lit(0L)).otherwise(g.cast("long")))
-  }
-
-  /** A scan of the plain IVF layout at `out` minus its tombstoned rows
-    * ([[graft.core.SegmentedIndex.live]] over [[withFileGen]]); with
-    * no tombstones, the scan as it was. */
-  private def liveIvf(spark: SparkSession, scan: DataFrame, out: String): DataFrame =
-    if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(out, "_tombstones"))) scan
-    else graft.core.SegmentedIndex.live(spark, withFileGen(scan), out,
-      keyCol = "vec_id", genCol = "gen").drop("gen")
+                                       adds: DataFrame): Unit =
+    graft.core.SegmentedIndex.applyBatch(Some(vecIds(dirty)), out, "vec_id", gen) {
+      appendIvfCorpusWith(cents, out, adds, storedCols, gen)
+    }
 
   /** [[writeIvfLayout]] under a GIVEN codebook — no fit: assign cells
     * with `cents` and write the partitioned layout + codebook. The
@@ -1021,11 +1030,28 @@ object Similarity {
     * full rebuild under the same quantizer. */
   private[analytics] def writeIvfLayoutWith(cents: Array[(Int, Array[Double])],
                                             corpus: DataFrame, out: String): Unit = {
-    corpus.withColumn("cell", cellOf(cents, col("v"), col("norm")))
+    writeCells(corpus.withColumn("cell", cellOf(cents, col("v"), col("norm"))), out)
+    writeLayoutMeta(corpus.sparkSession, cents, out)
+  }
+
+  /** Build-time write of cell-assigned rows as generation 0 of the
+    * cell-partitioned layout at `path` — the plain layout, the PQ
+    * codes and their `_refine` sidecar alike. Every stored vector row
+    * carries a GENERATION: tombstones are gen-scoped (SegmentedIndex's
+    * convention), so a maintainer can delete-and-re-append the same id
+    * within one batch with no compaction in between — the re-append's
+    * higher gen is live immediately. */
+  private def writeCells(assigned: DataFrame, path: String): Unit =
+    assigned.withColumn("gen", lit(0L))
       .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(out)
-    val spark2 = corpus.sparkSession
-    import spark2.implicits._
+      .write.mode("overwrite").partitionBy("cell").parquet(path)
+
+  /** The coarse codebook under `_codebook` (invisible to Spark's file
+    * index, so probe sessions skip the refit) and the maintained row
+    * count — what every built vector layout carries next to its data. */
+  private def writeLayoutMeta(spark: SparkSession, cents: Array[(Int, Array[Double])],
+                              out: String): Unit = {
+    import spark.implicits._
     cents.toSeq.map { case (c, v) => (c, v.toSeq) }
       .toDF("cell", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$out/_codebook")
@@ -1078,10 +1104,11 @@ object Similarity {
       .filter(col("cell").isin(probedCells.map(Int.box): _*))
     val pruned1 = where.map(pruned0.filter).getOrElse(pruned0)
     // tombstoned rows (deleteFromIvfCorpus) are excluded at probe
-    // time against the file-name generation: the sidecar is bounded by
-    // deletions since the last compaction, so the anti-join probe side
-    // broadcasts; layouts without the sidecar pay nothing
-    val pruned = liveIvf(spark, pruned1, out)
+    // time, gen-scoped: the sidecar is bounded by deletions since the
+    // last compaction, so the anti-join probe side broadcasts; layouts
+    // without the sidecar pay nothing
+    val pruned = graft.core.SegmentedIndex.live(spark, pruned1, out,
+      keyCol = "vec_id", genCol = "gen")
     val scored = broadcast(probes).join(pruned, "cell")
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
@@ -1235,31 +1262,16 @@ object Similarity {
   private[analytics] def writeIvfPqLayoutWith(cents: Array[(Int, Array[Double])],
                                               books: Array[Array[Array[Double]]],
                                               corpus: DataFrame, out: String): Unit = {
-    // rows carry a GENERATION (0 at build): tombstones are gen-scoped
-    // (SegmentedIndex's postings semantics), so a streaming maintainer
-    // can delete-and-re-append the same id within one batch with no
-    // compaction in between — the re-append's higher gen is live
-    // immediately
     val assigned = corpus.withColumn("cell", cellOf(cents, col("v"), col("norm")))
-    assigned.select(col("vec_id"), col("norm"), col("cell"), pqCodeCol(books))
-      .withColumn("gen", lit(0L))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(out)
-    assigned.select(col("vec_id"), col("v"), col("norm"), col("cell"))
-      .withColumn("gen", lit(0L))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$out/_refine")
+    writeCells(assigned.select(col("vec_id"), col("norm"), col("cell"), pqCodeCol(books)), out)
+    writeCells(assigned.select(col("vec_id"), col("v"), col("norm"), col("cell")), s"$out/_refine")
     val spark2 = corpus.sparkSession
     import spark2.implicits._
-    cents.toSeq.map { case (c, v) => (c, v.toSeq) }
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$out/_codebook")
     (for { m <- 0 until PqM; cell <- 0 until PqKs }
       yield (m, cell, books(m)(cell).toSeq))
       .toDF("m", "cell", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$out/_pq_codebooks")
-    graft.core.SegmentedIndex.writeRowCount(out,
-      graft.core.SegmentedIndex.footerRowCountOf(java.nio.file.Paths.get(out)))
+    writeLayoutMeta(spark2, cents, out)
   }
 
   /** The nibble-packed PQ code of `v` under `books`: m-th 4-bit code
@@ -1291,10 +1303,10 @@ object Similarity {
                                          books: Array[Array[Array[Double]]],
                                          out: String, gen: Long,
                                          dirty: Option[DataFrame],
-                                         adds: Option[DataFrame]): Unit = {
-    dirty.foreach(deleteFromIvfCorpus(spark, out, _, uptoGen = gen - 1))
-    adds.foreach(appendIvfPqCorpusWith(cents, books, out, _, gen))
-  }
+                                         adds: Option[DataFrame]): Unit =
+    graft.core.SegmentedIndex.applyBatch(dirty.map(vecIds), out, "vec_id", gen) {
+      adds.foreach(appendIvfPqCorpusWith(cents, books, out, _, gen))
+    }
 
   /** Append vectors to a stored IVF-PQ layout under its STORED
     * codebooks (no refit): assign cells, nibble-pack codes, append to
@@ -1320,69 +1332,22 @@ object Similarity {
   def appendIvfPqCorpusWith(cents: Array[(Int, Array[Double])],
                             books: Array[Array[Array[Double]]],
                             out: String, vecs: DataFrame,
-                            gen: Long = -1L): Unit = {
-    import graft.functions.VectorFunctions._
-    val genPub = if (gen >= 0L) gen else nextAdhocGen(out)
-    // materialize the assigned batch ONCE: the codes and refine
-    // publishes below both consume it, and re-deriving the plan would
-    // run the (model-pass-shaped) embed + cell assignment twice per
-    // batch. Batch-sized by contract (a CDC diff / microbatch, never
-    // the corpus): Bounded.localize runs the embed + cell assignment
-    // cluster-side in its one capped-collect job and hands the rows
-    // back driver-local, so each publish below is ONE single-stage
-    // job — the r17 shape paid a checkpoint job plus an exchange
-    // stage-job per publish (5 jobs per batch; this is 3). Over-cap
-    // batches keep the r17 checkpoint + repartition shape.
-    val assigned = graft.core.Bounded.localize(vecs
-      .select(col("vec_id"), as_double_array(col("embedding")).as("v"))
-      .withColumn("norm", array_norm(col("v")))
-      .withColumn("cell", cellOf(cents, col("v"), col("norm"))))
-    // both writes are per-generation OVERWRITES (gen-named files via
-    // publishGeneration), so an at-least-once maintainer replaying a
-    // batch replaces its own prior code AND refine rows instead of
-    // duplicating them
-    try {
-      // the parallel view (an RDD scan, not the LocalRelation) keeps
-      // the nibble-pack projection codegen'd instead of folded
-      // driver-side interpreted; coalesce(1) keeps the write one task
-      // writing one file per touched cell — exactly the repartition
-      // shape's output, without its exchange
-      def batchOf(cols: Seq[org.apache.spark.sql.Column]) =
-        if (assigned.local)
-          graft.core.Bounded.parallel(assigned).select(cols: _*)
-            .withColumn("gen", lit(genPub)).coalesce(1)
-        else
-          assigned.df.select(cols: _*)
-            .withColumn("gen", lit(genPub)).repartition(col("cell"))
-      graft.core.SegmentedIndex.publishGeneration(out, genPub) { stage =>
-        batchOf(Seq(col("vec_id"), col("norm"), col("cell"), pqCodeCol(books)))
-          .write.mode("overwrite").partitionBy("cell").parquet(stage)
-      }
-      graft.core.SegmentedIndex.publishGeneration(s"$out/_refine", genPub) { stage =>
-        batchOf(Seq(col("vec_id"), col("v"), col("norm"), col("cell")))
-          .write.mode("overwrite").partitionBy("cell").parquet(stage)
-      }
-    } finally { assigned.release(); () }
-  }
+                            gen: Long = -1L): Unit =
+    // the codes and `_refine` publishes both consume the one assigned
+    // batch: re-deriving it would run the (model-pass-shaped) embed +
+    // cell assignment twice per batch
+    appendAssigned(cents, out, vecs, Nil, gen)(
+      out -> Seq(col("vec_id"), col("norm"), col("cell"), pqCodeCol(books)),
+      s"$out/_refine" -> Seq(col("vec_id"), col("v"), col("norm"), col("cell")))
 
   /** Compact a stored IVF-PQ layout: apply tombstones physically to
     * BOTH the code layout and the `_refine` raw-vector sidecar (the
     * refine rows carry the same tombstoned ids — copying them verbatim
     * would keep deleted vectors on disk forever), rewrite one file per
     * cell each, carry the two codebooks, clear the tombstones, publish
-    * with the shared two-rename swap. */
+    * with the shared two-rename swap ([[compactCells]]). */
   def compactIvfPqCorpus(spark: SparkSession, out: String): Unit =
-    graft.core.SegmentedIndex.compactWith(out, skipSidecars = Set("_refine")) { tmp =>
-      def liveOf(path: String) = graft.core.SegmentedIndex.live(spark,
-        ParquetRows.frame(spark, path), out, keyCol = "vec_id", genCol = "gen")
-      // scale-adaptive rewrite (rewriteClustered): cluster-by-cell for
-      // big layouts, one task under the driver-local cap — same per-cell
-      // files, one exchange stage-job fewer per layout
-      graft.core.SegmentedIndex.rewriteClustered(liveOf(out), out, "cell")
-        .write.mode("overwrite").partitionBy("cell").parquet(tmp)
-      graft.core.SegmentedIndex.rewriteClustered(liveOf(s"$out/_refine"), out, "cell")
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$tmp/_refine")
-    }
+    compactCells(spark, out, "_refine")
 
   /** Probe a [[writeIvfPqLayout]] index: both codebooks are K-row /
     * M×Ks-row driver reads, the probed cells land as PARTITION filters
@@ -1476,9 +1441,10 @@ object Similarity {
     * per-cell read amplification stays bounded however long an ingest
     * stream runs (every [[appendIvfCorpus]] microbatch adds a part
     * file per touched cell; without maintenance a year of microbatches
-    * is a year of files). Same shape as the TableStore compactor:
-    * snapshot → rewrite to a sibling `_compacting` dir → swap, with
-    * every underscore sidecar (`_codebook`, and the PQ layout's
+    * is a year of files). Tombstoned rows are dropped, live rows keep
+    * their `gen`. Same shape as the TableStore compactor: snapshot →
+    * rewrite to a sibling `_compacting` dir → swap, with every
+    * underscore sidecar (`_codebook`, and the PQ layout's
     * `_pq_codebooks`) carried over byte-for-byte — content, partition
     * keys, and pruning are untouched (IvfAppendSpec pins all three).
     *
@@ -1497,14 +1463,23 @@ object Similarity {
     * never concurrently with them — IvfAppendSpec pins the interleaved
     * probe/append/compact sequence losing and duplicating nothing. */
   def compactIvfCorpus(spark: SparkSession, out: String): Unit =
-    // compaction APPLIES tombstones (the live view over the file-name
-    // generations) and rewrites cell-partitioned into unprefixed files,
-    // generation 0; sidecar carry + tombstone clearing + the
-    // two-rename swap are the shared SegmentedIndex shell
-    graft.core.SegmentedIndex.compactWith(out) { tmp =>
-      graft.core.SegmentedIndex.rewriteClustered(
-          liveIvf(spark, ParquetRows.frame(spark, out), out), out, "cell")
-        .write.mode("overwrite").partitionBy("cell").parquet(tmp)
+    compactCells(spark, out)
+
+  /** The one compaction of both stored vector layouts: the live view
+    * of the layout at `out` (and of each cell-partitioned `sidecars`
+    * dir, which shares its tombstones) is rewritten cell-partitioned,
+    * rows keeping their `gen`; the other underscore sidecars' carry,
+    * the tombstone clearing and the two-rename swap are the shared
+    * SegmentedIndex shell. Scale-adaptive rewrite (rewriteClustered):
+    * cluster-by-cell for big layouts, one task under the driver-local
+    * cap — same per-cell files, one exchange stage-job fewer. */
+  private def compactCells(spark: SparkSession, out: String, sidecars: String*): Unit =
+    graft.core.SegmentedIndex.compactWith(out, skipSidecars = sidecars.toSet) { tmp =>
+      ((out, tmp) +: sidecars.map(s => (s"$out/$s", s"$tmp/$s"))).foreach { case (from, to) =>
+        graft.core.SegmentedIndex.rewriteClustered(graft.core.SegmentedIndex.live(spark,
+            ParquetRows.frame(spark, from), out, keyCol = "vec_id", genCol = "gen"), out, "cell")
+          .write.mode("overwrite").partitionBy("cell").parquet(to)
+      }
     }
 
   /** s11 gate: incremental-ingest round trip — write a base layout

@@ -984,9 +984,9 @@ object StreamingQueries {
         keyCol = "vec_id", genCol = "gen", asOfGen = g - 1).drop("gen")
       // corpus maintenance: tombstone the batch's dirty ids, append
       // its after-images as segment g
-      graft.core.SegmentedIndex.tombstone(dirtyOld, corpusStore,
-        keyCol = "vec_id", uptoGen = g - 1)
-      graft.core.SegmentedIndex.appendSegment(newRows, corpusStore, g)
+      graft.core.SegmentedIndex.applyBatch(Some(dirtyOld), corpusStore, "vec_id", g) {
+        graft.core.SegmentedIndex.appendSegment(newRows, corpusStore, g)
+      }
       // edge maintenance against the batch's post-image corpus,
       // read FROM THE STORE the two writes above just produced:
       // liveAsOf(g) = segments ≤ g minus this batch's (and earlier)
@@ -1021,8 +1021,7 @@ object StreamingQueries {
     def edgesLive = graft.core.SegmentedIndex.live(spark,
       ParquetRows.frame(spark, edgeStore), edgeStore,
       keyCol = "vec_id", genCol = "gen")
-    graft.core.SegmentedIndex.maybeCompact(
-      ParquetRows.frame(spark, edgeStore), edgeStore,
+    graft.core.SegmentedIndex.maybeCompact(edgeStore,
       rowsPerInstance = Similarity.KnnEdgeK.toDouble) { tmpDir =>
       edgesLive.drop("gen").write.parquet(s"$tmpDir/gen=0")
     }

@@ -370,21 +370,12 @@ object TextOps {
     * bounded, folded DRIVER-SIDE — [[dfSidecarLiveRows]]) over the
     * maintained `_rowcount` denominator — EXACT whenever the sidecar
     * is (which the p13 oracle pins end-to-end), with no Spark job at
-    * all in the measurement path. Falls back to the exact anti-join
-    * for layouts without a sidecar. */
-  private[analytics] def postingsCoveredFraction(spark: SparkSession,
-                                                 out: String): Double =
+    * all in the measurement path. The layout must carry both sidecars,
+    * as [[writePostingsLayout]] writes them. */
+  private[analytics] def postingsCoveredFraction(out: String): Double =
     if (graft.core.SegmentedIndex.tombstoneInstances(out) == 0L) 0.0
-    else if (!java.nio.file.Files.isDirectory(
-        java.nio.file.Paths.get(out, "_df")))
-      graft.core.SegmentedIndex.coveredFraction(spark,
-        spark.read.schema(postingsSchema).parquet(out), out,
-        keyCol = "doc_id", genCol = "gen")
     else {
-      // denominator from the maintained `_rowcount` sidecar when the
-      // layout tracks one (O(1), no listing); footer count otherwise
-      val total = graft.core.SegmentedIndex.readRowCount(out).getOrElse(
-        spark.read.schema(postingsSchema).parquet(out).count())
+      val total = graft.core.SegmentedIndex.trackedRowCount(out)
       if (total == 0L) 0.0
       else math.max(0.0, 1.0 - dfSidecarLiveRows(out).toDouble / total)
     }
@@ -426,8 +417,9 @@ object TextOps {
                                             gen: Long, dirty: Option[DataFrame],
                                             addDocs: Option[DataFrame],
                                             rmDocs: Option[DataFrame]): Unit = {
-    dirty.foreach(deleteFromPostings(spark, out, _, uptoGen = gen - 1))
-    if (addDocs.isDefined || rmDocs.isDefined) appendBatch(spark, out, addDocs, rmDocs, gen)
+    graft.core.SegmentedIndex.applyBatch(dirty, out, "doc_id", gen) {
+      if (addDocs.isDefined || rmDocs.isDefined) appendBatch(spark, out, addDocs, rmDocs, gen)
+    }
   }
 
   /** [[applyPostingsBatch]]'s postings APPEND + `_df` sidecar delta in

@@ -36,6 +36,12 @@ import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructType}
   * read: the scan stays Spark's, and only the schema is read here. */
 object ParquetRows {
 
+  /** The Hadoop configuration driver-side reads default to, built
+    * once: a fresh `Configuration` reloads its XML resources from the
+    * class path, milliseconds per construction. Never written to
+    * ([[Projected]] takes its projection per reader). */
+  private lazy val driverConf: Configuration = new Configuration()
+
   /** The files of a directory tree whose names `pick` accepts.
     * Partition directories (`gen=<g>`, `project=<p>`) are walked;
     * underscore/dot-prefixed directories are not. */
@@ -129,7 +135,7 @@ object ParquetRows {
     * row groups and pages whose statistics, dictionaries or column
     * indexes exclude it are never decoded, and rows it rejects are
     * dropped. Partition-directory VALUES are not row fields. */
-  def foreach(root: Path, conf: Configuration = new Configuration(),
+  def foreach(root: Path, conf: Configuration = driverConf,
               columns: Option[Set[String]] = None,
               filter: FilterCompat.Filter = FilterCompat.NOOP)(f: Group => Unit): Unit =
     dataFiles(root).foreach(readFile(_, conf, columns, filter)(f))
@@ -152,6 +158,15 @@ object ParquetRows {
     val list = g.getGroup(field, 0)
     Array.tabulate(list.getFieldRepetitionCount(0))(i => list.getGroup(0, i).getDouble(0, 0))
   }
+
+  /** The total row count of `files` from their footers — no Spark
+    * job, no column data decoded: microseconds per file, for file lists
+    * the caller bounds (a batch, a segment, a just-written rewrite). */
+  def rowCount(files: Seq[Path]): Long =
+    files.iterator.map { p =>
+      Using.resource(ParquetFileReader.open(inputFile(p, driverConf),
+        HadoopReadOptions.builder(driverConf).build()))(_.getRecordCount)
+    }.sum
 
   /** The greatest value of the int64 `column` over `files`, from the
     * footers' column statistics; a file with a row group written

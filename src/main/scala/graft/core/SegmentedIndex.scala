@@ -46,9 +46,10 @@ object SegmentedIndex {
   // all: numerator from the diff-bounded tombstone sidecar,
   // denominator from this file — where the footer-only raw.count()
   // it replaces still pays a full file LISTING, a metadata storm at
-  // millions of files. Opt-in: layouts written without the sidecar
-  // keep the footer-count fallback; MaintainedStoreEstimateSpec pins
-  // the sidecar equal to the footer count through every lifecycle op.
+  // millions of files. Opt-in at build or seed: the compaction policy
+  // REQUIRES it ([[coveredFractionEstimate]]) and fails loudly on a layout
+  // written without it; MaintainedStoreEstimateSpec pins the sidecar
+  // equal to the footer count through every lifecycle op.
 
   private def rowCountPath(out: String) = Paths.get(out, "_rowcount", "total")
 
@@ -77,23 +78,6 @@ object SegmentedIndex {
   def bumpRowCount(out: String, delta: Long): Unit =
     readRowCount(out).foreach(n => writeRowCount(out, n + delta))
 
-  /** DRIVER-SIDE parquet-footer row count of an explicit file list —
-    * no Spark job at all (the first cut of the row-count tracking
-    * counted via `spark.read.parquet(...).count()`, and the per-job
-    * overhead taxed every tracked append/publish measurably: the
-    * maintained-store gates regressed ~0.5-2s warm each). Reading a
-    * footer is microseconds per file; the lists here are always
-    * batch- or segment-bounded, never the layout. */
-  def footerRows(files: Seq[java.nio.file.Path]): Long = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    files.iterator.map { p =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new org.apache.hadoop.fs.Path(p.toUri), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }.sum
-  }
-
   /** The torn-/partial-parquet signatures a crashed writer can leave
     * behind: a truncated tail (EOF while reading the footer length),
     * a missing magic number, or footer metadata that fails to decode.
@@ -107,12 +91,13 @@ object SegmentedIndex {
     case _ => false
   }
 
-  /** [[footerRows]] over a directory tree's DATA files (underscore/
-    * dot-prefixed sidecars and markers skipped) — used to (re)base a
-    * layout's maintained count from a bounded tree: a fresh segment,
-    * a just-compacted rewrite, a copied seed. */
+  /** DRIVER-SIDE parquet-footer row count of a directory tree's DATA
+    * files (underscore/dot-prefixed sidecars and markers skipped), no
+    * Spark job ([[ParquetRows.rowCount]]) — used to (re)base a layout's
+    * maintained count from a bounded tree: a fresh segment, a
+    * just-compacted rewrite, a copied seed. */
   def footerRowCountOf(root: java.nio.file.Path): Long =
-    footerRows(ParquetRows.dataFiles(root))
+    ParquetRows.rowCount(ParquetRows.dataFiles(root))
 
   /** Tombstone `keys` under `keyCol` (explicit — [[live]] later joins
     * on the same name, and a positional guess would silently tombstone
@@ -137,6 +122,20 @@ object SegmentedIndex {
     rows.withColumn("upto_gen", lit(uptoGen))
       .coalesce(1).write.mode("append").parquet(s"$out/_tombstones")
     l.release()
+  }
+
+  /** Apply one CDC batch at generation `gen` — the generation rule of
+    * every maintained family, kept here once: tombstone the `dirty`
+    * keys at `upto_gen = gen − 1` (their rows of earlier generations
+    * are suppressed; None skips the delete), then run `append`, which
+    * writes the batch's rows at `gen` — live at once, never covered by
+    * this batch's own tombstones. A replay at the same `gen` lands on
+    * the same live rows ([[tombstone]] is idempotent, the appends are
+    * per-generation overwrites), which is what [[liveAsOf]] relies on. */
+  def applyBatch(dirty: Option[DataFrame], out: String, keyCol: String, gen: Long)
+                (append: => Unit): Unit = {
+    dirty.foreach(tombstone(_, out, keyCol, uptoGen = gen - 1))
+    append
   }
 
   /** The accumulated tombstones as (key, upto_gen), max-folded per key
@@ -351,7 +350,7 @@ object SegmentedIndex {
     // orphans as priorRows), which only over-states the covered
     // fraction — compaction fires early and re-bases (the safe
     // direction).
-    def fcount(files: Seq[java.nio.file.Path]): Long = footerRows(files)
+    def fcount(files: Seq[java.nio.file.Path]): Long = ParquetRows.rowCount(files)
     // sweep a prior attempt's published files for this generation
     // (data dirs only: underscore sidecars are never gen-published);
     // for replay accounting the swept rows are counted BEFORE deletion
@@ -484,40 +483,31 @@ object SegmentedIndex {
     * (postings) derive live counts from their own sidecar instead —
     * see TextOps.postingsCoveredFraction.
     *
-    * `raw` is BY-NAME and only forced on the legacy untracked-layout
-    * fallback; on a tracked layout the whole measurement is the
-    * driver-side sidecar scan plus one tiny file read — zero Spark
-    * jobs, zero layout listings. `requireTracked = true` (what every
-    * maintained-layout policy site passes) makes an untracked layout
-    * a LOUD error instead of a silent per-epoch listing walk: g07's
-    * reset path already hit exactly that trap once (the r16 verdict's
-    * item 5). */
-  def coveredFractionEstimate(raw: => DataFrame, out: String,
-                              rowsPerInstance: Double = 1.0,
-                              requireTracked: Boolean = false): Double = {
-    if (requireTracked) assertTracked(out)
+    * The layout must track its row count ([[writeRowCount]]): the
+    * whole measurement is the driver-side sidecar scan plus one tiny
+    * file read — zero Spark jobs, zero layout listings — and an
+    * untracked layout is a LOUD error instead of a silent per-epoch
+    * listing walk (g07's reset path already hit exactly that trap once,
+    * the r16 verdict's item 5). */
+  def coveredFractionEstimate(out: String, rowsPerInstance: Double = 1.0): Double = {
+    val total = trackedRowCount(out)
     val instances = tombstoneInstances(out)
-    if (instances == 0L) 0.0
-    else {
-      // denominator: the maintained `_rowcount` sidecar when the
-      // layout tracks one — O(1), no listing at all; otherwise a
-      // count-star over parquet (decodes no column data — per-file
-      // footer row counts only, but the file LISTING itself is a
-      // metadata walk a million-file layout shouldn't pay per epoch)
-      val total = readRowCount(out).getOrElse(raw.count())
-      if (total == 0L) 0.0
-      else math.min(1.0, instances * rowsPerInstance / total)
-    }
+    if (instances == 0L || total == 0L) 0.0
+    else math.min(1.0, instances * rowsPerInstance / total)
   }
 
-  /** Loud guard for maintained-layout policy sites: the layout must
-    * track its row count (opt in with [[writeRowCount]] at build/seed,
-    * and RE-opt-in after any out-of-band reset that rebuilds the dir). */
-  def assertTracked(out: String): Unit =
-    require(readRowCount(out).isDefined,
+  /** The maintained row count, with a loud guard for the policy
+    * sites: the layout must track it (opt in with [[writeRowCount]] at
+    * build/seed, and RE-opt-in after any out-of-band reset that
+    * rebuilds the dir). */
+  def trackedRowCount(out: String): Long = {
+    val n = readRowCount(out)
+    require(n.isDefined,
       s"maintained layout at $out does not track its row count: " +
         "write the _rowcount sidecar at build (SegmentedIndex.writeRowCount) " +
         "so the compaction policy never falls back to a per-epoch layout listing")
+    n.get
+  }
 
   /** The compaction trigger: compact once tombstones cover MORE than
     * this fraction of stored rows, bounding steady-state read-amp of
@@ -539,17 +529,14 @@ object SegmentedIndex {
     * [[compactWith]] only when [[compactDue]]. Returns whether a
     * compaction ran, so callers can assert the policy in specs. Same
     * single-maintainer contract as the pieces. REQUIRES a tracked
-    * layout ([[assertTracked]]): the policy check runs zero Spark
+    * layout ([[coveredFractionEstimate]]): the policy check runs zero Spark
     * jobs and zero layout listings, every round — an untracked
     * maintained layout fails loudly here instead of silently paying
     * a per-epoch metadata walk. */
-  def maybeCompact(raw: => DataFrame, out: String,
-                   skipSidecars: Set[String] = Set.empty,
+  def maybeCompact(out: String, skipSidecars: Set[String] = Set.empty,
                    rowsPerInstance: Double = 1.0)
                   (writeRewrite: String => Unit): Boolean = {
-    val frac = coveredFractionEstimate(raw, out,
-      rowsPerInstance = rowsPerInstance, requireTracked = true)
-    val due = compactDue(frac)
+    val due = compactDue(coveredFractionEstimate(out, rowsPerInstance))
     if (due) compactWith(out, skipSidecars)(writeRewrite)
     due
   }

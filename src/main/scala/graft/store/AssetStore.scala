@@ -82,19 +82,40 @@ trait AssetStore extends AutoCloseable {
     val (route, args, kw) = UriCodec.parse(uri)
     require(!Route.blobRoutes.contains(route),
       s"putByUri with a JSON payload is not valid for blob route $route")
-    _put(obj, route, args, kw - "version")
+    checkedPut(obj, route, args, kw - "version")
   }
 
   def putBlobByUri(uri: String, obj: Array[Byte]): Unit = {
     val (route, args, _) = UriCodec.parse(uri)
     require(Route.blobRoutes.contains(route), s"Blob put requires a blob route, got $route")
-    _putBlob(obj, route, args)
+    checkedPutBlob(obj, route, args)
   }
+
+  /** Every put reaches its backend through these two: each argument of
+    * the route's URI template is a key component and must be
+    * non-empty. An empty one does not round-trip: `TableStore` keeps it
+    * as NULL (Spark's default partition), and every later listing then
+    * fails to build that row's URI. */
+  private def checkedPut(json: String, route: Route, routeArgs: Map[String, String],
+                         kwargs: Map[String, String]): Unit = {
+    requireKeyArgs(route, routeArgs)
+    _put(json, route, routeArgs, kwargs)
+  }
+
+  private def checkedPutBlob(obj: Array[Byte], route: Route, routeArgs: Map[String, String]): Unit = {
+    requireKeyArgs(route, routeArgs)
+    _putBlob(obj, route, routeArgs)
+  }
+
+  private def requireKeyArgs(route: Route, routeArgs: Map[String, String]): Unit =
+    route.argNames.foreach { a =>
+      require(routeArgs.get(a).forall(_.nonEmpty), s"empty '$a' in a $route key")
+    }
 
   /** Serialize a parsed document (NaN→null) and put it. */
   def putNode(node: JsonNode, route: Route, routeArgs: Map[String, String],
               kwargs: Map[String, String] = Map.empty): Unit =
-    _put(JsonUtil.serialize(node), route, routeArgs, kwargs)
+    checkedPut(JsonUtil.serialize(node), route, routeArgs, kwargs)
 
   /** Mtime of the experiment's config asset (`aerovaldb.py:1401-1410`). */
   def getExperimentMtime(project: String, experiment: String): Instant =
@@ -142,7 +163,7 @@ trait AssetStore extends AutoCloseable {
       Map.empty, accessType, default, cache)
 
   def putGlobStats(obj: String, project: String, experiment: String, frequency: String): Unit =
-    _put(obj, Route.GlobStats, pe(project, experiment) + ("frequency" -> frequency), Map.empty)
+    checkedPut(obj, Route.GlobStats, pe(project, experiment) + ("frequency" -> frequency), Map.empty)
 
   /** Filtered view of glob_stats; forces cache=true (`jsonfiledb.py:459`). */
   def getRegionalStats(project: String, experiment: String, frequency: String,
@@ -204,8 +225,8 @@ trait AssetStore extends AutoCloseable {
                  model: String, timestep: Option[String] = None): Unit = {
     val base = pe(project, experiment) + ("obsvar" -> obsvar) + ("model" -> model)
     timestep match {
-      case None    => _put(obj, Route.Contour, base, Map.empty)
-      case Some(t) => _put(obj, Route.ContourTimesplit, base + ("timestep" -> t), Map.empty)
+      case None    => checkedPut(obj, Route.Contour, base, Map.empty)
+      case Some(t) => checkedPut(obj, Route.ContourTimesplit, base + ("timestep" -> t), Map.empty)
     }
   }
 
@@ -219,7 +240,7 @@ trait AssetStore extends AutoCloseable {
 
   def putTimeseries(obj: String, project: String, experiment: String, location: String,
                     network: String, obsvar: String, layer: String): Unit =
-    _put(obj, Route.Timeseries, pe(project, experiment) ++ Map(
+    checkedPut(obj, Route.Timeseries, pe(project, experiment) ++ Map(
       "location" -> location, "network" -> network, "obsvar" -> obsvar, "layer" -> layer), Map.empty)
 
   def getTimeseriesWeekly(project: String, experiment: String, location: String,
@@ -232,7 +253,7 @@ trait AssetStore extends AutoCloseable {
 
   def putTimeseriesWeekly(obj: String, project: String, experiment: String, location: String,
                           network: String, obsvar: String, layer: String): Unit =
-    _put(obj, Route.TimeseriesWeekly, pe(project, experiment) ++ Map(
+    checkedPut(obj, Route.TimeseriesWeekly, pe(project, experiment) ++ Map(
       "location" -> location, "network" -> network, "obsvar" -> obsvar, "layer" -> layer), Map.empty)
 
   def getExperiments(project: String, accessType: AccessType = AccessType.JsonStr,
@@ -240,7 +261,7 @@ trait AssetStore extends AutoCloseable {
     _get(Route.Experiments, Map("project" -> project), Map.empty, accessType, default, cache)
 
   def putExperiments(obj: String, project: String): Unit =
-    _put(obj, Route.Experiments, Map("project" -> project), Map.empty)
+    checkedPut(obj, Route.Experiments, Map("project" -> project), Map.empty)
 
   def getConfig(project: String, experiment: String,
                 accessType: AccessType = AccessType.JsonStr,
@@ -248,7 +269,7 @@ trait AssetStore extends AutoCloseable {
     _get(Route.Config, pe(project, experiment), Map.empty, accessType, default, cache)
 
   def putConfig(obj: String, project: String, experiment: String): Unit =
-    _put(obj, Route.Config, pe(project, experiment), Map.empty)
+    checkedPut(obj, Route.Config, pe(project, experiment), Map.empty)
 
   def getMenu(project: String, experiment: String,
               accessType: AccessType = AccessType.JsonStr,
@@ -256,7 +277,7 @@ trait AssetStore extends AutoCloseable {
     _get(Route.Menu, pe(project, experiment), Map.empty, accessType, default, cache)
 
   def putMenu(obj: String, project: String, experiment: String): Unit =
-    _put(obj, Route.Menu, pe(project, experiment), Map.empty)
+    checkedPut(obj, Route.Menu, pe(project, experiment), Map.empty)
 
   def getStatistics(project: String, experiment: String,
                     accessType: AccessType = AccessType.JsonStr,
@@ -264,7 +285,7 @@ trait AssetStore extends AutoCloseable {
     _get(Route.Statistics, pe(project, experiment), Map.empty, accessType, default, cache)
 
   def putStatistics(obj: String, project: String, experiment: String): Unit =
-    _put(obj, Route.Statistics, pe(project, experiment), Map.empty)
+    checkedPut(obj, Route.Statistics, pe(project, experiment), Map.empty)
 
   def getRanges(project: String, experiment: String,
                 accessType: AccessType = AccessType.JsonStr,
@@ -272,7 +293,7 @@ trait AssetStore extends AutoCloseable {
     _get(Route.Ranges, pe(project, experiment), Map.empty, accessType, default, cache)
 
   def putRanges(obj: String, project: String, experiment: String): Unit =
-    _put(obj, Route.Ranges, pe(project, experiment), Map.empty)
+    checkedPut(obj, Route.Ranges, pe(project, experiment), Map.empty)
 
   def getRegions(project: String, experiment: String,
                  accessType: AccessType = AccessType.JsonStr,
@@ -280,7 +301,7 @@ trait AssetStore extends AutoCloseable {
     _get(Route.Regions, pe(project, experiment), Map.empty, accessType, default, cache)
 
   def putRegions(obj: String, project: String, experiment: String): Unit =
-    _put(obj, Route.Regions, pe(project, experiment), Map.empty)
+    checkedPut(obj, Route.Regions, pe(project, experiment), Map.empty)
 
   /** models-style: experiment-level doc, falling back to the
     * project-level doc (`jsonfiledb.py:120-123`). */
@@ -291,7 +312,7 @@ trait AssetStore extends AutoCloseable {
       experiment.map("experiment" -> _).toMap, accessType, default, cache)
 
   def putModelsStyle(obj: String, project: String, experiment: Option[String] = None): Unit =
-    _put(obj, Route.ModelsStyle, Map("project" -> project),
+    checkedPut(obj, Route.ModelsStyle, Map("project" -> project),
       experiment.map("experiment" -> _).toMap)
 
   def getMap(project: String, experiment: String, network: String, obsvar: String,
@@ -307,7 +328,7 @@ trait AssetStore extends AutoCloseable {
 
   def putMap(obj: String, project: String, experiment: String, network: String,
              obsvar: String, layer: String, model: String, modvar: String, time: String): Unit =
-    _put(obj, Route.MapRoute, pe(project, experiment) ++ Map(
+    checkedPut(obj, Route.MapRoute, pe(project, experiment) ++ Map(
       "network" -> network, "obsvar" -> obsvar, "layer" -> layer,
       "model" -> model, "modvar" -> modvar), Map("time" -> time))
 
@@ -322,7 +343,7 @@ trait AssetStore extends AutoCloseable {
 
   def putScatter(obj: String, project: String, experiment: String, network: String,
                  obsvar: String, layer: String, model: String, modvar: String, time: String): Unit =
-    _put(obj, Route.Scatter, pe(project, experiment) ++ Map(
+    checkedPut(obj, Route.Scatter, pe(project, experiment) ++ Map(
       "network" -> network, "obsvar" -> obsvar, "layer" -> layer,
       "model" -> model, "modvar" -> modvar), Map("time" -> time))
 
@@ -336,7 +357,7 @@ trait AssetStore extends AutoCloseable {
 
   def putProfiles(obj: String, project: String, experiment: String, location: String,
                   network: String, obsvar: String): Unit =
-    _put(obj, Route.Profiles, pe(project, experiment) ++ Map(
+    checkedPut(obj, Route.Profiles, pe(project, experiment) ++ Map(
       "location" -> location, "network" -> network, "obsvar" -> obsvar), Map.empty)
 
   /** Heatmap-timeseries: the URI template carries only project/
@@ -352,7 +373,7 @@ trait AssetStore extends AutoCloseable {
 
   def putHeatmapTimeseries(obj: String, project: String, experiment: String, region: String,
                            network: String, obsvar: String, layer: String): Unit =
-    _put(obj, Route.HeatmapTimeseries, pe(project, experiment),
+    checkedPut(obj, Route.HeatmapTimeseries, pe(project, experiment),
       Map("region" -> region, "network" -> network, "obsvar" -> obsvar, "layer" -> layer))
 
   def getForecast(project: String, experiment: String, region: String,
@@ -365,7 +386,7 @@ trait AssetStore extends AutoCloseable {
 
   def putForecast(obj: String, project: String, experiment: String, region: String,
                   network: String, obsvar: String, layer: String): Unit =
-    _put(obj, Route.Forecast, pe(project, experiment) ++ Map(
+    checkedPut(obj, Route.Forecast, pe(project, experiment) ++ Map(
       "region" -> region, "network" -> network, "obsvar" -> obsvar, "layer" -> layer), Map.empty)
 
   def getFairmode(project: String, experiment: String, region: String, network: String,
@@ -379,7 +400,7 @@ trait AssetStore extends AutoCloseable {
 
   def putFairmode(obj: String, project: String, experiment: String, region: String,
                   network: String, obsvar: String, layer: String, model: String, time: String): Unit =
-    _put(obj, Route.Fairmode, pe(project, experiment) ++ Map(
+    checkedPut(obj, Route.Fairmode, pe(project, experiment) ++ Map(
       "region" -> region, "network" -> network, "obsvar" -> obsvar,
       "layer" -> layer, "model" -> model, "time" -> time), Map.empty)
 
@@ -391,7 +412,7 @@ trait AssetStore extends AutoCloseable {
 
   def putGriddedMap(obj: String, project: String, experiment: String, obsvar: String,
                     model: String): Unit =
-    _put(obj, Route.GriddedMap, pe(project, experiment) + ("obsvar" -> obsvar) + ("model" -> model),
+    checkedPut(obj, Route.GriddedMap, pe(project, experiment) + ("obsvar" -> obsvar) + ("model" -> model),
       Map.empty)
 
   def getReport(project: String, experiment: String, title: String,
@@ -401,13 +422,13 @@ trait AssetStore extends AutoCloseable {
       Map.empty, accessType, default, cache)
 
   def putReport(obj: String, project: String, experiment: String, title: String): Unit =
-    _put(obj, Route.Report, pe(project, experiment) + ("title" -> title), Map.empty)
+    checkedPut(obj, Route.Report, pe(project, experiment) + ("title" -> title), Map.empty)
 
   def getReportImage(project: String, experiment: String, path: String): Array[Byte] =
     getBlob(Route.ReportImage, pe(project, experiment) + ("path" -> path))
 
   def putReportImage(obj: Array[Byte], project: String, experiment: String, path: String): Unit =
-    _putBlob(obj, Route.ReportImage, pe(project, experiment) + ("path" -> path))
+    checkedPutBlob(obj, Route.ReportImage, pe(project, experiment) + ("path" -> path))
 
   def getMapOverlay(project: String, experiment: String, source: String,
                     variable: String, date: String): Array[Byte] =
@@ -416,7 +437,7 @@ trait AssetStore extends AutoCloseable {
 
   def putMapOverlay(obj: Array[Byte], project: String, experiment: String, source: String,
                     variable: String, date: String): Unit =
-    _putBlob(obj, Route.MapOverlay, pe(project, experiment) ++ Map(
+    checkedPutBlob(obj, Route.MapOverlay, pe(project, experiment) ++ Map(
       "source" -> source, "variable" -> variable, "date" -> date))
 
   // ------------------------------------------------------------------

@@ -154,8 +154,7 @@ object ChainProbe {
         segOut, "vec_id", uptoGen = 0L)
       val segInst = SegmentedIndex.tombstoneInstances(segOut)
       val t0 = System.nanoTime()
-      val segEst = SegmentedIndex.coveredFractionEstimate(
-        spark.read.parquet(segOut), segOut, requireTracked = true)
+      val segEst = SegmentedIndex.coveredFractionEstimate(segOut)
       val segEstMs = (System.nanoTime() - t0) / 1e6
       val segExact = SegmentedIndex.coveredFraction(spark,
         spark.read.parquet(segOut), segOut, keyCol = "vec_id", genCol = "gen")
@@ -177,8 +176,7 @@ object ChainProbe {
       SegmentedIndex.tombstone(
         emb.filter(col("vec_id") % 13 < 2).select("vec_id"),
         pubOut, "vec_id", uptoGen = 1L)
-      val pubEst = SegmentedIndex.coveredFractionEstimate(
-        spark.read.parquet(pubOut), pubOut, requireTracked = true)
+      val pubEst = SegmentedIndex.coveredFractionEstimate(pubOut)
       val pubExact = SegmentedIndex.coveredFraction(spark,
         spark.read.parquet(pubOut), pubOut, keyCol = "vec_id", genCol = "gen")
       println(f"[estexact] gen-named publish shape at ${rep}x: estimate=$pubEst%.6f " +

@@ -46,7 +46,7 @@ class IvfDeleteScopeSpec extends AnyFunSuite {
         .select("query_id", "neighbor_id", "cos_sim").as[(Long, Long, Double)]
         .collect().toSet
     def liveRows(): Set[(Long, Long)] =
-      SegmentedIndex.live(spark, Similarity.withFileGen(spark.read.parquet(out)), out,
+      SegmentedIndex.live(spark, spark.read.parquet(out), out,
           keyCol = "vec_id", genCol = "gen")
         .filter(col("vec_id").isin(a, b)).select("vec_id", "gen").as[(Long, Long)]
         .collect().toSet
@@ -63,9 +63,65 @@ class IvfDeleteScopeSpec extends AnyFunSuite {
     Similarity.compactIvfCorpus(spark, out)
     assert(!Files.isDirectory(Paths.get(out, "_tombstones")))
     assertOnlyBNew("after compaction")
-    // the rewrite is generation 0, and holds B's new vector only
-    assert(liveRows() == Set((b, 0L)))
+    // the rewrite keeps B's generation, and holds B's new vector only
+    assert(liveRows() == Set((b, 1L)))
     assert(spark.read.parquet(out).filter(col("vec_id").isin(a, b))
       .select("vec_id", "v").as[(Long, Seq[Double])].collect().toSeq == Seq((b, bNew)))
+  }
+
+  test("the plain IVF layout stores gen: 0 at build, the explicit or ad-hoc generation on append, kept by compaction") {
+    import spark.implicits._
+    val out = graft.core.TempDirs.create("graft-ivf-gen-spec").resolve("index").toString
+    val vecs = Dedup.normalizedVectors(spark, dir)
+    Similarity.writeIvfLayout(vecs, out, k = 8, iters = 5)
+    def gens(): Map[Long, Long] =
+      spark.read.parquet(out).select("vec_id", "gen").as[(Long, Long)].collect().toMap
+    val built = gens()
+    assert(built.nonEmpty && built.values.forall(_ == 0L))
+    val cents = Similarity.readIvfCodebook(out)
+    val emb = vecs.select(col("vec_id"), col("v").as("embedding")).limit(2)
+    Similarity.appendIvfCorpusWith(cents, out,
+      emb.select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")),
+      spark.read.parquet(out).columns.toSet, gen = 3L)
+    Similarity.appendIvfCorpus(spark, out,
+      emb.select((col("vec_id") + 2000000L).as("vec_id"), col("embedding")))
+    val appended = gens()
+    val explicit = appended.filter(_._1 >= 1000000L).filter(_._1 < 2000000L)
+    val adhoc = appended.filter(_._1 >= 2000000L)
+    assert(explicit.size == 2 && explicit.values.forall(_ == 3L))
+    assert(adhoc.size == 2 && adhoc.values.toSet.size == 1 && adhoc.values.head >= 1000000000L)
+    Similarity.deleteFromIvfCorpus(spark, out, Seq(built.keys.min).toDF("vec_id"))
+    Similarity.compactIvfCorpus(spark, out)
+    assert(gens() == appended - built.keys.min)
+  }
+
+  test("a gen-scoped delete and re-append reads the same live generations on the plain and the PQ layout") {
+    import spark.implicits._
+    val root = graft.core.TempDirs.create("graft-ivf-pq-scope-spec")
+    val vecs = Dedup.normalizedVectors(spark, dir).filter(col("vec_id") % 4 === 0)
+    val plain = root.resolve("plain").toString
+    val pq = root.resolve("pq").toString
+    Similarity.writeIvfLayout(vecs, plain, k = 8, iters = 5)
+    Similarity.writeIvfPqLayout(vecs, pq, k = 8, iters = 5)
+    val ids = vecs.select("vec_id").as[Long].collect().sorted
+    val (a, b) = (ids(1), ids(2))
+    val dirty = Seq(a, b).toDF("vec_id")
+    val adds = vecs.filter(col("vec_id") === b).select(col("vec_id"), col("v").as("embedding"))
+    Similarity.applyIvfBatch(spark, Similarity.readIvfCodebook(plain),
+      spark.read.parquet(plain).columns.toSet, plain, gen = 1L, dirty = dirty, adds = adds)
+    Similarity.applyIvfPqBatch(spark, Similarity.readIvfCodebook(pq),
+      Similarity.readPqCodebooks(pq), pq, gen = 1L, dirty = Some(dirty), adds = Some(adds))
+    def live(path: String, tomb: String): Set[(Long, Long)] =
+      SegmentedIndex.live(spark, spark.read.parquet(path), tomb, keyCol = "vec_id", genCol = "gen")
+        .select("vec_id", "gen").as[(Long, Long)].collect().toSet
+    def check(when: String): Unit = {
+      val p = live(plain, plain)
+      assert(p == live(pq, pq) && p == live(s"$pq/_refine", pq), when)
+      assert(!p.exists(_._1 == a) && p.filter(_._1 == b) == Set((b, 1L)), s"$when: $p")
+    }
+    check("before compaction")
+    Similarity.compactIvfCorpus(spark, plain)
+    Similarity.compactIvfPqCorpus(spark, pq)
+    check("after compaction")
   }
 }

@@ -22,8 +22,7 @@ class MaintainedStoreEstimateSpec extends AnyFunSuite {
   private def exactOf(out: String, rowsPerKey: Int): (Double, Double) = {
     val exact = SegmentedIndex.coveredFraction(spark,
       spark.read.parquet(out), out, keyCol = "id", genCol = "gen")
-    val est = SegmentedIndex.coveredFractionEstimate(
-      spark.read.parquet(out), out,
+    val est = SegmentedIndex.coveredFractionEstimate(out,
       rowsPerInstance = rowsPerKey.toDouble)
     (exact, est)
   }
@@ -35,6 +34,7 @@ class MaintainedStoreEstimateSpec extends AnyFunSuite {
     SegmentedIndex.appendSegment(
       (1L to 10L).flatMap(i => Seq((i, "a"), (i, "b"))).toDF("id", "payload"),
       out, gen = 0L)
+    SegmentedIndex.writeRowCount(out, 20L)
     // epoch 1: tombstone 3 keys at gen 0, re-add one of them at gen 1
     SegmentedIndex.tombstone((1L to 3L).toDF("id"), out, "id", uptoGen = 0L)
     SegmentedIndex.appendSegment(
@@ -58,12 +58,12 @@ class MaintainedStoreEstimateSpec extends AnyFunSuite {
     val out = TempDirs.create("graft-est-plain").resolve("corpus").toString
     (1L to 8L).map(i => (i, s"v$i")).toDF("id", "payload")
       .write.parquet(out)
+    SegmentedIndex.writeRowCount(out, 8L)
     SegmentedIndex.tombstone((1L to 3L).toDF("id"), out, "id", uptoGen = Long.MaxValue)
     // a layout that stores no generation reads as generation 0
     val exact = SegmentedIndex.coveredFraction(spark,
       spark.read.parquet(out).withColumn("gen", lit(0L)), out, keyCol = "id", genCol = "gen")
-    val est = SegmentedIndex.coveredFractionEstimate(
-      spark.read.parquet(out), out)
+    val est = SegmentedIndex.coveredFractionEstimate(out)
     assert(math.abs(exact - est) < Tol, s"plain estimate $est != exact $exact")
     assert(est == 3.0 / 8)
   }
@@ -72,8 +72,8 @@ class MaintainedStoreEstimateSpec extends AnyFunSuite {
     import spark.implicits._
     val out = TempDirs.create("graft-est-none").resolve("corpus").toString
     Seq((1L, "x")).toDF("id", "payload").write.parquet(out)
-    assert(SegmentedIndex.coveredFractionEstimate(
-      spark.read.parquet(out), out) == 0.0)
+    SegmentedIndex.writeRowCount(out, 1L)
+    assert(SegmentedIndex.coveredFractionEstimate(out) == 0.0)
     assert(SegmentedIndex.tombstoneInstances(out) == 0L)
   }
 
@@ -143,8 +143,7 @@ class MaintainedStoreEstimateSpec extends AnyFunSuite {
     // the maintained number and the numerator is the tombstone
     // sidecar — the layout's data can be GONE and the measurement
     // still answers (the r15 item 5 done-criterion: no layout listing
-    // in the policy path). raw is passed as null to prove it is
-    // never touched.
+    // in the policy path).
     val out = TempDirs.create("graft-est-noscan").resolve("edges").toString
     SegmentedIndex.appendSegment(
       (1L to 10L).flatMap(i => Seq((i, "a"), (i, "b"))).toDF("id", "payload"),
@@ -152,8 +151,7 @@ class MaintainedStoreEstimateSpec extends AnyFunSuite {
     SegmentedIndex.writeRowCount(out, 20L)
     SegmentedIndex.tombstone((1L to 4L).toDF("id"), out, "id", uptoGen = 0L)
     graft.core.DirSwap.deleteTree(java.nio.file.Paths.get(out, "gen=0"))
-    val est = SegmentedIndex.coveredFractionEstimate(null, out,
-      rowsPerInstance = 2.0, requireTracked = true)
+    val est = SegmentedIndex.coveredFractionEstimate(out, rowsPerInstance = 2.0)
     assert(est == 8.0 / 20, s"no-scan estimate wrong: $est")
   }
 
@@ -164,7 +162,7 @@ class MaintainedStoreEstimateSpec extends AnyFunSuite {
       (3L, "beta beta beta epsilon")).toDF("doc_id", "text")
     val out = TempDirs.create("graft-est-postings-noscan").resolve("postings").toString
     TextOps.writePostingsLayout(spark, docs, out)
-    val before = TextOps.postingsCoveredFraction(spark, out)
+    val before = TextOps.postingsCoveredFraction(out)
     assert(before == 0.0)
     val dirty = Seq(1L).toDF("doc_id")
     val removed = TextOps.postingsOf(docs.join(dirty, Seq("doc_id"), "left_semi"))
@@ -172,7 +170,7 @@ class MaintainedStoreEstimateSpec extends AnyFunSuite {
     TextOps.deleteFromPostings(spark, out, dirty, uptoGen = 0L)
     TextOps.updateDfSidecar(spark, out, removed,
       removed.limit(0), gen = 1L)
-    val withData = TextOps.postingsCoveredFraction(spark, out)
+    val withData = TextOps.postingsCoveredFraction(out)
     // vanish the data files (keep every underscore sidecar): the
     // sidecar-derived measurement must not notice
     import scala.jdk.CollectionConverters._
@@ -182,7 +180,7 @@ class MaintainedStoreEstimateSpec extends AnyFunSuite {
         .filterNot(_.getFileName.toString.startsWith("_"))
         .foreach(graft.core.DirSwap.deleteTree)
     }
-    val withoutData = TextOps.postingsCoveredFraction(spark, out)
+    val withoutData = TextOps.postingsCoveredFraction(out)
     assert(withData > 0.0 && withData == withoutData,
       s"postings measurement touched the data files: $withData vs $withoutData")
   }
@@ -206,7 +204,7 @@ class MaintainedStoreEstimateSpec extends AnyFunSuite {
     val added = TextOps.postingsOf(reTok)
       .groupBy("term").agg(count(lit(1)).as("n"))
     TextOps.updateDfSidecar(spark, out, removed, added, gen = 1L)
-    val est = TextOps.postingsCoveredFraction(spark, out)
+    val est = TextOps.postingsCoveredFraction(out)
     val exact = SegmentedIndex.coveredFraction(spark,
       spark.read.parquet(out), out, keyCol = "doc_id", genCol = "gen")
     assert(math.abs(est - exact) < Tol,
@@ -245,9 +243,7 @@ class MaintainedStoreEstimateSpec extends AnyFunSuite {
       SegmentedIndex.footerRowCountOf(java.nio.file.Paths.get(out)))
     SegmentedIndex.tombstone((1L to 3L).toDF("id"), out, "id", uptoGen = 0L)
     val (est, jobs) = sparkJobsDuring {
-      SegmentedIndex.coveredFractionEstimate(
-        fail("the tracked policy path forced the raw frame"): org.apache.spark.sql.DataFrame,
-        out, rowsPerInstance = 2.0, requireTracked = true)
+      SegmentedIndex.coveredFractionEstimate(out, rowsPerInstance = 2.0)
     }
     assert(est == 6.0 / 20)
     assert(jobs == 0, s"tracked estimate submitted $jobs Spark job(s)")
@@ -263,7 +259,7 @@ class MaintainedStoreEstimateSpec extends AnyFunSuite {
       .groupBy("term").agg(count(lit(1)).as("n"))
     TextOps.deleteFromPostings(spark, pOut, dirty, uptoGen = 0L)
     TextOps.updateDfSidecar(spark, pOut, removed, removed.limit(0), gen = 1L)
-    val (pEst, pJobs) = sparkJobsDuring(TextOps.postingsCoveredFraction(spark, pOut))
+    val (pEst, pJobs) = sparkJobsDuring(TextOps.postingsCoveredFraction(pOut))
     assert(pEst > 0.0)
     assert(pJobs == 0, s"postings measurement submitted $pJobs Spark job(s)")
   }
@@ -294,13 +290,10 @@ class MaintainedStoreEstimateSpec extends AnyFunSuite {
       Seq((1L, "a"), (2L, "b")).toDF("id", "payload"), out, gen = 0L)
     SegmentedIndex.tombstone(Seq(1L).toDF("id"), out, "id", uptoGen = 0L)
     intercept[IllegalArgumentException] {
-      SegmentedIndex.maybeCompact(spark.read.parquet(out), out) { _ => fail("must not rewrite") }
+      SegmentedIndex.maybeCompact(out) { _ => fail("must not rewrite") }
     }
     intercept[IllegalArgumentException] {
-      SegmentedIndex.coveredFractionEstimate(spark.read.parquet(out), out,
-        requireTracked = true)
+      SegmentedIndex.coveredFractionEstimate(out)
     }
-    // the legacy fallback stays reachable for un-maintained layouts
-    assert(SegmentedIndex.coveredFractionEstimate(spark.read.parquet(out), out) == 0.5)
   }
 }

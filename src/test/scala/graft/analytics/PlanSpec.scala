@@ -127,8 +127,8 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("gen-scoped stored probe (p15's path) keeps its cell PartitionFilters") {
-    // the file-name-generation live view (withFileGen + gen-scoped
-    // anti-join) rides ON TOP of the pruned scan — it must not cost
+    // the gen-scoped live view (the tombstone anti-join on the stored
+    // `gen` column) rides ON TOP of the pruned scan — it must not cost
     // the probe its partition pruning
     import org.apache.spark.sql.functions.col
     val tmp = graft.core.TempDirs.create("graft-ivf-genscoped-plan")

@@ -159,7 +159,7 @@ class ReplayIdempotencySpec extends AnyFunSuite {
     val vecAdds = Seq((stored(0)._1, stored(0)._2.map(-_)), (-1L, stored(1)._2))
       .toDF("vec_id", "embedding")
     replay("ivf", () => sorted(SegmentedIndex.live(spark,
-        Similarity.withFileGen(spark.read.parquet(vOut)), vOut, "vec_id", "gen"))) {
+        spark.read.parquet(vOut), vOut, "vec_id", "gen"))) {
       Similarity.applyIvfBatch(spark, Similarity.readIvfCodebook(vOut),
         spark.read.parquet(vOut).columns.toSet, vOut, gen = 1L,
         dirty = stored.map(_._1).toSeq.toDF("vec_id"), adds = vecAdds)

@@ -130,13 +130,13 @@ class SegmentedIndexSpec extends AnyFunSuite {
     // 3 of 10 rows covered (0.3 ≤ 0.5): policy must NOT compact
     SegmentedIndex.tombstone((1L to 3L).toDF("id"), out, keyCol = "id",
       uptoGen = 0L)
-    assert(!SegmentedIndex.maybeCompact(spark.read.parquet(out), out)(rewrite))
+    assert(!SegmentedIndex.maybeCompact(out)(rewrite))
     assert(Files.isDirectory(Paths.get(out, "_tombstones")))
     // 6 of 10 covered (0.6 > 0.5): policy compacts, tombstones clear,
     // live rows survive physically
     SegmentedIndex.tombstone((4L to 6L).toDF("id"), out, keyCol = "id",
       uptoGen = 0L)
-    assert(SegmentedIndex.maybeCompact(spark.read.parquet(out), out)(rewrite))
+    assert(SegmentedIndex.maybeCompact(out)(rewrite))
     assert(!Files.isDirectory(Paths.get(out, "_tombstones")))
     assert(spark.read.parquet(out).select("id").as[Long].collect().sorted.toSeq
       == (7L to 10L))

@@ -383,6 +383,17 @@ trait AssetStoreBehavior { this: AnyFunSuite =>
     intercept[java.io.FileNotFoundException](db.getMenu("project", "experiment"))
     db.close()
   }
+
+  test(s"$backendName: a put with an empty key component is refused and the listings still work") {
+    val db = makeStore()
+    val before = db.listAll().sorted
+    intercept[IllegalArgumentException](db.putMenu("{}", "project", ""))
+    intercept[IllegalArgumentException](db.putReportImage(Array[Byte](1), "project", "", "x.png"))
+    intercept[IllegalArgumentException](db.putByUri("/v0/menu/project/", "{}"))
+    assert(db.listAll().sorted == before)
+    assert(db.query(Seq(Route.Menu), Map("project" -> "project")).nonEmpty)
+    db.close()
+  }
 }
 
 object SparkTestSession {

@@ -19,7 +19,9 @@ import graft.core.{AccessType, AssetValue, QueryEntry, Route}
   * cover NULL generation keys beside set ones (map, scatter,
   * heatmap_ts), project-level models_style docs beside experiment-level
   * ones, project/experiment names that need Hive path escaping, an
-  * empty-string experiment and partitions that do not exist. */
+  * empty-string experiment and partitions that do not exist. A put
+  * whose route template takes the empty experiment is refused; only
+  * models_style, whose template has no experiment, stores one. */
 class TableStoreGetSpec extends AnyFunSuite {
   import TableStoreGetSpec._
   private lazy val spark = SparkTestSession.spark
@@ -143,13 +145,17 @@ class TableStoreGetSpec extends AnyFunSuite {
     val markers = scala.collection.mutable.ArrayBuffer.empty[Long]
     val uriPes = pes.filter(_._2.nonEmpty)
 
+    /** A put keyed by experiment `e`: refused when `e` is empty. */
+    def keyed(e: String)(put: => Unit): Unit =
+      if (e.isEmpty) intercept[IllegalArgumentException](put) else put
+
     /** One random put; NULL generation keys go through URIs that leave
       * the key out, as an older layout generation writes them. */
     def put(): Unit = {
       val (p, e) = pick(pes)
       rng.nextInt(7) match {
-        case 0 => db.putMenu(doc(), p, e)
-        case 1 => db.putReportImage(doc().getBytes("UTF-8"), p, e, "img.png")
+        case 0 => keyed(e)(db.putMenu(doc(), p, e))
+        case 1 => keyed(e)(db.putReportImage(doc().getBytes("UTF-8"), p, e, "img.png"))
         case 2 => db.putModelsStyle(doc(), p, if (rng.nextBoolean()) Some(e) else None)
         case k =>
           val (q, x) = pick(uriPes)
@@ -185,7 +191,7 @@ class TableStoreGetSpec extends AnyFunSuite {
         case 3 =>
           // same-millisecond overwrites: two puts of one key back to back
           val (p, e) = pick(pes)
-          db.putMenu(doc(), p, e); db.putMenu(doc(), p, e)
+          keyed(e)(db.putMenu(doc(), p, e)); keyed(e)(db.putMenu(doc(), p, e))
           db.putMap(doc(), "p", "e1", "n", "o", "l", "m", "mv", "t1")
           db.putMap(doc(), "p", "e1", "n", "o", "l", "m", "mv", "t1")
         case 4 if step % 3 == 0 =>
